@@ -94,15 +94,16 @@ def parsed_org_signup_p(l: Column, hub: str) -> Column:
     return l["has_org"] & (l["address"] == hub) & (l["n_topics"] == 2)
 
 
-_COLUMN_CACHE: dict[tuple[str, str], tuple] = {}
+
+
+_STAGE_CACHE: dict[tuple[str, str], tuple] = {}
 
 
 def classify(df: DataFrame, hub: str = HUB_ADDRESS) -> DataFrame:
     """Append per-class boolean flags, extraction payloads and the
     `classification` label array to a TX_WITH_LOGS_SCHEMA DataFrame.
 
-    One pass, all flags computed as expressions — a single projection
-    over the scan; no shuffle, no UDF.
+    Projections only over the scan; no shuffle, no UDF.
 
     Perf note: every log is parsed ONCE up front (one `transform`
     building typed fields: topic flags, decoded data, stripped
@@ -111,24 +112,37 @@ def classify(df: DataFrame, hub: str = HUB_ADDRESS) -> DataFrame:
     multiplies the regex+conv work ~8x per log and blows the codegen
     method size — measured ~5x slower at sf0.1.
 
-    The expression trees are built from unresolved F.col references
-    only, so they are DataFrame-independent: they are constructed once
-    per (session, hub) and reused — construction costs ~1.1 s of
-    driver-side py4j round trips, which would otherwise be paid by
-    EVERY 500 ms live micro-batch (measured: ~20% of the round).
+    The classifier is a DAG of named stages (_classify_stages): every
+    intermediate with more than one consumer — the 5 filtered log
+    arrays, their sizes and first elements, the ABI checks, the signup
+    stages, `poisoned` — is a temp column computed once in an earlier
+    `withColumns` and referenced by name, and the temps are dropped at
+    the end. Built as one nested Column tree instead, Catalyst got a
+    copy of each shared subtree per use: a 184 KB analyzed plan whose
+    5 log filters appeared over 130 times in the optimized plan,
+    re-analyzed and re-optimized every micro-batch (0.8-1.0 s in
+    classify() plus 0.6-0.8 s in the optimizer at any data size, on a
+    4-core x86-64 VM). Staged, the analyzed plan is 10 KB and the two
+    steps take ~0.15 s and ~0.1 s: CollapseProject never inlines a
+    non-cheap expression with more than one consumer, so each filter
+    stays computed once.
+
+    The stages are built from unresolved F.col references only, so
+    they are DataFrame-independent and cached per (session, hub).
     """
     key = (df.sparkSession.sparkContext.applicationId, hub)
-    if key not in _COLUMN_CACHE:
-        _COLUMN_CACHE[key] = _classify_columns(hub)
-    lp_expr, flag_cols, payload_cols = _COLUMN_CACHE[key]
-    out = df.withColumn("_lp", lp_expr).withColumns(flag_cols)
-    return out.withColumns(payload_cols)
+    if key not in _STAGE_CACHE:
+        _STAGE_CACHE[key] = _classify_stages(hub)
+    stages, temps = _STAGE_CACHE[key]
+    for stage in stages:
+        df = df.withColumns(stage)
+    return df.drop(*temps)
 
 
-def _classify_columns(hub: str) -> tuple:
-    """(parsed-log expr, flag column dict, label/payload column dict)
-    — see classify()."""
-    n_logs = F.size(F.col("logs"))
+def _classify_stages(hub: str) -> tuple[list[dict[str, Column]], list[str]]:
+    """(ordered withColumns stages, temp columns to drop) — see
+    classify(). A stage reads input columns and earlier stages' columns
+    only."""
 
     def parse(l: Column) -> Column:
         return F.struct(
@@ -147,135 +161,149 @@ def _classify_columns(hub: str) -> tuple:
             F.array_contains(l["topics"], EXECUTION_SUCCESS_TOPIC).alias("has_exec"),
         )
 
-    lp_expr = F.transform(F.col("logs"), parse)
-    LOGS = F.col("_lp")
+    temps: list[str] = []
 
-    _erc20_p = parsed_erc20_transfer_p
+    def stage(**cols: Column) -> dict[str, Column]:
+        named = {f"_cls_{k}": v for k, v in cols.items()}
+        temps.extend(named)
+        return named
+
+    def c(name: str) -> Column:
+        return F.col(f"_cls_{name}")
 
     def _trust_p(l: Column) -> Column:
         return parsed_crc_trust_p(l, hub)
 
-    # --- C1 / C5 / C3: simple exists() predicates ---------------------
-    is_erc20 = F.exists(LOGS, _erc20_p)
-    is_trust = F.exists(LOGS, _trust_p)
-    is_org = F.exists(LOGS, lambda l: parsed_org_signup_p(l, hub))
+    LOGS = F.col("_lp")
+    _erc20_p = parsed_erc20_transfer_p
+    log_kinds = ("signup", "trust", "transfer", "ht", "exec")
 
-    # --- C2: compound signup predicate, staged like the reference -----
-    signup_logs = F.filter(LOGS, lambda l: l["has_signup"])
-    signup_poison = (n_logs >= 3) & (F.size(signup_logs) >= 2)  # SingleOrDefault throw
-    s_log = F.get(signup_logs, 0)
-    signup_stage1 = (
-        (n_logs >= 3)
-        & (F.size(signup_logs) == 1)
-        & (s_log["address"] == hub)
-        & (s_log["n_topics"] == 2)
-    )
-    signup_user = s_log["t1"]
-    signup_token = s_log["data_addr"]
-
-    trust_logs = F.filter(LOGS, _trust_p)
-    trust_poison = signup_stage1 & (F.size(trust_logs) >= 2)
-    t_log = F.get(trust_logs, 0)
-    signup_trust_ok = (
-        signup_stage1
-        & (F.size(trust_logs) == 1)
-        & (t_log["t1"] == t_log["t2"])
-        & (t_log["t1"] == signup_user)
+    # --- 1: one pass per distinct log filter / exists; ABI head -------
+    s1 = stage(
+        n_logs=F.size(F.col("logs")),
+        # C1 / C5 / C3: simple exists() predicates
+        is_erc20=F.exists(LOGS, _erc20_p),
+        is_trust=F.exists(LOGS, _trust_p),
+        is_org=F.exists(LOGS, lambda l: parsed_org_signup_p(l, hub)),
+        signup_logs=F.filter(LOGS, lambda l: l["has_signup"]),
+        trust_logs=F.filter(LOGS, _trust_p),
+        transfer_logs=F.filter(LOGS, _erc20_p),
+        ht_logs=F.filter(LOGS, lambda l: l["has_hub"]),
+        exec_logs=F.filter(LOGS, lambda l: l["has_exec"]),
+        # C6: safe eth transfer, ABI via hex slicing (:277-337)
+        has_method=F.coalesce(F.col("input"), F.lit("")).startswith(
+            EXEC_TRANSACTION_METHOD_ID
+        ),
+        raw_offset=hex_to_decimal(F.concat(F.lit("0x"), hex_slot(F.col("input"), 2))),
+        operation_zero=(
+            hex_to_decimal(F.concat(F.lit("0x"), hex_slot(F.col("input"), 3))) == 0
+        ),
     )
 
-    transfer_logs = F.filter(LOGS, _erc20_p)
-    transfer_poison = signup_trust_ok & (F.size(transfer_logs) >= 2)
-    tr_log = F.get(transfer_logs, 0)
-    is_signup = (
-        signup_trust_ok
-        & (F.size(transfer_logs) == 1)
-        & (tr_log["address"] == signup_token)
-        & (tr_log["t1"] == EMPTY_ADDRESS)
-        & (tr_log["t2"] == signup_user)
-        & (tr_log["data_dec"] == F.lit(CRC_SIGNUP_MINT_WEI).cast("decimal(38,0)"))
-    )
-
-    # --- C4: hub transfer ---------------------------------------------
-    ht_logs = F.filter(LOGS, lambda l: l["has_hub"])
-    ht_poison = F.size(ht_logs) >= 2  # SingleOrDefault throw (:166)
-    h_log = F.get(ht_logs, 0)
-    is_hub_transfer = (
-        (F.size(ht_logs) == 1)
-        & (h_log["address"] == hub)
-        & (h_log["n_topics"] == 3)
-        & is_erc20  # ":197 hub transfers always come with ≥1 ERC-20 transfer"
-    )
-
-    # --- C7: EOA eth transfer -----------------------------------------
-    # try_cast: a malformed/out-of-range wei string must classify as
-    # not-EOA (reference: a parse failure lands the tx in Unknown via
-    # the catch, TransactionClassifier.cs:439-443), never abort the
-    # job with an ANSI CAST_OVERFLOW
-    tx_value = F.col("value").try_cast("decimal(38,0)")
-    is_eoa = (
-        (tx_value > 0) & (n_logs == 0) & (F.col("input") == "0x") & F.col("to").isNotNull()
-    )
-
-    # --- C6: safe eth transfer (ABI via hex slicing, :277-337) --------
-    has_method = F.coalesce(F.col("input"), F.lit("")).startswith(EXEC_TRANSACTION_METHOD_ID)
-    # 0x + 8 method chars + 10 * 64 head chars
-    head_ok = F.length(F.col("input")) >= 2 + 8 + 640
-    raw_offset = hex_to_decimal(F.concat(F.lit("0x"), hex_slot(F.col("input"), 2)))
-    # data length word sits at input[2 + 8 + offset*2 .. +64].
+    # --- 2: sizes and first matches; the gated ABI data offset --------
+    # The data length word sits at input[2 + 8 + offset*2 .. +64].
     # An adversarial offset word anywhere in [2^31, 1e38) would throw
     # under ANSI mode — CAST_OVERFLOW on the int position, or decimal
     # overflow on offset*2 near the decimal(38,0) ceiling — killing
     # the whole batch where the reference's DecodeFunctionInput throw
     # is caught into Unknown (:439-443). The magnitude gate NULLs any
-    # offset that could not possibly address a real input string
-    # (lazy CASE: the arithmetic below never sees an ungated value),
-    # so such txs fail decode_ok and poison to Unknown exactly like
-    # the reference.
-    data_offset = F.when(
-        raw_offset < F.lit(1_000_000_000).cast("decimal(38,0)"), raw_offset
-    )
-    data_len_pos = (F.lit(2 + 8).cast("decimal(38,0)") + data_offset * 2 + 1).try_cast("int")
-    data_len_word = F.substring(F.col("input"), F.coalesce(data_len_pos, F.lit(1)), 64)
-    decode_ok = head_ok & data_offset.isNotNull() & data_len_pos.isNotNull() & (
-        F.length(F.col("input")).cast("decimal(38,0)")
-        >= F.lit(2 + 8).cast("decimal(38,0)") + data_offset * 2 + 64
-    )
-    safe_decode_poison = has_method & ~decode_ok  # DecodeFunctionInput throw
-    data_empty = hex_to_decimal(F.concat(F.lit("0x"), data_len_word)) == 0
-    operation_zero = hex_to_decimal(F.concat(F.lit("0x"), hex_slot(F.col("input"), 3))) == 0
-    exec_logs = F.filter(LOGS, lambda l: l["has_exec"])
-    safe_exec_poison = has_method & decode_ok & data_empty & operation_zero & (
-        F.size(exec_logs) >= 2
-    )
-    # to.isNotNull: the reference dereferences transaction.To (:311) —
-    # a NULL `to` (contract creation) throws into Unknown there
-    is_safe = (
-        has_method & decode_ok & data_empty & operation_zero
-        & (F.size(exec_logs) == 1) & F.col("to").isNotNull()
+    # offset that could not possibly address a real input string, so
+    # the arithmetic of stages 3-4 never sees an ungated value, and
+    # such txs fail decode_ok and poison to Unknown exactly like the
+    # reference.
+    s2 = stage(
+        **{f"n_{k}": F.size(c(f"{k}_logs")) for k in log_kinds},
+        **{f"{k}_log": F.get(c(f"{k}_logs"), 0) for k in ("signup", "trust", "transfer", "ht")},
+        data_offset=F.when(
+            c("raw_offset") < F.lit(1_000_000_000).cast("decimal(38,0)"), c("raw_offset")
+        ),
     )
 
-    poisoned = (
-        signup_poison | trust_poison | transfer_poison | ht_poison
-        | safe_decode_poison | safe_exec_poison
+    # --- 3-4: C2 signup staged like the reference (:25-126); ABI decode
+    s_log, t_log, tr_log, h_log = (c(f"{k}_log") for k in ("signup", "trust", "transfer", "ht"))
+    signup_user = s_log["t1"]
+    signup_token = s_log["data_addr"]
+    data_offset = c("data_offset")
+    s3 = stage(
+        signup_stage1=(
+            (c("n_logs") >= 3)
+            & (c("n_signup") == 1)
+            & (s_log["address"] == hub)
+            & (s_log["n_topics"] == 2)
+        ),
+        data_len_pos=(F.lit(2 + 8).cast("decimal(38,0)") + data_offset * 2 + 1).try_cast("int"),
+    )
+    data_len_word = F.substring(F.col("input"), F.coalesce(c("data_len_pos"), F.lit(1)), 64)
+    s4 = stage(
+        signup_trust_ok=(
+            c("signup_stage1")
+            & (c("n_trust") == 1)
+            & (t_log["t1"] == t_log["t2"])
+            & (t_log["t1"] == signup_user)
+        ),
+        # 0x + 8 method chars + 10 * 64 head chars
+        decode_ok=(
+            (F.length(F.col("input")) >= 2 + 8 + 640)
+            & data_offset.isNotNull()
+            & c("data_len_pos").isNotNull()
+            & (
+                F.length(F.col("input")).cast("decimal(38,0)")
+                >= F.lit(2 + 8).cast("decimal(38,0)") + data_offset * 2 + 64
+            )
+        ),
+        data_empty=hex_to_decimal(F.concat(F.lit("0x"), data_len_word)) == 0,
     )
 
+    # --- 5: poisoning — each SingleOrDefault / decode throw (:377-444)
+    safe_ok = c("has_method") & c("decode_ok") & c("data_empty") & c("operation_zero")
+    s5 = stage(
+        poisoned=(
+            ((c("n_logs") >= 3) & (c("n_signup") >= 2))
+            | (c("signup_stage1") & (c("n_trust") >= 2))
+            | (c("signup_trust_ok") & (c("n_transfer") >= 2))
+            | (c("n_ht") >= 2)  # :166
+            | (c("has_method") & ~c("decode_ok"))  # DecodeFunctionInput throw
+            | (safe_ok & (c("n_exec") >= 2))
+        )
+    )
+
+    # try_cast: a malformed/out-of-range wei string must classify as
+    # not-EOA (reference: a parse failure lands the tx in Unknown via
+    # the catch, TransactionClassifier.cs:439-443), never abort the
+    # job with an ANSI CAST_OVERFLOW
+    tx_value = F.col("value").try_cast("decimal(38,0)")
     flags = {
-        CLASS_ERC20_TRANSFER: is_erc20,
-        CLASS_CRC_SIGNUP: is_signup,
-        CLASS_CRC_ORGANISATION_SIGNUP: is_org,
-        CLASS_CRC_HUB_TRANSFER: is_hub_transfer,
-        CLASS_CRC_TRUST: is_trust,
-        CLASS_EOA_ETH_TRANSFER: is_eoa,
-        CLASS_SAFE_ETH_TRANSFER: is_safe,
+        CLASS_ERC20_TRANSFER: c("is_erc20"),
+        CLASS_CRC_SIGNUP: (
+            c("signup_trust_ok")
+            & (c("n_transfer") == 1)
+            & (tr_log["address"] == signup_token)
+            & (tr_log["t1"] == EMPTY_ADDRESS)
+            & (tr_log["t2"] == signup_user)
+            & (tr_log["data_dec"] == F.lit(CRC_SIGNUP_MINT_WEI).cast("decimal(38,0)"))
+        ),
+        CLASS_CRC_ORGANISATION_SIGNUP: c("is_org"),
+        CLASS_CRC_HUB_TRANSFER: (
+            (c("n_ht") == 1)
+            & (h_log["address"] == hub)
+            & (h_log["n_topics"] == 3)
+            & c("is_erc20")  # ":197 hub transfers always come with ≥1 ERC-20 transfer"
+        ),
+        CLASS_CRC_TRUST: c("is_trust"),
+        CLASS_EOA_ETH_TRANSFER: (
+            (tx_value > 0)
+            & (c("n_logs") == 0)
+            & (F.col("input") == "0x")
+            & F.col("to").isNotNull()
+        ),
+        # to.isNotNull: the reference dereferences transaction.To
+        # (:311) — a NULL `to` (contract creation) throws into Unknown
+        CLASS_SAFE_ETH_TRANSFER: (
+            safe_ok & (c("n_exec") == 1) & F.col("to").isNotNull()
+        ),
     }
-    # Two withColumns batches (not a withColumn chain): every
-    # DataFrame transformation eagerly re-ANALYZES its whole logical
-    # plan, so 16 chained withColumn calls over this expression tree
-    # cost quadratic driver time (~3 s of the chain materialization at
-    # any data size — measured). Batch 1 adds the guarded flags; batch
-    # 2 derives labels + payloads from the now-named flag columns.
     flag_cols = {
-        f"is_{label}": F.when(poisoned, F.lit(False)).otherwise(flags[label])
+        f"is_{label}": F.when(c("poisoned"), F.lit(False)).otherwise(flags[label])
         for label in ALL_CLASS_LABELS
     }
     label_array = F.filter(
@@ -289,24 +317,25 @@ def _classify_columns(hub: str) -> tuple:
     )
     # Extraction payloads reused by operators.extract (computed once,
     # pruned by Catalyst if unused downstream).
-    return (
-        lp_expr,
-        flag_cols,
-        {
-            "classification": F.when(
-                F.size(label_array) == 0, F.array(F.lit(CLASS_UNKNOWN))
-            ).otherwise(label_array),
-            "_signup_user": F.when(F.col(f"is_{CLASS_CRC_SIGNUP}"), signup_user),
-            "_signup_token": F.when(F.col(f"is_{CLASS_CRC_SIGNUP}"), signup_token),
-            "_hub_from": F.when(F.col(f"is_{CLASS_CRC_HUB_TRANSFER}"), h_log["t1"]),
-            "_hub_to": F.when(F.col(f"is_{CLASS_CRC_HUB_TRANSFER}"), h_log["t2"]),
-            "_hub_value_hex": F.when(F.col(f"is_{CLASS_CRC_HUB_TRANSFER}"), h_log["data"]),
-            "_safe_to": F.when(
-                F.col(f"is_{CLASS_SAFE_ETH_TRANSFER}"), hex_slot_address(F.col("input"), 0)
-            ),
-            "_safe_value_hex": F.when(
-                F.col(f"is_{CLASS_SAFE_ETH_TRANSFER}"),
-                F.concat(F.lit("0x"), hex_slot(F.col("input"), 1)),
-            ),
-        },
-    )
+    payloads = {
+        "classification": F.when(
+            F.size(label_array) == 0, F.array(F.lit(CLASS_UNKNOWN))
+        ).otherwise(label_array),
+        "_signup_user": F.when(F.col(f"is_{CLASS_CRC_SIGNUP}"), signup_user),
+        "_signup_token": F.when(F.col(f"is_{CLASS_CRC_SIGNUP}"), signup_token),
+        "_hub_from": F.when(F.col(f"is_{CLASS_CRC_HUB_TRANSFER}"), h_log["t1"]),
+        "_hub_to": F.when(F.col(f"is_{CLASS_CRC_HUB_TRANSFER}"), h_log["t2"]),
+        "_hub_value_hex": F.when(F.col(f"is_{CLASS_CRC_HUB_TRANSFER}"), h_log["data"]),
+        "_safe_to": F.when(
+            F.col(f"is_{CLASS_SAFE_ETH_TRANSFER}"), hex_slot_address(F.col("input"), 0)
+        ),
+        "_safe_value_hex": F.when(
+            F.col(f"is_{CLASS_SAFE_ETH_TRANSFER}"),
+            F.concat(F.lit("0x"), hex_slot(F.col("input"), 1)),
+        ),
+    }
+    stages = [
+        {"_lp": F.transform(F.col("logs"), parse)},
+        s1, s2, s3, s4, s5, flag_cols, payloads,
+    ]
+    return stages, temps

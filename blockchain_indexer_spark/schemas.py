@@ -204,3 +204,28 @@ EVENT_TABLE_SCHEMAS = {
     "eth_transfer": ETH_TRANSFER_SCHEMA,
     "gnosis_safe_eth_transfer": GNOSIS_SAFE_ETH_TRANSFER_SCHEMA,
 }
+
+# --- cache tables (0.0.64.sql:2272-2376), as operators.caches writes them
+CACHE_CRC_BALANCES_SCHEMA = T.StructType(
+    [
+        T.StructField("safe_address", T.StringType(), True),
+        T.StructField("token", T.StringType(), True),
+        T.StructField("token_owner", T.StringType(), True),
+        T.StructField("balance", DECIMAL_WEI, True),
+        T.StructField("last_change_at", T.TimestampType(), True),
+        T.StructField("last_change_at_block", T.LongType(), True),
+    ]
+)
+
+CACHE_CRC_CURRENT_TRUST_SCHEMA = T.StructType(
+    [
+        T.StructField("can_send_to", T.StringType(), True),
+        T.StructField("user", T.StringType(), True),
+        T.StructField("user_token", T.StringType(), True),
+        T.StructField("can_send_to_token", T.StringType(), True),
+        T.StructField("limit", T.LongType(), True),
+        T.StructField("history_count", T.LongType(), True),
+        T.StructField("last_change", T.TimestampType(), True),
+        T.StructField("last_change_at_block", T.LongType(), True),
+    ]
+)

@@ -38,8 +38,8 @@ def get_spark(
         # round-9 record showed the overhead-bound iterative paths
         # regressing at local[32] (graph_supplier_pagerank 2.41 ->
         # 7.05 s), and two independent round-10 interleaved A/Bs
-        # (tools/ab_aqe_floor.py; min-of-3 and min-of-4, alternating
-        # order, one JVM) found NO remaining 64k winner — pagerank
+        # (min-of-3 and min-of-4, alternating order, one JVM;
+        # OPTIMIZATION_r10.md) found NO remaining 64k winner — pagerank
         # 4.8-5.7 s @64k vs 3.1-3.5 s @1m, and the former winners
         # (doc_dedup_clusters 4.5 vs 5.2, ngram_jaccard 3.3 vs 3.5,
         # mm_cross_modal 6.2 vs 7.6, event_sessionization wash) now
@@ -59,6 +59,16 @@ def get_spark(
         # read as long ns-since-epoch, converted in sources.parquet.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # Janino compiles are cached per JVM in an LRU keyed by the
+        # generated source; Spark's default holds 100 classes. One live
+        # micro-batch round (promote, classify, extract, 9 appends,
+        # cache refresh) generates ~270, so the default cache thrashed
+        # and every steady-state round recompiled all of them (~270
+        # compiles of ~11 ms, ~3 s per round, counted through
+        # CodegenMetrics on 4 cores). At 4000 a warm round compiles
+        # 4 classes; the kept classes cost ~10 MB of driver memory.
+        # Static conf: it only takes effect in a fresh JVM.
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     for k, v in (extra_conf or {}).items():

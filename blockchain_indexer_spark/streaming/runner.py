@@ -32,9 +32,14 @@ from blockchain_indexer_spark.operators.classify import classify
 from blockchain_indexer_spark.operators.extract import extract_all
 from blockchain_indexer_spark.operators.promote import promote
 from blockchain_indexer_spark.schemas import (
+    BLOCK_SCHEMA,
+    CACHE_CRC_BALANCES_SCHEMA,
+    CACHE_CRC_CURRENT_TRUST_SCHEMA,
+    EVENT_TABLE_SCHEMAS,
     HUB_ADDRESS,
     LOG_STRUCT,
     RAW_TRANSACTION_SCHEMA,
+    TRANSACTION_SCHEMA,
 )
 
 FEED_SCHEMA = T.StructType(
@@ -73,6 +78,53 @@ CACHE_BALANCES = "cache_crc_balances_by_safe_and_token"
 CACHE_TRUST = "cache_crc_current_trust"
 
 BLOCK_GROUP_SIZE = 100_000
+
+
+def _as_read_back(schema: T.StructType, partitioned: bool) -> T.StructType:
+    """A declared table schema as the parquet sink reads it back:
+    every column nullable (Spark writes parquet columns optional) and
+    the partition column last, typed as partition discovery infers it
+    (int while block_number < 2^31 * BLOCK_GROUP_SIZE)."""
+    fields = [T.StructField(f.name, f.dataType, True) for f in schema.fields]
+    if partitioned:
+        fields.append(T.StructField("block_group", T.IntegerType(), True))
+    return T.StructType(fields)
+
+
+# Parquet-sink read schemas. Passing them to spark.read skips the
+# footer-inference job each schema-less read submits (8 per live round:
+# 6 read_final + 2 read_cache). tests/test_streaming.py pins that they
+# equal what the sink writes.
+SINK_READ_SCHEMAS: dict[str, T.StructType] = {
+    **{
+        name: _as_read_back(schema, partitioned=True)
+        for name, schema in {
+            "block": BLOCK_SCHEMA,
+            "transaction": TRANSACTION_SCHEMA,
+            **EVENT_TABLE_SCHEMAS,
+        }.items()
+    },
+    CACHE_BALANCES: _as_read_back(CACHE_CRC_BALANCES_SCHEMA, partitioned=False),
+    CACHE_TRUST: _as_read_back(CACHE_CRC_CURRENT_TRUST_SCHEMA, partitioned=False),
+}
+
+
+def _has_data_files(path: str) -> bool:
+    """True once any file Spark would read sits under `path` (it skips
+    names starting with '.', and with '_' unless they hold '='). An
+    empty append leaves only _SUCCESS, which a schema-less read rejects
+    as UNABLE_TO_INFER_SCHEMA — the sink keeps treating that as 'no
+    table' now that reads carry their schema."""
+
+    def visible(n: str) -> bool:
+        return not (n.startswith(".") or (n.startswith("_") and "=" not in n))
+
+    for _, dirs, files in os.walk(path):
+        if any(visible(f) for f in files):
+            return True
+        dirs[:] = [d for d in dirs if visible(d)]
+    return False
+
 
 # K5: the reference broadcasts this magic hash to websocket consumers
 # when a reorg invalidated previously announced transactions
@@ -411,15 +463,21 @@ class IngestPipeline:
                         properties=self.jdbc_properties,
                     ),
                 )
-            # probe locally first: letting spark.read throw on a
-            # missing dir works, but the JVM logs a full stack trace
-            # per probe (one per table on the first batch) — noise
-            # that reads like a failure in bench/driver output
-            if not os.path.isdir(self._table_path(name)):
-                return None
-            return self.spark.read.parquet(self._table_path(name))
+            return self._read_parquet(name)
         except AnalysisException:
             return None
+
+    def _read_parquet(self, name: str) -> DataFrame | None:
+        """Parquet-sink read with the table's declared schema (see
+        SINK_READ_SCHEMAS); None while the table holds no data files.
+        Probed locally first: letting spark.read throw on a missing
+        dir works, but the JVM logs a full stack trace per probe (one
+        per table on the first batch) — noise that reads like a
+        failure in bench/driver output."""
+        path = self._table_path(name)
+        if not _has_data_files(path):
+            return None
+        return self.spark.read.schema(SINK_READ_SCHEMAS[name]).parquet(path)
 
     def _append(self, name: str, df: DataFrame, block_col: str) -> None:
         if self.jdbc_url is not None:
@@ -687,9 +745,11 @@ class IngestPipeline:
 
         assembled = assemble_transactions(new_blocks, new_txs, new_logs)
         # Checkpoint the classified frame: the 8 table appends below
-        # would otherwise each re-run assemble+classify — 8 deep
-        # plans whose codegen compile time dominates a small live
-        # batch (the reference's 500 ms cadence, Settings.cs:180).
+        # would otherwise each re-run the assemble shuffle, the log
+        # parse and the classifier's hex decodes (and each plan its
+        # own AQE re-optimization) inside the reference's 500 ms
+        # cadence (Settings.cs:180). On 4 cores the checkpoint job
+        # takes ~0.5 s for a ~100-tx batch.
         # raw `logs` dropped: the extractors read the parsed `_lp`
         # structs, so only the slimmer frame is materialized
         classified = (
@@ -738,10 +798,8 @@ class IngestPipeline:
 
         if self.jdbc_url is not None:
             return self.read_final(name)  # same probe+decode semantics
-        if not os.path.isdir(self._table_path(name)):
-            return None  # avoid the JVM's logged stack trace per probe
         try:
-            return self.spark.read.parquet(self._table_path(name))
+            return self._read_parquet(name)
         except AnalysisException:
             return None
 

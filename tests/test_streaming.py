@@ -10,6 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from blockchain_indexer_spark.streaming.runner import (
+    CACHE_BALANCES,
+    CACHE_TRUST,
     EVENT_TABLES,
     FEED_SCHEMA,
     IngestPipeline,
@@ -263,3 +265,92 @@ def test_compaction_preserves_data_and_shrinks_files(spark, tmp_path_factory, fe
     assert before.equals(after)
     # idempotent: nothing left above the threshold
     assert pipe.compact("transaction", min_files=1) == {}
+
+
+def _janino_compiles(spark) -> int:
+    """Janino compiles so far in this JVM (CodegenMetrics histogram)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+@pytest.fixture(scope="module")
+def same_shape_rounds(spark, tmp_path_factory, feed_df):
+    """Three rounds of the fixture chain, each shifted to fresh block
+    numbers and hashes: the first creates the tables and caches, the
+    last two run the same plans over non-empty tables. Yields the
+    pipeline and the Janino compiles of each round."""
+    pipe = IngestPipeline(spark, str(tmp_path_factory.mktemp("same_shape")))
+    compiles = []
+    for k in range(3):
+        batch = (
+            feed_df.withColumn("block_number", F.col("block_number") + k * 1000)
+            .withColumn("block_hash", F.concat("block_hash", F.lit(f"-{k}")))
+            .withColumn("hash", F.concat("hash", F.lit(f"-{k}")))
+        )
+        before = _janino_compiles(spark)
+        pipe.process_batch(batch, k)
+        compiles.append(_janino_compiles(spark) - before)
+    return pipe, compiles
+
+
+def test_warm_round_reuses_compiled_classes(same_shape_rounds):
+    """A round generates ~270 classes; Spark's default 100-entry
+    codegen cache thrashed and recompiled them all every round.
+    session.py sizes the cache to hold a round."""
+    _, compiles = same_shape_rounds
+    assert compiles[2] <= 10, compiles
+
+
+def test_sink_read_schemas_equal_what_the_sink_writes(spark, same_shape_rounds):
+    """read_final/read_cache pass SINK_READ_SCHEMAS instead of running
+    a footer-inference job per read: each must equal the schema Spark
+    infers from the files the sink wrote (names, order, types,
+    nullability, block_group)."""
+    from blockchain_indexer_spark.streaming.runner import SINK_READ_SCHEMAS
+
+    pipe, _ = same_shape_rounds
+    assert set(SINK_READ_SCHEMAS) == {"block", *EVENT_TABLES, CACHE_BALANCES, CACHE_TRUST}
+    for name, declared in SINK_READ_SCHEMAS.items():
+        inferred = spark.read.parquet(pipe._table_path(name)).schema
+        assert inferred == declared, name
+        assert pipe._read_parquet(name).schema == declared
+
+
+def test_empty_table_still_reads_as_absent(spark, tmp_path):
+    """An append of zero rows leaves only _SUCCESS; the sink reports
+    'no table' for it as the schema-inferring read did."""
+    pipe = IngestPipeline(spark, str(tmp_path))
+    empty = spark.createDataFrame([], "block_number long, hash string")
+    pipe._append("crc_trust", empty, "block_number")
+    assert os.listdir(pipe._table_path("crc_trust"))
+    assert pipe.read_final("crc_trust") is None
+
+
+def test_classifier_plan_computes_each_log_filter_once(spark):
+    """The staged classifier: each distinct filter over the parsed
+    logs appears once in the optimized plan (the nested Column tree
+    repeated them 138 times)."""
+    import re
+    from collections import Counter
+
+    from blockchain_indexer_spark.operators.classify import classify
+    from blockchain_indexer_spark.operators.extract import assemble_transactions
+
+    plan = (
+        classify(assemble_transactions(*build_raw_tables(spark)))
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+
+    def call_at(i: int) -> str:
+        depth = 0
+        for j in range(i, len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            if depth == 0 and plan[j] == ")":
+                return re.sub(r"#\d+|x_\d+", "", plan[i:j + 1])
+        raise AssertionError("unbalanced plan string")
+
+    filters = Counter(call_at(m.start()) for m in re.finditer(r"filter\(_lp#", plan))
+    assert len(filters) == 5, list(filters)
+    assert set(filters.values()) == {1}, filters
