@@ -1,19 +1,5 @@
 """Query library: every SURVEY.md §2 operator shape as a registered
 (Spark builder, DuckDB oracle SQL) pair over the driver testdata.
-
-Registration order is rebuilt into an explicit PRIORITY order below.
-Why: the driver's correctness harness iterates ``queries()`` in dict
-order under a budget — round 1 recorded exactly the first 50 registered
-entries and silently dropped the rest (all 16 ``chain_*`` reference-
-semantics gates, the 5 ``mm_*`` gates and ``doc_quota_sample`` — see
-VERDICT.md "Next round" #1). Whatever the budget is (row cap or wall
-clock), the front of the dict is what gets driver-verified, so the
-order here is a deliberate ranking:
-
-1. previously-unverified reference-semantics gates (chain_*, mm_*),
-2. one gate per distinct §2 operator shape / LLM-pipeline component,
-3. gates whose §2 ids are already covered by an earlier chain twin,
-4. rows-only production variants (no DuckDB oracle — weakest signal).
 """
 
 from blockchain_indexer_spark.plans.registry import REGISTRY, Query, register
@@ -24,214 +10,4 @@ from blockchain_indexer_spark.plans import llmops as _llmops  # noqa: E402,F401
 from blockchain_indexer_spark.plans import chain as _chain  # noqa: E402,F401
 from blockchain_indexer_spark.plans import multimodal as _multimodal  # noqa: E402,F401
 
-#: Driver-facing iteration order (highest verification value first).
-PRIORITY = (
-    # ------------------------------------------------------------------
-    # Round-10 rotation (VERDICT r9 "Next round" #6 + the standing
-    # rotation policy). The driver records exactly the first 50
-    # entries per round; after the round-9 record the staleness
-    # histogram over the 163 oracled queries is {6: 15, 7: 50, 8: 50,
-    # 9: 48} — rotation period ceil(163/50) = 4, so the post-r10 bound
-    # is "newest driver row >= round 7" for every below-fold oracled
-    # query. The window is therefore the 15 round-6-tier leftovers
-    # (at the bound — they MUST rotate in now) plus the first 35 of
-    # the round-7 tier in prior relative order. The two rows-only
-    # production twins (minhash_incremental / minhash_calibration)
-    # rotate OUT: their r9 debut rows exist, rows-only is the weakest
-    # signal (no oracle -> err=no_oracle costs a green row), and their
-    # md5/estimate twins are oracled and fresh.
-    # ------------------------------------------------------------------
-    # -- tier STALE-ORACLED: newest driver row is round 6 (at bound) ----
-
-    "doc_lang_id",
-    "doc_quality_score",
-    "doc_repetition_stats",
-    "doc_train_split",
-    "doc_top_terms",
-    "doc_rolling_fingerprint",
-    "corpus_mixture_report",
-    "embedding_cosine_near_dups",
-    "minhash_signatures_md5",
-    "simhash_signatures_md5",
-    "per_day_counts",
-    "double_entry_ledger",
-    "multi_join_revenue",
-    "topk_per_group",
-    "union_activity_timeline",
-    "embedding_dbscan",
-    "mm_image_dedup_clusters",
-    "doc_mmr_rerank",
-    "embedding_lp_ivf_agreement",
-    "doc_chunk_packing",
-    "corpus_token_cardinality",
-    "doc_length_quantiles",
-    "scalar_total",
-    "mm_real_png",
-    "doc_boilerplate_scrub",
-    "doc_bm25_topk",
-    "doc_token_budget_sample",
-    "mm_image_ahash",
-    "graph_supplier_pagerank",
-    "doc_bigram_fluency",
-    "corpus_cms_heavy_hitters",
-    "mm_real_gif",
-    "corpus_perceptron_weights",
-    "doc_perceptron_margin",
-    "doc_intra_dedup",
-    "doc_cluster_best",
-    "doc_shard_plan",
-    "embedding_knn_triangles",
-    "doc_cross_repeat_spans",
-    "doc_winnowing",
-    "ngram_containment_near_dups",
-    "doc_dsir_weights",
-    "corpus_source_ks_drift",
-    "corpus_source_pair_jaccard",
-    "mm_real_jpeg",
-    "doc_cdc_chunks",
-    "embedding_hard_negatives",
-    "event_funnel_conversion",
-    "event_cohort_retention",
-    "doc_hybrid_rrf",
-    # ------------------------------------------------------------------
-    # Below the 50-row driver window: the fifteen round-7-tier
-    # leftovers (first in line for round 11), then the round-8 and
-    # round-9 tiers (freshest evidence), then the rows-only production
-    # twins (weakest signal; each sits behind its oracled twin).
-    # ------------------------------------------------------------------
-
-    "corpus_quality_stump",
-    "event_decayed_engagement",
-    "event_type_transitions",
-    "embedding_label_propagation",
-    "corpus_source_distinctive_terms",
-    "event_funnel_windowed",
-    "embedding_ann_recall",
-    "event_volume_trend",
-    "event_cusum_changepoint",
-    "event_conversion_attribution",
-    "mm_real_jpeg_color",
-    "ngram_jaccard_near_dups",
-    "doc_exact_decontamination",
-    "doc_dedup_clusters",
-    "mm_real_decode",
-    "mm_audio_dedup_clusters",
-    "mm_video_shots",
-    "doc_longest_repeat",
-    "doc_split_leakage",
-    "embedding_lsh_topk_fetch",
-    "chain_crc_balances",
-    "chain_classification_counts",
-    "chain_current_trust",
-    "mm_real_jpeg_420",
-    "doc_sliding_chunks",
-    "doc_tfidf_keywords",
-    "minhash_estimate_calibration",
-    "chain_eth_transfer_stats",
-    "chain_hub_transfers_per_day",
-    "chain_safe_eth_transfers",
-    "chain_org_signups",
-    "chain_total_minted",
-    "chain_erc20_balances",
-    "chain_timeline_counts",
-    "chain_accepted_crc",
-    "chain_alive_accounts",
-    "chain_dead_accounts",
-    "chain_capacity_graph",
-    "chain_capacity_changes",
-    "chain_get_capacity",
-    "chain_signups_per_day",
-    "chain_balances_by_safe",
-    "chain_crc_minting",
-    "chain_formatted_transfers",
-    "chain_trust_reachability",
-    "mm_decode_stats",
-    "mm_thumbnail_geometry",
-    "mm_frame_sample",
-    "mm_feature_vectors",
-    "mm_feature_hist",
-    "doc_quota_sample",
-    "pricing_summary",
-    "broadcast_join_agg",
-    "dedup_first_seen",
-    "latest_event_per_user",
-    "version_disambiguation",
-    "tumbling_window_stats",
-    "sliding_window_stats",
-    "event_sessionization",
-    "asof_latest_purchase",
-    "range_join_active_sessions",
-    "doc_fingerprint_dedup",
-    "completeness_gate",
-    "anti_join_inactive",
-    "semi_join_parts",
-    "mm_video_dedup_clusters",
-    "mm_cross_modal_dedup",
-    "embedding_pq_adc_agreement",
-    "mm_audio_windowed_dedup",
-    "embedding_dbscan_lsh_agreement",
-    "gap_detection",
-    "filtered_projection",
-    "json_payload",
-    "membership_collect",
-    "rollup_revenue_hierarchy",
-    "profile_orders",
-    "salted_join_segment_totals",
-    "stream_reassembly_join",
-    "mm_real_jpeg_progressive",
-    "event_k_anonymity",
-    "doc_perceptron_calibration",
-    "embedding_pq_distortion",
-    "doc_trigram_fluency",
-    "corpus_classifier_agreement",
-    "minhash_incremental_md5",
-    "embedding_pq_topk",
-    "embedding_ivfpq_topk",
-    "embedding_lsh_near_dups",
-    "embedding_kmeans_clusters",
-    "embedding_semantic_dedup",
-    "doc_unigram_stats",
-    "corpus_mixture_rebalance",
-    "doc_pii_scrub",
-    "corpus_token_cardinality_bound",
-    "doc_length_quantiles_approx_bound",
-    "mm_real_audio",
-    "mm_real_frames",
-    "embedding_knn_label_probe",
-    "corpus_prep_report",
-    "fuzzy_name_matches",
-    "snapshot_diff_orders",
-    "embedding_pca_covariance",
-    "doc_bpe_merges",
-    "doc_bpe_token_stats",
-    "doc_bpe_vocab",
-    "minhash_lsh_candidates_md5",
-    "simhash_near_dups_md5",
-    "doc_decontamination",
-    "embedding_topk_qcosine",
-    "embedding_topk_mips",
-    "embedding_lsh_topk",
-    "embedding_ivf_topk",
-    "doc_token_stats",
-    "minhash_incremental",
-    "minhash_calibration",
-    "embedding_pca_project",
-    "corpus_token_cardinality_approx",
-    "minhash_lsh_candidates",
-    "simhash_signatures",
-    "simhash_near_dups",
-)
-
-
-def _reorder() -> None:
-    ordered = {n: REGISTRY[n] for n in PRIORITY if n in REGISTRY}
-    # Anything registered but not ranked keeps its original relative
-    # order at the end — new queries must be slotted into PRIORITY.
-    ordered.update({n: q for n, q in REGISTRY.items() if n not in ordered})
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-_reorder()
-
-__all__ = ["PRIORITY", "REGISTRY", "Query", "register"]
+__all__ = ["REGISTRY", "Query", "register"]

@@ -1,23 +1,12 @@
-"""Round-10 BANKED gates — implemented, DuckDB-parity-tested, but NOT
-yet registered (VERDICT r8 "Next round" #4, the plans/banked_r7/_r8/
-_r9 convention).
+"""BANKED gates — implemented, DuckDB-parity-tested, but NOT
+registered.
 
-Why banked: the driver records exactly the first 50 registry entries
-per round, and round 9's window budget is fully spoken for (5 promoted
-gates + 2 rows-only debuts + 43 stale refreshes). Registering more new
-oracled gates this round would displace staleness-rotation slots and
-re-break the rotation invariant (tests/test_registry_order.py) by
-arithmetic.
-
-So these follow the banked convention: the OPERATOR code, the oracle
-SQL, and a full Spark-vs-DuckDB parity test land now
-(tests/test_banked_r10.py runs them through the exact same compare()
-as the registered gates); round 10 promotes each entry to a plans/*
-@register call plus a PRIORITY front-window slot — a mechanical move
-of the Query objects below.
-
-This module must NOT be imported by plans/__init__ until promotion:
-the registry invariants assert set(REGISTRY) == set(PRIORITY).
+The OPERATOR code, the oracle SQL, and a full Spark-vs-DuckDB parity
+test live here (tests/test_banked_r10.py runs them through the exact
+same compare() as the registered gates). Registering one is a move of
+its Query object below into a plans/* @register call; until then this
+module is not imported by plans/__init__, so REGISTRY does not see
+these entries.
 """
 
 from __future__ import annotations

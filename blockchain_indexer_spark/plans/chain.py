@@ -4,8 +4,10 @@ The harness tables have no chain data, so each query first derives a
 deterministic synthetic chain FROM the events table — one signup tx
 per distinct user plus one tx per event (purchase → CRC transfer,
 view → non-CRC transfer, click → EOA eth transfer, signup → trust
-event, error → unknown) — then runs the engine's REAL pipeline
-(operators.classify → operators.extract → operators.views) on it.
+event, error → unknown) — then ingests it through the engine's REAL
+pipeline, the production IngestPipeline.process_batch (promote →
+classify → extract → appends → cache refresh), once per session and
+sf_dir, and runs operators.views over the sink's tables.
 
 The DuckDB oracle derives the EXPECTED outputs directly from events
 (never simulating logs), so the classifier/extractor/view stack is
@@ -36,20 +38,18 @@ Derivation contract (identical on both sides):
 
 from __future__ import annotations
 
+import atexit
 import datetime as _dt
-from concurrent.futures import ThreadPoolExecutor
+import shutil
+import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from blockchain_indexer_spark.operators.classify import classify
-from blockchain_indexer_spark.operators.extract import extract_all
 from blockchain_indexer_spark.operators.views import (
     crc_alive_accounts,
     crc_all_signups,
-    crc_balances_by_safe_and_token,
     crc_capacity_graph,
-    crc_current_trust,
     crc_dead_accounts,
     crc_hub_transfers_per_day,
     crc_ledger,
@@ -76,6 +76,13 @@ from blockchain_indexer_spark.schemas import (
     TRANSFER_TOPIC,
 )
 from blockchain_indexer_spark.sources.parquet import load_table, spread
+from blockchain_indexer_spark.streaming.runner import (
+    CACHE_BALANCES,
+    CACHE_TRUST,
+    EVENT_TABLES,
+    SINK_READ_SCHEMAS,
+    IngestPipeline,
+)
 
 MINT_HEX = "0x" + format(int(CRC_SIGNUP_MINT_WEI), "064x")
 ADDR_SPACE, TOKEN_SPACE, NCTOKEN_SPACE = 1, 1 + 2**24, 1 + 2**25
@@ -284,262 +291,63 @@ def derive_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def chain_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The derived chain as FEED_SCHEMA rows (streaming.runner), one per
+    tx, each carrying its block's metadata and tx count — the batch form
+    of what the live source delivers."""
+    return derive_chain(spark, sf_dir).select(
+        "block_number",
+        "block_hash",
+        F.unix_timestamp("timestamp").alias("block_timestamp"),
+        F.count("*").over(Window.partitionBy("block_number")).cast("int").alias(
+            "total_transaction_count"
+        ),
+        "hash", "index", "from", "to", "value", "input", "nonce", "type", "logs",
+    )
+
+
+def _backfill(spark: SparkSession, sf_dir: str, out_dir: str) -> IngestPipeline:
+    """Ingest sf_dir's derived chain into a sink at out_dir as one batch."""
+    pipe = IngestPipeline(spark, out_dir)
+    pipe.process_batch(chain_feed(spark, sf_dir))
+    return pipe
+
+
+def _sink_table(pipe: IngestPipeline, name: str) -> DataFrame:
+    """A sink table without its partition column; a table the chain
+    never produced rows for reads as empty."""
+    read = pipe.read_cache if name in (CACHE_BALANCES, CACHE_TRUST) else pipe.read_final
+    df = read(name)
+    if df is None:
+        df = pipe.spark.createDataFrame([], SINK_READ_SCHEMAS[name])
+    return df.drop("block_group")
+
+
+# The reference never re-runs the indexer per query: ingest promotes
+# event tables once and every analytics view reads those tables
+# (ImportProcedure.cs:17-27, 0.0.64.sql cache tables 280-327). Here the
+# derived chain is backfilled once per (session, sf_dir) into a
+# temporary sink through the production IngestPipeline.process_batch,
+# and every chain query reads the sink.
+_SINKS: dict[tuple[str, str], IngestPipeline] = {}
 _PIPELINE_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
 
-# ---------------------------------------------------------------------------
-# Promoted-table disk layer
-#
-# The reference never re-runs the indexer per query: ingest promotes
-# event tables into Postgres once and every analytics view reads those
-# tables (ImportProcedure.cs:17-27, 0.0.64.sql cache tables 280-327).
-# This layer reproduces that shape locally — the spine's outputs are
-# written under SPARK_GRAFT_CACHE_DIR keyed by a fingerprint of (source
-# parquet identity, spine code hash), so any later session (driver
-# correctness run, bench, tests) reads promoted tables instead of
-# paying the ~13 s derive→classify→extract cold start per process.
-# Set SPARK_GRAFT_SPINE_CACHE=0 to force full recomputation (used by
-# the ingest-throughput bench and the spine equivalence tests).
-# ---------------------------------------------------------------------------
 
-_SPINE_CODE_FILES = (
-    "plans/chain.py",
-    "operators/classify.py",
-    "operators/extract.py",
-    "operators/views.py",
-    "functions/hex.py",
-    "schemas.py",
-)
-
-
-def _spine_cache_enabled() -> bool:
-    import os  # noqa: PLC0415
-
-    return os.environ.get("SPARK_GRAFT_SPINE_CACHE", "1") != "0"
-
-
-def _code_fingerprint() -> str:
-    import hashlib  # noqa: PLC0415
-    import os  # noqa: PLC0415
-
-    pkg = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    h = hashlib.md5()
-    for rel in _SPINE_CODE_FILES:
-        with open(os.path.join(pkg, rel), "rb") as f:
-            h.update(f.read())
-    return h.hexdigest()
-
-
-_CODE_FP: str | None = None
-
-
-def _spine_dir(sf_dir: str, label: str) -> str:
-    """Cache directory for one spine layer at one sf_dir."""
-    import hashlib  # noqa: PLC0415
-    import os  # noqa: PLC0415
-
-    from blockchain_indexer_spark.sources.parquet import _CACHE_DIR  # noqa: PLC0415
-
-    global _CODE_FP
-    if _CODE_FP is None:
-        _CODE_FP = _code_fingerprint()
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    fp = hashlib.md5(
-        f"{_CODE_FP}:{st.st_size}:{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    return os.path.join(
-        _CACHE_DIR, os.path.basename(sf_dir.rstrip("/")), f"{label}-{fp}"
-    )
-
-
-def _read_spine(spark: SparkSession, dest: str, names: tuple[str, ...]) -> dict[str, DataFrame] | None:
-    """Returns None (→ caller recomputes) on ANY failure, including a
-    concurrent writer's stale-fingerprint sweep deleting ``dest`` while
-    the checkpoint jobs are mid-scan — the disk layer is an
-    optimization and must never fail a query."""
-    import json  # noqa: PLC0415
-    import os  # noqa: PLC0415
-
-    from pyspark.sql.types import StructType  # noqa: PLC0415
-
-    try:
-        if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-            return None
-        out: dict[str, DataFrame] = {}
-        for name in names:
-            schema_path = os.path.join(dest, f"{name}.schema.json")
-            if not os.path.exists(schema_path):
-                return None
-            with open(schema_path) as f:
-                schema = StructType.fromJson(json.load(f))
-            # explicit schema: an empty table writes no part files, and
-            # the sidecar keeps the read from failing on inference
-            out[name] = spark.read.schema(schema).parquet(os.path.join(dest, name))
-        # one shallow job per table, then every downstream view
-        # analyzes a one-node LogicalRDD instead of a scan relation —
-        # same lineage shape as the compute path's checkpoints
-        # (measured: the 7-branch timeline plan drops ~2.5 s of
-        # per-query analysis)
-        with ThreadPoolExecutor(max_workers=len(out)) as pool:
-            futures = {
-                n: pool.submit(lambda v=v: v.localCheckpoint(eager=True))
-                for n, v in out.items()
-            }
-            return {n: f.result() for n, f in futures.items()}
-    except Exception:
-        return None
-
-
-def _write_spine(dest: str, tables: dict[str, DataFrame]) -> None:
-    """Atomic-ish publish: write into a tmp dir, rename into place.
-    A concurrent writer losing the rename race just discards its copy.
-    """
-    import json  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
-    tmp = f"{dest}.tmp-{os.getpid()}"
-    try:
-        os.makedirs(tmp, exist_ok=True)
-
-        def _write_one(name: str, df: DataFrame) -> None:
-            # right-size files: ~100k rows per file, the same policy the
-            # resplit layer uses — the frames are checkpointed so the
-            # count is free, and fewer files keeps downstream stages
-            # from paying dozens of near-empty tasks per branch
-            parts = max(1, min(16, -(-df.count() // 100_000)))
-            df.coalesce(parts).write.mode("overwrite").parquet(os.path.join(tmp, name))
-            with open(os.path.join(tmp, f"{name}.schema.json"), "w") as f:
-                json.dump(df.schema.jsonValue(), f)
-
-        # independent write jobs over materialized frames — run concurrently
-        with ThreadPoolExecutor(max_workers=len(tables)) as pool:
-            for fut in [pool.submit(_write_one, n, df) for n, df in tables.items()]:
-                fut.result()
-        with open(os.path.join(tmp, "_SUCCESS"), "w"):
-            pass
-        # drop stale fingerprints of the same layer before publishing
-        # (a concurrent reader mid-scan on an old fingerprint sees its
-        # files vanish — its AnalysisException falls back to a fresh
-        # compute in _pipeline_tables/_derived_views, so the sweep is
-        # safe; leftover .tmp- dirs of crashed writers are swept too)
-        parent, base = os.path.split(dest)
-        label = base.split("-", 1)[0]
-        if os.path.isdir(parent):
-            import time  # noqa: PLC0415
-
-            for d in os.listdir(parent):
-                full = os.path.join(parent, d)
-                stale = d.startswith(f"{label}-") and d != base and ".tmp-" not in d
-                # a crashed writer's tmp leaks forever otherwise; the
-                # age gate keeps a CONCURRENT live writer's tmp safe
-                crashed_tmp = False
-                if ".tmp-" in d and d != os.path.basename(tmp):
-                    try:
-                        crashed_tmp = time.time() - os.path.getmtime(full) > 3600
-                    except OSError:
-                        pass
-                if stale or crashed_tmp:
-                    shutil.rmtree(full, ignore_errors=True)
-        os.rename(tmp, dest)
-    except Exception:
-        # the disk cache is an optimization: a failed publish (OSError,
-        # Py4J error from a write job) must neither fail the query nor
-        # leak a partial multi-hundred-MB copy
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def compute_pipeline_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """The uncached ingest spine: derive → classify → extract.
-
-    localCheckpoint (not persist) everywhere here: the classify
-    plan is a huge expression tree, and a persisted frame still
-    CARRIES it — every downstream plan re-analyzes and
-    re-canonicalizes a copy per reference (the timeline holds
-    14). Checkpointing truncates lineage to a LogicalRDD,
-    collapsing driver-side plan construction from ~10-15 s per
-    chain view to ms. Checkpointing classified FIRST also makes
-    the 8 extractor plans below shallow (they are thin
-    filters/projections over it).
-    Raw `logs` dropped before the snapshot: the extractors read
-    the parsed `_lp` structs, so the raw topic/data strings would
-    only inflate the checkpointed frame.
-
-    The derived frame is materialized BEFORE classify: fused,
-    Catalyst's CollapseProject inlines derive's synthetic log-array
-    construction (md5/format_string per log) into every classifier
-    predicate that touches a log field, re-evaluating it dozens of
-    times per row (measured 16-34 s vs ~7 s split at sf0.01, and the
-    blowup is per-row, so it scales WITH data). The barrier is the
-    staging-table seam the reference has anyway
-    (ImportProcedure.cs:17-27): raw tx+logs land once, the classifier
-    reads the materialized staging rows. persist() rather than
-    localCheckpoint: InMemoryRelation is the same optimizer barrier,
-    the cache populates inside the classify action (one pass, no
-    separate eager job), and unpersist() releases the raw-logs blocks
-    as soon as the classified snapshot exists — a checkpoint would pin
-    them until RDD GC (the sole consumer is the one classify pass).
-    """
-    from pyspark import StorageLevel  # noqa: PLC0415
-
-    # coalesce the 3-way union (signups/orgs/events, 3×32 partitions)
-    # back to core count before caching: cached plans bypass AQE's
-    # post-shuffle coalescing, and the partitioning here is inherited
-    # by every downstream checkpoint (measured: 96-task stages ripple
-    # through all chain views otherwise)
-    derived = (
-        derive_chain(spark, sf_dir)
-        .coalesce(spark.sparkContext.defaultParallelism)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    classified = classify(derived).drop("logs").localCheckpoint(eager=True)
-    derived.unpersist(blocking=False)
-    tables = extract_all(classified)
-    # coalesce: the event tables are small relative to the 3-way
-    # union's partition count; 16 partitions keeps downstream
-    # multi-branch views (timeline = 7 branches) from paying
-    # hundreds of near-empty tasks per stage. The 8 checkpoint
-    # jobs are independent shallow scans — run them concurrently.
-    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
-        futures = {
-            k: pool.submit(lambda v=v: v.coalesce(16).localCheckpoint(eager=True))
-            for k, v in tables.items()
-        }
-        out = {k: f.result() for k, f in futures.items()}
-    # the classified frame itself backs chain_classification_counts
-    # (C8's label array) — promote it alongside the event tables,
-    # without the parsed-log payload no downstream reader needs
-    out["classified"] = classified.drop("_lp").coalesce(16).localCheckpoint(eager=True)
-    return out
-
-
-_PIPELINE_NAMES = (
-    "transaction",
-    "crc_signup",
-    "erc20_transfer",
-    "crc_organisation_signup",
-    "crc_trust",
-    "crc_hub_transfer",
-    "eth_transfer",
-    "gnosis_safe_eth_transfer",
-    "classified",
-)
+def _sink(spark: SparkSession, sf_dir: str) -> IngestPipeline:
+    key = (spark.sparkContext.applicationId, sf_dir)
+    if key not in _SINKS:
+        out = tempfile.mkdtemp(prefix="chain_sink_")
+        atexit.register(shutil.rmtree, out, True)
+        _SINKS[key] = _backfill(spark, sf_dir, out)
+    return _SINKS[key]
 
 
 def _pipeline_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Promoted event tables, once per (session, sf_dir): memory cache
-    → disk layer → full spine compute (published to disk for the next
-    process).
-    """
+    """The 8 final event tables of the sf_dir's sink."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _PIPELINE_CACHE:
-        dest = _spine_dir(sf_dir, "spine") if _spine_cache_enabled() else None
-        tables = _read_spine(spark, dest, _PIPELINE_NAMES) if dest else None
-        if tables is None:
-            tables = compute_pipeline_tables(spark, sf_dir)
-            if dest:
-                _write_spine(dest, tables)
-        _PIPELINE_CACHE[key] = tables
+        pipe = _sink(spark, sf_dir)
+        _PIPELINE_CACHE[key] = {name: _sink_table(pipe, name) for name in EVENT_TABLES}
     return _PIPELINE_CACHE[key]
 
 
@@ -547,82 +355,45 @@ _VIEW_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
 
 
 def _derived_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Persisted twins of the reference's cache tables
-    (cache_crc_current_trust 0.0.64.sql:316-327,
-    cache_crc_balances_by_safe_and_token :280-289): signups, current
-    trust, and balances are re-derived by 8+ of the chain queries, and
-    each un-shared rebuild costs ~6 s of plan construction + analysis
-    alone (measured sf0.1). Persisting them collapses every downstream
-    view onto three shallow scans — exactly the reference's
-    materialize-and-refresh design, minus the triggers.
+    """Signups, current trust, ledger and balances, shared by 8+ chain
+    queries. Trust and balances are the sink's refreshed twins of the
+    reference's cache tables (cache_crc_current_trust 0.0.64.sql:316-327,
+    cache_crc_balances_by_safe_and_token :280-289). Signups and ledger
+    are localCheckpointed: each query's N branches then analyze a
+    one-node LogicalRDD instead of re-deriving them (~6 s of plan
+    construction + analysis per un-shared rebuild, measured sf0.1).
     """
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _VIEW_CACHE:
-        dest = _spine_dir(sf_dir, "views") if _spine_cache_enabled() else None
-        cached = (
-            _read_spine(spark, dest, ("signups", "trust", "ledger", "balances"))
-            if dest
-            else None
-        )
-        if cached is not None:
-            _VIEW_CACHE[key] = cached
-            return cached
         t = _pipeline_tables(spark, sf_dir)
-        # localCheckpoint (eager) rather than persist+count: truncates
-        # lineage so the N branches referencing each view analyze a
-        # one-node LogicalRDD instead of the full derivation tree, and
-        # eager materialization stops racing stages from computing a
-        # lazily-cached frame concurrently (measured 2.5× on the
-        # timeline before).
-        # two independent dependency chains — materialize them in
-        # parallel threads
-        def _trust_chain():
-            signups = crc_all_signups(
-                t["crc_signup"], t["crc_organisation_signup"]
-            ).localCheckpoint(eager=True)
-            trust = crc_current_trust(t["crc_trust"], signups).localCheckpoint(eager=True)
-            return signups, trust
-
-        def _balance_chain():
-            ledger = crc_ledger(t["erc20_transfer"], t["crc_signup"]).localCheckpoint(
-                eager=True
-            )
-            balances = (
-                crc_balances_by_safe_and_token(ledger).coalesce(8).localCheckpoint(eager=True)
-            )
-            return ledger, balances
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_trust = pool.submit(_trust_chain)
-            f_bal = pool.submit(_balance_chain)
-            signups, trust = f_trust.result()
-            ledger, balances = f_bal.result()
+        pipe = _sink(spark, sf_dir)
         _VIEW_CACHE[key] = {
-            "signups": signups,
-            "trust": trust,
-            "ledger": ledger,
-            "balances": balances,
+            "signups": crc_all_signups(
+                t["crc_signup"], t["crc_organisation_signup"]
+            ).localCheckpoint(eager=True),
+            "trust": _sink_table(pipe, CACHE_TRUST),
+            "ledger": crc_ledger(t["erc20_transfer"], t["crc_signup"]).localCheckpoint(
+                eager=True
+            ),
+            "balances": _sink_table(pipe, CACHE_BALANCES),
         }
-        if dest:
-            _write_spine(dest, _VIEW_CACHE[key])
     return _VIEW_CACHE[key]
 
 
 def ingest_spine(spark: SparkSession, sf_dir: str) -> int:
-    """Run the FULL uncached ingest spine (derive → classify → extract
-    → ledger → balances) end-to-end and return the tx count processed.
+    """Backfill sf_dir's derived chain into a fresh sink through
+    IngestPipeline.process_batch (promote → classify → extract → 9
+    appends → cache refresh) and return the number of txs imported.
 
-    Bypasses both the session and the disk cache — this is the honest
-    ingest-throughput measurement bench.py reports (the reference's
-    budget: 2000-tx batch / 10 s serial flush ≈ 200 tx/s,
+    This is the ingest-throughput measurement bench.py reports (the
+    reference's budget: 2000-tx batch / 10 s serial flush ≈ 200 tx/s,
     Settings.cs:170,179-180).
     """
-    tables = compute_pipeline_tables(spark, sf_dir)
-    ledger = crc_ledger(tables["erc20_transfer"], tables["crc_signup"]).localCheckpoint(
-        eager=True
-    )
-    crc_balances_by_safe_and_token(ledger).coalesce(8).localCheckpoint(eager=True)
-    return tables["classified"].count()
+    out = tempfile.mkdtemp(prefix="ingest_spine_")
+    try:
+        return _backfill(spark, sf_dir, out).read_final("transaction").count()
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 # Shared oracle derivation CTEs (DuckDB SQL). The evsrc filter mirrors
@@ -671,8 +442,8 @@ _D = """
     survey_refs=("C1", "C2", "C3", "C4", "C5", "C6", "C7", "C8"),
 )
 def chain_classification_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    classified = _pipeline_tables(spark, sf_dir)["classified"]
-    return classified.groupBy(
+    transactions = _pipeline_tables(spark, sf_dir)["transaction"]
+    return transactions.groupBy(
         F.array_join("classification", ",").alias("label")
     ).agg(F.count("*").alias("n"))
 

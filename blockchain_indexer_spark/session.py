@@ -69,6 +69,15 @@ def get_spark(
         # 4 classes; the kept classes cost ~10 MB of driver memory.
         # Static conf: it only takes effect in a fresh JVM.
         .config("spark.sql.codegen.cache.maxEntries", "4000")
+        # A whole-stage class is named after its codegen stage id, which
+        # AQE assigns in the order it plans query stages, so the same
+        # stage of the same plan can get a new id (and a cache miss)
+        # when concurrent stages finish in another order. Without the
+        # id in the name, three same-shape rounds of the test fixture
+        # chain compiled 60 classes instead of 118-120 in the second
+        # round and 4 (the ones its new literals need) instead of 4-8
+        # in the third, in every run.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     for k, v in (extra_conf or {}).items():

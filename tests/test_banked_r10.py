@@ -1,12 +1,7 @@
-"""Round-10 BANKED gates (plans/banked_r10.py): full Spark-vs-DuckDB
-parity through the exact same compare() the registered gates use, plus
-unit tests and independent implementations for the new operators — so
-promotion in round 10 is a mechanical @register + PRIORITY slot, not
-new code.
-
-Banked and not registered because round 9's 50-row driver window is
-fully budgeted (5 promoted gates + 2 rows-only debuts + 43 stale
-refreshes); see the module doc.
+"""BANKED gates (plans/banked_r10.py): full Spark-vs-DuckDB parity
+through the exact same compare() the registered gates use, plus unit
+tests and independent implementations for the new operators — so
+registering one is a mechanical @register move, not new code.
 """
 
 from __future__ import annotations
@@ -22,8 +17,8 @@ from tools.check_correctness import compare, duck_con
 
 
 def test_banked_not_registered():
-    # the whole point of banking: REGISTRY (and so PRIORITY and the
-    # driver window) must not see these until round 10 promotes them
+    # the whole point of banking: REGISTRY must not see these until
+    # one is registered
     assert not set(BANKED) & set(REGISTRY)
     assert set(BANKED) == {
         "doc_split_leakage_incremental",

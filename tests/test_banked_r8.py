@@ -1,68 +1,14 @@
-"""Round-7-banked, round-8-PROMOTED gates (audio dedup clusters,
-video shot boundaries, longest-repeat ladder, split-leakage): full
-Spark-vs-DuckDB parity through the exact same compare() the driver
-uses, plus unit tests and independent third implementations for the
-operators. These were banked in plans/banked_r8.py during round 7
-(the driver window was fully budgeted) and promoted to @register +
-front PRIORITY slots in round 8 (VERDICT r7 "Next round" #1).
+"""Operator tests behind the audio dedup-cluster, video shot-boundary,
+longest-repeat-ladder and split-leakage gates (mm_audio_dedup_clusters,
+mm_video_shots, doc_longest_repeat, doc_split_leakage), with
+independent third implementations. Their Spark-vs-DuckDB parity runs
+in tests/test_oracle_parity.py.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-
-from blockchain_indexer_spark.plans import PRIORITY, REGISTRY
-from tools.check_correctness import compare, duck_con
-
-PROMOTED = (
-    "mm_audio_dedup_clusters",
-    "mm_video_shots",
-    "doc_longest_repeat",
-    "doc_split_leakage",
-)
-
-
-def test_promoted_gates_front_window():
-    """Promotion contract: registered, oracled, and inside the
-    driver's 50-row verification window UNTIL a driver record proves
-    them — after that the normal staleness rotation
-    (tests/test_registry_order.py) owns their placement and they may
-    rotate below the fold like any other oracled gate."""
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    recorded: set[str] = set()
-    n = 1
-    while True:
-        path = os.path.join(repo, f"CORRECTNESS_r{n:02d}.json")
-        if not os.path.exists(path):
-            break
-        with open(path) as f:
-            recorded |= set(json.load(f))
-        n += 1
-    for name in PROMOTED:
-        assert name in REGISTRY
-        assert REGISTRY[name].oracle is not None
-        if name not in recorded:
-            assert PRIORITY.index(name) < 50, name
-
-
-@pytest.fixture(scope="module")
-def con(sf_dir):
-    return duck_con(sf_dir)
-
-
-@pytest.mark.parametrize("name", sorted(PROMOTED))
-@pytest.mark.slowe2e
-def test_promoted_oracle_parity(spark, sf_dir, con, name):
-    q = REGISTRY[name]
-    spark_pdf = q.build(spark, sf_dir).toPandas()
-    assert len(spark_pdf) > 0, f"{name}: empty result proves nothing"
-    duck_pdf = con.sql(q.oracle).df()
-    problems = compare(name, spark_pdf, duck_pdf)
-    assert not problems, f"{name}: {problems}"
 
 
 # ---------------------------------------------------------------------------

@@ -1,11 +1,10 @@
-"""Round-8-banked, round-9-PROMOTED gates (video near-dup verdict,
-cross-modal dedup union, IVF-PQ ADC agreement monitor, strided-window
-audio dedup, DBSCAN exact-vs-LSH swap certification): full
-Spark-vs-DuckDB parity through the exact same compare() the driver
-uses, plus unit tests and independent third implementations for the
-operators. These were banked in plans/banked_r9.py during round 8
-(the driver window was fully budgeted) and promoted to @register +
-front PRIORITY slots in round 9 (VERDICT r8 "Next round" #1).
+"""Operator tests behind the video near-dup verdict, cross-modal dedup
+union, IVF-PQ ADC agreement monitor, strided-window audio dedup and
+DBSCAN exact-vs-LSH certification gates (mm_video_dedup_clusters,
+mm_cross_modal_dedup, embedding_pq_adc_agreement,
+mm_audio_windowed_dedup, embedding_dbscan_lsh_agreement), with
+independent third implementations. Their Spark-vs-DuckDB parity runs
+in tests/test_oracle_parity.py.
 """
 
 from __future__ import annotations
@@ -13,58 +12,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from blockchain_indexer_spark.plans import PRIORITY, REGISTRY
-from tools.check_correctness import compare, duck_con
-
-PROMOTED = (
-    "mm_video_dedup_clusters",
-    "mm_cross_modal_dedup",
-    "embedding_pq_adc_agreement",
-    "mm_audio_windowed_dedup",
-    "embedding_dbscan_lsh_agreement",
-)
-
-
-def test_promoted_gates_front_window():
-    """Promotion contract: registered, oracled, and inside the
-    driver's 50-row verification window UNTIL a driver record proves
-    them — after that the normal staleness rotation
-    (tests/test_registry_order.py) owns their placement and they may
-    rotate below the fold like any other oracled gate."""
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    recorded: set[str] = set()
-    n = 1
-    while True:
-        path = os.path.join(repo, f"CORRECTNESS_r{n:02d}.json")
-        if not os.path.exists(path):
-            break
-        with open(path) as f:
-            recorded |= set(json.load(f))
-        n += 1
-    for name in PROMOTED:
-        assert name in REGISTRY
-        assert REGISTRY[name].oracle is not None
-        if name not in recorded:
-            assert PRIORITY.index(name) < 50, name
-
-
-@pytest.fixture(scope="module")
-def con(sf_dir):
-    return duck_con(sf_dir)
-
-
-@pytest.mark.parametrize("name", sorted(PROMOTED))
-@pytest.mark.slowe2e
-def test_promoted_oracle_parity(spark, sf_dir, con, name):
-    q = REGISTRY[name]
-    spark_pdf = q.build(spark, sf_dir).toPandas()
-    assert len(spark_pdf) > 0, f"{name}: empty result proves nothing"
-    duck_pdf = con.sql(q.oracle).df()
-    problems = compare(name, spark_pdf, duck_pdf)
-    assert not problems, f"{name}: {problems}"
+from blockchain_indexer_spark.plans import REGISTRY
 
 
 # ---------------------------------------------------------------------------

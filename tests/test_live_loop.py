@@ -16,10 +16,9 @@ import os
 import time
 
 import pytest
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from blockchain_indexer_spark.plans.chain import derive_chain
+from blockchain_indexer_spark.plans.chain import chain_feed
 from blockchain_indexer_spark.sources.blocks import detect_reorg, missing_block_numbers
 from blockchain_indexer_spark.streaming.runner import (
     FEED_SCHEMA,
@@ -43,20 +42,10 @@ class TimedPipeline(IngestPipeline):
 
 
 @pytest.fixture(scope="module")
-def block_feed(spark):
+def block_feed(spark, sf_dir):
     """{block_number: pandas rows} for 60 fixture blocks: 30 one-tx
     signup blocks + 30 multi-tx event blocks from the derived chain."""
-    chain = derive_chain(spark, "/root/testdata/sf0.001")
-    feed = chain.select(
-        "block_number",
-        "block_hash",
-        F.unix_timestamp("timestamp").alias("block_timestamp"),
-        F.count("*").over(W.partitionBy("block_number")).cast("int").alias(
-            "total_transaction_count"
-        ),
-        "hash", "index", "from", "to", "value", "input", "nonce", "type", "logs",
-    )
-    pdf = feed.toPandas()
+    pdf = chain_feed(spark, sf_dir).toPandas()
 
     def _plain_logs(v):
         if v is None:

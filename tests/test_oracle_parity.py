@@ -15,8 +15,7 @@ ROWS_ONLY_QUERIES = sorted(n for n, q in REGISTRY.items() if q.oracle is None)
 #: The five heaviest parity params (each >15 s; mm_cross_modal alone
 #: ~90 s — it replays three modality engines). They run in the slowe2e
 #: tier; the default profile keeps the other 158. All five stay
-#: covered every round by tools/check_correctness.py (the round flow's
-#: full sweep) and by the driver's rotation window when they cycle in.
+#: covered by tools/check_correctness.py's full sweep.
 HEAVY_PARITY = {
     "mm_cross_modal_dedup",
     "embedding_dbscan_lsh_agreement",
@@ -30,15 +29,39 @@ ORACLE_PARAMS = [
 ]
 
 
+#: Gates whose result at sf0.001 must also be non-empty: for these an
+#: empty Spark result matching an empty oracle would prove nothing.
+NONEMPTY = {
+    "embedding_dbscan",
+    "mm_image_dedup_clusters",
+    "doc_mmr_rerank",
+    "mm_audio_dedup_clusters",
+    "mm_video_shots",
+    "doc_longest_repeat",
+    "doc_split_leakage",
+    "mm_video_dedup_clusters",
+    "mm_cross_modal_dedup",
+    "embedding_pq_adc_agreement",
+    "mm_audio_windowed_dedup",
+    "embedding_dbscan_lsh_agreement",
+}
+
+
 @pytest.fixture(scope="module")
 def con(sf_dir):
     return duck_con(sf_dir)
+
+
+def test_nonempty_gates_are_oracled():
+    assert NONEMPTY <= set(ORACLE_QUERIES)
 
 
 @pytest.mark.parametrize("name", ORACLE_PARAMS)
 def test_oracle_parity(spark, sf_dir, con, name):
     q = REGISTRY[name]
     spark_pdf = q.build(spark, sf_dir).toPandas()
+    if name in NONEMPTY:
+        assert len(spark_pdf) > 0, f"{name}: empty result proves nothing"
     duck_pdf = con.sql(q.oracle).df()
     problems = compare(name, spark_pdf, duck_pdf)
     assert not problems, f"{name}: {problems}"

@@ -79,7 +79,7 @@ t("bpe_train_100k_m8", lambda: len(bpe_merges.extend(bpe_train(docs, "text", n_m
 t("bpe_tokenize_100k_m8", lambda: bpe_token_stats(docs, "doc_id", "text", bpe_merges).count())
 
 from blockchain_indexer_spark.plans import chain
-t("chain_spine_1M", lambda: len(chain.compute_pipeline_tables(spark, SF)))
+t("chain_spine_1M", lambda: len(chain._pipeline_tables(spark, SF)))
 t("chain_views_1M", lambda: len(chain._derived_views(spark, SF)))
 print("STRESS done", flush=True)
 
