@@ -20,9 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def stale_balance_addresses(
-    erc20_batch: DataFrame, hub_batch: DataFrame, all_signups: DataFrame
-) -> DataFrame:
+def stale_balance_addresses(erc20_batch: DataFrame, hub_batch: DataFrame) -> DataFrame:
     """Addresses whose balance may have changed (0.0.64.sql:2275-2290):
     each endpoint of the batch's erc20/hub transfers. Returns one
     column `safe_address`, distinct.
@@ -36,9 +34,7 @@ def stale_balance_addresses(
     they change. Taking every endpoint is a strict superset: refreshing
     an unaffected address just recomputes identical rows, while
     missing an affected one silently breaks cache == view — the exact
-    invariant tests/test_cache_maintenance.py pins. ``all_signups`` is
-    kept in the signature for call-site parity but no longer filters."""
-    del all_signups  # widened rule: every ledger endpoint is stale
+    invariant tests/test_cache_maintenance.py pins."""
     endpoints = None
     for batch in (erc20_batch, hub_batch):
         for side in ("from", "to"):

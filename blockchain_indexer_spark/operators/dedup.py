@@ -850,131 +850,6 @@ def hamming_band_pairs(
     )
 
 
-def hamming_index_update(
-    index: DataFrame | None,
-    new_hashes: DataFrame,
-    id_col: str,
-    hash_col: str,
-    n_bits: int,
-    bands: int = 4,
-    max_hamming: int = 3,
-) -> tuple[DataFrame, DataFrame]:
-    """Incremental maintenance for the banded hamming index — the
-    ``minhash_index_update`` convention applied to the FIXED-WIDTH
-    hash engine behind ``simhash_candidates``, ``image_ahash``,
-    ``audio_whash`` and ``video_whash``: one generic per-batch update
-    serves every hash modality (reference T8 stale-key refresh,
-    0.0.64.sql:2272-2376).
-
-    ``index`` is the persisted banded-row frame from prior batches
-    (``(_hid, _h, band, bucket)``; None bootstraps an empty index).
-    Returns ``(new_rows, new_pairs)``:
-
-    - ``new_rows`` — banded rows for ``new_hashes``, to APPEND to the
-      index (the index only ever grows by the batch).
-    - ``new_pairs`` — verified near-dup pairs (id_a < id_b, exact
-      hamming <= max_hamming) involving AT LEAST ONE new id: new×new
-      via the one-shot engine on the batch, plus new×index via an
-      equi-join on (band, bucket). old×old pairs were emitted by
-      earlier batches, so per-batch work is O(|batch| × bucket
-      occupancy) — independent of corpus age. The pigeonhole
-      completeness guarantee (bands >= max_hamming + 1) holds
-      per-pair and therefore batch-by-batch: whichever batch brings
-      the second id of a true pair emits it, exactly once per
-      direction.
-
-    Union-equivalence (incremental pairs across batches == one full
-    run of ``hamming_band_pairs``) is pinned in tests and by the
-    banked ``simhash_incremental_md5`` gate, whose DuckDB oracle is
-    the FULL-corpus brute-force pair scan.
-    """
-    if n_bits % bands:
-        raise ValueError(f"bands={bands} must divide n_bits={n_bits}")
-    rows = n_bits // bands
-    mask = (1 << rows) - 1
-    new_rows = (
-        new_hashes.select(
-            F.col(id_col).alias("_hid"),
-            F.col(hash_col).alias("_h"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.shiftrightunsigned(F.col(hash_col), b * rows)
-                            .bitwiseAND(F.lit(mask))
-                            .alias("bucket"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        )
-        .select("_hid", "_h", "bb.band", "bb.bucket")
-        # feeds new×new (both sides), new×index, and the caller's
-        # index append — in production this frame IS the persisted
-        # index increment (the minhash_index_update rationale)
-        .localCheckpoint(eager=True)
-    )
-    a = new_rows.select(
-        F.col("_hid").alias("id_a"), F.col("_h").alias("_ha"), "band", "bucket"
-    )
-    b = new_rows.select(
-        F.col("_hid").alias("id_b"), F.col("_h").alias("_hb"), "band", "bucket"
-    )
-    pairs = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb"))).alias("hamming"),
-        )
-    )
-    if index is not None:
-        cross = (
-            new_rows.select(
-                F.col("_hid").alias("_new"), F.col("_h").alias("_hn"), "band", "bucket"
-            )
-            .join(
-                index.select(
-                    F.col("_hid").alias("_old"),
-                    F.col("_h").alias("_ho"),
-                    "band",
-                    "bucket",
-                ),
-                ["band", "bucket"],
-            )
-            .filter(F.col("_new") != F.col("_old"))
-            .select(
-                F.least("_new", "_old").alias("id_a"),
-                F.greatest("_new", "_old").alias("id_b"),
-                F.bit_count(F.col("_hn").bitwiseXOR(F.col("_ho"))).alias("hamming"),
-            )
-        )
-        pairs = pairs.unionByName(cross)
-    return new_rows, pairs.distinct().filter(F.col("hamming") <= max_hamming)
-
-
-def simhash_index_update(
-    index: DataFrame | None,
-    new_docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    bands: int = 4,
-    hash_fn: str = "xxhash64",
-) -> tuple[DataFrame, DataFrame]:
-    """``simhash_candidates`` as per-batch index maintenance: compute
-    the batch's SimHash signatures, then delegate to the generic
-    ``hamming_index_update``. Returns ``(new_rows, new_pairs)`` with
-    pairs as (id_a, id_b, hamming), id_a < id_b — the one-shot
-    operator's contract, accumulated incrementally."""
-    n_bits = 60 if hash_fn == "md5_60" else 64
-    sig = simhash64(new_docs, id_col, text_col, hash_fn=hash_fn)
-    return hamming_index_update(
-        index, sig, "_id", "simhash", n_bits, bands, max_hamming
-    )
 
 
 def cosine_near_dup_pairs(
@@ -1737,153 +1612,6 @@ def minhash_calibration(
     )
 
 
-def minhash_union_calibration(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    n_buckets: int = 8,
-    hash_fn: str = "xxhash64",
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """Calibration monitor for the MERGE operation of the MinHash
-    sketch — ``minhash_calibration``'s sibling for the property that
-    makes incremental/cluster-level dedup work at 100 TB: the
-    element-wise MIN of two signatures IS the signature of the
-    shingle-set UNION (min-stability: min over A∪B = min(min A,
-    min B) per component), so per-batch index maintenance and
-    per-cluster survivor checks merge sketches instead of rereading
-    text. This gate answers "is the MERGED estimator still calibrated
-    on MY data?": for every LSH candidate pair, the estimated
-    CONTAINMENT of each side in the union — matching components
-    between the side's signature and the merged one, which reduces to
-    #{h: sig_a[h] <= sig_b[h]} for side a, an unbiased estimator of
-    |A| / |A∪B| — is compared against the exact shingle containment,
-    aggregated into estimate buckets (two estimator rows per pair,
-    one per side).
-
-    Returns one row per non-empty bucket: (bucket, n_pairs, mean_est,
-    mean_true) with bucket = matches * n_buckets div num_hashes —
-    ``minhash_calibration``'s exact output contract and determinism
-    rules (true containment floored to the 1e-9 grid as BIGINT before
-    summing; each mean ONE IEEE division of exact integer sums).
-    ``hash_fn="md5_60"`` runs the engine-portable stack the DuckDB
-    oracle reproduces cell-for-cell; xxhash64 is the production twin
-    at the same seam. A side whose shingles are a SUBSET of the
-    other's has estimated containment exactly 1.0 (every component of
-    the larger side survives the merge) — pinned in tests.
-
-    Scale: identical bound to ``minhash_calibration`` — candidates
-    come from banding, the exact-containment join touches only
-    candidate docs' shingles, output is <= n_buckets + 1 rows.
-    """
-    sh = (
-        shingles
-        if shingles is not None
-        else _distinct_shingles(df, id_col, text_col, k, hash_shingles=hash_fn != "md5_60")
-    )
-    sigs = minhash_signatures(
-        df, id_col, text_col, k, num_hashes, shingles=sh, hash_fn=hash_fn
-    ).localCheckpoint(eager=True)  # feeds banding and both side estimators
-    cand = minhash_lsh_candidates(
-        df, id_col, text_col, k, num_hashes, bands,
-        shingles=sh, hash_fn=hash_fn, signatures=sigs,
-    ).localCheckpoint(eager=True)  # feeds est join, doc set, exact join
-    sa = sigs.select(F.col("_id").alias("doc_a"), F.col("signature").alias("_sig_a"))
-    sb = sigs.select(F.col("_id").alias("doc_b"), F.col("signature").alias("_sig_b"))
-
-    def _matches(side_sig: str, other_sig: str):
-        # component h matches the merged (min) signature iff the
-        # side's value is the min, i.e. <= the other's
-        return F.size(
-            F.filter(
-                F.zip_with(side_sig, other_sig, lambda x, y: x <= y), lambda m: m
-            )
-        ).cast("bigint")
-
-    est = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            _matches("_sig_a", "_sig_b").alias("_ma"),
-            _matches("_sig_b", "_sig_a").alias("_mb"),
-        )
-    )
-    sizes = sh.groupBy("_id").agg(F.count("*").alias("n_shingles"))
-    cand_docs = (
-        cand.select(F.col("doc_a").alias("_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("_id")))
-        .distinct()
-    )
-    sh_c = sh.join(cand_docs, "_id", "left_semi")
-    a = sh_c.select(F.col("_id").alias("doc_a"), "shingle")
-    b = sh_c.select(F.col("_id").alias("doc_b"), "shingle")
-    common = (
-        cand.join(a, "doc_a")
-        .join(b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    na = sizes.select(F.col("_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    nb = sizes.select(F.col("_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
-    union_sz = (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double")
-
-    def _true_nano(n_side: str):
-        return F.floor(
-            F.lit(1e9) * F.col(n_side).cast("double") / union_sz
-        ).cast("bigint")
-
-    pairs = (
-        est.join(common, ["doc_a", "doc_b"], "left")
-        .withColumn("n_common", F.coalesce("n_common", F.lit(0)).cast("bigint"))
-        .join(na, "doc_a")
-        .join(nb, "doc_b")
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("_ma").alias("matches"),
-                        _true_nano("n_a").alias("_true_nano"),
-                    ),
-                    F.struct(
-                        F.col("_mb").alias("matches"),
-                        _true_nano("n_b").alias("_true_nano"),
-                    ),
-                )
-            ).alias("s")
-        )
-        .select(
-            F.col("s.matches").alias("matches"),
-            F.col("s._true_nano").alias("_true_nano"),
-            F.expr(f"(s.matches * {int(n_buckets)}) div {int(num_hashes)}").alias(
-                "bucket"
-            ),
-        )
-    )
-    return (
-        pairs.groupBy("bucket")
-        .agg(
-            F.count("*").cast("bigint").alias("n_pairs"),
-            F.sum("matches").alias("_sum_matches"),
-            F.sum("_true_nano").alias("_sum_true_nano"),
-        )
-        .select(
-            "bucket",
-            "n_pairs",
-            (
-                F.col("_sum_matches").cast("double")
-                / (F.col("n_pairs") * num_hashes).cast("double")
-            ).alias("mean_est"),
-            (
-                F.col("_sum_true_nano").cast("double")
-                / (F.col("n_pairs") * F.lit(1_000_000_000)).cast("double")
-            ).alias("mean_true"),
-        )
-    )
 
 
 def longest_repeat_ladder(
@@ -2010,13 +1738,10 @@ def longest_repeat_ladder(
 def _leak_windows(
     df: DataFrame, id_col: str, text_col: str, split_col: str, k: int
 ) -> DataFrame:
-    """Shared window core of ``split_leakage`` and its incremental
-    twin ``split_leakage_index_update``: one distinct
-    (id, split, _h) row per k-token sliding window of each document
-    (xxhash64 of the space-joined window; documents with < k tokens
-    contribute no rows). Defined ONCE so the batch gate and the
-    per-batch index maintenance can never disagree on what a window
-    is."""
+    """Window core of ``split_leakage``: one distinct (id, split, _h)
+    row per k-token sliding window of each document (xxhash64 of the
+    space-joined window; documents with < k tokens contribute no
+    rows)."""
     from blockchain_indexer_spark.functions.text import tokens
     from blockchain_indexer_spark.sources.parquet import spread
 
@@ -2094,127 +1819,5 @@ def split_leakage(
             .otherwise(F.col("n_leaked").cast("double") / F.col("n_windows"))
             .alias("leak_frac"),
             (F.coalesce("n_leaked", F.lit(0)) > 0).alias("leaked"),
-        )
-    )
-
-def split_leakage_index_update(
-    state: tuple[DataFrame, DataFrame] | None,
-    new_docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    split_col: str,
-    train_value: str = "train",
-    k: int = 8,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Incremental eval-contamination maintenance — ``split_leakage``
-    run as per-batch index updates, the ``minhash_index_update``
-    convention applied to the decontamination stack (reference T8
-    stale-key refresh philosophy, 0.0.64.sql:2272-2376, paired with
-    the Lee et al. exact-substring criterion): a streaming corpus
-    lands in micro-batches of mixed train/eval documents, and the
-    contamination verdict must stay current WITHOUT re-scanning the
-    train corpus per batch.
-
-    ``state`` is ``(train_index, eval_index)`` from prior batches
-    (None bootstraps both empty): ``train_index`` the distinct window
-    hashes (_h) of every TRAIN document so far, ``eval_index`` the
-    distinct (id, split, _h) window rows of every NON-train document
-    so far. Returns ``(train_rows, eval_rows, leak_events)``:
-
-    - ``train_rows`` / ``eval_rows`` — this batch's increments, to
-      APPEND to the two indexes (both only ever grow by the batch).
-    - ``leak_events`` — (id, _h) pairs newly discovered leaked BY
-      THIS BATCH: new-eval windows hitting the train set as of this
-      batch (prior index + this batch's train rows), plus PRIOR eval
-      windows hit by this batch's NEW train rows — the retroactive
-      half a one-directional scan would miss (an eval doc is
-      contaminated by a train doc that arrives later, too).
-
-    Union-equivalence: the distinct union of ``leak_events`` across
-    batches equals the full-corpus ``split_leakage`` leak set for any
-    batch partition of the corpus (a window leaked by train batch j
-    and eval batch i is emitted at batch max(i, j), exactly once per
-    direction) — pinned in tests and by the banked
-    ``doc_split_leakage_incremental`` gate, whose DuckDB oracle is
-    the FULL-corpus scan. Events may repeat ACROSS batches when a
-    window leaked earlier is matched again by later train arrivals;
-    ``split_leakage_finalize`` applies one distinct. Production
-    deployments that persist the accumulated leak set can anti-join
-    it here instead (same verdict, earlier dedup).
-
-    Per-batch work is O(|batch| windows) joined against hash indexes
-    — uniform 64-bit keys, never a corpus rescan; at 100 TB the train
-    index is the big side and both probes are standard broadcast-or-
-    shuffle hash joins on it.
-    """
-    new_w = _leak_windows(
-        new_docs, id_col, text_col, split_col, k
-    ).localCheckpoint(eager=True)  # feeds train rows, eval rows, both probes
-    train_rows = new_w.filter(F.col("split") == train_value).select("_h").distinct()
-    eval_rows = new_w.filter(F.col("split") != train_value).select(
-        "id", "split", "_h"
-    )
-    train_now = (
-        train_rows
-        if state is None
-        else state[0].select("_h").unionByName(train_rows).distinct()
-    )
-    leaks = eval_rows.join(train_now, "_h", "left_semi").select("id", "_h")
-    if state is not None:
-        leaks = leaks.unionByName(
-            state[1]
-            .select("id", "_h")
-            .join(train_rows, "_h", "left_semi")
-            .select("id", "_h")
-        )
-    return train_rows, eval_rows, leaks
-
-
-def split_leakage_finalize(
-    docs: DataFrame,
-    eval_index: DataFrame,
-    leak_events: DataFrame,
-    id_col: str,
-    split_col: str,
-    train_value: str = "train",
-) -> DataFrame:
-    """Verdict assembly for the incremental split-leakage index: fold
-    the accumulated ``eval_index`` (distinct per-doc window rows) and
-    ``leak_events`` (possibly repeated across batches — one distinct
-    here) into exactly ``split_leakage``'s output contract: one row
-    per non-train document — (id, split, n_windows, n_leaked,
-    leak_frac, leaked), zero-windowed documents included."""
-    n_w = eval_index.groupBy("id", "split").agg(
-        F.count("*").cast("bigint").alias("n_windows")
-    )
-    n_l = (
-        leak_events.distinct()
-        .groupBy("id")
-        .agg(F.count("*").cast("bigint").alias("n_leaked"))
-    )
-    return (
-        docs.select(F.col(id_col).alias("id"), F.col(split_col).alias("split"))
-        .filter(F.col("split") != train_value)
-        .join(n_w, ["id", "split"], "left")
-        .join(n_l, "id", "left")
-        # unlike split_leakage's single aggregate, n_windows and
-        # n_leaked join in independently here: a doc with windows but
-        # no leak events has NULL n_leaked, so coalesce BOTH before
-        # the division
-        .select(
-            "id",
-            "split",
-            F.coalesce("n_windows", F.lit(0)).cast("bigint").alias("n_windows"),
-            F.coalesce("n_leaked", F.lit(0)).cast("bigint").alias("n_leaked"),
-        )
-        .select(
-            "id",
-            "split",
-            "n_windows",
-            "n_leaked",
-            F.when(F.col("n_windows") == 0, F.lit(0.0))
-            .otherwise(F.col("n_leaked").cast("double") / F.col("n_windows"))
-            .alias("leak_frac"),
-            (F.col("n_leaked") > 0).alias("leaked"),
         )
     )

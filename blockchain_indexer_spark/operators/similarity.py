@@ -1095,83 +1095,6 @@ def pq_distortion(
     )
 
 
-def _hd_signs(dim: int) -> list[int]:
-    """Deterministic ±1 diagonal for ``opq_rotate``: s_j = 1 − 2·
-    parity(popcount(2654435761·(j+1) mod 2³²)) — Knuth's
-    multiplicative constant, the ``_video_masks`` idiom: fixed
-    integer-derived literals a SQL oracle reproduces by the same
-    arithmetic, no RNG state anywhere."""
-    return [
-        1 - 2 * (bin((2654435761 * (j + 1)) % (1 << 32)).count("1") % 2)
-        for j in range(dim)
-    ]
-
-
-def opq_rotate(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    scale: int = 1000,
-) -> DataFrame:
-    """OPQ-style ROTATION pre-step for product quantization — the
-    structured HD random rotation (Walsh-Hadamard × deterministic ±1
-    diagonal) FAISS applies when full OPQ training is off (Ge et al.
-    2013 §2 motivate the rotation; Jégou et al. use the random-
-    rotation fallback): PQ quantizes each 4-dim subspace
-    independently, so a corpus whose energy concentrates in a few
-    leading dimensions wastes most codebooks on near-zero subvectors.
-    Rotating by R = H·D (H[i][j] = (−1)^popcount(i∧j) the order-dim
-    Hadamard matrix, D the ``_hd_signs`` diagonal) spreads every
-    input dimension's energy uniformly across ALL subspaces — the
-    classic distortion/recall lift the banked
-    ``embedding_opq_distortion`` gate measures on both variants.
-
-    Exactness: H·D is ±1-integer and orthogonal up to the uniform
-    factor dim (R·Rᵀ = dim·I), so rotated squared distances are
-    EXACTLY dim × the originals — rankings are isometric and every
-    entry of R·q is an int64 (|r_i| ≤ dim·max|q|, far under 2⁵³:
-    exact in the float64 matmul). Input vectors quantize JVM-side by
-    ``scale`` first (the shared ``quantize`` rounding contract);
-    feed the output to ``pq_topk``/``pq_distortion``/``ivf_pq_topk``
-    with ``scale=1`` — the values are already integers. NULL vectors
-    pass through as NULL (downstream NULL policy unchanged); a
-    non-NULL vector of length ≠ dim raises.
-
-    Scale shape: one Arrow pass, one (batch × dim) @ (dim × dim) int
-    matmul per batch — embarrassingly parallel, no shuffle, no
-    collect. dim must be a power of two (Hadamard order)."""
-    if dim < 1 or dim & (dim - 1):
-        raise ValueError(f"dim must be a power of two, got {dim}")
-    signs = np.array(_hd_signs(dim), dtype=np.int64)
-    i = np.arange(dim)
-    # popcount of i&j via uint64 bit tricks is overkill at dim<=2^10:
-    # table the Hadamard signs directly
-    h = np.array(
-        [[1 - 2 * (bin(a & b).count("1") % 2) for b in range(dim)] for a in i],
-        dtype=np.int64,
-    )
-    rot = h * signs[None, :]  # (dim, dim): column j scaled by s_j
-
-    @F.pandas_udf("array<double>")
-    def _rot(qv: pd.Series) -> pd.Series:
-        out: list = []
-        for v in qv:
-            if v is None:
-                out.append(None)
-                continue
-            a = np.asarray(v, dtype=np.int64)
-            if a.shape[0] != dim:
-                raise ValueError(
-                    f"opq_rotate: vector length {a.shape[0]} != dim {dim}"
-                )
-            out.append((rot @ a).astype(np.float64))
-        return pd.Series(out)
-
-    return spread(corpus, id_col).select(
-        F.col(id_col),
-        _rot(quantize(vec_col, scale)).alias(vec_col),
-    )
 
 
 def ivf_pq_topk(

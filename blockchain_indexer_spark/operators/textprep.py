@@ -559,90 +559,3 @@ def mmr_rerank(
         schema="query_id bigint, mmr_rank bigint, doc_id bigint, "
         "rel_nano bigint, max_sim_nano bigint, mmr_nano bigint",
     )
-
-
-def retrieval_eval(
-    run: DataFrame,
-    qrels: DataFrame,
-    k: int,
-    query_col: str = "query_id",
-    doc_col: str = "doc_id",
-    rank_col: str = "rank",
-) -> DataFrame:
-    """Retrieval-quality evaluation — the harness a RAG/search pipeline
-    runs over ANY ranked run frame (BM25, hybrid RRF, ANN top-k — any
-    frame with (query, doc, rank) rows) against a relevance-judgment
-    frame ``qrels`` of (query, doc) pairs: per query, the classic
-    rank metrics at cutoff ``k``.
-
-    Returns one row per query in ``qrels``:
-
-    - ``n_rel`` — judged-relevant docs for the query;
-    - ``n_ret`` — retrieved docs at rank <= k (< k when the run is
-      short); ``n_hit`` — retrieved-and-relevant;
-    - ``p_at_k_nano``  = floor(1e9 · n_hit / k)        (precision@k),
-    - ``r_at_k_nano``  = floor(1e9 · n_hit / n_rel)    (recall@k,
-      -1 sentinel when the query has no relevant docs),
-    - ``rr_nano``      = floor(1e9 / first-relevant rank), 0 when no
-      relevant doc is retrieved (reciprocal rank; mean over queries
-      is MRR).
-
-    All metrics are rationals of exact integers floored to the 1e-9
-    grid as BIGINT (the bm25_scores determinism convention) — no
-    logarithms, so every value is bit-reproducible cross-engine
-    (nDCG's log2 discounts are deliberately NOT offered here: libm
-    last-ulp differences would break hash-exactness; a tests-covered
-    production variant can layer it on top). Queries present in
-    ``qrels`` but absent from the run get zero-valued rows — a
-    retrieval engine that silently drops a query must look like a
-    miss, not vanish from the report.
-
-    Scale shape: one (query, doc) equi-join of the rank<=k run slice
-    against qrels, then a per-query aggregate — uniform keys, output
-    one row per query. Nothing is quadratic in corpus or run size.
-    """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    top = run.filter(F.col(rank_col) <= k).select(
-        F.col(query_col).alias("_q"),
-        F.col(doc_col).alias("_d"),
-        F.col(rank_col).cast("bigint").alias("_r"),
-    )
-    rel = qrels.select(
-        F.col(query_col).alias("_q"), F.col(doc_col).alias("_d")
-    ).distinct()
-    per_rel = rel.groupBy("_q").agg(F.count("*").cast("bigint").alias("n_rel"))
-    per_ret = top.groupBy("_q").agg(F.count("*").cast("bigint").alias("n_ret"))
-    hits = top.join(rel, ["_q", "_d"])
-    per_hit = hits.groupBy("_q").agg(
-        F.count("*").cast("bigint").alias("n_hit"),
-        F.min("_r").alias("_first_rel_rank"),
-    )
-    return (
-        per_rel.join(per_ret, "_q", "left")
-        .join(per_hit, "_q", "left")
-        .select(
-            F.col("_q").alias(query_col),
-            "n_rel",
-            F.coalesce("n_ret", F.lit(0)).cast("bigint").alias("n_ret"),
-            F.coalesce("n_hit", F.lit(0)).cast("bigint").alias("n_hit"),
-            F.floor(
-                F.lit(1e9) * F.coalesce("n_hit", F.lit(0)).cast("double") / F.lit(float(k))
-            ).cast("bigint").alias("p_at_k_nano"),
-            F.when(F.col("n_rel") == 0, F.lit(-1).cast("bigint"))
-            .otherwise(
-                F.floor(
-                    F.lit(1e9)
-                    * F.coalesce("n_hit", F.lit(0)).cast("double")
-                    / F.col("n_rel").cast("double")
-                ).cast("bigint")
-            )
-            .alias("r_at_k_nano"),
-            F.coalesce(
-                F.floor(F.lit(1e9) / F.col("_first_rel_rank").cast("double")).cast(
-                    "bigint"
-                ),
-                F.lit(0).cast("bigint"),
-            ).alias("rr_nano"),
-        )
-    )

@@ -46,11 +46,7 @@ def get_spark(
         # favor the default: the round-9 union-find collapse + engine
         # overlap removed the micro-shuffle stages the 64k floor was
         # widening, leaving only its tiny-task scheduling cost.
-        # Override via SPARK_GRAFT_AQE_MIN_PARTITION.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

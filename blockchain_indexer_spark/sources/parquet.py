@@ -144,11 +144,8 @@ def _resplit_path(spark: SparkSession, sf_dir: str, name: str) -> str | None:
 #: under a memoized path must not be rewritten within one session —
 #: true for the driver fixtures (TABLES name immutable testdata) and
 #: the resplit cache (rebuilt only under a fresh mtime, which changes
-#: the resolved path decision before any memo hit). Sessions that DO
-#: regenerate fixtures in place can disable the memo with
-#: SPARK_GRAFT_DF_MEMO=0.
+#: the resolved path decision before any memo hit).
 _DF_MEMO: dict[tuple[str, str], DataFrame] = {}
-_DF_MEMO_ON = os.environ.get("SPARK_GRAFT_DF_MEMO", "1") != "0"
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -156,8 +153,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     resplit = _resplit_path(spark, sf_dir, name)
     path = resplit if resplit is not None else os.path.join(sf_dir, f"{name}.parquet")
-    if not _DF_MEMO_ON:
-        return _raw_load(spark, path)
     key = (spark.sparkContext.applicationId, path)
     df = _DF_MEMO.get(key)
     if df is None:

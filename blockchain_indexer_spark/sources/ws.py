@@ -23,7 +23,6 @@ The transport contract mirrors the reference exactly:
 from __future__ import annotations
 
 import base64
-import hashlib
 import json
 import os
 import select
@@ -32,12 +31,7 @@ import struct
 import time
 from urllib.parse import urlparse
 
-_WS_GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"  # RFC 6455 §1.3
-
-
-def _accept_key(client_key: str) -> str:
-    digest = hashlib.sha1((client_key + _WS_GUID).encode()).digest()
-    return base64.b64encode(digest).decode()
+from blockchain_indexer_spark.streaming.api import ws_accept_key
 
 
 def mask_frame(payload: bytes, opcode: int = 0x1) -> bytes:
@@ -93,7 +87,7 @@ class WsConnection:
             k, _, v = ln.partition(":")
             if _:
                 hdrs[k.strip().lower()] = v.strip()
-        if hdrs.get("sec-websocket-accept") != _accept_key(key):
+        if hdrs.get("sec-websocket-accept") != ws_accept_key(key):
             raise ConnectionError("websocket handshake: bad Sec-WebSocket-Accept")
         self._pending = b""
 

@@ -22,6 +22,8 @@ retraction (T5) and block-range queries prune partitions.
 from __future__ import annotations
 
 import os
+import re
+import shutil
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -124,6 +126,52 @@ def _has_data_files(path: str) -> bool:
             return True
         dirs[:] = [d for d in dirs if visible(d)]
     return False
+
+
+# The swap journal's set-aside old copies. retract() swaps whole tables
+# under the sink root (tag "retract"), compact() swaps block_group
+# partitions inside a table dir (tag "compact").
+_SWAP_OLD = re.compile(r"\.(?:retract|compact)-old-(.+)")
+
+
+def _swap_dir(parent: str, name: str, tag: str, write) -> None:
+    """Replace the directory ``parent/name`` with the one ``write(tmp)``
+    builds. A direct overwrite deletes the old directory before the new
+    files commit, so a crash mid-write would lose the only copy; the new
+    copy is written aside to ``.<tag>-tmp-<name>`` and swapped in by two
+    renames instead. A crash between the renames leaves
+    ``.<tag>-old-<name>`` as the only copy, which ``_heal_swaps``
+    restores. In-process readers outside the import lock can see the
+    directory absent for the instant between the renames — acceptable
+    for this sink (single-driver analytics reads run between batches);
+    a table format with atomic commits (Delta/Iceberg) is the
+    production answer for lock-free readers (SCALE.md)."""
+    final = os.path.join(parent, name)
+    tmp = os.path.join(parent, f".{tag}-tmp-{name}")
+    old = os.path.join(parent, f".{tag}-old-{name}")
+    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
+    write(tmp)
+    os.rename(final, old)
+    os.rename(tmp, final)
+    shutil.rmtree(old)
+
+
+def _heal_swaps(parent: str) -> None:
+    """Settle every ``.<tag>-old-<name>`` under ``parent``: with
+    ``name`` missing it holds the only copy (a crash between the swap's
+    renames) and is renamed back; otherwise it is post-swap residue and
+    is dropped."""
+    for entry in sorted(os.listdir(parent)):
+        m = _SWAP_OLD.fullmatch(entry)
+        if m is None:
+            continue
+        orphan = os.path.join(parent, entry)
+        final = os.path.join(parent, m.group(1))
+        if os.path.isdir(final):
+            shutil.rmtree(orphan, ignore_errors=True)
+        else:
+            os.rename(orphan, final)
 
 
 # K5: the reference broadcasts this magic hash to websocket consumers
@@ -285,8 +333,6 @@ class IngestPipeline:
                 self._retract_jdbc(reorg_block)
             self.signal_reorg()
             return
-        import shutil  # noqa: PLC0415
-
         from blockchain_indexer_spark.operators.promote import retract_from  # noqa: PLC0415
 
         # under the import lock: the rewrite deletes part files a
@@ -295,7 +341,7 @@ class IngestPipeline:
         # the retraction entirely (same serialization the reference
         # gets from its Serializable transaction)
         with self._import_lock():
-            self._recover_table_swaps()
+            self._recover_swaps()
             tables = {}
             for name in ("block", *EVENT_TABLES):
                 df = self.read_final(name)
@@ -304,51 +350,37 @@ class IngestPipeline:
             kept = retract_from(tables, reorg_block)
             for name, df in kept.items():
                 block_col = "number" if name == "block" else "block_number"
+                # the snapshot dies with the driver, so the rewrite
+                # goes through the swap journal, never an overwrite
                 snap = df.drop("block_group").localCheckpoint(eager=True)
-                # write-aside + two-rename swap (same journal as
-                # compact): a direct overwrite DELETES the table dir
-                # before the new files commit, so a crash mid-retract
-                # would lose all pre-reorg history — the in-memory
-                # snapshot dies with the driver. A crash between the
-                # renames is healed by _recover_table_swaps.
-                final = self._table_path(name)
-                tmp = os.path.join(self.out_dir, f".retract-tmp-{name}")
-                old_dir = os.path.join(self.out_dir, f".retract-old-{name}")
-                shutil.rmtree(tmp, ignore_errors=True)
-                shutil.rmtree(old_dir, ignore_errors=True)
-                (
+                _swap_dir(
+                    self.out_dir,
+                    name,
+                    "retract",
                     snap.withColumn(
                         "block_group", (F.col(block_col) / BLOCK_GROUP_SIZE).cast("long")
                     )
                     .write.mode("overwrite")
                     .partitionBy("block_group")
-                    .parquet(tmp)
+                    .parquet,
                 )
-                os.rename(final, old_dir)
-                os.rename(tmp, final)
-                shutil.rmtree(old_dir)
             for cache in (CACHE_BALANCES, CACHE_TRUST):
                 shutil.rmtree(self._table_path(cache), ignore_errors=True)
         self.signal_reorg()
 
-    def _recover_table_swaps(self) -> None:
-        """Heal a crash inside retract()'s two-rename window: an
-        orphaned '.retract-old-<table>' whose final dir is missing
-        holds the only copy — restore it; otherwise it is post-swap
-        residue — drop it. Runs under the import lock."""
-        import shutil  # noqa: PLC0415
-
+    def _recover_swaps(self) -> None:
+        """Heal a crash inside a swap (``_swap_dir``): retract's table
+        swaps under the sink root first, then compact's partition swaps
+        inside each table. Runs under the import lock at the start of
+        process_batch, retract and compact, so no write lands in a
+        partition whose only copy is still an orphan."""
         if not os.path.isdir(self.out_dir):
             return
-        for entry in os.listdir(self.out_dir):
-            if not entry.startswith(".retract-old-"):
-                continue
-            orphan = os.path.join(self.out_dir, entry)
-            final = self._table_path(entry[len(".retract-old-"):])
-            if os.path.isdir(final):
-                shutil.rmtree(orphan, ignore_errors=True)
-            else:
-                os.rename(orphan, final)
+        _heal_swaps(self.out_dir)
+        for entry in sorted(os.listdir(self.out_dir)):
+            path = os.path.join(self.out_dir, entry)
+            if not entry.startswith(".") and os.path.isdir(path):
+                _heal_swaps(path)
 
     def _table_path(self, name: str) -> str:
         return os.path.join(self.out_dir, name)
@@ -532,8 +564,6 @@ class IngestPipeline:
         table size; old block_groups stop being touched by ingest and
         never need recompacting.
         """
-        import shutil  # noqa: PLC0415
-
         if self.jdbc_url is not None:
             raise ValueError("compact() applies to the parquet sink only")
         table_dir = self._table_path(name)
@@ -541,20 +571,7 @@ class IngestPipeline:
         if not os.path.isdir(table_dir):
             return results
         with self._import_lock():
-            # recovery sweep: a crash between the two swap renames
-            # leaves '.compact-old-<part>' holding the only copy of
-            # the partition — restore it before doing any new work (a
-            # crash after the second rename just leaves the old dir
-            # for deletion)
-            for entry in sorted(os.listdir(table_dir)):
-                if not entry.startswith(".compact-old-"):
-                    continue
-                orphan = os.path.join(table_dir, entry)
-                part_dir = os.path.join(table_dir, entry[len(".compact-old-"):])
-                if os.path.isdir(part_dir):
-                    shutil.rmtree(orphan, ignore_errors=True)
-                else:
-                    os.rename(orphan, part_dir)
+            self._recover_swaps()
             for part in sorted(os.listdir(table_dir)):
                 part_dir = os.path.join(table_dir, part)
                 if not (part.startswith("block_group=") and os.path.isdir(part_dir)):
@@ -564,25 +581,15 @@ class IngestPipeline:
                     continue
                 total = sum(os.path.getsize(os.path.join(part_dir, f)) for f in files)
                 n_out = max(1, -(-total // target_file_bytes))
-                tmp_dir = os.path.join(table_dir, f".compact-tmp-{part}")
-                old_dir = os.path.join(table_dir, f".compact-old-{part}")
-                shutil.rmtree(tmp_dir, ignore_errors=True)
-                shutil.rmtree(old_dir, ignore_errors=True)
-                (
+                _swap_dir(
+                    table_dir,
+                    part,
+                    "compact",
                     self.spark.read.parquet(part_dir)
                     .coalesce(int(n_out))
                     .write.mode("overwrite")
-                    .parquet(tmp_dir)
+                    .parquet,
                 )
-                # two-rename swap: in-process readers outside the lock
-                # can see the partition absent for the instant between
-                # renames — acceptable for this sink (single-driver
-                # analytics reads run between batches); a table format
-                # with atomic commits (Delta/Iceberg) is the
-                # production answer for lock-free readers (SCALE.md)
-                os.rename(part_dir, old_dir)
-                os.rename(tmp_dir, part_dir)
-                shutil.rmtree(old_dir)
                 n_after = len(
                     [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
                 )
@@ -705,10 +712,12 @@ class IngestPipeline:
             feed.unpersist()
 
     def _process_batch_locked(self, feed: DataFrame) -> None:
-        # heal any crashed retract swap FIRST: a missing final table
-        # with its only copy in '.retract-old-*' would otherwise read
-        # as an empty (first-run) table and double-import everything
-        self._recover_table_swaps()
+        # heal any crashed swap FIRST: a missing final table with its
+        # only copy in '.retract-old-*' would otherwise read as an empty
+        # (first-run) table and double-import everything, and an append
+        # into a partition whose only copy is in '.compact-old-*' would
+        # recreate the directory and hide the orphan for good
+        self._recover_swaps()
         block_staging = feed.select(
             F.col("block_number").alias("number"),
             F.col("block_hash").alias("hash"),
@@ -853,7 +862,7 @@ class IngestPipeline:
 
         def _refresh_balances() -> None:
             stale_b = stale_balance_addresses(
-                batch_tables["erc20_transfer"], batch_tables["crc_hub_transfer"], signups
+                batch_tables["erc20_transfer"], batch_tables["crc_hub_transfer"]
             )
             fresh_b = crc_balances_by_safe_and_token(crc_ledger(erc20_full, signup_full))
             _publish(

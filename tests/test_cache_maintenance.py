@@ -99,8 +99,7 @@ def test_stale_rule_covers_non_signed_up_endpoints(spark):
         [("0xalice", "0xexchange")], "`from` string, `to` string"
     )
     hub = spark.createDataFrame([], "`from` string, `to` string")
-    signups = spark.createDataFrame([("0xalice",)], "user string")
-    stale = {r["safe_address"] for r in stale_balance_addresses(erc20, hub, signups).collect()}
+    stale = {r["safe_address"] for r in stale_balance_addresses(erc20, hub).collect()}
     assert stale == {"0xalice", "0xexchange"}
 
 

@@ -58,7 +58,7 @@ def _sorted_rows(df, keys):
 def test_incremental_balance_refresh_equals_full(spark, tables):
     """Split event history in two batches: refreshing only stale keys
     after batch 2 must equal a from-scratch rebuild (T8 invariant)."""
-    signups, full_balances, _ = _views(tables)
+    _, full_balances, _ = _views(tables)
     erc20 = tables["erc20_transfer"]
     cut = 12_529_461
     old_erc20 = erc20.filter(F.col("block_number") < cut)
@@ -68,9 +68,7 @@ def test_incremental_balance_refresh_equals_full(spark, tables):
     cache_v1 = crc_balances_by_safe_and_token(
         crc_ledger(old_erc20, tables["crc_signup"])
     )
-    stale = stale_balance_addresses(
-        new_erc20, tables["crc_hub_transfer"].limit(0), signups
-    )
+    stale = stale_balance_addresses(new_erc20, tables["crc_hub_transfer"].limit(0))
     refreshed = refresh_balance_cache(cache_v1, full_balances, stale)
 
     keys = ["safe_address", "token", "balance"]

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -493,3 +494,198 @@ def test_build_concurrently_order_results_and_errors(spark):
 
     with pytest.raises(ValueError, match="builder failed"):
         build_concurrently(lambda: 1, boom)
+
+
+# ---------------------------------------------------------------------------
+# dbscan_clusters (semantics via an injected pair frame)
+# ---------------------------------------------------------------------------
+
+
+def test_dbscan_roles_and_clusters(spark):
+    from blockchain_indexer_spark.operators.cluster import dbscan_clusters
+
+    ids = [1, 2, 3, 4, 5, 6, 7, 10, 11, 12, 13]
+    emb = spark.createDataFrame(
+        [(i, [1.0, 0.0]) for i in ids], "vec_id bigint, embedding array<float>"
+    )
+    pairs = spark.createDataFrame(
+        [
+            # star: 1 is core at min_pts=4 (closed nbhd 4); 2,3,4 border
+            (1, 2), (1, 3), (1, 4),
+            # isolated low-density pair: both noise (no core neighbor)
+            (5, 6),
+            # two cores 10,11 share borders 12,13
+            (10, 11), (10, 12), (10, 13), (11, 12), (11, 13),
+        ],
+        "vec_a bigint, vec_b bigint",
+    )
+    out = {
+        r.id: (r.role, r.cluster)
+        for r in dbscan_clusters(emb, "vec_id", "embedding", min_pts=4, pairs=pairs).collect()
+    }
+    assert out[1] == ("core", 1)
+    assert out[2] == out[3] == out[4] == ("border", 1)
+    assert out[5] == out[6] == out[7] == ("noise", -1)
+    assert out[10] == out[11] == ("core", 10)
+    assert out[12] == out[13] == ("border", 10)
+
+
+def test_dbscan_exact_default_path(spark, sf_dir):
+    """The default exact-pairs path: every embedding row gets exactly
+    one role; clusters are labeled by a member core id."""
+    from blockchain_indexer_spark.operators.cluster import dbscan_clusters
+    from blockchain_indexer_spark.sources.parquet import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    out = dbscan_clusters(emb, "vec_id", "embedding", eps=0.3, min_pts=4).toPandas()
+    assert len(out) == emb.count()
+    assert set(out["role"]) == {"core", "border", "noise"}
+    core = out[out["role"] == "core"]
+    # every core cluster label is itself a core point's id
+    assert set(core["cluster"]) <= set(core["id"])
+    assert (out.loc[out["role"] == "noise", "cluster"] == -1).all()
+
+
+def test_dbscan_lsh_pairs_seam(spark, sf_dir):
+    """The documented scale path: lsh_near_dup_pairs output plugs into
+    the `pairs` seam; roles/labels stay internally consistent."""
+    from blockchain_indexer_spark.operators.cluster import dbscan_clusters
+    from blockchain_indexer_spark.operators.similarity import lsh_near_dup_pairs
+    from blockchain_indexer_spark.sources.parquet import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    pairs = lsh_near_dup_pairs(emb, "vec_id", "embedding", threshold=0.3)
+    out = dbscan_clusters(emb, "vec_id", "embedding", min_pts=4, pairs=pairs).toPandas()
+    assert len(out) == emb.count()
+    core = out[out["role"] == "core"]
+    assert set(core["cluster"]) <= set(core["id"])
+
+
+def test_dbscan_matches_python_reference_on_random_corpora(spark):
+    """Third implementation check (beyond the DuckDB oracle's single
+    corpus): DBSCAN's role/cluster semantics vs an independent
+    union-find reference, on seeded random vector sets at two
+    (eps, min_pts) settings."""
+    from blockchain_indexer_spark.operators.cluster import dbscan_clusters
+    from blockchain_indexer_spark.operators.similarity import _q_away
+
+    rng = np.random.default_rng(11)
+
+    def reference(vecs: dict[int, np.ndarray], eps: float, min_pts: int):
+        q = {i: _q_away(v * 1000.0) for i, v in vecs.items()}
+        nz = {i: v for i, v in q.items() if (v * v).sum() > 0}
+        ids = sorted(nz)
+        nbrs = {i: set() for i in ids}
+        for ai, a in enumerate(ids):
+            for b in ids[ai + 1:]:
+                va, vb = nz[a], nz[b]
+                # same op order as the engines: product in double FIRST
+                cos = float(va @ vb) / np.sqrt((va * va).sum() * (vb * vb).sum())
+                if cos >= eps:
+                    nbrs[a].add(b)
+                    nbrs[b].add(a)
+        core = {i for i in ids if len(nbrs[i]) + 1 >= min_pts}
+        parent = {i: i for i in core}
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a in core:
+            for b in nbrs[a] & core:
+                ra, rb = find(a), find(b)
+                if ra != rb:
+                    lo, hi = min(ra, rb), max(ra, rb)
+                    parent[hi] = lo
+        out = {}
+        for i in vecs:
+            if i in core:
+                out[i] = ("core", find(i))
+            elif i in nz and nbrs[i] & core:
+                out[i] = ("border", min(find(c) for c in nbrs[i] & core))
+            else:
+                out[i] = ("noise", -1)
+        return out
+
+    for eps, min_pts in ((0.8, 3), (0.5, 5)):
+        n, dim = 40, 6
+        raw = rng.normal(size=(n, dim)).astype(np.float32)
+        raw[::9] = raw[::9] * 0.1 + raw[3]  # plant a dense lump
+        raw[7] = 0.0  # zero vector -> noise by construction
+        vecs = {i: raw[i].astype(np.float64) for i in range(n)}
+        df = spark.createDataFrame(
+            [(i, [float(x) for x in raw[i]]) for i in range(n)],
+            "vec_id bigint, embedding array<float>",
+        )
+        got = {
+            r.id: (r.role, r.cluster)
+            for r in dbscan_clusters(
+                df, "vec_id", "embedding", eps=eps, min_pts=min_pts
+            ).collect()
+        }
+        assert got == reference(vecs, eps, min_pts), (eps, min_pts)
+
+
+# ---------------------------------------------------------------------------
+# cross_modal_dedup_clusters
+# ---------------------------------------------------------------------------
+
+
+def test_cross_modal_transitive_union(spark):
+    """A~B by one modality and B~C by another must merge all three
+    into one cluster with the minimum id surviving; evidence arrives
+    as one VERDICT frame and one PAIR frame."""
+    from blockchain_indexer_spark.operators.cluster import cross_modal_dedup_clusters
+
+    universe = spark.createDataFrame([(i,) for i in range(1, 7)], "doc_id long")
+    # modality 1 (verdict shape): {1,2} clustered under 1; 3..6 alone
+    verdict = spark.createDataFrame(
+        [(1, 1, True), (2, 1, False)] + [(i, i, True) for i in range(3, 7)],
+        "id long, cluster long, keep boolean",
+    )
+    # modality 2 (pair shape): 2~3 and 5~6
+    pairs = spark.createDataFrame([(2, 3), (5, 6)], "doc_a long, doc_b long")
+    got = {
+        r.id: (r.cluster, r.keep)
+        for r in cross_modal_dedup_clusters(universe, [verdict, pairs]).collect()
+    }
+    assert got == {
+        1: (1, True),
+        2: (1, False),
+        3: (1, False),   # transitively via 2
+        4: (4, True),
+        5: (5, True),
+        6: (5, False),
+    }
+
+
+def test_cross_modal_rejects_unrecognized_evidence(spark):
+    from blockchain_indexer_spark.operators.cluster import cross_modal_dedup_clusters
+
+    universe = spark.createDataFrame([(1,)], "doc_id long")
+    bad = spark.createDataFrame([(1, 2)], "x long, y long")
+    with pytest.raises(ValueError, match="neither a verdict nor|neither a"):
+        cross_modal_dedup_clusters(universe, [bad])
+    with pytest.raises(ValueError, match="at least one"):
+        cross_modal_dedup_clusters(universe, [])
+
+
+def test_cross_modal_audio_modality_collapses_fixture(spark, sf_dir):
+    """Pins WHY the cross-modal gate excludes audio: the audio fixture
+    corpus chains into ONE hamming family (mm_audio_dedup_clusters'
+    doc), so a union that includes it degenerates to a single
+    cross-modal cluster — correct but uninformative."""
+    from blockchain_indexer_spark.operators.cluster import cross_modal_dedup_clusters
+    from blockchain_indexer_spark.operators.multimodal import (
+        attach_wav_blob,
+        audio_dedup_clusters,
+    )
+    from blockchain_indexer_spark.sources.parquet import load_table
+    from pyspark.sql import functions as F
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
+    aud = audio_dedup_clusters(attach_wav_blob(docs), bits=16, bands=4, max_hamming=2)
+    x = cross_modal_dedup_clusters(docs, [aud])
+    assert x.select("cluster").distinct().count() == 1

@@ -103,60 +103,9 @@ def test_sampling_and_packing_on_empty(spark, empty_docs):
     assert pack_chunks(empty_docs, "doc_id", "source", F.col("n_chars")).count() == 0
 
 
-def test_round9_banked_operators_on_empty(spark, empty_docs, empty_emb):
-    """Round-10-shelf operators over empty (typed) inputs: empty
-    micro-batches, empty indexes, empty runs/qrels — all normal
-    production states, none may crash."""
-    from blockchain_indexer_spark.operators.dedup import (
-        minhash_union_calibration,
-        split_leakage_finalize,
-        split_leakage_index_update,
-    )
-    from blockchain_indexer_spark.operators.similarity import (
-        opq_rotate,
-        pq_distortion,
-    )
-    from blockchain_indexer_spark.operators.textprep import retrieval_eval
+def test_pq_distortion_rejects_empty_corpus(empty_emb):
+    from blockchain_indexer_spark.operators.similarity import pq_distortion
 
-    empty_split = empty_docs.withColumn("split", F.lit("train"))
-    # bootstrap from an EMPTY first batch, then feed a real one
-    tr, ev, lk = split_leakage_index_update(
-        None, empty_split, "doc_id", "text", "split"
-    )
-    assert tr.count() == 0 and ev.count() == 0 and lk.count() == 0
-    real = spark.createDataFrame(
-        [
-            (1, "a b c d e f g h i", "train"),
-            (2, "a b c d e f g h j", "val"),
-        ],
-        "doc_id long, text string, split string",
-    )
-    tr2, ev2, lk2 = split_leakage_index_update(
-        (tr, ev), real, "doc_id", "text", "split"
-    )
-    assert lk2.count() == 1  # the empty index contributed nothing, silently
-    out = split_leakage_finalize(real, ev2, lk2, "doc_id", "split").collect()
-    assert len(out) == 1 and out[0]["leaked"]
-    # finalize over fully-empty state
-    assert (
-        split_leakage_finalize(
-            empty_split, ev, lk, "doc_id", "split"
-        ).count()
-        == 0
-    )
-
-    assert minhash_union_calibration(empty_docs, "doc_id", "text").count() == 0
-
-    rotated = opq_rotate(empty_emb, "vec_id", "embedding")
-    assert rotated.count() == 0
     with pytest.raises(ValueError, match="corpus smaller"):
         # pq codebooks cannot seed from an empty corpus: loud, not silent
-        pq_distortion(rotated, "vec_id", "embedding", m=16, n_codes=32, scale=1).count()
-
-    empty_run = spark.createDataFrame([], "query_id long, doc_id long, rank long")
-    empty_qrels = spark.createDataFrame([], "query_id long, doc_id long")
-    assert retrieval_eval(empty_run, empty_qrels, k=5).count() == 0
-    # qrels without a run: zero-valued rows per judged query, not empty
-    qrels = spark.createDataFrame([(1, 10)], "query_id long, doc_id long")
-    rows = retrieval_eval(empty_run, qrels, k=5).collect()
-    assert len(rows) == 1 and rows[0]["n_ret"] == 0 and rows[0]["rr_nano"] == 0
+        pq_distortion(empty_emb, "vec_id", "embedding", m=16, n_codes=32).count()

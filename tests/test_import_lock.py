@@ -179,3 +179,33 @@ def test_retract_crash_recovery_restores_table(spark, tmp_path_factory, feed_df)
         pipe.read_final("transaction").toPandas().sort_values("hash").reset_index(drop=True)
     )
     assert before.equals(after)
+
+
+def test_append_restores_compact_orphan_before_writing(spark, tmp_path_factory, feed_df):  # noqa: F811
+    """A crash between compact's renames, then a live batch appending
+    into the same block_group: the batch must restore the orphaned
+    partition before it appends. Otherwise the append recreates the
+    partition directory, the next compact() takes the orphan for
+    post-swap residue and deletes the only copy of its rows."""
+    root = str(tmp_path_factory.mktemp("orphan"))
+    halves = [feed_df.filter(F.col("block_number") % 2 == mod) for mod in range(2)]
+
+    def transactions(pipe):
+        return pipe.read_final("transaction").toPandas().sort_values("hash").reset_index(drop=True)
+
+    clean = IngestPipeline(spark, os.path.join(root, "clean"))
+    for half in halves:
+        clean.process_batch(half)
+
+    pipe = IngestPipeline(spark, os.path.join(root, "final"))
+    pipe.process_batch(halves[0])
+    table_dir = os.path.join(root, "final", "transaction")
+    part = sorted(p for p in os.listdir(table_dir) if p.startswith("block_group="))[-1]
+    orphan = os.path.join(table_dir, f".compact-old-{part}")
+    os.rename(os.path.join(table_dir, part), orphan)  # the crash window
+    orphan_files = set(os.listdir(orphan))
+    pipe.process_batch(halves[1])
+    assert not os.path.exists(orphan)
+    assert orphan_files <= set(os.listdir(os.path.join(table_dir, part)))
+    pipe.compact("transaction", min_files=10_000)
+    assert transactions(pipe).equals(transactions(clean))

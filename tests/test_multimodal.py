@@ -603,3 +603,519 @@ def test_real_gif_gate_runs_on_spark(spark):
         assert (r["width"], r["height"], r["channels"]) == (w, h, 3)
         assert abs(r["mean_b"] - want[:, :, 0].mean()) < 1e-9
         assert abs(r["mean_r"] - want[:, :, 2].mean()) < 1e-9
+
+
+def test_image_dedup_hash_factoring_equals_doc_level_closure(spark, sf_dir):
+    """image_dedup_clusters runs the closure over DISTINCT hashes (the
+    dup-dense scale fix); its clusters must be IDENTICAL to the naive
+    doc-level closure (pairs -> connected components -> survivors)."""
+    from blockchain_indexer_spark.operators.cluster import dedup_survivors
+    from blockchain_indexer_spark.operators.multimodal import (
+        attach_png_blob,
+        image_dedup_clusters,
+        image_near_dup_pairs,
+    )
+    from blockchain_indexer_spark.sources.parquet import load_table
+    from pyspark.sql import functions as F
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
+    blobs = attach_png_blob(docs)
+    fast = {
+        r.doc_id: (r.cluster, r.keep)
+        for r in image_dedup_clusters(blobs, grid=6, bands=4, max_hamming=3).collect()
+    }
+    pairs = image_near_dup_pairs(blobs, grid=6, bands=4, max_hamming=3).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
+    )
+    naive = {
+        r.id: (r.cluster, r.keep)
+        for r in dedup_survivors(docs, pairs, "doc_id").collect()
+    }
+    assert fast == naive
+
+
+# ---------------------------------------------------------------------------
+# audio_whash / audio_dedup_clusters
+# ---------------------------------------------------------------------------
+
+
+def _whash_reference(doc_id: int, bits: int = 16, n_fft: int = 64) -> int:
+    """Independent fingerprint implementation: recompute the WAV
+    closed form and the Walsh-Hadamard difference code with per-bin
+    python loops (the operator uses one vectorized sign-matrix
+    matmul)."""
+    n = 16 + doc_id % 37
+    s = [
+        ((doc_id * 31 + i * 17) % 65536 - 32768) if i < n else 0
+        for i in range(n_fft)
+    ]
+    e = []
+    for k in range(1, bits + 2):
+        a = sum(v if bin(k & i).count("1") % 2 == 0 else -v for i, v in enumerate(s))
+        e.append(a * a)
+    h = 0
+    for b in range(bits):
+        if e[b] > e[b + 1]:
+            h |= 1 << b
+    return h
+
+
+def test_audio_whash_matches_reference(spark, sf_dir):
+    from blockchain_indexer_spark.operators.multimodal import (
+        attach_wav_blob,
+        audio_whash,
+    )
+    from blockchain_indexer_spark.sources.parquet import load_table
+    from pyspark.sql import functions as F
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 80)
+    got = {r.doc_id: r.whash for r in audio_whash(attach_wav_blob(docs)).collect()}
+    assert len(got) == 80
+    for did, h in got.items():
+        assert h == _whash_reference(did), did
+
+
+def test_audio_hash_factoring_equals_doc_level_closure(spark, sf_dir):
+    """audio_dedup_clusters runs the closure over DISTINCT
+    fingerprints (the dup-dense scale fix); its clusters must be
+    IDENTICAL to the naive doc-level closure (doc-level hamming pairs
+    -> connected components -> survivors)."""
+    from blockchain_indexer_spark.operators.cluster import dedup_survivors
+    from blockchain_indexer_spark.operators.dedup import hamming_band_pairs
+    from blockchain_indexer_spark.operators.multimodal import (
+        attach_wav_blob,
+        audio_dedup_clusters,
+        audio_whash,
+    )
+    from blockchain_indexer_spark.sources.parquet import load_table
+    from pyspark.sql import functions as F
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
+    blobs = attach_wav_blob(docs)
+    fast = {
+        r.doc_id: (r.cluster, r.keep)
+        for r in audio_dedup_clusters(blobs, bits=16, bands=4, max_hamming=2).collect()
+    }
+    h = audio_whash(blobs).select("doc_id", "whash")
+    pairs = hamming_band_pairs(h, "doc_id", "whash", 16, bands=4, max_hamming=2).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
+    )
+    naive = {
+        r.id: (r.cluster, r.keep)
+        for r in dedup_survivors(docs, pairs, "doc_id").collect()
+    }
+    assert fast == naive
+
+
+def test_audio_whash_identical_waveforms_collide(spark):
+    """Two blobs with byte-identical PCM payloads must fingerprint
+    identically regardless of container framing (the decoder walks
+    chunks; the fingerprint sees samples only)."""
+    import struct
+
+    from blockchain_indexer_spark.operators.multimodal import audio_whash
+
+    def wav(doc_id: int, extra_chunk: bool) -> bytes:
+        n = 16 + doc_id % 37
+        pcm = (
+            ((doc_id * 31 + np.arange(n, dtype=np.int64) * 17) % 65536 - 32768)
+            .astype("<i2")
+            .tobytes()
+        )
+        fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
+        junk = (b"LIST" + struct.pack("<I", 4) + b"INFO") if extra_chunk else b""
+        data = b"data" + struct.pack("<I", len(pcm)) + pcm
+        body = b"WAVE" + fmt + junk + data
+        return b"RIFF" + struct.pack("<I", len(body)) + body
+
+    df = spark.createDataFrame(
+        [(1, wav(7, False)), (2, wav(7, True))], "doc_id long, blob binary"
+    )
+    out = {r.doc_id: r.whash for r in audio_whash(df).collect()}
+    assert out[1] == out[2]
+
+
+# ---------------------------------------------------------------------------
+# shot_boundaries
+# ---------------------------------------------------------------------------
+
+
+def test_shot_boundaries_hand_built(spark):
+    from blockchain_indexer_spark.operators.multimodal import shot_boundaries
+
+    rows = [
+        # doc 1: cut before frame 2 (jump 200) and before frame 4
+        (1, 0, 10.0, 10.0, 10.0),
+        (1, 1, 12.0, 11.0, 10.0),   # dist 3 -> same shot
+        (1, 2, 212.0, 11.0, 10.0),  # dist 200 -> cut
+        (1, 3, 213.0, 12.0, 10.0),  # dist 2 -> same shot
+        (1, 4, 13.0, 12.0, 140.0),  # dist 330 -> cut
+        # doc 2: single frame, one shot
+        (2, 0, 5.0, 5.0, 5.0),
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, frame_index int, mean_b double, mean_g double, mean_r double"
+    )
+    got = {
+        (r.doc_id, r.shot_id): (r.start_frame, r.end_frame, r.n_frames)
+        for r in shot_boundaries(df, threshold=128).collect()
+    }
+    assert got == {
+        (1, 0): (0, 1, 2),
+        (1, 1): (2, 3, 2),
+        (1, 2): (4, 4, 1),
+        (2, 0): (0, 0, 1),
+    }
+
+
+def test_shot_boundaries_matches_python_reference(spark):
+    """Third implementation check: threshold-cut shot segmentation in
+    plain python over seeded random feature series."""
+    from blockchain_indexer_spark.operators.multimodal import shot_boundaries
+
+    rng = np.random.default_rng(17)
+    rows = []
+    series: dict[int, list[tuple[float, float, float]]] = {}
+    for did in range(12):
+        nf = int(rng.integers(1, 9))
+        feats = [tuple(float(x) for x in rng.integers(0, 256, 3)) for _ in range(nf)]
+        series[did] = feats
+        rows += [(did, fi, *f) for fi, f in enumerate(feats)]
+    df = spark.createDataFrame(
+        rows, "doc_id long, frame_index int, mean_b double, mean_g double, mean_r double"
+    )
+    got = sorted(
+        (r.doc_id, r.shot_id, r.start_frame, r.end_frame, r.n_frames)
+        for r in shot_boundaries(df, threshold=128).collect()
+    )
+    want = []
+    for did, feats in series.items():
+        shot, start = 0, 0
+        qprev = None
+        for fi, f in enumerate(feats):
+            q = tuple(int(np.floor(x)) for x in f)
+            if qprev is not None and sum(abs(a - b) for a, b in zip(q, qprev)) >= 128:
+                want.append((did, shot, start, fi - 1, fi - start))
+                shot, start = shot + 1, fi
+            qprev = q
+        want.append((did, shot, start, len(feats) - 1, len(feats) - start))
+    assert got == sorted(want)
+
+
+def test_shot_boundaries_null_feature_is_boundary_not_merge(spark):
+    """Driver ADVICE r7: a NULL feature mid-stream used to fall
+    through the when-chain to 'no cut', silently merging across the
+    bad frame. Unmeasurable transitions are now explicit boundaries —
+    the bad frame shows up as its own shot instead of gluing two real
+    shots together."""
+    from blockchain_indexer_spark.operators.multimodal import shot_boundaries
+
+    rows = [
+        (1, 0, 10.0, 10.0, 10.0),
+        (1, 1, 11.0, 10.0, 10.0),   # dist 1 -> same shot
+        (1, 2, None, 10.0, 10.0),   # bad frame: boundary INTO it...
+        (1, 3, 12.0, 10.0, 10.0),   # ...and boundary OUT of it
+        (1, 4, 13.0, 10.0, 10.0),   # dist 1 -> same shot as frame 3
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, frame_index int, mean_b double, mean_g double, mean_r double"
+    )
+    got = {
+        (r.doc_id, r.shot_id): (r.start_frame, r.end_frame, r.n_frames)
+        for r in shot_boundaries(df, threshold=128).collect()
+    }
+    assert got == {
+        (1, 0): (0, 1, 2),
+        (1, 1): (2, 2, 1),
+        (1, 2): (3, 4, 2),
+    }
+
+
+# ---------------------------------------------------------------------------
+# shot_signatures / video_whash / video_dedup_clusters
+# ---------------------------------------------------------------------------
+
+
+def _video_reference(feats: list[tuple[int, int, int]], bits: int = 16):
+    """Independent fingerprint implementation: shot segmentation +
+    floor-mean signatures + parity-projection SimHash in plain python
+    loops (the operator runs window functions + integer exprs)."""
+    from blockchain_indexer_spark.operators.multimodal import _video_masks
+
+    shots: list[list[tuple[int, int, int]]] = []
+    prev = None
+    for f in feats:
+        if prev is not None and sum(abs(a - b) for a, b in zip(f, prev)) >= 128:
+            shots.append([])
+        if not shots:
+            shots.append([])
+        shots[-1].append(f)
+        prev = f
+    masks = _video_masks(bits)
+    w = [0] * bits
+    sigs = []
+    for sh in shots:
+        n = len(sh)
+        qb = sum(f[0] for f in sh) // n
+        qg = sum(f[1] for f in sh) // n
+        qr = sum(f[2] for f in sh) // n
+        sig = (qb << 20) | (qg << 10) | qr
+        sigs.append(sig)
+        for k, m in enumerate(masks):
+            par = bin(sig & m).count("1") % 2
+            w[k] += n * (1 - 2 * par)
+    vhash = sum(1 << k for k in range(bits) if w[k] > 0)
+    return sigs, vhash
+
+
+def test_video_whash_matches_reference(spark, sf_dir):
+    from blockchain_indexer_spark.operators.multimodal import (
+        attach_avi_blob,
+        sample_frames_real,
+        video_whash,
+    )
+    from blockchain_indexer_spark.sources.parquet import load_table
+    from pyspark.sql import functions as F
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 80)
+    frames = sample_frames_real(attach_avi_blob(docs), every=1)
+    got = {r.doc_id: r.vhash for r in video_whash(frames).collect()}
+    assert len(got) == 80
+    for did, vh in got.items():
+        nf = 1 + did % 5
+        feats = [
+            (
+                (did + 11 * f) % 256,
+                (3 * did + 7 * f + 1) % 256,
+                (5 * did + 13 * f + 2) % 256,
+            )
+            for f in range(nf)
+        ]
+        _, want = _video_reference(feats)
+        assert vh == want, did
+
+
+def test_video_hash_factoring_equals_doc_level_closure(spark, sf_dir):
+    """video_dedup_clusters runs the closure over DISTINCT
+    fingerprints (the dup-dense scale fix); its clusters must be
+    IDENTICAL to the naive doc-level closure (doc-level hamming pairs
+    -> connected components -> survivors)."""
+    from blockchain_indexer_spark.operators.cluster import dedup_survivors
+    from blockchain_indexer_spark.operators.dedup import hamming_band_pairs
+    from blockchain_indexer_spark.operators.multimodal import (
+        attach_avi_blob,
+        sample_frames_real,
+        video_dedup_clusters,
+        video_whash,
+    )
+    from blockchain_indexer_spark.sources.parquet import load_table
+    from pyspark.sql import functions as F
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
+    frames = sample_frames_real(attach_avi_blob(docs), every=1)
+    fast = {
+        r.doc_id: (r.cluster, r.keep)
+        for r in video_dedup_clusters(frames, bits=16, bands=4, max_hamming=2).collect()
+    }
+    h = video_whash(frames).select("doc_id", "vhash")
+    pairs = hamming_band_pairs(h, "doc_id", "vhash", 16, bands=4, max_hamming=2).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
+    )
+    naive = {
+        r.id: (r.cluster, r.keep)
+        for r in dedup_survivors(docs, pairs, "doc_id").collect()
+    }
+    assert fast == naive
+
+
+def test_shot_signatures_null_frame_nulls_the_shot(spark):
+    """NULL policy: a shot containing any NULL-feature frame gets a
+    NULL signature (shot_signatures), and video_whash drops it from
+    the vote instead of fingerprinting a partial shot."""
+    from blockchain_indexer_spark.operators.multimodal import (
+        shot_signatures,
+        video_whash,
+    )
+
+    rows = [
+        (1, 0, 10.0, 10.0, 10.0),
+        (1, 1, None, 10.0, 10.0),   # boundary in AND out; its own shot
+        (1, 2, 10.0, 10.0, 10.0),
+        (2, 0, 20.0, 30.0, 40.0),
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, frame_index int, mean_b double, mean_g double, mean_r double"
+    )
+    sigs = {
+        (r.doc_id, r.shot_id): r.sig for r in shot_signatures(df).collect()
+    }
+    assert sigs[(1, 0)] == (10 << 20) + (10 << 10) + 10
+    assert sigs[(1, 1)] is None
+    assert sigs[(1, 2)] == (10 << 20) + (10 << 10) + 10
+    assert sigs[(2, 0)] == (20 << 20) + (30 << 10) + 40
+    vh = {r.doc_id: (r.vhash, r.n_shots) for r in video_whash(df).collect()}
+    # doc 1: two valid single-frame shots with identical sig
+    sig1 = (10 << 20) + (10 << 10) + 10
+    _, want1 = _video_reference([(10, 10, 10), (10, 10, 10)])
+    assert vh[1] == (want1, 2)
+    del sig1
+
+
+def test_shot_signatures_agree_with_shot_boundaries(spark, sf_dir):
+    """Shared _shot_frames core: signatures and extents must report
+    the same shot set (id, shot_id, n_frames) for the same input."""
+    from blockchain_indexer_spark.operators.multimodal import (
+        attach_avi_blob,
+        sample_frames_real,
+        shot_boundaries,
+        shot_signatures,
+    )
+    from blockchain_indexer_spark.sources.parquet import load_table
+    from pyspark.sql import functions as F
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
+    frames = sample_frames_real(attach_avi_blob(docs), every=1)
+    ext = {
+        (r.doc_id, r.shot_id): r.n_frames
+        for r in shot_boundaries(frames, threshold=128).collect()
+    }
+    sig = {
+        (r.doc_id, r.shot_id): r.n_frames
+        for r in shot_signatures(frames, threshold=128).collect()
+    }
+    assert ext == sig
+
+
+# ---------------------------------------------------------------------------
+# audio_whash windowed mode (the ADVICE-r7 'real audio' path)
+# ---------------------------------------------------------------------------
+
+
+def _wav_blob(samples: list[int]) -> bytes:
+    import struct
+
+    pcm = np.array(samples, dtype="<i2").tobytes()
+    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
+    data = b"data" + struct.pack("<I", len(pcm)) + pcm
+    body = b"WAVE" + fmt + data
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+def test_audio_whash_windowed_default_is_bit_identical(spark, sf_dir):
+    """n_windows=1 must reproduce the pre-round-8 single-window code
+    exactly — the registered mm_audio_dedup_clusters oracle pins it."""
+    from blockchain_indexer_spark.operators.multimodal import (
+        attach_wav_blob,
+        audio_whash,
+    )
+    from blockchain_indexer_spark.sources.parquet import load_table
+    from pyspark.sql import functions as F
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
+    blobs = attach_wav_blob(docs)
+    plain = {r.doc_id: r.whash for r in audio_whash(blobs).collect()}
+    windowed = {
+        r.doc_id: r.whash for r in audio_whash(blobs, n_windows=1).collect()
+    }
+    assert plain == windowed
+
+
+def test_audio_whash_windowed_sees_past_first_window(spark):
+    """The single-window scope limitation, and its windowed fix: two
+    clips sharing their first 64 samples but differing afterwards are
+    indistinguishable at n_windows=1 and distinguishable at
+    n_windows=4."""
+    from blockchain_indexer_spark.operators.multimodal import audio_whash
+
+    rng = np.random.default_rng(23)
+    head = rng.integers(-32768, 32767, 64).tolist()
+    tail_a = rng.integers(-32768, 32767, 192).tolist()
+    # tail_b: strongly different spectral shape (alternating square)
+    tail_b = [(-20000 if i % 2 else 20000) for i in range(192)]
+    df = spark.createDataFrame(
+        [(1, _wav_blob(head + tail_a)), (2, _wav_blob(head + tail_b))],
+        "doc_id long, blob binary",
+    )
+    one = {r.doc_id: r.whash for r in audio_whash(df, n_windows=1).collect()}
+    assert one[1] == one[2]  # the documented blind spot
+    four = {r.doc_id: r.whash for r in audio_whash(df, n_windows=4).collect()}
+    assert four[1] != four[2]
+
+
+def test_audio_whash_windowed_majority_is_edit_robust(spark):
+    """A local edit confined to ONE of four windows flips at most that
+    window's votes — the majority fingerprint moves only a few bits
+    while the single-window-on-the-edit hash may move many."""
+    from blockchain_indexer_spark.operators.multimodal import audio_whash
+
+    rng = np.random.default_rng(31)
+    base = rng.integers(-32768, 32767, 256).tolist()
+    edited = list(base)
+    edited[128:160] = rng.integers(-32768, 32767, 32).tolist()  # window 3 only
+    df = spark.createDataFrame(
+        [(1, _wav_blob(base)), (2, _wav_blob(edited))],
+        "doc_id long, blob binary",
+    )
+    got = {r.doc_id: r.whash for r in audio_whash(df, n_windows=4).collect()}
+    ham = bin(got[1] ^ got[2]).count("1")
+    assert ham <= 6, ham  # one window of four can swing at most its votes
+
+
+def test_shot_signatures_out_of_range_mean_nulls_not_bleeds(spark):
+    """10-bit packing guard (driver ADVICE r8): a quantized channel
+    floor-mean outside 0..1023 (scale > 1 here) must yield a NULL
+    signature, never silently bleed into the adjacent channel's bit
+    field — and in-range shots are unaffected by the guard."""
+    from blockchain_indexer_spark.operators.multimodal import shot_signatures
+
+    rows = [
+        (1, 0, 200.0, 10.0, 10.0),  # 200*8=1600 > 1023: overflow
+        (2, 0, 100.0, 20.0, 30.0),  # 100*8=800 fits: valid at scale=8
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "doc_id long, frame_index int, mean_b double, mean_g double, mean_r double",
+    )
+    sigs = {r.doc_id: r.sig for r in shot_signatures(df, scale=8).collect()}
+    assert sigs[1] is None  # not (1600<<20)+... with 1600 bleeding out
+    assert sigs[2] == (800 << 20) + (160 << 10) + 240
+    # scale=1 fixture shapes (0..255 means) keep their exact packing
+    base = {r.doc_id: r.sig for r in shot_signatures(df).collect()}
+    assert base[1] == (200 << 20) + (10 << 10) + 10
+
+
+def test_audio_whash_windowed_majority_over_covered_windows(spark):
+    """Covered-window denominator (driver ADVICE r8): windows entirely
+    past a short clip's end don't dilute the majority. A 128-sample
+    clip under n_windows=4/hop=64 covers exactly 2 windows; when both
+    agree the bit must be SET (2v=4 > covered=2), where the old
+    n_windows denominator cleared it (4 > 4 false, biasing short
+    clips toward all-zero fingerprints)."""
+    from blockchain_indexer_spark.operators.multimodal import audio_whash
+
+    rng = np.random.default_rng(47)
+    w0 = rng.integers(-32768, 32767, 64).tolist()
+    df = spark.createDataFrame(
+        [(1, _wav_blob(w0 + w0))], "doc_id long, blob binary"
+    )
+    one = audio_whash(df, n_windows=1).collect()[0].whash
+    four = audio_whash(df, n_windows=4).collect()[0].whash
+    assert four == one  # unanimous covered windows == single-window code
+    assert one != 0  # and the hash genuinely carries bits
+
+
+def test_audio_whash_sub_hop_clip_invariant_in_n_windows(spark):
+    """A clip shorter than hop covers ONE window, so its fingerprint
+    is identical at any n_windows — the covered-window majority makes
+    the single window decisive instead of drowned by empty votes."""
+    from blockchain_indexer_spark.operators.multimodal import audio_whash
+
+    rng = np.random.default_rng(53)
+    clip = rng.integers(-32768, 32767, 50).tolist()
+    df = spark.createDataFrame([(1, _wav_blob(clip))], "doc_id long, blob binary")
+    hashes = {
+        n: audio_whash(df, n_windows=n, hop=64).collect()[0].whash
+        for n in (1, 4, 16)
+    }
+    assert hashes[1] == hashes[4] == hashes[16]
+    assert hashes[1] != 0

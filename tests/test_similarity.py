@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,6 +11,7 @@ from blockchain_indexer_spark.operators.similarity import (
     ivf_topk,
     lsh_topk,
 )
+from blockchain_indexer_spark.plans import REGISTRY
 from blockchain_indexer_spark.sources.parquet import load_table
 
 
@@ -415,3 +417,46 @@ def test_ivf_blocked_max_cell_validated(spark):
                 emb, emb, k=1, n_cells=1, metric="cosine",
                 engine="blocked", max_cell=bad,
             )
+
+
+# ---------------------------------------------------------------------------
+# embedding_pq_adc_agreement
+# ---------------------------------------------------------------------------
+
+
+def test_pq_adc_agreement_stats_recompute(spark, sf_dir):
+    """Independent recomputation: the one-row stats must equal a plain
+    pandas join of the two top-k frames the gate composes."""
+    from blockchain_indexer_spark.operators.similarity import (
+        brute_force_topk,
+        ivf_pq_topk,
+    )
+    from blockchain_indexer_spark.sources.parquet import load_table
+    from pyspark.sql import functions as F
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") % 50 == 0)
+    ex = brute_force_topk(
+        emb, q, "vec_id", "embedding", k=5, metric="quantized_neg_l2"
+    ).toPandas()
+    pq = ivf_pq_topk(
+        emb, q, "vec_id", "embedding",
+        k=5, n_cells=16, n_probe=6, m=16, n_codes=32, rerank=50,
+    ).toPandas()
+    j = ex.merge(pq, on=["query_id", "neighbor_id"], suffixes=("_e", "_p"))
+    want = {
+        "n_queries": ex["query_id"].nunique(),
+        "n_exact": len(ex),
+        "n_adc": len(pq),
+        "n_common": len(j),
+        "recall_nano": int(np.floor(1e9 * len(j) / len(ex))) if len(ex) else -1,
+        "n_rank_agree": int((j["rank_e"] == j["rank_p"]).sum()),
+    }
+    got = REGISTRY["embedding_pq_adc_agreement"].build(spark, sf_dir).collect()[0]
+    for k, v in want.items():
+        assert got[k] == v, (k, got[k], v)
+    assert 0 <= got["recall_nano"] <= 10**9
+    if got["n_common"]:
+        assert got["rank_agree_nano"] == int(
+            np.floor(1e9 * want["n_rank_agree"] / want["n_common"])
+        )

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -171,3 +172,145 @@ def test_intra_dedup_is_shuffle_free(spark):
     docs = spark.createDataFrame([(1, ["a", "a"])], "doc_id long, lines array<string>")
     plan = dedup_doc_lines(docs)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+
+
+# ---------------------------------------------------------------------------
+# mmr_rerank
+# ---------------------------------------------------------------------------
+
+
+def _mmr_fixture(spark):
+    docs = spark.createDataFrame(
+        [
+            (1, ["apple", "x", "y"]),
+            (2, ["apple", "x", "y"]),  # exact token-set dup of doc 1
+            (3, ["apple", "z", "w"]),  # same relevance, different content
+        ],
+        "doc_id bigint, toks array<string>",
+    )
+    queries = spark.createDataFrame([(100, "apple")], "query_id bigint, term string")
+    return docs, queries
+
+
+def test_mmr_diversifies_over_pure_relevance(spark):
+    """All three docs tie on BM25 (identical tf/dl/df for the query
+    term), so pure relevance ranks 1,2,3 by id — but doc 2 is a
+    token-set duplicate of doc 1, so MMR must demote it below doc 3."""
+    from blockchain_indexer_spark.operators.textprep import bm25_topk, mmr_rerank
+
+    docs, queries = _mmr_fixture(spark)
+    bm25 = [r.doc_id for r in bm25_topk(docs, queries, k=3).orderBy("rank").collect()]
+    assert bm25 == [1, 2, 3]
+    out = mmr_rerank(docs, queries, k=3, pool=10).orderBy("mmr_rank").collect()
+    assert [r.doc_id for r in out] == [1, 3, 2]
+    by_doc = {r.doc_id: r for r in out}
+    # doc 2's penalty is the full 1e9 jaccard to its duplicate doc 1
+    assert by_doc[2].max_sim_nano == 1_000_000_000
+    # doc 3 overlaps doc 1 only on 'apple': |∩|=1, |∪|=5
+    assert by_doc[3].max_sim_nano == 200_000_000
+    for r in out:
+        assert r.mmr_nano == 7 * r.rel_nano - 3 * r.max_sim_nano
+    assert by_doc[1].max_sim_nano == 0  # first pick pays no penalty
+
+
+def test_mmr_rank_capped_by_pool_membership(spark):
+    from blockchain_indexer_spark.operators.textprep import mmr_rerank
+
+    docs, queries = _mmr_fixture(spark)
+    out = mmr_rerank(docs, queries, k=5, pool=10).collect()
+    # only 3 candidates exist -> 3 ranks, never padded
+    assert sorted(r.mmr_rank for r in out) == [1, 2, 3]
+
+
+def test_mmr_matches_python_reference_on_random_corpora(spark):
+    """Third implementation check: the full MMR pipeline (rational
+    BM25 nanos -> pool -> integer jaccard -> greedy) reimplemented in
+    plain Python over a seeded random corpus with planted duplicates,
+    compared row-for-row against the Spark operator."""
+    import math
+
+    from blockchain_indexer_spark.operators.textprep import mmr_rerank
+
+    rng = np.random.default_rng(23)
+    vocab = [f"w{i}" for i in range(30)]
+    toks = {
+        i: [str(w) for w in rng.choice(vocab, size=int(rng.integers(3, 12)))]
+        for i in range(25)
+    }
+    toks[5] = list(toks[4])  # exact duplicate: MMR must demote one
+    toks[9] = toks[8][:4] + toks[10][:3]  # partial overlap
+    qterms = {100: ["w1", "w2"], 101: ["w3"], 102: ["w4", "w1", "w1"]}
+    k, pool = 4, 6
+
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in toks.items()], "doc_id bigint, toks array<string>"
+    )
+    queries = spark.createDataFrame(
+        [(q, t) for q, ts in qterms.items() for t in ts],
+        "query_id bigint, term string",
+    )
+    got = sorted(
+        (r.query_id, r.mmr_rank, r.doc_id, r.rel_nano, r.max_sim_nano, r.mmr_nano)
+        for r in mmr_rerank(docs, queries, k=k, pool=pool).collect()
+    )
+
+    # ---- reference: same integer arithmetic, independent code paths
+    N = len(toks)
+    S = sum(len(t) for t in toks.values())
+    tf: dict[tuple[int, str], int] = {}
+    for d, ts in toks.items():
+        for w in ts:
+            tf[(d, w)] = tf.get((d, w), 0) + 1
+    dl = {d: len(ts) for d, ts in toks.items()}
+    dfc: dict[str, int] = {}
+    for (d, w) in tf:
+        dfc[w] = dfc.get(w, 0) + 1
+    want = []
+    for q, terms in qterms.items():
+        rel: dict[int, int] = {}
+        for w in sorted(set(terms)):  # queries are deduped in-operator
+            if w not in dfc:
+                continue
+            for d in toks:
+                if (d, w) not in tf:
+                    continue
+                num = 22 * S * tf[(d, w)] * (2 * N - 2 * dfc[w] + 1)
+                den = (10 * S * tf[(d, w)] + 3 * S + 9 * dl[d] * N) * (
+                    2 * dfc[w] + 1
+                )
+                rel[d] = rel.get(d, 0) + math.floor(1e9 * (num / den))
+        cand = sorted(rel, key=lambda d: (-rel[d], d))[:pool]
+        dset = {d: set(toks[d]) for d in cand}
+
+        def jac(a, b):
+            c = len(dset[a] & dset[b])
+            return 0 if c == 0 else (1_000_000_000 * c) // len(dset[a] | dset[b])
+
+        sel: list[int] = []
+        remaining = sorted(cand)
+        for r in range(1, k + 1):
+            if not remaining:
+                break
+            best = None
+            for d in remaining:
+                ms = max((jac(d, s) for s in sel), default=0)
+                m = 7 * rel[d] - 3 * ms
+                if best is None or m > best[0]:
+                    best = (m, d, ms)
+            m, d, ms = best
+            want.append((q, r, d, rel[d], ms, m))
+            sel.append(d)
+            remaining.remove(d)
+    assert got == sorted(want)
+
+
+def test_mmr_no_query_hits_yields_empty(spark):
+    from blockchain_indexer_spark.operators.textprep import mmr_rerank
+
+    docs = spark.createDataFrame(
+        [(1, ["alpha"])], "doc_id bigint, toks array<string>"
+    )
+    queries = spark.createDataFrame(
+        [(9, "missing")], "query_id bigint, term string"
+    )
+    assert mmr_rerank(docs, queries).count() == 0

@@ -425,118 +425,3 @@ def _dbscan_lsh_agree_20k():
           f"recall={pl/max(pe,1):.3f} verdict_agree={agree}", flush=True)
     return agree
 t("dbscan_lsh_agreement_20k_sample", _dbscan_lsh_agree_20k)
-
-# ---- round-9 banked (round-10 promotion) operators --------------------
-from blockchain_indexer_spark.operators.dedup import (
-    minhash_union_calibration,
-    split_leakage_finalize,
-    split_leakage_index_update,
-)
-from blockchain_indexer_spark.operators.similarity import opq_rotate
-
-
-def _split_leakage_incremental_100k():
-    # three-batch incremental drive of the 100k corpus: per-batch work
-    # is O(|batch| windows) of hash probes against the growing indexes
-    d = hash_split(docs, "doc_id")
-    state, leak_parts = None, []
-    for b in range(3):
-        batch = d.filter(F.pmod(F.col("doc_id"), F.lit(3)) == b)
-        tr, ev, lk = split_leakage_index_update(
-            state, batch, "doc_id", "text", "split", k=8)
-        leak_parts.append(lk)
-        state = (tr, ev) if state is None else (
-            state[0].unionByName(tr), state[1].unionByName(ev))
-    leaks = leak_parts[0]
-    for lk in leak_parts[1:]:
-        leaks = leaks.unionByName(lk)
-    return split_leakage_finalize(d, state[1], leaks, "doc_id", "split").count()
-
-
-t("split_leakage_incremental_100k", _split_leakage_incremental_100k)
-
-# HD rotation + PQ distortion on both variants (the banked gate shape):
-# one Arrow matmul pass per variant, then the m*n_codes-bounded report
-t("opq_distortion_100k", lambda: pq_distortion(
-    opq_rotate(emb, "vec_id", "embedding"), "vec_id", "embedding",
-    m=16, n_codes=32, scale=1).count() + pq_distortion(
-    emb, "vec_id", "embedding", m=16, n_codes=32).count())
-
-# merge-estimator calibration at 100k: candidates from banding, exact
-# containment join bounded to candidate docs' shingles (xxhash64
-# production engine at stress scale; md5_60 is the gate twin)
-t("minhash_union_calibration_100k", lambda: minhash_union_calibration(
-    docs, "doc_id", "text", k=3, shingles=sh).count())
-
-# exact scan once (isometry serves both variants) + two full PQ
-# pipelines at 100k/100q: the recall certification the rotation ships
-# behind
-from blockchain_indexer_spark.operators.similarity import brute_force_topk as _bft, pq_topk as _pqt
-
-
-def _opq_recall_100k():
-    q100 = emb.filter(F.col("vec_id") % 1000 == 0)
-    ex = _bft(emb, q100, "vec_id", "embedding", k=5,
-              metric="quantized_neg_l2").select("query_id", "neighbor_id")
-    ex = ex.localCheckpoint(eager=True)
-    rot = opq_rotate(emb, "vec_id", "embedding")
-    pq_p = _pqt(emb, q100, "vec_id", "embedding", k=5, m=16, n_codes=32,
-                rerank=50).select("query_id", "neighbor_id")
-    pq_r = _pqt(rot, rot.filter(F.col("vec_id") % 1000 == 0), "vec_id",
-                "embedding", k=5, m=16, n_codes=32, rerank=50,
-                scale=1).select("query_id", "neighbor_id")
-    cp = ex.join(pq_p, ["query_id", "neighbor_id"]).count()
-    cr = ex.join(pq_r, ["query_id", "neighbor_id"]).count()
-    n = ex.count()
-    print(f"  opq_recall_100k: exact={n} plain={cp} rot={cr} "
-          f"(recall {cp/n:.3f} -> {cr/n:.3f})", flush=True)
-    return n
-
-
-t("opq_recall_100k_q100", _opq_recall_100k)
-
-# retrieval-eval harness at 100k: BM25 run (inverted-index joins) +
-# term-overlap qrels + one rank<=k equi-join per metric row
-from blockchain_indexer_spark.functions.text import tokens as _tokens
-from blockchain_indexer_spark.operators.textprep import bm25_topk as _bm25, retrieval_eval as _reval
-
-
-def _retrieval_eval_100k():
-    base = docs.select(
-        "doc_id",
-        F.coalesce(_tokens("text"), F.array().cast("array<string>")).alias("toks"),
-    )
-    qterms = (
-        base.filter((F.col("doc_id") % 997 == 0) & (F.size("toks") >= 4))
-        .select(F.col("doc_id").alias("query_id"),
-                F.explode(F.slice(F.array_sort(F.array_distinct("toks")), 1, 4)).alias("term"))
-        .localCheckpoint(eager=True)
-    )
-    run = _bm25(base, qterms, k=5, tokens_col="toks").select(
-        "query_id", "doc_id", F.col("rank").cast("bigint").alias("rank"))
-    dterm = base.select("doc_id", F.explode(F.array_distinct("toks")).alias("term"))
-    qrels = (qterms.distinct().join(dterm, "term")
-             .groupBy("query_id", "doc_id").agg(F.count("*").alias("_n"))
-             .filter(F.col("_n") >= 3).select("query_id", "doc_id"))
-    return _reval(run, qrels, k=5).count()
-
-
-t("retrieval_eval_100k_q100", _retrieval_eval_100k)
-
-# hamming-index maintenance at 100k (xxhash64 production engine):
-# three batches, each O(|batch| x bucket occupancy) — the banding
-# engine shared by simhash text / image ahash / audio+video whash
-from blockchain_indexer_spark.operators.dedup import simhash_index_update
-
-
-def _simhash_incremental_100k():
-    index, total = None, 0
-    for b in range(3):
-        batch = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == b)
-        nr, np_ = simhash_index_update(index, batch, "doc_id", "text")
-        total += np_.count()
-        index = nr if index is None else index.unionByName(nr)
-    return total
-
-
-t("simhash_incremental_100k", _simhash_incremental_100k)
