@@ -22,38 +22,33 @@ shuffle on block_number or hash; nothing global.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 
-def disambiguate_blocks(block_staging: DataFrame) -> DataFrame:
-    """Keep the newest staged version of each block number (A10/T7)."""
-    w = W.partitionBy("number").orderBy(F.desc("timestamp"), F.desc("hash"))
-    return (
-        block_staging.dropDuplicates(["number", "hash", "timestamp"])
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+def ready_blocks(block_staging: DataFrame, tx_staging: DataFrame) -> DataFrame:
+    """The newest staged version of each block number (A10/T7), kept
+    only when it is complete (T3): its staged distinct tx hashes match
+    the declared total_transaction_count. Empty blocks (count 0) are
+    trivially complete. An incomplete newest version holds the number
+    back even when an older version is complete.
 
-
-def complete_blocks(blocks: DataFrame, tx_staging: DataFrame) -> DataFrame:
-    """Blocks whose staged distinct tx hashes match the declared count
-    (T3). Empty blocks (count 0) are trivially complete."""
-    counts = (
-        tx_staging.join(
-            blocks.select(F.col("number").alias("_bnr"), F.col("hash").alias("_bhash")),
-            (tx_staging["block_number"] == F.col("_bnr"))
-            & (tx_staging["block_hash"] == F.col("_bhash")),
-        )
-        .groupBy(F.col("_bnr").alias("number"))
-        .agg(F.countDistinct(tx_staging["hash"]).alias("staged_txs"))
+    One aggregate per key: max_by picks the version with the largest
+    (timestamp, hash), and the staged tx counts are one group-by on
+    (block_number, block_hash); the two meet in one join.
+    """
+    rest = [c for c in block_staging.columns if c != "number"]
+    newest = block_staging.groupBy("number").agg(
+        F.max_by(F.struct(*rest), F.struct("timestamp", "hash")).alias("_v")
     )
+    # size(collect_set) rather than countDistinct: one shuffle, not two
+    counts = tx_staging.groupBy(
+        F.col("block_number").alias("number"), F.col("block_hash").alias("hash")
+    ).agg(F.size(F.collect_set("hash")).alias("_staged"))
     return (
-        blocks.join(counts, "number", "left")
-        .withColumn("staged_txs", F.coalesce(F.col("staged_txs"), F.lit(0)))
-        .filter(F.col("staged_txs") == F.col("total_transaction_count"))
-        .drop("staged_txs")
+        newest.select("number", "_v.*")
+        .join(counts, ["number", "hash"], "left")
+        .filter(F.coalesce(F.col("_staged"), F.lit(0)) == F.col("total_transaction_count"))
+        .select(*block_staging.columns)
     )
 
 
@@ -86,13 +81,14 @@ def promote(
     in dependency order. The streaming path passes an eager
     localCheckpoint so transaction_raw builds on the already-
     materialized block result instead of re-running the
-    disambiguate/complete/merge lineage per output — checkpointing the
+    block decision's lineage per output — checkpointing the
     three returned frames after the fact recomputes the pyramid.
     """
     ckpt = checkpoint if checkpoint is not None else (lambda df: df)
-    best = disambiguate_blocks(block_staging)
-    ready = complete_blocks(best, tx_staging)
-    new_blocks = ckpt(merge_new(ready, existing_blocks, ["number"]))
+    ready = ready_blocks(block_staging, tx_staging)
+    if existing_blocks is not None:
+        ready = ready.join(existing_blocks.select("number"), "number", "left_anti")
+    new_blocks = ckpt(ready)
 
     ready_keys = new_blocks.select("number", F.col("hash").alias("block_hash"))
     ready_txs = tx_staging.join(
@@ -111,8 +107,8 @@ def promote(
     # leftovers = rows still awaiting promotion NEXT round: not
     # promoted this round AND not already imported earlier. Without
     # the existing_blocks anti-join, an at-least-once redelivery of an
-    # old block would sit in the retry set forever (merge_new drops it
-    # from new_blocks every round) — the reference instead marks
+    # old block would sit in the retry set forever (the anti-join above
+    # drops it from new_blocks every round) — the reference instead marks
     # imported staged rows (:2265-2270); this is the same drain.
     leftover_blocks = block_staging.join(new_blocks.select("number"), "number", "left_anti")
     if existing_blocks is not None:

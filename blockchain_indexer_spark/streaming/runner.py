@@ -79,6 +79,9 @@ EVENT_TABLES = (
 CACHE_BALANCES = "cache_crc_balances_by_safe_and_token"
 CACHE_TRUST = "cache_crc_current_trust"
 
+# the final tables the two caches' views read
+CACHE_INPUTS = ("crc_signup", "crc_organisation_signup", "erc20_transfer", "crc_trust")
+
 BLOCK_GROUP_SIZE = 100_000
 
 
@@ -109,6 +112,19 @@ SINK_READ_SCHEMAS: dict[str, T.StructType] = {
     CACHE_BALANCES: _as_read_back(CACHE_CRC_BALANCES_SCHEMA, partitioned=False),
     CACHE_TRUST: _as_read_back(CACHE_CRC_CURRENT_TRUST_SCHEMA, partitioned=False),
 }
+
+
+def _with_block_group(df: DataFrame, block_col: str) -> DataFrame:
+    return df.withColumn("block_group", (F.col(block_col) / BLOCK_GROUP_SIZE).cast("long"))
+
+
+def _as_sink_rows(name: str, df: DataFrame) -> DataFrame:
+    """A batch's rows of event table `name` as the parquet sink reads
+    them back once appended (SINK_READ_SCHEMAS)."""
+    df = _with_block_group(df, "block_number")
+    return df.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in SINK_READ_SCHEMAS[name].fields]
+    )
 
 
 def _has_data_files(path: str) -> bool:
@@ -357,9 +373,7 @@ class IngestPipeline:
                     self.out_dir,
                     name,
                     "retract",
-                    snap.withColumn(
-                        "block_group", (F.col(block_col) / BLOCK_GROUP_SIZE).cast("long")
-                    )
+                    _with_block_group(snap, block_col)
                     .write.mode("overwrite")
                     .partitionBy("block_group")
                     .parquet,
@@ -532,7 +546,7 @@ class IngestPipeline:
             )
             return
         (
-            df.withColumn("block_group", (F.col(block_col) / BLOCK_GROUP_SIZE).cast("long"))
+            _with_block_group(df, block_col)
             .write.mode("append")
             .partitionBy("block_group")
             .parquet(self._table_path(name))
@@ -723,21 +737,22 @@ class IngestPipeline:
             F.col("block_hash").alias("hash"),
             F.col("block_timestamp").alias("timestamp"),
             "total_transaction_count",
-        ).dropDuplicates(["number", "hash"])
+        )
         tx_rows = feed.filter(F.col("hash").isNotNull())
         tx_staging = tx_rows.select(*[f.name for f in RAW_TRANSACTION_SCHEMA.fields])
         log_staging = tx_rows.select(
             F.col("hash").alias("tx_hash"), F.explode("logs").alias("l")
         ).select("tx_hash", "l.log_index", "l.address", "l.topics", "l.data")
 
-        # Eager localCheckpoints inside promote snapshot the merge
-        # results BEFORE any append: their plans anti-join against
-        # the very tables we are about to append to, and a lazy
-        # plan would re-list the parquet dir after the write and
-        # see its own output (read-modify-append hazard). Doing it
-        # inside promote (dependency order) also keeps each
-        # checkpoint job shallow instead of recomputing the
-        # disambiguate/complete/merge lineage per output.
+        # Eager localCheckpoints inside promote materialize the merge
+        # results BEFORE any append. A parquet frame's file list is
+        # fixed when the frame is read, so there the anti-join could
+        # not see this batch's own output anyway; a JDBC read is a
+        # lazy query that would re-run after the appends and see its
+        # own rows (read-modify-append hazard). The checkpoints also
+        # keep classify, the appends and the broadcast from
+        # recomputing the promote, and doing it inside promote
+        # (dependency order) keeps each checkpoint job shallow.
         promoted = promote(
             block_staging,
             tx_staging,
@@ -765,25 +780,14 @@ class IngestPipeline:
             classify(assembled, self.hub).drop("logs").localCheckpoint(eager=True)
         )
         tables = extract_all(classified, self.safe_owners, self.hub)
-        # The appends target disjoint directories — run them as
-        # concurrent Spark jobs so scheduling/commit latency
-        # overlaps instead of summing.
         block_final = new_blocks.select(
             "number",
             "hash",
             F.timestamp_seconds("timestamp").alias("timestamp"),
             "total_transaction_count",
         )
-        with ThreadPoolExecutor(max_workers=1 + len(EVENT_TABLES)) as pool:
-            futures = [pool.submit(self._append, "block", block_final, "number")]
-            futures += [
-                pool.submit(self._append, name, tables[name], "block_number")
-                for name in EVENT_TABLES
-            ]
-            for fut in futures:
-                fut.result()
         # one pass over the checkpointed new_txs serves both the
-        # cache-refresh emptiness gate and the broadcast payload —
+        # cache-refresh gate and the broadcast payload —
         # limit(1).count() plus a separate collect would submit two
         # Spark jobs per 500 ms trigger
         hashes = None
@@ -794,8 +798,39 @@ class IngestPipeline:
             if hashes is not None
             else new_txs.limit(1).count() > 0
         )
-        if self.maintain_caches and has_new:
-            self.refresh_caches(tables)
+        refresh = self.maintain_caches and has_new
+        # parquet: the refresh reads its inputs now and runs next to
+        # the appends (see _cache_inputs)
+        finals = self._cache_inputs(tables) if refresh and self.jdbc_url is None else None
+        caches = None
+        # The appends target disjoint directories — run them as
+        # concurrent Spark jobs so scheduling/commit latency
+        # overlaps instead of summing.
+        with ThreadPoolExecutor(max_workers=2 + len(EVENT_TABLES)) as pool:
+            appends = [pool.submit(self._append, "block", block_final, "number")]
+            appends += [
+                pool.submit(self._append, name, tables[name], "block_number")
+                for name in EVENT_TABLES
+            ]
+            refreshed = (
+                pool.submit(self.refresh_caches, tables, finals)
+                if finals is not None
+                else None
+            )
+            for fut in appends:
+                fut.result()
+            if refreshed is not None:
+                caches = refreshed.result()
+        if refresh and self.jdbc_url is not None:
+            # a JDBC read is a lazy query, not a snapshot: read the
+            # refresh's inputs only once the appends are committed
+            finals = self._cache_inputs()
+            if finals is not None:
+                caches = self.refresh_caches(tables, finals)
+        # published only after every append succeeded: a failed batch
+        # leaves both caches as they were
+        if caches:
+            self._publish_caches(caches)
         if hashes:
             self.on_imported(hashes)
         if self.on_batch is not None:
@@ -812,10 +847,50 @@ class IngestPipeline:
         except AnalysisException:
             return None
 
-    def refresh_caches(self, batch_tables: dict[str, DataFrame]) -> None:
+    def _cache_inputs(
+        self, batch_tables: dict[str, DataFrame] | None = None
+    ) -> dict[str, DataFrame | None] | None:
+        """The final tables the cache refresh reads (CACHE_INPUTS), as
+        they stand once this batch is appended. None while crc_signup or
+        erc20_transfer holds no data (no views to materialize yet);
+        crc_trust maps to None until it holds data.
+
+        With `batch_tables` (parquet sink) each table is read BEFORE the
+        appends and unioned with the batch's rows: a parquet frame lists
+        its files when it is read, so the union is exactly the
+        post-append table and the refresh can run next to the appends.
+        A table not created yet is the batch's rows alone, and only then
+        is a batch table tested for emptiness, so a steady-state round
+        pays no job for the gate. Without them (JDBC, whose reads are
+        lazy queries) the tables are read as they are: call it after
+        the appends."""
+        out = {}
+        for name in CACHE_INPUTS:
+            df = self.read_final(name)
+            if batch_tables is not None:
+                rows = _as_sink_rows(name, batch_tables[name])
+                if df is not None:
+                    df = df.unionByName(rows)
+                elif name == "crc_organisation_signup" or not rows.isEmpty():
+                    # an empty organisation table needs no gate: the
+                    # signup views read it as it is
+                    df = rows
+            out[name] = df
+        if out["crc_signup"] is None or out["erc20_transfer"] is None:
+            return None
+        return out
+
+    def refresh_caches(
+        self, batch_tables: dict[str, DataFrame], finals: dict[str, DataFrame | None]
+    ) -> dict[str, DataFrame]:
         """Stale-key incremental refresh of the two reference cache
-        tables after a committed batch (import_from_staging_2,
-        0.0.64.sql:2272-2376; T8).
+        tables for one batch (import_from_staging_2,
+        0.0.64.sql:2272-2376; T8). `finals` are the post-append tables
+        from _cache_inputs. Returns each refreshed cache as an eager
+        local checkpoint for _publish_caches: the refreshed plan reads
+        the cache it will replace (read-modify-write), and the batch's
+        appends must all commit before either cache is overwritten.
+        The trust cache waits until crc_trust holds data.
 
         The stale sets come from THIS batch's extracted rows (small,
         broadcast); the fresh views run over the full post-append
@@ -835,56 +910,57 @@ class IngestPipeline:
             crc_ledger,
         )
 
-        signup_full = self.read_final("crc_signup")
-        erc20_full = self.read_final("erc20_transfer")
-        if signup_full is None or erc20_full is None:
-            return  # nothing promoted yet — no views to materialize
-        org_full = self.read_final("crc_organisation_signup")
+        signup_full = finals["crc_signup"]
+        erc20_full = finals["erc20_transfer"]
+        trust_full = finals["crc_trust"]
+        org_full = finals["crc_organisation_signup"]
         if org_full is None:
             org_full = signup_full.select(
                 "hash", "block_number", "index", "timestamp",
                 F.col("user").alias("organisation"),
             ).limit(0)
-        signups = crc_all_signups(signup_full, org_full)
+        stale_b = stale_balance_addresses(
+            batch_tables["erc20_transfer"], batch_tables["crc_hub_transfer"]
+        )
 
-        def _publish(name: str, df: DataFrame) -> None:
-            # snapshot before overwrite: the refreshed plan READS the
-            # cache dir/table it is about to replace (read-modify-write)
-            snap = df.localCheckpoint(eager=True)
+        def _refresh_balances() -> DataFrame:
+            fresh_b = crc_balances_by_safe_and_token(crc_ledger(erc20_full, signup_full))
+            return refresh_balance_cache(
+                self.read_cache(CACHE_BALANCES), fresh_b, stale_b
+            ).localCheckpoint(eager=True)
+
+        refreshes = {CACHE_BALANCES: _refresh_balances}
+        if trust_full is not None:
+            stale_t = stale_trust_addresses(batch_tables["crc_trust"])
+
+            def _refresh_trust() -> DataFrame:
+                fresh_t = crc_current_trust(trust_full, crc_all_signups(signup_full, org_full))
+                return refresh_trust_cache(
+                    self.read_cache(CACHE_TRUST), fresh_t, stale_t
+                ).localCheckpoint(eager=True)
+
+            refreshes[CACHE_TRUST] = _refresh_trust
+
+        # independent materializations — overlap their Spark jobs
+        with ThreadPoolExecutor(max_workers=len(refreshes)) as pool:
+            futures = {name: pool.submit(fn) for name, fn in refreshes.items()}
+            return {name: fut.result() for name, fut in futures.items()}
+
+    def _publish_caches(self, caches: dict[str, DataFrame]) -> None:
+        """Overwrite each cache table with its refreshed snapshot."""
+
+        def publish(name: str) -> None:
             if self.jdbc_url is not None:
-                snap.write.mode("overwrite").jdbc(
+                caches[name].write.mode("overwrite").jdbc(
                     self.jdbc_url,
                     self._jdbc_quote(name),
                     properties=self.jdbc_properties,
                 )
                 return
-            snap.write.mode("overwrite").parquet(self._table_path(name))
+            caches[name].write.mode("overwrite").parquet(self._table_path(name))
 
-        def _refresh_balances() -> None:
-            stale_b = stale_balance_addresses(
-                batch_tables["erc20_transfer"], batch_tables["crc_hub_transfer"]
-            )
-            fresh_b = crc_balances_by_safe_and_token(crc_ledger(erc20_full, signup_full))
-            _publish(
-                CACHE_BALANCES,
-                refresh_balance_cache(self.read_cache(CACHE_BALANCES), fresh_b, stale_b),
-            )
-
-        def _refresh_trust() -> None:
-            trust_full = self.read_final("crc_trust")
-            if trust_full is None:
-                return
-            stale_t = stale_trust_addresses(batch_tables["crc_trust"])
-            fresh_t = crc_current_trust(trust_full, signups)
-            _publish(
-                CACHE_TRUST,
-                refresh_trust_cache(self.read_cache(CACHE_TRUST), fresh_t, stale_t),
-            )
-
-        # independent materializations — overlap their Spark jobs
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for fut in [pool.submit(_refresh_balances), pool.submit(_refresh_trust)]:
-                fut.result()
+        with ThreadPoolExecutor(max_workers=len(caches)) as pool:
+            list(pool.map(publish, caches))
 
     def start_stream(
         self,

@@ -77,6 +77,36 @@ def test_cache_equals_scratch_recompute_after_each_batch(spark, tmp_path):
     assert before == _sorted(bal_fresh, _BAL_COLS)
 
 
+def test_first_caches_wait_for_signups_and_transfers(spark, tmp_path):
+    """No cache is written until crc_signup and erc20_transfer hold
+    data. A batch with an organisation signup and a trust edge but no
+    erc20 transfer writes neither cache (the classifier cannot emit a
+    crc_signup without its mint transfer). The next batch brings
+    signups and transfers: both caches appear, equal to a scratch
+    recompute over the trust row already in the sink plus the batch."""
+    from tests.chain_fixtures import tx_hash
+
+    feed = _feed_rows(spark)
+    first = feed.filter(
+        F.col("hash").isin(tx_hash("org_pos"), tx_hash("trust_pos"))
+    ).withColumn("total_transaction_count", F.lit(1))
+    base = feed.agg(F.min("block_number")).first()[0]
+    second = feed.filter(F.col("block_number").isin(base + 6, base + 7))
+    pipe = IngestPipeline(spark, str(tmp_path / "final"))
+
+    pipe.process_batch(first, epoch_id=0)
+    assert pipe.read_final("crc_trust") is not None
+    assert pipe.read_final("crc_organisation_signup") is not None
+    assert pipe.read_final("erc20_transfer") is None
+    assert pipe.read_cache(CACHE_BALANCES) is None
+    assert pipe.read_cache(CACHE_TRUST) is None
+
+    pipe.process_batch(second, epoch_id=1)
+    bal_fresh, trust_fresh = _scratch_views(pipe)
+    assert _sorted(pipe.read_cache(CACHE_BALANCES), _BAL_COLS) == _sorted(bal_fresh, _BAL_COLS)
+    assert _sorted(pipe.read_cache(CACHE_TRUST), _TRUST_COLS) == _sorted(trust_fresh, _TRUST_COLS)
+
+
 def test_caches_optional_and_on_for_jdbc(spark, tmp_path):
     """maintain_caches is sink-agnostic: the JDBC sink refreshes the
     same materializations via table overwrites (it used to silently

@@ -10,9 +10,10 @@ import os
 import threading
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
-from blockchain_indexer_spark.streaming.runner import IngestPipeline
+from blockchain_indexer_spark.streaming.runner import CACHE_BALANCES, CACHE_TRUST, IngestPipeline
 from tests.test_streaming import feed_df  # noqa: F401 — module fixture
 
 
@@ -209,3 +210,31 @@ def test_append_restores_compact_orphan_before_writing(spark, tmp_path_factory, 
     assert orphan_files <= set(os.listdir(os.path.join(table_dir, part)))
     pipe.compact("transaction", min_files=10_000)
     assert transactions(pipe).equals(transactions(clean))
+
+
+def test_failed_append_publishes_no_cache(spark, tmp_path_factory, feed_df):  # noqa: F811
+    """The cache refresh runs next to the appends, but the caches are
+    overwritten only once every append has returned: a batch whose
+    erc20_transfer append fails leaves both cache directories as they
+    were, file for file."""
+    root = str(tmp_path_factory.mktemp("failed-append"))
+    pipe = IngestPipeline(spark, os.path.join(root, "final"))
+    pipe.process_batch(feed_df.filter(F.col("block_number") % 2 == 0))
+
+    def files(name):
+        path = pipe._table_path(name)
+        return {f: os.stat(os.path.join(path, f)).st_mtime_ns for f in os.listdir(path)}
+
+    before = {name: files(name) for name in (CACHE_BALANCES, CACHE_TRUST)}
+    assert all(before.values())
+    append = pipe._append
+
+    def failing_append(name, df, block_col):
+        if name == "erc20_transfer":
+            raise OSError("injected append failure")
+        append(name, df, block_col)
+
+    pipe._append = failing_append
+    with pytest.raises(OSError, match="injected append failure"):
+        pipe.process_batch(feed_df.filter(F.col("block_number") % 2 == 1))
+    assert {name: files(name) for name in (CACHE_BALANCES, CACHE_TRUST)} == before

@@ -151,3 +151,38 @@ def test_detect_reorg_null_hash_is_skipped_not_diverging(spark):
         [(1, "h1"), (2, "h2"), (3, "h3"), (5, "h5")], "number long, hash string"
     )
     assert detect_reorg(stored, chain_short, depth=10).collect()[0]["reorg_at"] == 4
+
+
+def test_incomplete_newest_version_holds_back_a_complete_older_one(spark):
+    """Disambiguation comes before the completeness gate: when the
+    newest version of a number is incomplete, the block waits, even
+    though an older version of it is complete, and none of either
+    version's txs is promoted."""
+    blocks = spark.createDataFrame(
+        [(200, "0xold", 1000, 1), (200, "0xnew", 1001, 2)], RAW_BLOCK_SCHEMA
+    )
+    txs = spark.createDataFrame(
+        [_tx(200, "0xold", "0xo1", 0), _tx(200, "0xnew", "0xn1", 0)],
+        RAW_TRANSACTION_SCHEMA,
+    )
+    logs = spark.createDataFrame([], RAW_LOG_SCHEMA)
+    out = promote(blocks, txs, logs)
+    assert out["block"].count() == 0
+    assert out["transaction_raw"].count() == 0
+    assert {r["number"] for r in out["leftover_blocks"].collect()} == {200}
+
+
+def test_equal_timestamps_pick_the_higher_hash(spark):
+    """Two complete versions with the same timestamp: the higher block
+    hash wins, and only its txs are promoted."""
+    blocks = spark.createDataFrame(
+        [(300, "0xaaa", 1000, 1), (300, "0xbbb", 1000, 1)], RAW_BLOCK_SCHEMA
+    )
+    txs = spark.createDataFrame(
+        [_tx(300, "0xaaa", "0xta", 0), _tx(300, "0xbbb", "0xtb", 0)],
+        RAW_TRANSACTION_SCHEMA,
+    )
+    logs = spark.createDataFrame([], RAW_LOG_SCHEMA)
+    out = promote(blocks, txs, logs)
+    assert [(r["number"], r["hash"]) for r in out["block"].collect()] == [(300, "0xbbb")]
+    assert [r["hash"] for r in out["transaction_raw"].collect()] == ["0xtb"]

@@ -140,12 +140,11 @@ def test_micro_batch_promote_latency(spark, tmp_path_factory, feed_df, sf_dir):
     assert warm < 15, f"warm duplicate micro-batch took {warm:.1f}s"
 
 
-def test_jdbc_sink_dispatch(spark, tmp_path_factory, feed_df, monkeypatch):
-    """The JDBC branch routes every append through DataFrameWriter.jdbc
-    (quoted identifiers — `transaction` is an SQL reserved word) and
-    reads finals back via DataFrameReader.jdbc — verified with a
-    recording stub that spools to parquet (the real-database twin is
-    tests/test_jdbc.py against embedded Derby)."""
+@pytest.fixture
+def fake_jdbc(spark, tmp_path_factory, monkeypatch):
+    """A recording JDBC stub that spools to parquet: yields the sink
+    root, the spool dir and the (url, table) lists written and read
+    plus the DDL statements run."""
     import pyspark.sql.readwriter as rw
 
     root = str(tmp_path_factory.mktemp("jdbc"))
@@ -190,7 +189,16 @@ def test_jdbc_sink_dispatch(spark, tmp_path_factory, feed_df, monkeypatch):
         "_jdbc_table_exists",
         staticmethod(lambda conn, name: os.path.isdir(os.path.join(spool, name))),
     )
+    return root, spool, written, read, ddl
 
+
+def test_jdbc_sink_dispatch(spark, feed_df, fake_jdbc):
+    """The JDBC branch routes every append through DataFrameWriter.jdbc
+    (quoted identifiers — `transaction` is an SQL reserved word) and
+    reads finals back via DataFrameReader.jdbc — verified with a
+    recording stub that spools to parquet (the real-database twin is
+    tests/test_jdbc.py against embedded Derby)."""
+    root, spool, written, read, ddl = fake_jdbc
     url = "jdbc:postgresql://db/indexer"
     pipe = IngestPipeline(
         spark, root, jdbc_url=url, jdbc_properties={"user": "u"}, maintain_caches=False
@@ -211,6 +219,34 @@ def test_jdbc_sink_dispatch(spark, tmp_path_factory, feed_df, monkeypatch):
     pipe.process_batch(feed_df)  # duplicate delivery
     assert spark.read.parquet(os.path.join(spool, "transaction")).count() == n
     assert ("jdbc:postgresql://db/indexer", "transaction") in read
+
+
+def test_jdbc_cache_refresh_reads_after_the_appends(spark, feed_df, fake_jdbc):
+    """A JDBC read is a lazy query, not a snapshot: the refresh reads
+    its input tables only once all nine appends have returned."""
+    from blockchain_indexer_spark.streaming.runner import CACHE_INPUTS
+
+    root, spool, _, _, _ = fake_jdbc
+    pipe = IngestPipeline(spark, root, jdbc_url="jdbc:derby:stub")
+    events = []
+    append, read_final = pipe._append, pipe.read_final
+
+    def recording_append(name, df, block_col):
+        append(name, df, block_col)
+        events.append(("append", name))
+
+    def recording_read(name):
+        events.append(("read", name))
+        return read_final(name)
+
+    pipe._append, pipe.read_final = recording_append, recording_read
+    pipe.process_batch(feed_df)
+    appends = [i for i, (kind, _) in enumerate(events) if kind == "append"]
+    input_reads = [i for i, e in enumerate(events) if e[0] == "read" and e[1] in CACHE_INPUTS]
+    assert len(appends) == 1 + len(EVENT_TABLES)
+    assert input_reads and min(input_reads) > max(appends)
+    assert os.path.isdir(os.path.join(spool, CACHE_BALANCES))
+    assert os.path.isdir(os.path.join(spool, CACHE_TRUST))
 
 
 def test_concurrent_importers_serialize(spark, tmp_path_factory, feed_df):
@@ -309,6 +345,37 @@ def test_sink_read_schemas_equal_what_the_sink_writes(spark, same_shape_rounds):
         inferred = spark.read.parquet(pipe._table_path(name)).schema
         assert inferred == declared, name
         assert pipe._read_parquet(name).schema == declared
+
+
+def test_caches_equal_scratch_recompute_after_same_shape_rounds(same_shape_rounds):
+    """The parquet refresh unions tables read before the appends with
+    the batch's rows: after three rounds both caches must equal the
+    views recomputed from the final tables."""
+    from tests.test_cache_maintenance import _BAL_COLS, _TRUST_COLS, _scratch_views, _sorted
+
+    pipe, _ = same_shape_rounds
+    bal_fresh, trust_fresh = _scratch_views(pipe)
+    assert _sorted(pipe.read_cache(CACHE_BALANCES), _BAL_COLS) == _sorted(bal_fresh, _BAL_COLS)
+    assert _sorted(pipe.read_cache(CACHE_TRUST), _TRUST_COLS) == _sorted(trust_fresh, _TRUST_COLS)
+
+
+def test_read_final_frame_keeps_its_file_list_across_an_append(spark, tmp_path):
+    """A parquet frame lists its files when it is read: a frame taken
+    before an append still reads the old rows afterwards. The cache
+    refresh relies on it to read its inputs before the appends."""
+    pipe = IngestPipeline(spark, str(tmp_path))
+
+    def blocks(lo):
+        return spark.createDataFrame(
+            [(n, f"0x{n:x}", n, 0) for n in range(lo, lo + 5)],
+            "number long, hash string, timestamp long, total_transaction_count int",
+        ).withColumn("timestamp", F.timestamp_seconds("timestamp"))
+
+    pipe._append("block", blocks(0), "number")
+    before = pipe.read_final("block")
+    pipe._append("block", blocks(5), "number")
+    assert before.count() == 5
+    assert pipe.read_final("block").count() == 10
 
 
 def test_empty_table_still_reads_as_absent(spark, tmp_path):

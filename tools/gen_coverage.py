@@ -58,22 +58,22 @@ STATIC: dict[str, tuple[str, str]] = {
     "J5": ("operators/views.py crc_capacity_graph", "tests/test_views.py"),
     "J6": ("operators/views.py crc_safe_timeline (explode+equi rewrite)", "tests/test_views.py"),
     "J10": ("sources/blocks.py last_valid_block", "tests/test_streaming.py"),
-    "J11": ("operators/promote.py complete_blocks", "tests/test_promote.py"),
+    "J11": ("operators/promote.py promote (ready_blocks: staged distinct tx count == declared)", "tests/test_promote.py"),
     "J12": ("operators/promote.py merge_new (already-imported check)", "tests/test_promote.py"),
     "J13": ("operators/promote.py leftover_blocks (CleanImported survivors)", "tests/test_promote.py"),
     "J14": ("streaming/health.py backlog_distances/is_healthy, served at ApiHost /health", "tests/test_api_host.py"),
     "J15": ("operators/caches.py refresh_* (stale-key semi-joins)", "tests/test_caches_rpc_health.py"),
-    "A10": ("operators/promote.py disambiguate_blocks", "tests/test_promote.py"),
+    "A10": ("operators/promote.py promote (ready_blocks: max_by newest version per number)", "tests/test_promote.py"),
     "A12": ("sources/blocks.py scalar aggs", "tests/test_streaming.py"),
     "W1": ("ranking windows (views/current_trust, accepted_crc)", "tests/test_views.py"),
     "W2": ("sources/blocks.py find_gaps lead window", "tests/test_streaming.py"),
     "T1": ("runner trigger config (ProcessingTime / AvailableNow)", "tests/test_streaming.py"),
     "T2": ("micro-batch model (built-in backpressure); stateful ops via applyInPandasWithState (streaming/windows.py)", "tests/test_streaming_windows.py"),
-    "T3": ("operators/promote.py complete_blocks", "tests/test_promote.py"),
+    "T3": ("operators/promote.py promote (ready_blocks completeness gate)", "tests/test_promote.py"),
     "T4": ("operators/promote.py merge_new anti-join; streaming twin windows.py dedup_feed_stream", "tests/test_promote.py"),
     "T5": ("operators/promote.py retract_from + IngestPipeline.retract (partitioned-sink delete + cache drop + deadbeef)", "tests/test_live_loop.py"),
     "T6": ("sources/blocks.py find_gaps + last_valid_block", "tests/test_streaming.py"),
-    "T7": ("operators/promote.py disambiguate_blocks", "tests/test_promote.py"),
+    "T7": ("operators/promote.py promote (ready_blocks: max_by newest version per number)", "tests/test_promote.py"),
     "T8": ("operators/caches.py wired into IngestPipeline.refresh_caches — per-batch stale-key refresh of both cache tables", "tests/test_cache_maintenance.py"),
     "T9": ("views crc_capacity_graph(since_block=...)", "tests/test_views.py"),
     "T10": ("per-day tumbling (A4) + streaming/windows.py watermarked windows, session_window sessions", "tests/test_streaming_windows.py"),
