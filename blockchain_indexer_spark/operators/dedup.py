@@ -30,6 +30,15 @@ from blockchain_indexer_spark.functions.text import (
     shingles_from_tokens,
     tokens,
 )
+from blockchain_indexer_spark.operators.similarity import (
+    _block_pairs,
+    _blocking,
+    _cosine_rows,
+    _exact_cosine,
+    _pack,
+    _scan_blocks,
+    _unpack,
+)
 from blockchain_indexer_spark.sources.parquet import spread
 
 
@@ -873,11 +882,11 @@ def cosine_near_dup_pairs(
     the repo's one perf_weak — measured ~60× slower than this scan at
     20×). Every unordered pair lands in exactly one block-pair task.
 
-    Exactness across engines is preserved op-for-op: integer dot and
-    norms over round(x·scale) vectors are exact in int64; the one
-    float sequence — dot / sqrt(norm_a·norm_b), with the product
-    taken in double FIRST — is evaluated in the same order as the
-    DuckDB oracle, so scores and the pair set hash bit-identically.
+    The prep, blocking, broadcast gate and cosine arithmetic are the
+    exact-cosine block kernel in operators.similarity (_cosine_rows,
+    _blocking, _pack, _block_pairs, _exact_cosine), shared with
+    all_pairs_topk_cosine, so scores and the pair set hash
+    bit-identically to the DuckDB oracle.
 
     Shuffle shape: each block row is replicated ⌈n/block_size⌉ times
     → O(n²/block_size) bytes moved; raise block_size to trade task
@@ -886,119 +895,29 @@ def cosine_near_dup_pairs(
     (operators.similarity) instead of all pairs.
     Returns (vec_a, vec_b, cosine) with vec_a < vec_b.
     """
-    import numpy as np
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
+    rows = _cosine_rows(df, id_col, vec_col, scale)
+    nblocks, broadcast = _blocking(rows, block_size)
+    packed = _pack(rows, nblocks)
+    pairs = _block_pairs(
+        packed, packed, nblocks, broadcast, F.col("A._blk") <= F.col("B._blk")
     )
 
-    from blockchain_indexer_spark.functions.vectors import norm_sq, quantize
+    def emit(ba, bb, ra, rb):
+        ids_a, va = _unpack(ra)
+        ids_b, vb = (ids_a, va) if ba == bb else _unpack(rb)
+        cos = _exact_cosine(va, vb)
+        keep = cos >= threshold
+        if ba == bb:
+            # same block: count each unordered pair once
+            keep &= ids_a[:, None] < ids_b[None, :]
+        ai, bj = np.nonzero(keep)
+        # cross-block pairs can have either id ordering — normalize to
+        # vec_a < vec_b (the output contract)
+        lo = np.minimum(ids_a[ai], ids_b[bj])
+        hi = np.maximum(ids_a[ai], ids_b[bj])
+        return lo, hi, cos[ai, bj]
 
-    # zero-norm vectors (all |x| < 0.5/scale) have no cosine: Spark
-    # evaluates 0.0/0.0 = NaN and orders NaN ABOVE every number, so
-    # without this filter each zero vector would pass `>= threshold`
-    # against the whole corpus (the DuckDB oracle returns NULL and
-    # drops them — this keeps both engines agreeing)
-    q = (
-        spread(df, id_col)
-        .select(F.col(id_col).alias("_id"), quantize(vec_col, scale).alias("_v"))
-        .filter(norm_sq(F.col("_v")) > 0)
-    )
-    # one bounded scalar action sizing the blocking AND the broadcast
-    # gate: row count plus the vector width (ADVICE r9 — a row-count
-    # gate alone would let a high-dimensional corpus balloon the
-    # broadcast, e.g. d=1024 at n just under 262k -> ~2 GB)
-    n, _d = q.agg(F.count(F.lit(1)), F.first(F.size("_v"))).first()
-    # Scale-adaptive blocking (round 9, guide §2.5/§2.6): the natural
-    # ⌈n/block_size⌉ puts a ≲2k-vector corpus in ONE block, and AQE
-    # coalesces the tiny packed frame to ONE partition — so the whole
-    # O(n²·d) matmul ran as a single task (profiled). Derive a minimum
-    # block count from defaultParallelism (adapts to the driver's core
-    # count), capped at 64-row blocks. The pair set is blocking-
-    # independent: every unordered pair lands in exactly one block
-    # pair with identical per-pair arithmetic.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    nblocks = max(1, -(-n // block_size), min(2 * par, -(-n // 64)))
-    packed = (
-        q.withColumn("_blk", F.pmod(F.xxhash64("_id"), F.lit(nblocks)).cast("int"))
-        .groupBy("_blk")
-        .agg(F.collect_list(F.struct("_id", "_v")).alias("_rows"))
-        .localCheckpoint(eager=True)  # both sides of the pair join
-    )
-    if n * max(int(_d or 0), 1) * 8 <= 128 * 1024 * 1024:
-        # small-corpus regime, gated on ESTIMATED BYTES n*d*8 ≤ 128 MB
-        # (ADVICE r9; identical to the former n ≤ 262,144 gate at the
-        # fixture d=64): broadcast the packed corpus and
-        # range-repartition the stream side to one block per
-        # partition, pinning matmul parallelism to nblocks tasks
-        # instead of whatever AQE coalesced the tiny frame to.
-        # Partitioning only — the emitted pair set is unchanged.
-        pairs = (
-            packed.repartitionByRange(nblocks, "_blk")
-            .alias("A")
-            .join(F.broadcast(packed).alias("B"), F.col("A._blk") <= F.col("B._blk"))
-            .select(
-                F.col("A._blk").alias("ba"),
-                F.col("B._blk").alias("bb"),
-                F.col("A._rows").alias("ra"),
-                F.col("B._rows").alias("rb"),
-            )
-        )
-    else:
-        # index-scale regime: no broadcast; the replicate join is
-        # already wide because nblocks ≳ n/block_size is large here
-        pairs = (
-            packed.alias("A")
-            .join(packed.alias("B"), F.col("A._blk") <= F.col("B._blk"))
-            .select(
-                F.col("A._blk").alias("ba"),
-                F.col("B._blk").alias("bb"),
-                F.col("A._rows").alias("ra"),
-                F.col("B._rows").alias("rb"),
-            )
-        )
-    schema = StructType(
-        [
-            StructField("vec_a", LongType()),
-            StructField("vec_b", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
-    def batches(it):
-        for pdf in it:
-            for ba, bb, ra, rb in zip(pdf["ba"], pdf["bb"], pdf["ra"], pdf["rb"]):
-                ids_a = np.array([r["_id"] for r in ra], dtype=np.int64)
-                va = np.array([r["_v"] for r in ra], dtype=np.int64)
-                if ba == bb:
-                    ids_b, vb = ids_a, va
-                else:
-                    ids_b = np.array([r["_id"] for r in rb], dtype=np.int64)
-                    vb = np.array([r["_v"] for r in rb], dtype=np.int64)
-                dots = (va @ vb.T).astype(np.float64)
-                na = (va * va).sum(axis=1).astype(np.float64)
-                nb = (vb * vb).sum(axis=1).astype(np.float64)
-                # product in double FIRST, then sqrt — the oracle's and
-                # the previous JVM expression's exact op order
-                cos = dots / np.sqrt(na[:, None] * nb[None, :])
-                keep = cos >= threshold
-                if ba == bb:
-                    # same block: count each unordered pair once
-                    keep &= ids_a[:, None] < ids_b[None, :]
-                ai, bj = np.nonzero(keep)
-                if not len(ai):
-                    continue
-                # cross-block pairs can have either id ordering —
-                # normalize to vec_a < vec_b (the output contract)
-                lo = np.minimum(ids_a[ai], ids_b[bj])
-                hi = np.maximum(ids_a[ai], ids_b[bj])
-                yield pd.DataFrame(
-                    {"vec_a": lo, "vec_b": hi, "cosine": cos[ai, bj]}
-                )
-
-    return pairs.mapInPandas(batches, schema)
+    return _scan_blocks(pairs, emit, ("vec_a", "vec_b", "cosine"))
 
 
 def decontaminate(

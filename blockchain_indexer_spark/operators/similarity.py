@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from blockchain_indexer_spark.functions.vectors import (
@@ -38,6 +38,192 @@ def _q_away(a: np.ndarray) -> np.ndarray:
     scale 1000) — which would make a signature/cell disagree with the
     same operator's own exact re-rank."""
     return np.copysign(np.floor(np.abs(a) + 0.5), a)
+
+
+# The exact quantized-cosine block scans — dedup.cosine_near_dup_pairs,
+# all_pairs_topk_cosine and ivf_topk's engine="blocked" probe — share
+# the helpers below: the arithmetic, the local top-k, the blocking, the
+# broadcast gate and the ranking window each live in one place, so a
+# kernel change (e.g. a float64 matmul) is made once and every scan
+# stays bit-identical to the expression paths and the DuckDB oracle.
+
+# Broadcast gate on the estimated packed-corpus bytes n·d·8 (a
+# row-count gate alone would let a high-dimensional corpus balloon the
+# broadcast, e.g. d=1024 at n just under 262k -> ~2 GB).
+_BROADCAST_BYTES = 128 * 1024 * 1024
+
+
+def _cosine_rows(df: DataFrame, id_col: str, vec_col: str, scale: int) -> DataFrame:
+    """(_id, _v = quantize(vec_col, scale)) for every row whose vector
+    has a cosine: a NULL or zero-norm vector has none — Spark evaluates
+    0.0/0.0 = NaN and orders NaN ABOVE every number, so without this
+    filter one zero vector would match or outrank the whole corpus (the
+    DuckDB oracle returns NULL and drops it)."""
+    return (
+        spread(df, id_col)
+        .select(F.col(id_col).alias("_id"), quantize(vec_col, scale).alias("_v"))
+        .filter(norm_sq(F.col("_v")) > 0)
+    )
+
+
+def _blocking(rows: DataFrame, block_size: int = 2048) -> tuple[int, bool]:
+    """(nblocks, broadcast) for a _cosine_rows frame, from one bounded
+    scalar action (row count plus vector width).
+
+    Scale-adaptive blocking: the natural ⌈n/block_size⌉ puts a
+    ≲2k-vector corpus in ONE block, and AQE coalesces the tiny packed
+    frame to ONE partition — profiled as a single task holding the
+    whole O(n²·d) matmul while the rest of the cluster idles. A minimum
+    block count from defaultParallelism (≥ ~2 blocks per core, capped
+    at 64-row blocks so tiny corpora don't drown in per-block overhead)
+    keeps every core busy. Results are blocking-independent: every pair
+    is scored in exactly one block pair with identical arithmetic, and
+    the local top-k keeps boundary ties.
+
+    ``broadcast`` is the small-corpus regime (n·d·8 ≤ _BROADCAST_BYTES):
+    the packed corpus broadcasts and the query side range-partitions to
+    one block per partition. Above it the replicate join's own
+    partitioning is already wide, because nblocks ≳ n/block_size."""
+    n, d = rows.agg(F.count(F.lit(1)), F.first(F.size("_v"))).first()
+    par = rows.sparkSession.sparkContext.defaultParallelism
+    nblocks = max(1, -(-n // block_size), min(2 * par, -(-n // 64)))
+    return nblocks, n * max(int(d or 0), 1) * 8 <= _BROADCAST_BYTES
+
+
+def _pack(rows: DataFrame, nblocks: int) -> DataFrame:
+    """(_blk, _rows): rows hashed into nblocks blocks, one packed row
+    per block, checkpointed because both sides of the block join read
+    it."""
+    return (
+        rows.withColumn("_blk", F.pmod(F.xxhash64("_id"), F.lit(nblocks)).cast("int"))
+        .groupBy("_blk")
+        .agg(F.collect_list(F.struct("_id", "_v")).alias("_rows"))
+        .localCheckpoint(eager=True)
+    )
+
+
+def _block_pairs(
+    packed_q: DataFrame,
+    packed_c: DataFrame,
+    nblocks: int,
+    broadcast: bool,
+    on: Column | None = None,
+) -> DataFrame:
+    """(ba, bb, ra, rb): each query block A joined to every corpus
+    block B that ``on`` admits (all of them when None). Under the
+    broadcast gate the query side range-partitions to one block per
+    partition, pinning the matmul parallelism to nblocks tasks instead
+    of whatever AQE coalesced the tiny frame to — partitioning only; no
+    row changes hands differently."""
+    if broadcast:
+        packed_q = packed_q.repartitionByRange(nblocks, "_blk")
+        packed_c = F.broadcast(packed_c)
+    return (
+        packed_q.alias("A")
+        .join(packed_c.alias("B"), on)
+        .select(
+            F.col("A._blk").alias("ba"),
+            F.col("B._blk").alias("bb"),
+            F.col("A._rows").alias("ra"),
+            F.col("B._rows").alias("rb"),
+        )
+    )
+
+
+def _unpack(rows) -> tuple[np.ndarray, np.ndarray]:
+    """A packed block's (ids, int64 vector matrix)."""
+    return (
+        np.array([r["_id"] for r in rows], dtype=np.int64),
+        np.array([r["_v"] for r in rows], dtype=np.int64),
+    )
+
+
+def _exact_cosine(qm: np.ndarray, cm: np.ndarray) -> np.ndarray:
+    """Quantized cosine of every (row of qm, row of cm): the integer
+    dot and norms are exact in int64, and the one float sequence —
+    dot / sqrt(norm_q·norm_c), the product taken in double FIRST — is
+    the op order of the zip_with expression path and the DuckDB oracle,
+    so scores match both bit-for-bit."""
+    dots = (qm @ cm.T).astype(np.float64)
+    nq = (qm * qm).sum(axis=1).astype(np.float64)
+    nc = (cm * cm).sum(axis=1).astype(np.float64)
+    return dots / np.sqrt(nq[:, None] * nc[None, :])
+
+
+def _local_topk(
+    qi: np.ndarray, ci: np.ndarray, s: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(query ids, neighbor ids, scores): each row of the score block
+    ``s`` (queries qi × corpus ci) cut to its first k under the (score
+    desc, neighbor id asc) total order, self-pairs excluded (``s`` is
+    overwritten there). The global top-k is a subset of the union of
+    block top-ks, so the _topk window over the survivors is exact.
+
+    No full-row sort (a per-row argsort dominated the 100k stress run
+    ~10:1 over the matmul): argpartition gives the k-th score, the
+    >= threshold mask keeps every boundary TIE (argpartition alone
+    splits ties arbitrarily), and ONE flattened lexsort orders the ~n·k
+    survivors by (row, score desc, id asc)."""
+    s[qi[:, None] == ci[None, :]] = -np.inf
+    kk = min(k, s.shape[1])
+    part = np.argpartition(-s, kk - 1, axis=1)[:, :kk]
+    thresh = np.take_along_axis(s, part, 1).min(axis=1)
+    rows, cols = np.nonzero(s >= thresh[:, None])
+    sc = s[rows, cols]
+    ids = ci[cols]
+    order = np.lexsort((ids, -sc, rows))
+    rows, sc, ids = rows[order], sc[order], ids[order]
+    boundary = np.r_[True, rows[1:] != rows[:-1]]
+    starts = np.maximum.accumulate(np.where(boundary, np.arange(len(rows)), 0))
+    keep = (np.arange(len(rows)) - starts < kk) & np.isfinite(sc)
+    return qi[rows[keep]], ids[keep], sc[keep]
+
+
+def _scan_blocks(
+    pairs: DataFrame, emit, names: tuple[str, str, str] = ("query_id", "neighbor_id", "score")
+) -> DataFrame:
+    """One Arrow pass over ``pairs``: ``emit`` maps each row's columns
+    to (ids, ids, scores) arrays, returned as (long, long, double)
+    columns ``names``."""
+
+    dtypes = ("int64", "int64", "float64")
+
+    def batches(it):
+        for pdf in it:
+            out = [emit(*row) for row in zip(*(pdf[c] for c in pdf.columns))]
+            cols = [np.concatenate(c) for c in zip(*out)] if out else [[], [], []]
+            yield pd.DataFrame(
+                {n: pd.Series(c, dtype=t) for n, c, t in zip(names, cols, dtypes)}
+            )
+
+    return pairs.mapInPandas(batches, f"{names[0]} long, {names[1]} long, {names[2]} double")
+
+
+def _blocked_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k over packed block pairs (ra: query rows, rb:
+    corpus rows): each block's local top-k in one Arrow pass, then the
+    global window."""
+
+    def emit(ra, rb):
+        qi, qm = _unpack(ra)
+        ci, cm = _unpack(rb)
+        return _local_topk(qi, ci, _exact_cosine(qm, cm), k)
+
+    return _topk(_scan_blocks(pairs.select("ra", "rb"), emit), k)
+
+
+_TOPK_COLS = ("query_id", "rank", "neighbor_id", "score")
+
+
+def _topk(scored: DataFrame, k: int, cols: tuple[str, ...] = _TOPK_COLS) -> DataFrame:
+    """Each query's first k rows of ``scored`` under the (score desc,
+    neighbor_id asc) total order, ranked 1..k, as ``cols``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= k)
+        .select(*cols)
+    )
 
 
 def brute_force_topk(
@@ -95,12 +281,7 @@ def brute_force_topk(
         .withColumn("score", score(F.col("_qv"), F.col("_cv")))
         .select("query_id", "neighbor_id", "score")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    return _topk(scored, k)
 
 
 def knn_label_probe(
@@ -125,8 +306,8 @@ def knn_label_probe(
 
     Returns (query_id, true_label, predicted_label, n_votes, correct).
 
-    Scale shape: probe-vs-corpus ranking rides the blocked int64
-    matmul scan (all_pairs_topk_cosine with a probe frame —
+    Scale shape: probe-vs-corpus ranking is all_pairs_topk_cosine
+    with a probe frame (the exact-cosine block kernel, _blocked_topk —
     bit-identical to the expression flat scan, ~10× on the 100-probe
     100k-corpus stress row); the vote is a k-row-per-probe
     aggregation. Swap the scan for ivf_topk at IVF scale — the vote
@@ -359,15 +540,7 @@ def _rerank_topk(cand: DataFrame, k: int, metric: str = "dot") -> DataFrame:
         )
     else:
         raise ValueError(f"unknown metric {metric!r}")
-    scored = cand.withColumn("score", score).select(
-        "query_id", "neighbor_id", "score"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    return _topk(cand.withColumn("score", score).select("query_id", "neighbor_id", "score"), k)
 
 
 def train_ivf_centroids(
@@ -460,10 +633,10 @@ def ivf_topk(
       score. Right for the serving regime (few queries, modest
       fan-out), and the shape the DuckDB oracle replays 1:1.
     - ``"blocked"`` (cosine only) — each cell's members pack into ONE
-      row, probing queries pack per (cell), and one Arrow pass runs a
-      per-cell int64 matmul + local top-k under the (score desc, id
-      asc) total order (all_pairs_topk_cosine's kernel applied within
-      cells); a pair meets in exactly one cell, so the global window
+      row, probing queries pack per (cell), and one Arrow pass runs
+      the exact-cosine block kernel (_blocked_topk: int64 matmul +
+      local top-k under the (score desc, id asc) total order) within
+      cells; a pair meets in exactly one cell, so the global window
       over the ~|Q|·n_probe·k survivors finishes the exact same
       ranking. Use in the queries≈corpus regime: the candidate count
       is |Q|·n_probe·avg-cell and any per-pair interpreted expression
@@ -560,8 +733,8 @@ def ivf_topk(
 def _ivf_blocked_cosine_topk(
     cb: DataFrame, qb: DataFrame, k: int, max_cell: int = 4096
 ) -> DataFrame:
-    """ivf_topk's engine='blocked' probe: per-cell int64 matmul + local
-    top-k (all_pairs_topk_cosine's kernel applied within cells).
+    """ivf_topk's engine='blocked' probe: the exact-cosine block kernel
+    (_blocked_topk) applied within cells.
 
     Both sides shuffle ONCE on the cell id into one packed row per
     cell (members stay O(avg-cell) per row); the Arrow pass scores
@@ -569,11 +742,9 @@ def _ivf_blocked_cosine_topk(
     and keeps each query's first k under the (score desc, neighbor_id
     asc) TOTAL order — a candidate pair meets in exactly one cell (the
     neighbor's), so the global window over the ~|Q|·n_probe·k
-    survivors reproduces the expr engine's ranking bit-for-bit
-    (integer dots/norms exact in float64; norm product, sqrt and
-    divide are single IEEE ops on both paths). Zero-norm and NULL
-    vectors drop before the matmul — the cosine contract
-    (_rerank_topk's filter).
+    survivors reproduces the expr engine's ranking bit-for-bit.
+    Zero-norm and NULL vectors drop before packing — the cosine
+    contract (_rerank_topk's filter).
 
     SKEW GUARD (``max_cell``, driver ADVICE r7; made two-sided in the
     same round): a skewed coarse quantizer (e.g. iters=0 data-seeded
@@ -593,14 +764,10 @@ def _ivf_blocked_cosine_topk(
     engine='expr' at max_cell=7 and 1, where BOTH sides split
     multi-way). Only oversized cells/probe-sets pay the replication.
     At max_cell=4096 a packed row is ≤ 4096×64 int64 ≈ 2 MB — bounded
-    per task regardless of quantizer or probe skew. ``max_cell`` must
-    be >= 1 (driver ADVICE r8: <= 0 previously surfaced as an opaque
-    ceil/pmod-by-zero deep in the plan)."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    if max_cell < 1:
-        raise ValueError(f"max_cell must be >= 1, got {max_cell}")
-
+    per task regardless of quantizer or probe skew. ivf_topk checks
+    ``max_cell`` >= 1 before training."""
+    cb = cb.filter(norm_sq(F.col("_neighborq")) > 0)
+    qb = qb.filter(norm_sq(F.col("_queryq")) > 0)
     # per-cell member/probe counts are one tiny row per cell: broadcast
     # into both sides so the salting adds no extra shuffle of the big
     # frames. BOTH sides split: the corpus side by member-id salt (a
@@ -623,91 +790,17 @@ def _ivf_blocked_cosine_topk(
     )
     cpacked = cb.groupBy("cell", "_salt").agg(
         F.collect_list(
-            F.struct(F.col("neighbor_id").alias("i"), F.col("_neighborq").alias("v"))
-        ).alias("_crows")
+            F.struct(F.col("neighbor_id").alias("_id"), F.col("_neighborq").alias("_v"))
+        ).alias("rb")
     )
     qpacked = qb.groupBy("cell", "_qsalt").agg(
         F.collect_list(
-            F.struct(F.col("query_id").alias("i"), F.col("_queryq").alias("v"))
-        ).alias("_qrows")
+            F.struct(F.col("query_id").alias("_id"), F.col("_queryq").alias("_v"))
+        ).alias("ra")
     )
     # join on cell alone: nsub × nqsub blocks per cell, each one
     # bounded numpy matmul task
-    cells = qpacked.join(cpacked, "cell").select("_qrows", "_crows")
-    schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("neighbor_id", LongType()),
-            StructField("score", DoubleType()),
-        ]
-    )
-
-    def _unpack(rows):
-        ids = [r["i"] for r in rows if r["v"] is not None]
-        vecs = [r["v"] for r in rows if r["v"] is not None]
-        if not ids:
-            return None, None
-        mi = np.array(ids, dtype=np.int64)
-        mm = np.array(vecs, dtype=np.int64)
-        nz = (mm * mm).sum(axis=1) > 0
-        if not nz.any():
-            return None, None
-        return mi[nz], mm[nz]
-
-    def batches(it):
-        for pdf in it:
-            out_q, out_n, out_s = [], [], []
-            for qrows, crows in zip(pdf["_qrows"], pdf["_crows"]):
-                qi, qm = _unpack(qrows)
-                ci, cm = _unpack(crows)
-                if qi is None or ci is None:
-                    continue
-                dots = (qm @ cm.T).astype(np.float64)
-                nq = (qm * qm).sum(axis=1).astype(np.float64)
-                nc = (cm * cm).sum(axis=1).astype(np.float64)
-                s = dots / np.sqrt(nq[:, None] * nc[None, :])
-                s[qi[:, None] == ci[None, :]] = -np.inf  # self-pairs out
-                # all_pairs_topk_cosine's pruning kernel: argpartition
-                # gives the k-th score, the >= threshold mask keeps
-                # boundary TIES, and ONE lexsort orders only the ~n·k
-                # survivors (a full-ravel lexsort over n_q·n_c pairs
-                # dominated the first cut of this engine ~10:1)
-                kk = min(k, s.shape[1])
-                part = np.argpartition(-s, kk - 1, axis=1)[:, :kk]
-                thresh = np.take_along_axis(s, part, 1).min(axis=1)
-                rows, cols = np.nonzero(s >= thresh[:, None])
-                sc = s[rows, cols]
-                order = np.lexsort((ci[cols], -sc, rows))
-                rows, cols, sc = rows[order], cols[order], sc[order]
-                boundary = np.r_[True, rows[1:] != rows[:-1]]
-                starts = np.maximum.accumulate(
-                    np.where(boundary, np.arange(len(rows)), 0)
-                )
-                keep = (np.arange(len(rows)) - starts < kk) & np.isfinite(sc)
-                out_q.append(qi[rows[keep]])
-                out_n.append(ci[cols[keep]])
-                out_s.append(sc[keep])
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(
-                        np.concatenate(out_q) if out_q else [], dtype="int64"
-                    ),
-                    "neighbor_id": pd.Series(
-                        np.concatenate(out_n) if out_n else [], dtype="int64"
-                    ),
-                    "score": pd.Series(
-                        np.concatenate(out_s) if out_s else [], dtype="float64"
-                    ),
-                }
-            )
-
-    local = cells.mapInPandas(batches, schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    return _blocked_topk(qpacked.join(cpacked, "cell"), k)
 
 
 def lsh_near_dup_pairs(
@@ -1423,13 +1516,8 @@ def hard_negatives(
         )
         .select("query_id", "query_label", "neighbor_id", "neighbor_label", "score")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "query_label", "rank", "neighbor_id", "neighbor_label", "score"
-        )
+    return _topk(
+        scored, k, ("query_id", "query_label", "rank", "neighbor_id", "neighbor_label", "score")
     )
 
 
@@ -1439,7 +1527,6 @@ def all_pairs_topk_cosine(
     vec_col: str = "embedding",
     k: int = 5,
     scale: int = 1000,
-    block_size: int = 2048,
     queries: DataFrame | None = None,
 ) -> DataFrame:
     """Exact top-k by quantized cosine via blocked int64 matmuls —
@@ -1449,17 +1536,13 @@ def all_pairs_topk_cosine(
     defaults to the corpus itself (the all-pairs / mutual-kNN case);
     pass a probe frame for query-vs-corpus ranking.
 
-    Same BLAS-not-nested-loop shape as dedup.cosine_near_dup_pairs:
-    vectors hash into ⌈n/block_size⌉ packed blocks, every (query
-    block, corpus block) pair is ONE numpy int64 matmul emitting each
-    query's LOCAL top-k (global top-k is a subset of the per-block
-    top-k under a total order), then one window keeps the global k
-    among the O(k·n/block_size) survivors per query. Exactness is
-    op-for-op: integer dot/norms are exact in int64→float64, and the
-    one float sequence — dot / sqrt(norm_a·norm_b), product in double
-    FIRST — matches the zip_with expression path bit-for-bit, so
-    every gate downstream (kNN triangles, label propagation, label
-    probe) stays oracle-green.
+    Vectors hash into packed blocks (_blocking, _pack); every (query
+    block, corpus block) pair — a full cross join of the blocks — is
+    ONE numpy matmul emitting each query's LOCAL top-k (_exact_cosine,
+    _local_topk), then one window keeps the global k among the
+    O(k·nblocks) survivors per query. Scores are bit-identical to the
+    zip_with expression path, so every gate downstream (kNN triangles,
+    label propagation, label probe) stays oracle-green.
 
     Use this in the big-cross regime (|queries|·|corpus| ≳ 10⁶ pair
     scores, where the interpreted-HOF expression scan dominates —
@@ -1467,151 +1550,15 @@ def all_pairs_topk_cosine(
     100-probe × 100k-corpus stress probe); brute_force_topk stays the
     right call for small probe sets, where broadcasting beats packing.
     """
-    import numpy as np
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
+    c = _cosine_rows(emb, id_col, vec_col, scale)
+    nblocks, broadcast = _blocking(c)
+    packed_c = _pack(c, nblocks)
+    packed_q = (
+        packed_c
+        if queries is None
+        else _pack(_cosine_rows(queries, id_col, vec_col, scale), nblocks)
     )
-
-    def _prep(df: DataFrame) -> DataFrame:
-        return (
-            spread(df, id_col)
-            .select(F.col(id_col).alias("_id"), quantize(vec_col, scale).alias("_v"))
-            .filter(norm_sq(F.col("_v")) > 0)
-        )
-
-    c = _prep(emb)
-    # one bounded scalar action sizing the blocking AND the broadcast
-    # gate: row count plus vector width (ADVICE r9 — byte-based gate)
-    n, _d = c.agg(F.count(F.lit(1)), F.first(F.size("_v"))).first()
-    if n == 0:
-        return c.select(
-            F.col("_id").alias("query_id"),
-            F.lit(0).cast("bigint").alias("rank"),
-            F.col("_id").alias("neighbor_id"),
-            F.lit(0.0).alias("score"),
-        ).limit(0)
-    # Scale-adaptive blocking (round 9, guide §2.5/§2.6): the natural
-    # ⌈n/block_size⌉ puts a ≲2k-vector corpus in ONE block and AQE
-    # coalesces the tiny packed frame to ONE partition — profiled as a
-    # single task holding the whole O(n²·d) matmul for 10 s while the
-    # rest of the cluster idles. Derive a minimum block count from
-    # defaultParallelism (adapts to the core count the driver runs at)
-    # so the stream side always carries ≥ ~2 blocks per core, capped
-    # at 64-row blocks so tiny corpora don't drown in per-block
-    # overhead. The pair set / top-k result is blocking-independent:
-    # every (query, corpus) pair is scored in exactly one block pair
-    # with identical arithmetic, and local top-k keeps boundary ties.
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    nblocks = max(1, -(-n // block_size), min(2 * par, -(-n // 64)))
-
-    def _pack(df: DataFrame) -> DataFrame:
-        return (
-            df.withColumn(
-                "_blk", F.pmod(F.xxhash64("_id"), F.lit(nblocks)).cast("int")
-            )
-            .groupBy("_blk")
-            .agg(F.collect_list(F.struct("_id", "_v")).alias("_rows"))
-            .localCheckpoint(eager=True)
-        )
-
-    packed_c = _pack(c)
-    packed_q = packed_c if queries is None else _pack(_prep(queries))
-    if n * max(int(_d or 0), 1) * 8 <= 128 * 1024 * 1024:
-        # small-corpus regime, gated on ESTIMATED BYTES n*d*8 ≤ 128 MB
-        # (ADVICE r9; identical to the former n ≤ 262,144 gate at the
-        # fixture d=64): the packed corpus broadcasts, and
-        # range-repartitioning the query side to one block per
-        # partition pins the matmul parallelism to nblocks tasks —
-        # partitioning only; no row changes hands differently
-        pairs = (
-            packed_q.repartitionByRange(nblocks, "_blk")
-            .alias("A")
-            .join(F.broadcast(packed_c).alias("B"))
-            .select(
-                F.col("A._rows").alias("ra"),
-                F.col("B._rows").alias("rb"),
-            )
-        )
-    else:
-        # index-scale regime: no broadcast (the packed corpus is too
-        # big); the replicate join's own partitioning is already wide
-        # because nblocks ≳ n/block_size is large here
-        pairs = (
-            packed_q.alias("A")
-            .join(packed_c.alias("B"))
-            .select(
-                F.col("A._rows").alias("ra"),
-                F.col("B._rows").alias("rb"),
-            )
-        )
-    schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("neighbor_id", LongType()),
-            StructField("score", DoubleType()),
-        ]
-    )
-
-    def batches(it):
-        for pdf in it:
-            out_q, out_n, out_s = [], [], []
-            for ra, rb in zip(pdf["ra"], pdf["rb"]):
-                qi = np.array([r["_id"] for r in ra], dtype=np.int64)
-                qm = np.array([r["_v"] for r in ra], dtype=np.int64)
-                ci = np.array([r["_id"] for r in rb], dtype=np.int64)
-                cm = np.array([r["_v"] for r in rb], dtype=np.int64)
-                dots = (qm @ cm.T).astype(np.float64)
-                nq = (qm * qm).sum(axis=1).astype(np.float64)
-                nc = (cm * cm).sum(axis=1).astype(np.float64)
-                s = dots / np.sqrt(nq[:, None] * nc[None, :])
-                s[qi[:, None] == ci[None, :]] = -np.inf  # self-pairs out
-                kk = min(k, s.shape[1])
-                # EXACT top-k without a full-row sort (a per-row
-                # O(nc log nc) argsort dominated the 100k stress run
-                # ~10:1 over the matmul): argpartition gives the k-th
-                # score value, the >= threshold mask keeps every
-                # boundary TIE (argpartition alone splits ties
-                # arbitrarily), and ONE flattened lexsort orders the
-                # ~n·k survivors by (row, score desc, id asc).
-                part = np.argpartition(-s, kk - 1, axis=1)[:, :kk]
-                thresh = np.take_along_axis(s, part, 1).min(axis=1)
-                rows, cols = np.nonzero(s >= thresh[:, None])
-                sc = s[rows, cols]
-                ids = ci[cols]
-                order = np.lexsort((ids, -sc, rows))
-                rows, sc, ids = rows[order], sc[order], ids[order]
-                boundary = np.r_[True, rows[1:] != rows[:-1]]
-                starts = np.maximum.accumulate(
-                    np.where(boundary, np.arange(len(rows)), 0)
-                )
-                keep = (np.arange(len(rows)) - starts < kk) & np.isfinite(sc)
-                out_q.append(qi[rows[keep]])
-                out_n.append(ids[keep])
-                out_s.append(sc[keep])
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(
-                        np.concatenate(out_q) if out_q else [], dtype="int64"
-                    ),
-                    "neighbor_id": pd.Series(
-                        np.concatenate(out_n) if out_n else [], dtype="int64"
-                    ),
-                    "score": pd.Series(
-                        np.concatenate(out_s) if out_s else [], dtype="float64"
-                    ),
-                }
-            )
-
-    local = pairs.mapInPandas(batches, schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    return _blocked_topk(_block_pairs(packed_q, packed_c, nblocks, broadcast), k)
 
 
 def topk_recall(

@@ -316,8 +316,7 @@ def _backfill(spark: SparkSession, sf_dir: str, out_dir: str) -> IngestPipeline:
 def _sink_table(pipe: IngestPipeline, name: str) -> DataFrame:
     """A sink table without its partition column; a table the chain
     never produced rows for reads as empty."""
-    read = pipe.read_cache if name in (CACHE_BALANCES, CACHE_TRUST) else pipe.read_final
-    df = read(name)
+    df = pipe.read_final(name)
     if df is None:
         df = pipe.spark.createDataFrame([], SINK_READ_SCHEMAS[name])
     return df.drop("block_group")

@@ -15,6 +15,15 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """Half the box's physical memory, in whole GiB, capped at 16g: the
+    heap must leave room for the JVM's off-heap memory, the Python
+    workers and the calling process. A fixed 16g heap on a 15 GB box
+    let one test run grow to 13.5 GB RSS and be OOM-killed."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, phys // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "blockchain_indexer_spark",
     master: str | None = None,
@@ -74,7 +83,7 @@ def get_spark(
         # round and 4 (the ones its new literals need) instead of 4-8
         # in the third, in every run.
         .config("spark.sql.codegen.useIdInClassName", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -836,16 +836,9 @@ class IngestPipeline:
         if self.on_batch is not None:
             self.on_batch()
 
-    def read_cache(self, name: str) -> DataFrame | None:
-        """Current materialization of CACHE_BALANCES / CACHE_TRUST."""
-        from pyspark.errors.exceptions.captured import AnalysisException
-
-        if self.jdbc_url is not None:
-            return self.read_final(name)  # same probe+decode semantics
-        try:
-            return self._read_parquet(name)
-        except AnalysisException:
-            return None
+    # Current materialization of CACHE_BALANCES / CACHE_TRUST: a cache
+    # table reads like any final table.
+    read_cache = read_final
 
     def _cache_inputs(
         self, batch_tables: dict[str, DataFrame] | None = None

@@ -58,19 +58,41 @@ def test_cosine_near_dups_match_brute_force(spark, sf_dir):
     from blockchain_indexer_spark.sources.parquet import load_table
     from pyspark.sql import functions as F
 
-    emb = load_table(spark, sf_dir, "embeddings").limit(200)
-    out = cosine_near_dup_pairs(emb, "vec_id", "embedding", threshold=0.3).toPandas()
-    assert (out["vec_a"] < out["vec_b"]).all()
-    assert (out["cosine"] >= 0.3).all()
-    # spot-check one reported pair against a direct computation
-    if len(out):
-        a, b, c = out.iloc[0][["vec_a", "vec_b", "cosine"]]
-        va = emb.filter(F.col("vec_id") == int(a)).select(quantize("embedding").alias("v"))
-        vb = emb.filter(F.col("vec_id") == int(b)).select(quantize("embedding").alias("w"))
-        row = va.crossJoin(vb).select(
-            (dot(F.col("v"), F.col("w")) / F.sqrt(norm_sq(F.col("v")) * norm_sq(F.col("w")))).alias("c")
-        ).collect()[0]
-        assert abs(row["c"] - c) == 0.0
+    base = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").limit(200)
+    dim = len(base.first()["embedding"])
+    # an all-zero vector and a NULL embedding have no cosine: neither
+    # may appear in any pair
+    zero_id, null_id = 10**9, 10**9 + 1
+    extra = spark.createDataFrame(
+        [(zero_id, [0.0] * dim), (null_id, None)], base.schema
+    )
+    emb = base.unionByName(extra)
+    got = {
+        (r["vec_a"], r["vec_b"]): r["cosine"]
+        for r in cosine_near_dup_pairs(emb, "vec_id", "embedding", threshold=0.3).collect()
+    }
+    # expression reference: every ordered pair scored as
+    # dot / sqrt(norm_sq·norm_sq); a zero norm divides to NULL
+    q = emb.select("vec_id", quantize("embedding").alias("v"))
+    a, b = q.alias("a"), q.alias("b")
+    want = {
+        (r["vec_a"], r["vec_b"]): r["cosine"]
+        for r in a.crossJoin(b)
+        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
+        .select(
+            F.col("a.vec_id").alias("vec_a"),
+            F.col("b.vec_id").alias("vec_b"),
+            F.try_divide(
+                dot(F.col("a.v"), F.col("b.v")),
+                F.sqrt(norm_sq(F.col("a.v")) * norm_sq(F.col("b.v"))),
+            ).alias("cosine"),
+        )
+        .filter(F.col("cosine") >= 0.3)
+        .collect()
+    }
+    assert want
+    assert got == want
+    assert not {zero_id, null_id} & {i for pair in got for i in pair}
 
 
 def test_cosine_near_dups_blocking_invariant(spark, sf_dir):

@@ -25,6 +25,38 @@ def test_brute_force_topk_shape_and_self_exclusion(spark, sf_dir):
     assert set(out["rank"]) == {1, 2, 3}
 
 
+def test_all_pairs_topk_cosine_equals_expression_scan(spark, sf_dir):
+    """The blocked matmul top-k must equal brute_force_topk's
+    quantized-cosine expression scan row for row, score bits included,
+    for the self-join and for a strided probe frame. Every vector has
+    two exact copies under other ids, so each query's score ties come
+    in threes and straddle block boundaries (and, at k=4, the rank
+    cut); an all-zero corpus gives an empty frame from both scans."""
+    from blockchain_indexer_spark.operators.similarity import all_pairs_topk_cosine
+
+    base = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").limit(60)
+    emb = base.unionByName(
+        base.withColumn("vec_id", F.col("vec_id") + 100_000)
+    ).unionByName(base.withColumn("vec_id", F.col("vec_id") + 200_000))
+
+    def rows(df):
+        return sorted(
+            (r["query_id"], r["rank"], r["neighbor_id"], r["score"]) for r in df.collect()
+        )
+
+    for queries in (None, emb.filter(F.col("vec_id") % 7 == 0)):
+        want = rows(
+            brute_force_topk(emb, emb if queries is None else queries, k=4,
+                             metric="quantized_cosine")
+        )
+        got = rows(all_pairs_topk_cosine(emb, k=4, queries=queries))
+        assert want and got == want
+
+    zeros = emb.withColumn("embedding", F.transform("embedding", lambda x: x * 0))
+    assert rows(all_pairs_topk_cosine(zeros, k=4)) == []
+    assert rows(brute_force_topk(zeros, zeros, k=4, metric="quantized_cosine")) == []
+
+
 def test_lsh_recall_vs_exact(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
