@@ -14,9 +14,12 @@ Two paths, as a production ANN stack would have:
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from blockchain_indexer_spark.functions.vectors import (
@@ -36,21 +39,39 @@ def _q_away(a: np.ndarray) -> np.ndarray:
     paths and the oracles. np.round is half-to-even and diverges on
     any component where x*scale lands exactly on .5 (e.g. 0.0625 at
     scale 1000) — which would make a signature/cell disagree with the
-    same operator's own exact re-rank."""
-    return np.copysign(np.floor(np.abs(a) + 0.5), a)
+    same operator's own exact re-rank. The fraction a - trunc(a) is
+    exact, where floor(|a| + 0.5) rounds the sum first and sends
+    0.49999999999999994 to 1."""
+    whole = np.trunc(a)
+    return whole + np.copysign(np.abs(a - whole) >= 0.5, a)
 
 
-# The exact quantized-cosine block scans — dedup.cosine_near_dup_pairs,
+# The exact quantized-cosine scans — dedup.cosine_near_dup_pairs,
 # all_pairs_topk_cosine and ivf_topk's engine="blocked" probe — share
-# the helpers below: the arithmetic, the local top-k, the blocking, the
-# broadcast gate and the ranking window each live in one place, so a
-# kernel change (e.g. a float64 matmul) is made once and every scan
-# stays bit-identical to the expression paths and the DuckDB oracle.
+# the helpers below: the arithmetic, the local top-k, the gate and the
+# blocking each live in one place, so every scan stays bit-identical
+# to the expression paths and the DuckDB oracle.
+#
+# _blocking picks one of two regimes from one count/width action:
+# - corpus-shipped (n·d·8 ≤ _BROADCAST_BYTES): the quantized rows are
+#   collected once as Arrow (_collect_rows), shipped to the tasks with
+#   sc.broadcast, and scored in ONE mapInArrow job of
+#   defaultParallelism tasks over query-row slices (_shipped_scan). A
+#   task sees the whole corpus, so its local top-k is the global one:
+#   no shuffle, no window (REPOSE's replicated reference set).
+# - replicated block join (above the gate): rows hash into packed
+#   blocks (_pack), every admitted (query block, corpus block) pair is
+#   one matmul (_block_pairs, _scan_blocks), and top-k merges the
+#   blocks' local top-ks with one window (_blocked_topk).
 
-# Broadcast gate on the estimated packed-corpus bytes n·d·8 (a
-# row-count gate alone would let a high-dimensional corpus balloon the
-# broadcast, e.g. d=1024 at n just under 262k -> ~2 GB).
+# Gate on the shipped corpus bytes n·d·8 (a row-count gate alone would
+# let a high-dimensional corpus balloon the broadcast, e.g. d=1024 at n
+# just under 262k -> ~2 GB).
 _BROADCAST_BYTES = 128 * 1024 * 1024
+
+# Score-matrix cells a shipped scan's task computes at once (32 MB of
+# float64): a task walks its query rows in chunks of this many cells.
+_CHUNK_CELLS = 1 << 22
 
 
 def _cosine_rows(df: DataFrame, id_col: str, vec_col: str, scale: int) -> DataFrame:
@@ -58,7 +79,8 @@ def _cosine_rows(df: DataFrame, id_col: str, vec_col: str, scale: int) -> DataFr
     has a cosine: a NULL or zero-norm vector has none — Spark evaluates
     0.0/0.0 = NaN and orders NaN ABOVE every number, so without this
     filter one zero vector would match or outrank the whole corpus (the
-    DuckDB oracle returns NULL and drops it)."""
+    DuckDB oracle returns NULL and drops it). _collect_rows is its
+    driver-side twin."""
     return (
         spread(df, id_col)
         .select(F.col(id_col).alias("_id"), quantize(vec_col, scale).alias("_v"))
@@ -66,28 +88,104 @@ def _cosine_rows(df: DataFrame, id_col: str, vec_col: str, scale: int) -> DataFr
     )
 
 
-def _blocking(rows: DataFrame, block_size: int = 2048) -> tuple[int, bool]:
-    """(nblocks, broadcast) for a _cosine_rows frame, from one bounded
-    scalar action (row count plus vector width).
+def _blocking(
+    vec_col: str, frames: list[DataFrame], block_size: int = 2048
+) -> tuple[int, int, bool]:
+    """(d, nblocks, shipped) for the input ``frames`` (corpus, then any
+    probe frame), from ONE count/width action over their raw rows.
 
-    Scale-adaptive blocking: the natural ⌈n/block_size⌉ puts a
-    ≲2k-vector corpus in ONE block, and AQE coalesces the tiny packed
-    frame to ONE partition — profiled as a single task holding the
-    whole O(n²·d) matmul while the rest of the cluster idles. A minimum
-    block count from defaultParallelism (≥ ~2 blocks per core, capped
-    at 64-row blocks so tiny corpora don't drown in per-block overhead)
-    keeps every core busy. Results are blocking-independent: every pair
-    is scored in exactly one block pair with identical arithmetic, and
-    the local top-k keeps boundary ties.
+    ``d`` is the vector width (0 when no row has a vector). Non-NULL
+    vectors of different widths raise ValueError here, on the driver:
+    every matmul would otherwise fail inside the workers.
 
-    ``broadcast`` is the small-corpus regime (n·d·8 ≤ _BROADCAST_BYTES):
-    the packed corpus broadcasts and the query side range-partitions to
-    one block per partition. Above it the replicate join's own
-    partitioning is already wide, because nblocks ≳ n/block_size."""
-    n, d = rows.agg(F.count(F.lit(1)), F.first(F.size("_v"))).first()
-    par = rows.sparkSession.sparkContext.defaultParallelism
+    ``shipped`` is the gate, n·d·8 ≤ _BROADCAST_BYTES over all frames'
+    rows: the corpus-shipped scan. NULL and zero-norm rows are counted
+    too, so the gate errs towards the block join.
+
+    ``nblocks`` sizes the block join above the gate. The natural
+    ⌈n/block_size⌉ would put a ≲2k-vector corpus in ONE block, and AQE
+    coalesces the tiny packed frame to ONE partition — one task holding
+    the whole O(n²·d) matmul while the rest of the cluster idles. A
+    minimum block count from defaultParallelism (≥ ~2 blocks per core,
+    capped at 64-row blocks so tiny corpora don't drown in per-block
+    overhead) keeps every core busy. Results are blocking-independent:
+    every pair is scored in exactly one block pair with identical
+    arithmetic, and the local top-k keeps boundary ties."""
+    width = F.when(F.col(vec_col).isNotNull(), F.size(vec_col)).alias("_d")
+    sizes = reduce(DataFrame.unionAll, [f.select(width) for f in frames])
+    n, lo, hi = sizes.agg(F.count(F.lit(1)), F.min("_d"), F.max("_d")).first()
+    if lo != hi:
+        raise ValueError(f"{vec_col} vectors differ in width: {lo} and {hi}")
+    d = hi or 0
+    par = frames[0].sparkSession.sparkContext.defaultParallelism
     nblocks = max(1, -(-n // block_size), min(2 * par, -(-n // 64)))
-    return nblocks, n * max(int(d or 0), 1) * 8 <= _BROADCAST_BYTES
+    return d, nblocks, n * max(d, 1) * 8 <= _BROADCAST_BYTES
+
+
+def _collect_rows(
+    df: DataFrame, id_col: str, vec_col: str, scale: int, d: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """_cosine_rows on the driver, as (ids, n×d int64 matrix) ordered by
+    id, from ONE Arrow collect of the raw (id, vector) rows.
+
+    The quantization runs in numpy: Spark's quantize is an interpreted
+    higher-order function, and on a 2048×64 corpus it cost more than
+    the collect itself. _q_away is F.round's half-away-from-zero
+    rounding bit for bit on the same double product, so the matrix is
+    the one _cosine_rows would give. A vector with a NULL element or a
+    zero norm is dropped, as there; a NaN, infinite or out-of-range
+    value raises, as Spark's bigint cast does."""
+    t = (
+        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        .filter(F.col("_v").isNotNull())
+        .toArrow()
+    )
+    flat = t.column("_v").combine_chunks().flatten()
+    x = _q_away(flat.to_numpy(zero_copy_only=False).astype(np.float64) * scale)
+    x = x.reshape(t.num_rows, d)
+    holes = flat.is_null().to_numpy(zero_copy_only=False).reshape(t.num_rows, d)
+    keep = ~holes.any(axis=1) & (x != 0).any(axis=1)
+    if not (np.abs(x[keep]) < 2.0**63).all():
+        raise ValueError(f"{vec_col} has values that do not quantize to bigint at scale {scale}")
+    ids = t.column("_id").to_numpy()[keep].astype(np.int64)
+    order = np.argsort(ids, kind="stable")
+    return ids[order], x[keep][order].astype(np.int64)
+
+
+def _shipped_scan(
+    spark: SparkSession, ship, cost: np.ndarray, width: int, emit, schema: str
+) -> DataFrame:
+    """The corpus-shipped scan: ``ship`` goes to the executors once (a
+    broadcast), and ONE mapInArrow job of at most defaultParallelism
+    tasks (one wave) splits the query rows into contiguous slices of
+    about equal total ``cost`` (one entry per query row). Each task
+    walks its slice in chunks [a, b) of ≤ _CHUNK_CELLS score cells
+    (``width`` corpus rows per query row) and ``emit(ship, a, b)``
+    turns a chunk into the columns of ``schema`` as numpy arrays.
+
+    No query rows or no corpus rows: an empty frame, and no job."""
+    if not (len(cost) and width):
+        return spark.createDataFrame([], schema)
+    parts = spark.sparkContext.defaultParallelism
+    cum = np.cumsum(cost)
+    cuts = np.searchsorted(cum, cum[-1] * np.arange(1, parts) / parts) + 1
+    bounds = np.unique(np.r_[0, cuts, len(cost)]).tolist()
+    step = max(1, _CHUNK_CELLS // width)
+    names = [f.split()[0] for f in schema.split(",")]
+    shipped = spark.sparkContext.broadcast(ship)
+
+    def run(batches):
+        data = shipped.value
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                for a in range(bounds[i], bounds[i + 1], step):
+                    cols = emit(data, a, min(a + step, bounds[i + 1]))
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(c) for c in cols], names=names
+                    )
+
+    tasks = len(bounds) - 1
+    return spark.range(0, tasks, 1, tasks).mapInArrow(run, schema)
 
 
 def _pack(rows: DataFrame, nblocks: int) -> DataFrame:
@@ -103,21 +201,11 @@ def _pack(rows: DataFrame, nblocks: int) -> DataFrame:
 
 
 def _block_pairs(
-    packed_q: DataFrame,
-    packed_c: DataFrame,
-    nblocks: int,
-    broadcast: bool,
-    on: Column | None = None,
+    packed_q: DataFrame, packed_c: DataFrame, on: Column | None = None
 ) -> DataFrame:
-    """(ba, bb, ra, rb): each query block A joined to every corpus
-    block B that ``on`` admits (all of them when None). Under the
-    broadcast gate the query side range-partitions to one block per
-    partition, pinning the matmul parallelism to nblocks tasks instead
-    of whatever AQE coalesced the tiny frame to — partitioning only; no
-    row changes hands differently."""
-    if broadcast:
-        packed_q = packed_q.repartitionByRange(nblocks, "_blk")
-        packed_c = F.broadcast(packed_c)
+    """(ba, bb, ra, rb): the replicated block join above the shipping
+    gate — each query block A joined to every corpus block B that
+    ``on`` admits (all of them when None)."""
     return (
         packed_q.alias("A")
         .join(packed_c.alias("B"), on)
@@ -139,11 +227,19 @@ def _unpack(rows) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _exact_cosine(qm: np.ndarray, cm: np.ndarray) -> np.ndarray:
-    """Quantized cosine of every (row of qm, row of cm): the integer
-    dot and norms are exact in int64, and the one float sequence —
-    dot / sqrt(norm_q·norm_c), the product taken in double FIRST — is
-    the op order of the zip_with expression path and the DuckDB oracle,
-    so scores match both bit-for-bit."""
+    """Quantized cosine of every (row of qm, row of cm), bit-identical
+    to int64 arithmetic.
+
+    The matmul runs in float64, which is BLAS (NumPy never sends an
+    integer matmul there), while d·max|x|² < 2^53: every product, dot
+    and partial sum is then an integer below 2^53, so float64 holds it
+    exactly. Outside that bound it runs in int64. The one float
+    sequence — dot / sqrt(norm_q·norm_c), the product taken in double
+    FIRST — is the op order of the zip_with expression path and the
+    DuckDB oracle, so scores match both bit-for-bit."""
+    top = max(int(np.abs(qm).max(initial=0)), int(np.abs(cm).max(initial=0)))
+    exact = np.float64 if qm.shape[1] * top * top < 2**53 else np.int64
+    qm, cm = qm.astype(exact, copy=False), cm.astype(exact, copy=False)
     dots = (qm @ cm.T).astype(np.float64)
     nq = (qm * qm).sum(axis=1).astype(np.float64)
     nc = (cm * cm).sum(axis=1).astype(np.float64)
@@ -152,12 +248,14 @@ def _exact_cosine(qm: np.ndarray, cm: np.ndarray) -> np.ndarray:
 
 def _local_topk(
     qi: np.ndarray, ci: np.ndarray, s: np.ndarray, k: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(query ids, neighbor ids, scores): each row of the score block
-    ``s`` (queries qi × corpus ci) cut to its first k under the (score
-    desc, neighbor id asc) total order, self-pairs excluded (``s`` is
-    overwritten there). The global top-k is a subset of the union of
-    block top-ks, so the _topk window over the survivors is exact.
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """(query ids, ranks, neighbor ids, scores): each row of the score
+    block ``s`` (queries qi × corpus ci) cut to its first k under the
+    (score desc, neighbor id asc) total order and ranked 1..k,
+    self-pairs excluded (``s`` is overwritten there). Against the whole
+    corpus this is the global top-k; against one block, the global
+    top-k is a subset of the union of block top-ks, so the _topk window
+    over the survivors is exact.
 
     No full-row sort (a per-row argsort dominated the 100k stress run
     ~10:1 over the matmul): argpartition gives the k-th score, the
@@ -175,8 +273,11 @@ def _local_topk(
     rows, sc, ids = rows[order], sc[order], ids[order]
     boundary = np.r_[True, rows[1:] != rows[:-1]]
     starts = np.maximum.accumulate(np.where(boundary, np.arange(len(rows)), 0))
-    keep = (np.arange(len(rows)) - starts < kk) & np.isfinite(sc)
-    return qi[rows[keep]], ids[keep], sc[keep]
+    pos = np.arange(len(rows)) - starts
+    # a self-pair's -inf sorts last in its row, so dropping it moves
+    # no other rank
+    keep = (pos < kk) & np.isfinite(sc)
+    return qi[rows[keep]], pos[keep] + 1, ids[keep], sc[keep]
 
 
 def _scan_blocks(
@@ -207,7 +308,8 @@ def _blocked_topk(pairs: DataFrame, k: int) -> DataFrame:
     def emit(ra, rb):
         qi, qm = _unpack(ra)
         ci, cm = _unpack(rb)
-        return _local_topk(qi, ci, _exact_cosine(qm, cm), k)
+        q, _, c, s = _local_topk(qi, ci, _exact_cosine(qm, cm), k)
+        return q, c, s
 
     return _topk(_scan_blocks(pairs.select("ra", "rb"), emit), k)
 
@@ -307,9 +409,11 @@ def knn_label_probe(
     Returns (query_id, true_label, predicted_label, n_votes, correct).
 
     Scale shape: probe-vs-corpus ranking is all_pairs_topk_cosine
-    with a probe frame (the exact-cosine block kernel, _blocked_topk —
+    with a probe frame — below the 128 MB gate the corpus and probes
+    are collected once and the probes scored against the broadcast
+    corpus in one mapInArrow job, above it the replicated block join;
     bit-identical to the expression flat scan, ~10× on the 100-probe
-    100k-corpus stress row); the vote is a k-row-per-probe
+    100k-corpus stress row. The vote is a k-row-per-probe
     aggregation. Swap the scan for ivf_topk at IVF scale — the vote
     stage is unchanged.
     """
@@ -634,7 +738,7 @@ def ivf_topk(
       fan-out), and the shape the DuckDB oracle replays 1:1.
     - ``"blocked"`` (cosine only) — each cell's members pack into ONE
       row, probing queries pack per (cell), and one Arrow pass runs
-      the exact-cosine block kernel (_blocked_topk: int64 matmul +
+      the exact-cosine block kernel (_blocked_topk: float64 matmul +
       local top-k under the (score desc, id asc) total order) within
       cells; a pair meets in exactly one cell, so the global window
       over the ~|Q|·n_probe·k survivors finishes the exact same
@@ -1384,11 +1488,12 @@ def mutual_knn_graph(
     Scale shape: neighbor retrieval is the pluggable stage, selected
     by ``index``:
 
-    - ``"exact"`` — the blocked int64-matmul all-pairs scan
-      (all_pairs_topk_cosine, bit-identical to the expression flat
-      scan and ~8× faster in the queries≈corpus regime). O(n²·d)
-      compute: the oracle-exact baseline, and the right choice up to
-      ~10⁵ vectors on one box.
+    - ``"exact"`` — the exact matmul all-pairs scan
+      (all_pairs_topk_cosine: one mapInArrow job over a broadcast
+      corpus below the 128 MB gate, the replicated block join above
+      it; bit-identical to the expression flat scan and ~8× faster in
+      the queries≈corpus regime). O(n²·d) compute: the oracle-exact
+      baseline, and the right choice up to ~10⁵ vectors on one box.
     - ``"ivf"`` — the coarse-cell index (ivf_topk with
       broadcast_queries=False: corpus AND query sides shuffle once on
       the cell id, no corpus broadcast), O(n · n_probe · avg-cell)
@@ -1529,20 +1634,25 @@ def all_pairs_topk_cosine(
     scale: int = 1000,
     queries: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact top-k by quantized cosine via blocked int64 matmuls —
-    the BLAS twin of brute_force_topk, returning the same
+    """Exact top-k by quantized cosine via float64 BLAS matmuls — the
+    matmul twin of brute_force_topk, returning the same
     (query_id, rank, neighbor_id, score) under the same total order
     (score desc, neighbor_id asc), self-pairs excluded. ``queries``
     defaults to the corpus itself (the all-pairs / mutual-kNN case);
     pass a probe frame for query-vs-corpus ranking.
 
-    Vectors hash into packed blocks (_blocking, _pack); every (query
+    Below the gate (_blocking: corpus plus probe rows, n·d·8 ≤
+    _BROADCAST_BYTES) both sides are collected once and the corpus
+    ships to one mapInArrow job (_shipped_scan): each task scores its
+    query slice against the whole corpus (_exact_cosine) and its local
+    top-k (_local_topk) is already the global one, ranked in numpy.
+    Above it, vectors hash into packed blocks (_pack); every (query
     block, corpus block) pair — a full cross join of the blocks — is
-    ONE numpy matmul emitting each query's LOCAL top-k (_exact_cosine,
-    _local_topk), then one window keeps the global k among the
-    O(k·nblocks) survivors per query. Scores are bit-identical to the
-    zip_with expression path, so every gate downstream (kNN triangles,
-    label propagation, label probe) stays oracle-green.
+    ONE matmul emitting each query's LOCAL top-k, then one window keeps
+    the global k among the O(k·nblocks) survivors per query. Scores are
+    bit-identical to the zip_with expression path, so every gate
+    downstream (kNN triangles, label propagation, label probe) stays
+    oracle-green.
 
     Use this in the big-cross regime (|queries|·|corpus| ≳ 10⁶ pair
     scores, where the interpreted-HOF expression scan dominates —
@@ -1550,15 +1660,27 @@ def all_pairs_topk_cosine(
     100-probe × 100k-corpus stress probe); brute_force_topk stays the
     right call for small probe sets, where broadcasting beats packing.
     """
-    c = _cosine_rows(emb, id_col, vec_col, scale)
-    nblocks, broadcast = _blocking(c)
-    packed_c = _pack(c, nblocks)
+    frames = [emb] if queries is None else [emb, queries]
+    d, nblocks, shipped = _blocking(vec_col, frames)
+    if shipped:
+        c = _collect_rows(emb, id_col, vec_col, scale, d)
+        q = c if queries is None else _collect_rows(queries, id_col, vec_col, scale, d)
+
+        def emit(data, a, b):
+            (qi, qm), (ci, cm) = data
+            return _local_topk(qi[a:b], ci, _exact_cosine(qm[a:b], cm), k)
+
+        return _shipped_scan(
+            emb.sparkSession, (q, c), np.ones(len(q[0])), len(c[0]), emit,
+            "query_id long, rank long, neighbor_id long, score double",
+        )
+    packed_c = _pack(_cosine_rows(emb, id_col, vec_col, scale), nblocks)
     packed_q = (
         packed_c
         if queries is None
         else _pack(_cosine_rows(queries, id_col, vec_col, scale), nblocks)
     )
-    return _blocked_topk(_block_pairs(packed_q, packed_c, nblocks, broadcast), k)
+    return _blocked_topk(_block_pairs(packed_q, packed_c), k)
 
 
 def topk_recall(

@@ -52,8 +52,12 @@ def test_simhash_deterministic_and_local(spark):
     assert out[1] != out[3]
 
 
-def test_cosine_near_dups_match_brute_force(spark, sf_dir):
+def test_cosine_near_dups_match_brute_force(spark, sf_dir, monkeypatch):
+    """Both regimes — the corpus-shipped scan and, with the gate forced
+    to zero bytes, the replicated block join — equal the expression
+    reference."""
     from blockchain_indexer_spark.functions.vectors import dot, norm_sq, quantize
+    from blockchain_indexer_spark.operators import similarity
     from blockchain_indexer_spark.operators.dedup import cosine_near_dup_pairs
     from blockchain_indexer_spark.sources.parquet import load_table
     from pyspark.sql import functions as F
@@ -67,10 +71,6 @@ def test_cosine_near_dups_match_brute_force(spark, sf_dir):
         [(zero_id, [0.0] * dim), (null_id, None)], base.schema
     )
     emb = base.unionByName(extra)
-    got = {
-        (r["vec_a"], r["vec_b"]): r["cosine"]
-        for r in cosine_near_dup_pairs(emb, "vec_id", "embedding", threshold=0.3).collect()
-    }
     # expression reference: every ordered pair scored as
     # dot / sqrt(norm_sq·norm_sq); a zero norm divides to NULL
     q = emb.select("vec_id", quantize("embedding").alias("v"))
@@ -91,25 +91,33 @@ def test_cosine_near_dups_match_brute_force(spark, sf_dir):
         .collect()
     }
     assert want
-    assert got == want
-    assert not {zero_id, null_id} & {i for pair in got for i in pair}
+    for gate in (similarity._BROADCAST_BYTES, 0):
+        monkeypatch.setattr(similarity, "_BROADCAST_BYTES", gate)
+        got = {
+            (r["vec_a"], r["vec_b"]): r["cosine"]
+            for r in cosine_near_dup_pairs(emb, "vec_id", "embedding", threshold=0.3).collect()
+        }
+        assert got == want, gate
+        assert not {zero_id, null_id} & {i for pair in got for i in pair}
 
 
-def test_cosine_near_dups_blocking_invariant(spark, sf_dir):
-    """The blocked matmul must emit exactly the same pair set for any
-    block size — including cross-block pairs whose larger id hashes
-    into the earlier block (the ordering-normalization path)."""
+def test_cosine_near_dups_blocking_invariant(spark, sf_dir, monkeypatch):
+    """The replicated block join (forced: the gate at zero bytes) must
+    emit exactly the corpus-shipped scan's pair set for any block size
+    — including cross-block pairs whose larger id hashes into the
+    earlier block (the ordering-normalization path)."""
+    from blockchain_indexer_spark.operators import similarity
     from blockchain_indexer_spark.operators.dedup import cosine_near_dup_pairs
     from blockchain_indexer_spark.sources.parquet import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").limit(150)
     want = {
         (r["vec_a"], r["vec_b"]): r["cosine"]
-        for r in cosine_near_dup_pairs(
-            emb, "vec_id", "embedding", threshold=0.3, block_size=1_000_000
-        ).collect()
+        for r in cosine_near_dup_pairs(emb, "vec_id", "embedding", threshold=0.3).collect()
     }
-    for bs in (7, 40):
+    assert want
+    monkeypatch.setattr(similarity, "_BROADCAST_BYTES", 0)
+    for bs in (1_000_000, 7, 40):
         got = {
             (r["vec_a"], r["vec_b"]): r["cosine"]
             for r in cosine_near_dup_pairs(

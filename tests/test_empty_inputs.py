@@ -67,6 +67,24 @@ def test_similarity_family_on_empty_queries(spark, empty_emb, sf_dir):
     assert lsh_topk(emb, empty_emb, k=3).count() == 0
 
 
+def test_exact_cosine_scans_on_empty_one_and_null_corpora(spark, empty_emb):
+    """No row, one row, or only NULL vectors: no pair, no neighbor, no
+    edge — an empty frame from each exact scan, not an error."""
+    from blockchain_indexer_spark.operators.dedup import cosine_near_dup_pairs
+    from blockchain_indexer_spark.operators.similarity import (
+        all_pairs_topk_cosine,
+        mutual_knn_graph,
+    )
+
+    one = spark.createDataFrame([(1, [0.5, 0.5], 0)], empty_emb.schema)
+    nulls = spark.createDataFrame([(1, None, 0), (2, None, 1)], empty_emb.schema)
+    for emb in (empty_emb, one, nulls):
+        assert cosine_near_dup_pairs(emb).count() == 0
+        assert all_pairs_topk_cosine(emb, k=3).count() == 0
+        assert all_pairs_topk_cosine(emb, k=3, queries=one).count() == 0
+        assert mutual_knn_graph(emb, k=3).count() == 0
+
+
 def test_profile_on_empty(spark, empty_docs):
     from blockchain_indexer_spark.operators.profile import profile
 

@@ -25,13 +25,16 @@ def test_brute_force_topk_shape_and_self_exclusion(spark, sf_dir):
     assert set(out["rank"]) == {1, 2, 3}
 
 
-def test_all_pairs_topk_cosine_equals_expression_scan(spark, sf_dir):
-    """The blocked matmul top-k must equal brute_force_topk's
-    quantized-cosine expression scan row for row, score bits included,
-    for the self-join and for a strided probe frame. Every vector has
-    two exact copies under other ids, so each query's score ties come
-    in threes and straddle block boundaries (and, at k=4, the rank
-    cut); an all-zero corpus gives an empty frame from both scans."""
+def test_all_pairs_topk_cosine_equals_expression_scan(spark, sf_dir, monkeypatch):
+    """The matmul top-k must equal brute_force_topk's quantized-cosine
+    expression scan row for row, score bits included, for the self-join
+    and for a strided probe frame, in both regimes: the corpus-shipped
+    scan and, with the gate forced to zero bytes, the replicated block
+    join. Every vector has two exact copies under other ids, so each
+    query's score ties come in threes and straddle slice and block
+    boundaries (and, at k=4, the rank cut); an all-zero corpus gives an
+    empty frame from both scans."""
+    from blockchain_indexer_spark.operators import similarity
     from blockchain_indexer_spark.operators.similarity import all_pairs_topk_cosine
 
     base = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").limit(60)
@@ -44,17 +47,104 @@ def test_all_pairs_topk_cosine_equals_expression_scan(spark, sf_dir):
             (r["query_id"], r["rank"], r["neighbor_id"], r["score"]) for r in df.collect()
         )
 
+    zeros = emb.withColumn("embedding", F.transform("embedding", lambda x: x * 0))
+    assert rows(brute_force_topk(zeros, zeros, k=4, metric="quantized_cosine")) == []
+    shipped_gate = similarity._BROADCAST_BYTES
     for queries in (None, emb.filter(F.col("vec_id") % 7 == 0)):
         want = rows(
             brute_force_topk(emb, emb if queries is None else queries, k=4,
                              metric="quantized_cosine")
         )
-        got = rows(all_pairs_topk_cosine(emb, k=4, queries=queries))
-        assert want and got == want
+        assert want
+        for gate in (shipped_gate, 0):
+            monkeypatch.setattr(similarity, "_BROADCAST_BYTES", gate)
+            assert rows(all_pairs_topk_cosine(emb, k=4, queries=queries)) == want, gate
+            assert rows(all_pairs_topk_cosine(zeros, k=4, queries=queries)) == []
 
-    zeros = emb.withColumn("embedding", F.transform("embedding", lambda x: x * 0))
-    assert rows(all_pairs_topk_cosine(zeros, k=4)) == []
-    assert rows(brute_force_topk(zeros, zeros, k=4, metric="quantized_cosine")) == []
+
+def test_exact_scans_reject_ragged_vector_widths(spark, monkeypatch):
+    """A corpus with 3- and 2-wide vectors fails on the driver with a
+    ValueError naming both widths, in both regimes, instead of inside
+    every worker's matmul."""
+    from blockchain_indexer_spark.operators import similarity
+    from blockchain_indexer_spark.operators.dedup import cosine_near_dup_pairs
+    from blockchain_indexer_spark.operators.similarity import all_pairs_topk_cosine
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [1.0, 1.0]), (4, None)],
+        "vec_id long, embedding array<float>",
+    )
+    for gate in (similarity._BROADCAST_BYTES, 0):
+        monkeypatch.setattr(similarity, "_BROADCAST_BYTES", gate)
+        with pytest.raises(ValueError, match="width: 2 and 3"):
+            cosine_near_dup_pairs(emb)
+        with pytest.raises(ValueError, match="width: 2 and 3"):
+            all_pairs_topk_cosine(emb, k=1)
+        with pytest.raises(ValueError, match="width: 2 and 3"):
+            all_pairs_topk_cosine(emb.filter("vec_id < 3"), k=1, queries=emb)
+
+
+def test_exact_cosine_float64_kernel_is_int64_exact():
+    """_exact_cosine runs its matmul in float64 (BLAS) only while
+    d·max|x|² < 2^53, and must equal the int64 arithmetic bit for bit
+    on either side of that bound. Far outside it a float64 matmul
+    rounds a product and gets the dot wrong, so there the int64
+    fallback is what keeps the result exact."""
+    from math import isqrt
+
+    from blockchain_indexer_spark.operators.similarity import _exact_cosine
+
+    def int64_reference(qm, cm):
+        dots = (qm @ cm.T).astype(np.float64)
+        nq = (qm * qm).sum(axis=1).astype(np.float64)
+        nc = (cm * cm).sum(axis=1).astype(np.float64)
+        return dots / np.sqrt(nq[:, None] * nc[None, :])
+
+    rng = np.random.default_rng(7)
+    d = 64
+    inside = isqrt((2**53 - 1) // d)  # the largest max|x| with d·max|x|² < 2^53
+    for top in (inside, inside + 1):
+        m = rng.integers(-top, top + 1, size=(40, d), dtype=np.int64)
+        m[0, 0], m[1, 1] = top, -top
+        assert (d * top * top < 2**53) == (top == inside)
+        got, want = _exact_cosine(m[:15], m), int64_reference(m[:15], m)
+        assert got.tobytes() == want.tobytes(), top
+
+    big = 2**30 + 1  # big² rounds in float64
+    qm = np.array([[big, big + 1, 1]], dtype=np.int64)
+    cm = np.array([[big, -(big - 1), 1]], dtype=np.int64)  # exact dot: 2
+    want = int64_reference(qm, cm)
+    assert want.tobytes() != int64_reference(qm * 1.0, cm * 1.0).tobytes()
+    assert _exact_cosine(qm, cm).tobytes() == want.tobytes()
+
+
+def test_collect_rows_is_cosine_rows_on_the_driver(spark):
+    """The shipped scan quantizes on the driver (_collect_rows); it must
+    give the matrix Spark's quantize gives (_cosine_rows), half-way
+    values and 0.5 - 2^-54 included, and drop the same NULL,
+    NULL-element and zero-norm rows. NaN raises, as Spark's bigint cast
+    does."""
+    from blockchain_indexer_spark.operators.similarity import _collect_rows, _cosine_rows
+
+    edge = [0.49999999999999994, -0.49999999999999994, 0.5, -0.5, 2.5, -2.5, 0.0625]
+    emb = spark.createDataFrame(
+        [
+            (5, edge),
+            (1, [x * 1000 for x in edge[::-1]]),
+            (3, [0.0] * 7),
+            (4, None),
+            (2, [1.0, None, 0.0, 0.0, 0.0, 0.0, 0.0]),
+            (7, [0.0625, 0.0, 0.0, 0.0, 0.0, 0.0, -0.0005]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    for scale in (1, 1000):
+        want = sorted((r["_id"], r["_v"]) for r in _cosine_rows(emb, "vec_id", "embedding", scale).collect())
+        ids, m = _collect_rows(emb, "vec_id", "embedding", scale, 7)
+        assert list(zip(ids.tolist(), m.tolist())) == want
+    nan = spark.createDataFrame([(1, [float("nan"), 1.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="quantize"):
+        _collect_rows(nan, "vec_id", "embedding", 1000, 2)
 
 
 def test_lsh_recall_vs_exact(spark, sf_dir):
@@ -323,16 +413,22 @@ def test_mutual_knn_graph_ivf_swap_recall(spark):
     assert all(s % 8 == d % 8 for s, d in ivf)
 
 
-def test_mutual_knn_graph_pins_retrieval_before_mutualization(spark, sf_dir):
+def test_mutual_knn_graph_pins_retrieval_before_mutualization(spark, sf_dir, monkeypatch):
     """The directed top-k frame is localCheckpointed before the
     mutualization self-join: without the pin both join sides re-run
-    the retrieval (2 MapInPandas stages in the executed plan, ~2x the
-    matmul at stress scale). The pinned plan reads the materialized
-    RDD on both sides — no Arrow retrieval stage may remain."""
+    the retrieval (2 Arrow stages in the executed plan, ~2x the matmul
+    at stress scale). The pinned plan reads the materialized RDD on
+    both sides — no Arrow retrieval stage may remain, in either
+    regime."""
+    from blockchain_indexer_spark.operators import similarity
     from blockchain_indexer_spark.operators.similarity import mutual_knn_graph
     from blockchain_indexer_spark.sources.parquet import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
+    g = mutual_knn_graph(emb, "vec_id", "embedding", k=5)
+    plan = g._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" not in plan, "retrieval re-runs per join side"
+    monkeypatch.setattr(similarity, "_BROADCAST_BYTES", 0)
     g = mutual_knn_graph(emb, "vec_id", "embedding", k=5)
     plan = g._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in plan, "retrieval re-runs per join side"
