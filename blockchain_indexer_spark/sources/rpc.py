@@ -33,44 +33,6 @@ def _pool_map(fn, items, pool_size: int) -> list:
         return list(pool.map(fn, items))
 
 
-BLOCK_FETCH_SCHEMA = T.StructType(
-    [
-        T.StructField("number", T.LongType()),
-        T.StructField("hash", T.StringType()),
-        T.StructField("timestamp", T.LongType()),
-        T.StructField("total_transaction_count", T.IntegerType()),
-        T.StructField("tx_hashes", T.ArrayType(T.StringType())),
-    ]
-)
-
-
-def download_blocks(
-    numbers: DataFrame, transport: Transport, pool_size: int = 24
-) -> DataFrame:
-    """S8: block-number stream → block headers + tx hash list via
-    `eth_getBlockByNumber` (Indexer.cs:210-217, 24-way)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def fetch(n: int) -> dict:
-            b = transport("eth_getBlockByNumber", [hex(int(n)), True])
-            txs = b.get("transactions", [])
-            return {
-                "number": int(b["number"], 16) if isinstance(b["number"], str) else b["number"],
-                "hash": b["hash"],
-                "timestamp": int(b["timestamp"], 16)
-                if isinstance(b["timestamp"], str)
-                else b["timestamp"],
-                "total_transaction_count": len(txs),
-                "tx_hashes": [t["hash"] if isinstance(t, dict) else t for t in txs],
-            }
-
-        for pdf in it:
-            rows = _pool_map(fetch, pdf["number"].tolist(), pool_size)
-            yield pd.DataFrame(rows, columns=[f.name for f in BLOCK_FETCH_SCHEMA.fields])
-
-    return numbers.mapInPandas(batches, BLOCK_FETCH_SCHEMA)
-
-
 RECEIPT_FETCH_SCHEMA = T.StructType(
     [
         T.StructField("tx_hash", T.StringType()),
@@ -190,10 +152,11 @@ def _hex_int(v) -> int:
 def download_blocks_with_txs(
     numbers: DataFrame, transport: Transport, pool_size: int = 24
 ) -> DataFrame:
-    """S8 with the full widening tuple: `eth_getBlockByNumber(n, true)`
-    returns complete transaction objects (Indexer.cs:210-217 requests
-    exactly that), so the feed assembly needs no second tx fetch —
-    only receipts (S9) remain."""
+    """S8: block-number stream → blocks with the full widening tuple
+    (24-way). `eth_getBlockByNumber(n, true)` returns complete
+    transaction objects (Indexer.cs:210-217 requests exactly that), so
+    the feed assembly needs no second tx fetch — only receipts (S9)
+    remain."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def fetch(n: int) -> dict:

@@ -17,13 +17,27 @@ simply fail the gate again until their missing txs arrive (T3).
 Sink layout: one parquet directory per final table, partitioned by
 block range (`block_group = block_number div 100_000`) so reorg
 retraction (T5) and block-range queries prune partitions.
+
+Every parquet-sink write (a batch's nine appends and two cache
+refreshes, a retract, a compact) commits once, like the reference's
+one Serializable import transaction (ImportProcedure.cs:17-27): new
+files are staged under a hidden `.pending/` inside each table they
+land in, then renaming one `.commit` marker (the list of the files
+they replace) into the sink root commits them all, and `_settle`
+applies it. A write that fails before the marker leaves only staged
+files, which the next `_settle` drops, so a retried batch runs against
+the tables as they were. Readers never see `.pending/`: Spark skips
+dot-prefixed directories.
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
-import re
 import shutil
+import threading
+import time
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -144,50 +158,10 @@ def _has_data_files(path: str) -> bool:
     return False
 
 
-# The swap journal's set-aside old copies. retract() swaps whole tables
-# under the sink root (tag "retract"), compact() swaps block_group
-# partitions inside a table dir (tag "compact").
-_SWAP_OLD = re.compile(r"\.(?:retract|compact)-old-(.+)")
-
-
-def _swap_dir(parent: str, name: str, tag: str, write) -> None:
-    """Replace the directory ``parent/name`` with the one ``write(tmp)``
-    builds. A direct overwrite deletes the old directory before the new
-    files commit, so a crash mid-write would lose the only copy; the new
-    copy is written aside to ``.<tag>-tmp-<name>`` and swapped in by two
-    renames instead. A crash between the renames leaves
-    ``.<tag>-old-<name>`` as the only copy, which ``_heal_swaps``
-    restores. In-process readers outside the import lock can see the
-    directory absent for the instant between the renames — acceptable
-    for this sink (single-driver analytics reads run between batches);
-    a table format with atomic commits (Delta/Iceberg) is the
-    production answer for lock-free readers (SCALE.md)."""
-    final = os.path.join(parent, name)
-    tmp = os.path.join(parent, f".{tag}-tmp-{name}")
-    old = os.path.join(parent, f".{tag}-old-{name}")
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    write(tmp)
-    os.rename(final, old)
-    os.rename(tmp, final)
-    shutil.rmtree(old)
-
-
-def _heal_swaps(parent: str) -> None:
-    """Settle every ``.<tag>-old-<name>`` under ``parent``: with
-    ``name`` missing it holds the only copy (a crash between the swap's
-    renames) and is renamed back; otherwise it is post-swap residue and
-    is dropped."""
-    for entry in sorted(os.listdir(parent)):
-        m = _SWAP_OLD.fullmatch(entry)
-        if m is None:
-            continue
-        orphan = os.path.join(parent, entry)
-        final = os.path.join(parent, m.group(1))
-        if os.path.isdir(final):
-            shutil.rmtree(orphan, ignore_errors=True)
-        else:
-            os.rename(orphan, final)
+# A write's staged files, inside each table dir it touches, and the
+# commit marker in the sink root (see the module docstring).
+_PENDING = ".pending"
+_MARKER = ".commit"
 
 
 # K5: the reference broadcasts this magic hash to websocket consumers
@@ -326,9 +300,11 @@ class IngestPipeline:
         announce the reorg (Indexer.cs:273-325); the caller re-ingests
         from `reorg_block`. On the partitioned parquet sink this is a
         filter-and-rewrite (a partition-range delete in production —
-        block_group pruning keeps the rewrite to the affected ranges);
-        derived cache tables are dropped and rebuild in full on the
-        next batch. JDBC targets run the reference's SQL delete
+        block_group pruning keeps the rewrite to the affected ranges):
+        each kept table is staged, and one commit replaces every file of
+        those tables and drops both cache tables, which rebuild in full
+        on the next batch. A crash before the commit leaves the old
+        branch whole. JDBC targets run the reference's SQL delete
         server-side: one transaction issuing DELETE .. WHERE
         block_number >= ? over block + the 8 event tables and dropping
         the two cache tables (Indexer.cs:273-325 runs the same ordered
@@ -353,48 +329,81 @@ class IngestPipeline:
 
         # under the import lock: the rewrite deletes part files a
         # concurrent promote's anti-join may be scanning, and a batch
-        # appended between the filter and the overwrite would dodge
+        # appended between the filter and the commit would dodge
         # the retraction entirely (same serialization the reference
         # gets from its Serializable transaction)
         with self._import_lock():
-            self._recover_swaps()
+            self._settle()
             tables = {}
             for name in ("block", *EVENT_TABLES):
                 df = self.read_final(name)
                 if df is not None:
                     tables[name] = df
             kept = retract_from(tables, reorg_block)
+            # the old files stay until the commit, so the rewrite reads
+            # them where they are
             for name, df in kept.items():
-                block_col = "number" if name == "block" else "block_number"
-                # the snapshot dies with the driver, so the rewrite
-                # goes through the swap journal, never an overwrite
-                snap = df.drop("block_group").localCheckpoint(eager=True)
-                _swap_dir(
-                    self.out_dir,
-                    name,
-                    "retract",
-                    _with_block_group(snap, block_col)
-                    .write.mode("overwrite")
-                    .partitionBy("block_group")
-                    .parquet,
-                )
-            for cache in (CACHE_BALANCES, CACHE_TRUST):
-                shutil.rmtree(self._table_path(cache), ignore_errors=True)
+                self._append(name, df, "number" if name == "block" else "block_number")
+            self._commit(
+                *(self._table_path(name) for name in (*kept, CACHE_BALANCES, CACHE_TRUST))
+            )
         self.signal_reorg()
 
-    def _recover_swaps(self) -> None:
-        """Heal a crash inside a swap (``_swap_dir``): retract's table
-        swaps under the sink root first, then compact's partition swaps
-        inside each table. Runs under the import lock at the start of
-        process_batch, retract and compact, so no write lands in a
-        partition whose only copy is still an orphan."""
+    def _staged(self):
+        """(staged file, its final path) for each file under a table's
+        .pending/ dir; the final path is the same relative path in the
+        table."""
+        for entry in sorted(os.listdir(self.out_dir)):
+            pending = os.path.join(self.out_dir, entry, _PENDING)
+            for root, _dirs, files in os.walk(pending):
+                for f in files:
+                    src = os.path.join(root, f)
+                    yield src, os.path.join(self.out_dir, entry, os.path.relpath(src, pending))
+
+    def _commit(self, *replaced: str) -> None:
+        """Commit every staged file, replacing all current files under
+        the `replaced` table or partition dirs: their list is written to
+        .commit.tmp and renamed to .commit (the commit point), then
+        _settle applies it. A staged file that lands on a current file's
+        path (_SUCCESS) replaces it, so that path is not listed."""
+        staged = {dst for _src, dst in self._staged()}
+        old = []
+        for top in replaced:
+            for root, dirs, files in os.walk(top):
+                dirs[:] = [d for d in dirs if d != _PENDING]
+                old += [os.path.join(root, f) for f in files]
+        tmp = os.path.join(self.out_dir, _MARKER + ".tmp")
+        with open(tmp, "w") as f:
+            json.dump([os.path.relpath(p, self.out_dir) for p in old if p not in staged], f)
+        os.replace(tmp, os.path.join(self.out_dir, _MARKER))
+        self._settle()
+
+    def _settle(self) -> None:
+        """Apply the commit the last write left, or drop what a write
+        staged without committing. Runs first under the import lock in
+        process_batch, retract and compact. Every step can run again
+        after a crash: staged files move to their final paths, the
+        replaced files go (with a partition or cache dir they leave
+        empty), then the marker."""
         if not os.path.isdir(self.out_dir):
             return
-        _heal_swaps(self.out_dir)
-        for entry in sorted(os.listdir(self.out_dir)):
-            path = os.path.join(self.out_dir, entry)
-            if not entry.startswith(".") and os.path.isdir(path):
-                _heal_swaps(path)
+        marker = os.path.join(self.out_dir, _MARKER)
+        if os.path.exists(marker):
+            with open(marker) as f:
+                replaced = json.load(f)
+            for src, dst in self._staged():
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.replace(src, dst)
+            for rel in replaced:
+                path = os.path.join(self.out_dir, rel)
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(path)
+                with contextlib.suppress(OSError):
+                    os.rmdir(os.path.dirname(path))
+        for entry in os.listdir(self.out_dir):
+            shutil.rmtree(os.path.join(self.out_dir, entry, _PENDING), ignore_errors=True)
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(marker)
 
     def _table_path(self, name: str) -> str:
         return os.path.join(self.out_dir, name)
@@ -549,7 +558,7 @@ class IngestPipeline:
             _with_block_group(df, block_col)
             .write.mode("append")
             .partitionBy("block_group")
-            .parquet(self._table_path(name))
+            .parquet(os.path.join(self._table_path(name), _PENDING))
         )
 
     def compact(
@@ -564,12 +573,12 @@ class IngestPipeline:
         reference's Postgres heap never has it, so this is the
         parquet-sink twin of its autovacuum). Each block_group
         partition with more than ``min_files`` files is rewritten to
-        ``ceil(bytes / target_file_bytes)`` files and atomically
-        swapped in. Runs under the import lock, so it cannot race a
-        concurrent promote; run it between batches or from a cron,
-        like any maintenance window. Parquet sink only (JDBC targets
-        compact server-side). Returns {partition: (files_before,
-        files_after)}.
+        ``ceil(bytes / target_file_bytes)`` files, staged, and swapped
+        in by one commit for the whole table. Runs under the import
+        lock, so it cannot race a concurrent promote; run it between
+        batches or from a cron, like any maintenance window. Parquet
+        sink only (JDBC targets compact server-side). Returns
+        {partition: (files_before, files_after)}.
 
         Scale note: each partition rewrite is an independent
         coalesce-and-write job over one block_group — embarrassingly
@@ -585,7 +594,7 @@ class IngestPipeline:
         if not os.path.isdir(table_dir):
             return results
         with self._import_lock():
-            self._recover_swaps()
+            self._settle()
             for part in sorted(os.listdir(table_dir)):
                 part_dir = os.path.join(table_dir, part)
                 if not (part.startswith("block_group=") and os.path.isdir(part_dir)):
@@ -595,19 +604,17 @@ class IngestPipeline:
                     continue
                 total = sum(os.path.getsize(os.path.join(part_dir, f)) for f in files)
                 n_out = max(1, -(-total // target_file_bytes))
-                _swap_dir(
-                    table_dir,
-                    part,
-                    "compact",
+                staged = os.path.join(table_dir, _PENDING, part)
+                (
                     self.spark.read.parquet(part_dir)
                     .coalesce(int(n_out))
                     .write.mode("overwrite")
-                    .parquet,
+                    .parquet(staged)
                 )
-                n_after = len(
-                    [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
-                )
+                n_after = len([f for f in os.listdir(staged) if f.endswith(".parquet")])
                 results[part] = (len(files), n_after)
+            if results:
+                self._commit(*(os.path.join(table_dir, part) for part in results))
         return results
 
     def _import_lock(self):
@@ -630,12 +637,6 @@ class IngestPipeline:
         JDBC multi-instance deployments must instead run the promote
         under a SERIALIZABLE transaction server-side, exactly like the
         reference (SCALE.md)."""
-        import contextlib  # noqa: PLC0415
-        import threading  # noqa: PLC0415
-        import time  # noqa: PLC0415
-
-        import shutil  # noqa: PLC0415
-
         @contextlib.contextmanager
         def lock():
             path = os.path.join(self.out_dir, ".import.lock")
@@ -726,12 +727,10 @@ class IngestPipeline:
             feed.unpersist()
 
     def _process_batch_locked(self, feed: DataFrame) -> None:
-        # heal any crashed swap FIRST: a missing final table with its
-        # only copy in '.retract-old-*' would otherwise read as an empty
-        # (first-run) table and double-import everything, and an append
-        # into a partition whose only copy is in '.compact-old-*' would
-        # recreate the directory and hide the orphan for good
-        self._recover_swaps()
+        # settle the last write FIRST: a commit it left unapplied holds
+        # rows the anti-join must see, and a failed batch's staged files
+        # must not land with this one
+        self._settle()
         block_staging = feed.select(
             F.col("block_number").alias("number"),
             F.col("block_hash").alias("hash"),
@@ -827,10 +826,11 @@ class IngestPipeline:
             finals = self._cache_inputs()
             if finals is not None:
                 caches = self.refresh_caches(tables, finals)
-        # published only after every append succeeded: a failed batch
-        # leaves both caches as they were
         if caches:
             self._publish_caches(caches)
+        if self.jdbc_url is None:
+            # the batch's one commit: nine appends and both caches
+            self._commit(*(self._table_path(name) for name in caches or ()))
         if hashes:
             self.on_imported(hashes)
         if self.on_batch is not None:
@@ -880,10 +880,10 @@ class IngestPipeline:
         tables for one batch (import_from_staging_2,
         0.0.64.sql:2272-2376; T8). `finals` are the post-append tables
         from _cache_inputs. Returns each refreshed cache as an eager
-        local checkpoint for _publish_caches: the refreshed plan reads
-        the cache it will replace (read-modify-write), and the batch's
-        appends must all commit before either cache is overwritten.
-        The trust cache waits until crc_trust holds data.
+        local checkpoint for _publish_caches: the refresh runs inside
+        the append pool, and a JDBC overwrite would otherwise read the
+        table it replaces. The trust cache waits until crc_trust holds
+        data.
 
         The stale sets come from THIS batch's extracted rows (small,
         broadcast); the fresh views run over the full post-append
@@ -940,7 +940,9 @@ class IngestPipeline:
             return {name: fut.result() for name, fut in futures.items()}
 
     def _publish_caches(self, caches: dict[str, DataFrame]) -> None:
-        """Overwrite each cache table with its refreshed snapshot."""
+        """Write each refreshed cache: a JDBC table overwrite, or, on
+        the parquet sink, files staged under the cache's .pending/ that
+        replace the old cache at the batch's commit."""
 
         def publish(name: str) -> None:
             if self.jdbc_url is not None:
@@ -950,7 +952,9 @@ class IngestPipeline:
                     properties=self.jdbc_properties,
                 )
                 return
-            caches[name].write.mode("overwrite").parquet(self._table_path(name))
+            caches[name].write.mode("overwrite").parquet(
+                os.path.join(self._table_path(name), _PENDING)
+            )
 
         with ThreadPoolExecutor(max_workers=len(caches)) as pool:
             list(pool.map(publish, caches))

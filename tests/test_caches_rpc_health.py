@@ -22,7 +22,7 @@ from blockchain_indexer_spark.operators.views import (
     crc_ledger,
 )
 from blockchain_indexer_spark.sources.rpc import (
-    download_blocks,
+    download_blocks_with_txs,
     download_receipts,
     fetch_safe_owners,
 )
@@ -155,9 +155,9 @@ def make_transport():
 @pytest.mark.slowe2e
 def test_download_blocks(spark):
     nums = spark.createDataFrame([(1,), (2,), (3,)], "number long")
-    got = {r["number"]: r for r in download_blocks(nums, make_transport(), 4).collect()}
+    got = {r["number"]: r for r in download_blocks_with_txs(nums, make_transport(), 4).collect()}
     assert got[1]["total_transaction_count"] == 2
-    assert got[1]["tx_hashes"] == ["0xt1", "0xt2"]
+    assert [t["hash"] for t in got[1]["transactions"]] == ["0xt1", "0xt2"]
     assert got[2]["total_transaction_count"] == 0
     assert got[3]["hash"] == "0xb3" and got[3]["timestamp"] == 1010
 
@@ -224,8 +224,6 @@ def test_download_blocks_with_txs_full_and_hash_only(spark):
     """S8 full-tx variant: dict transactions map to the widening tuple;
     a hash-only gateway reply (strings) degrades to NULL tx fields
     rather than crashing (the reference refetches those separately)."""
-    from blockchain_indexer_spark.sources.rpc import download_blocks_with_txs
-
     def transport(method, params):
         assert method == "eth_getBlockByNumber" and params[1] is True
         n = int(params[0], 16)

@@ -1,19 +1,30 @@
-"""Import-lock steal semantics and compact crash recovery.
+"""Import-lock steal semantics and the parquet sink's one commit per
+write: a failed batch, a crash inside a commit and a crash before it.
 
-The lock is the parquet-sink stand-in for the reference's Serializable
-promote transaction (Persistence/ImportProcedure.cs:17-27): the
-exactly-once anti-join is only exact if promotes serialize."""
+The lock and the commit are the parquet-sink stand-in for the
+reference's Serializable promote transaction
+(Persistence/ImportProcedure.cs:17-27): the exactly-once anti-join is
+only exact if promotes serialize and each commits whole."""
 
 from __future__ import annotations
 
 import os
+import shutil
 import threading
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from blockchain_indexer_spark.streaming.runner import CACHE_BALANCES, CACHE_TRUST, IngestPipeline
+from blockchain_indexer_spark.streaming import runner
+from blockchain_indexer_spark.streaming.runner import (
+    BLOCK_GROUP_SIZE,
+    CACHE_BALANCES,
+    CACHE_TRUST,
+    EVENT_TABLES,
+    FEED_SCHEMA,
+    IngestPipeline,
+)
 from tests.test_streaming import feed_df  # noqa: F401 — module fixture
 
 
@@ -115,8 +126,6 @@ def test_robbed_holder_leaves_thief_lock_alone(spark, tmp_path_factory):
     """A holder whose lock was (wrongly) stolen and re-acquired must not
     delete the thief's lock at release — its own token no longer reads
     back, which is the robbery signal."""
-    import shutil
-
     root = str(tmp_path_factory.mktemp("robbed"))
     pipe = IngestPipeline(spark, os.path.join(root, "final"))
     lock_path = os.path.join(pipe.out_dir, ".import.lock")
@@ -132,109 +141,200 @@ def test_robbed_holder_leaves_thief_lock_alone(spark, tmp_path_factory):
     shutil.rmtree(lock_path)
 
 
-def test_compact_recovers_orphaned_partition(spark, tmp_path_factory, feed_df):  # noqa: F811
-    """Crash between compact's two swap renames leaves the partition
-    only under .compact-old-<part>; the next compact run must restore
-    it before doing anything else."""
-    root = str(tmp_path_factory.mktemp("recover"))
-    pipe = IngestPipeline(spark, os.path.join(root, "final"))
-    for mod in range(2):
-        pipe.process_batch(feed_df.filter(F.col("block_number") % 2 == mod))
-    before = (
-        pipe.read_final("transaction").toPandas().sort_values("hash").reset_index(drop=True)
+SINK_TABLES = ("block", *EVENT_TABLES, CACHE_BALANCES, CACHE_TRUST)
+
+
+def _rows(pipe):
+    """Every table of the sink, caches included, as sorted row reprs."""
+    out = {}
+    for name in SINK_TABLES:
+        df = pipe.read_final(name)
+        out[name] = None if df is None else sorted(map(repr, df.collect()))
+    return out
+
+
+def _visible(out_dir):
+    """{path: mtime} of each file a reader of the sink's tables sees."""
+    out = {}
+    for table in os.listdir(out_dir):
+        if table.startswith("."):
+            continue
+        for root, dirs, files in os.walk(os.path.join(out_dir, table)):
+            dirs[:] = [d for d in dirs if d != ".pending"]
+            for f in files:
+                path = os.path.join(root, f)
+                out[os.path.relpath(path, out_dir)] = os.stat(path).st_mtime_ns
+    return out
+
+
+def _halves(feed):
+    return [feed.filter(F.col("block_number") % 2 == mod) for mod in range(2)]
+
+
+def _spread(feed):
+    """The fixture chain with each block in its own block_group, so a
+    commit moves enough files for a crash after 20 moves."""
+    base = feed.agg(F.min("block_number")).first()[0]
+    shift = (F.col("block_number") - base) * BLOCK_GROUP_SIZE
+    return feed.withColumn("block_number", F.col("block_number") + shift)
+
+
+def _remined(feed, reorg_block):
+    """The re-mined branch a reorg re-ingests: every block from
+    reorg_block on, empty and with a new hash."""
+    return (
+        feed.filter(F.col("block_number") >= reorg_block)
+        .select(
+            "block_number",
+            F.concat("block_hash", F.lit("-remined")).alias("block_hash"),
+            "block_timestamp",
+            F.lit(0).alias("total_transaction_count"),
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in FEED_SCHEMA.fields[4:]],
+        )
+        .distinct()
     )
-    table_dir = os.path.join(root, "final", "transaction")
-    part = sorted(p for p in os.listdir(table_dir) if p.startswith("block_group="))[0]
-    # simulate the crash window: partition renamed away, tmp lost
-    os.rename(
-        os.path.join(table_dir, part), os.path.join(table_dir, f".compact-old-{part}")
-    )
-    assert not os.path.isdir(os.path.join(table_dir, part))
-    pipe.compact("transaction", min_files=10_000)  # high threshold: recovery only
-    after = (
-        pipe.read_final("transaction").toPandas().sort_values("hash").reset_index(drop=True)
-    )
-    assert before.equals(after)
-    assert os.path.isdir(os.path.join(table_dir, part))
-    assert not os.path.isdir(os.path.join(table_dir, f".compact-old-{part}"))
 
 
-def test_retract_crash_recovery_restores_table(spark, tmp_path_factory, feed_df):  # noqa: F811
-    """A crash between retract's two renames leaves the only copy in
-    .retract-old-<table>; the next batch (or retract) must restore it
-    instead of treating the table as empty and double-importing."""
-    root = str(tmp_path_factory.mktemp("rr"))
-    pipe = IngestPipeline(spark, os.path.join(root, "final"))
-    pipe.process_batch(feed_df)
-    before = (
-        pipe.read_final("transaction").toPandas().sort_values("hash").reset_index(drop=True)
-    )
-    # simulate the crash window
-    os.rename(
-        os.path.join(root, "final", "transaction"),
-        os.path.join(root, "final", ".retract-old-transaction"),
-    )
-    assert pipe.read_final("transaction") is None
-    pipe.process_batch(feed_df)  # heals first, then dedups to zero new
-    after = (
-        pipe.read_final("transaction").toPandas().sort_values("hash").reset_index(drop=True)
-    )
-    assert before.equals(after)
+@pytest.fixture(scope="module")
+def sinks(spark, tmp_path_factory, feed_df):  # noqa: F811
+    """Sinks the cases copy instead of ingesting again, and the tables
+    of the clean runs they must equal. For the fixture chain and the
+    spread one: "even" ingests the even blocks and "full" then the odd
+    ones, whose tables are "clean". "spread_reorg" is spread_full
+    retracted at its sixth block with the re-mined branch ingested."""
+    root = str(tmp_path_factory.mktemp("sinks"))
+    spread = _spread(feed_df).cache()
+    out = {}
+    for tag, feed in (("", feed_df), ("spread_", spread)):
+        even, out[tag + "odd"] = _halves(feed)
+        for d in ("even", "full"):
+            out[tag + d] = os.path.join(root, tag + d)
+        IngestPipeline(spark, out[tag + "even"]).process_batch(even)
+        shutil.copytree(out[tag + "even"], out[tag + "full"])
+        pipe = IngestPipeline(spark, out[tag + "full"])
+        pipe.process_batch(out[tag + "odd"])
+        out[tag + "clean"] = _rows(pipe)
+    blocks = sorted(r[0] for r in spread.select("block_number").distinct().collect())
+    out["reorg_block"] = blocks[5]
+    out["branch"] = _remined(spread, out["reorg_block"])
+    shutil.copytree(out["spread_full"], os.path.join(root, "reorg"))
+    pipe = IngestPipeline(spark, os.path.join(root, "reorg"))
+    pipe.retract(out["reorg_block"])
+    pipe.process_batch(out["branch"])
+    out["spread_reorg"] = _rows(pipe)
+    return out
 
 
-def test_append_restores_compact_orphan_before_writing(spark, tmp_path_factory, feed_df):  # noqa: F811
-    """A crash between compact's renames, then a live batch appending
-    into the same block_group: the batch must restore the orphaned
-    partition before it appends. Otherwise the append recreates the
-    partition directory, the next compact() takes the orphan for
-    post-swap residue and deletes the only copy of its rows."""
-    root = str(tmp_path_factory.mktemp("orphan"))
-    halves = [feed_df.filter(F.col("block_number") % 2 == mod) for mod in range(2)]
+@pytest.mark.parametrize("fails", ["block", *EVENT_TABLES, "caches"])
+def test_failed_write_then_retry_equals_clean_run(spark, tmp_path, sinks, fails):
+    """One write of a batch fails once (one of the nine appends, or the
+    cache write) and the batch is retried, as foreachBatch does. The
+    failure leaves every table's files as they were, file for file, and
+    after the retry all eleven tables, caches included, equal a clean
+    run row for row."""
+    out_dir = str(tmp_path / "final")
+    shutil.copytree(sinks["even"], out_dir)
+    before = _visible(out_dir)
+    assert {path.split(os.sep)[0] for path in before} >= {CACHE_BALANCES, CACHE_TRUST}
+    pipe = IngestPipeline(spark, out_dir)
+    seam = "_publish_caches" if fails == "caches" else "_append"
+    write = getattr(pipe, seam)
+    failed = []
 
-    def transactions(pipe):
-        return pipe.read_final("transaction").toPandas().sort_values("hash").reset_index(drop=True)
+    def fail_once(*args):
+        if not failed and fails in ("caches", args[0]):
+            failed.append(fails)
+            raise OSError("injected write failure")
+        return write(*args)
 
-    clean = IngestPipeline(spark, os.path.join(root, "clean"))
-    for half in halves:
-        clean.process_batch(half)
-
-    pipe = IngestPipeline(spark, os.path.join(root, "final"))
-    pipe.process_batch(halves[0])
-    table_dir = os.path.join(root, "final", "transaction")
-    part = sorted(p for p in os.listdir(table_dir) if p.startswith("block_group="))[-1]
-    orphan = os.path.join(table_dir, f".compact-old-{part}")
-    os.rename(os.path.join(table_dir, part), orphan)  # the crash window
-    orphan_files = set(os.listdir(orphan))
-    pipe.process_batch(halves[1])
-    assert not os.path.exists(orphan)
-    assert orphan_files <= set(os.listdir(os.path.join(table_dir, part)))
-    pipe.compact("transaction", min_files=10_000)
-    assert transactions(pipe).equals(transactions(clean))
+    setattr(pipe, seam, fail_once)
+    with pytest.raises(OSError, match="injected write failure"):
+        pipe.process_batch(sinks["odd"])
+    assert _visible(out_dir) == before
+    pipe.process_batch(sinks["odd"])
+    assert _rows(pipe) == sinks["clean"]
 
 
-def test_failed_append_publishes_no_cache(spark, tmp_path_factory, feed_df):  # noqa: F811
-    """The cache refresh runs next to the appends, but the caches are
-    overwritten only once every append has returned: a batch whose
-    erc20_transfer append fails leaves both cache directories as they
-    were, file for file."""
-    root = str(tmp_path_factory.mktemp("failed-append"))
-    pipe = IngestPipeline(spark, os.path.join(root, "final"))
-    pipe.process_batch(feed_df.filter(F.col("block_number") % 2 == 0))
+def _crash_moves_after(monkeypatch, k):
+    """Make the commit's (k+1)-th staged-file move raise."""
+    replace = os.replace
+    moves = []
 
-    def files(name):
-        path = pipe._table_path(name)
-        return {f: os.stat(os.path.join(path, f)).st_mtime_ns for f in os.listdir(path)}
+    def crashing_replace(src, dst):
+        if ".pending" in str(src).split(os.sep):
+            if len(moves) == k:
+                raise OSError("injected crash")
+            moves.append(src)
+        replace(src, dst)
 
-    before = {name: files(name) for name in (CACHE_BALANCES, CACHE_TRUST)}
-    assert all(before.values())
-    append = pipe._append
+    monkeypatch.setattr(runner.os, "replace", crashing_replace)
 
-    def failing_append(name, df, block_col):
-        if name == "erc20_transfer":
-            raise OSError("injected append failure")
-        append(name, df, block_col)
 
-    pipe._append = failing_append
-    with pytest.raises(OSError, match="injected append failure"):
-        pipe.process_batch(feed_df.filter(F.col("block_number") % 2 == 1))
-    assert {name: files(name) for name in (CACHE_BALANCES, CACHE_TRUST)} == before
+@pytest.mark.parametrize("k", [0, 3, 20])
+@pytest.mark.parametrize("op", ["process_batch", "retract", "compact"])
+def test_crash_inside_commit_heals_on_next_call(spark, tmp_path, sinks, monkeypatch, op, k):
+    """A crash after the commit marker, k staged files into the moves.
+    The next batch must finish the commit before it reads: the retried
+    batch for process_batch, the re-mined branch for retract, a
+    redelivery for compact. The tables must then equal a clean run."""
+    # (sink it starts from, the op, the next batch, the clean run)
+    start, run, nxt, want = {
+        "process_batch": (
+            "spread_even",
+            lambda p: p.process_batch(sinks["spread_odd"]),
+            "spread_odd",
+            "spread_clean",
+        ),
+        "retract": (
+            "spread_full",
+            lambda p: p.retract(sinks["reorg_block"]),
+            "branch",
+            "spread_reorg",
+        ),
+        "compact": (
+            "spread_full",
+            lambda p: p.compact("transaction", min_files=0),
+            "spread_odd",
+            "spread_clean",
+        ),
+    }[op]
+    out_dir = str(tmp_path / "final")
+    shutil.copytree(sinks[start], out_dir)
+    pipe = IngestPipeline(spark, out_dir)
+    _crash_moves_after(monkeypatch, k)
+    with pytest.raises(OSError, match="injected crash"):
+        run(pipe)
+    monkeypatch.undo()
+    marker = os.path.join(out_dir, ".commit")
+    assert os.path.exists(marker)
+    pipe.process_batch(sinks[nxt])
+    assert not os.path.exists(marker)
+    assert _rows(pipe) == sinks[want]
+
+
+def test_retract_crash_recovery_restores_table(spark, tmp_path, sinks, monkeypatch):
+    """A retract that crashes before its commit marker leaves the old
+    branch whole, file for file; a second retract plus the re-mined
+    branch then equals a clean retract. (The next reorg check compares
+    the chain against `block`, so a half-retracted sink would never be
+    retracted again.)"""
+    out_dir = str(tmp_path / "final")
+    shutil.copytree(sinks["spread_full"], out_dir)
+    before = _visible(out_dir)
+    pipe = IngestPipeline(spark, out_dir)
+    replace = os.replace
+
+    def no_marker(src, dst):
+        if os.path.basename(dst) == ".commit":
+            raise OSError("injected crash")
+        replace(src, dst)
+
+    monkeypatch.setattr(runner.os, "replace", no_marker)
+    with pytest.raises(OSError, match="injected crash"):
+        pipe.retract(sinks["reorg_block"])
+    monkeypatch.undo()
+    assert _visible(out_dir) == before
+    assert _rows(pipe) == sinks["spread_clean"]
+    pipe.retract(sinks["reorg_block"])
+    pipe.process_batch(sinks["branch"])
+    assert _rows(pipe) == sinks["spread_reorg"]

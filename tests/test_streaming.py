@@ -372,8 +372,10 @@ def test_read_final_frame_keeps_its_file_list_across_an_append(spark, tmp_path):
         ).withColumn("timestamp", F.timestamp_seconds("timestamp"))
 
     pipe._append("block", blocks(0), "number")
+    pipe._commit()
     before = pipe.read_final("block")
     pipe._append("block", blocks(5), "number")
+    pipe._commit()
     assert before.count() == 5
     assert pipe.read_final("block").count() == 10
 
@@ -384,6 +386,7 @@ def test_empty_table_still_reads_as_absent(spark, tmp_path):
     pipe = IngestPipeline(spark, str(tmp_path))
     empty = spark.createDataFrame([], "block_number long, hash string")
     pipe._append("crc_trust", empty, "block_number")
+    pipe._commit()
     assert os.listdir(pipe._table_path("crc_trust"))
     assert pipe.read_final("crc_trust") is None
 

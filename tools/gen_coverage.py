@@ -24,10 +24,10 @@ STATIC: dict[str, tuple[str, str]] = {
     "S5": ("sources/blocks.py detect_reorg; live retract+replay exercised", "tests/test_live_loop.py"),
     "S6": ("streaming/runner.py available_now flag (bulk vs live)", "tests/test_streaming.py"),
     "S7": ("unionByName of sources (runner feed)", "tests/test_streaming.py"),
-    "S8": ("sources/rpc.py download_blocks (24-way pool)", "tests/test_caches_rpc_health.py"),
+    "S8": ("sources/rpc.py download_blocks_with_txs (24-way pool)", "tests/test_caches_rpc_health.py"),
     "S9": ("sources/rpc.py download_receipts (96-way pool); streaming reunion via streaming/joins.py join_tx_receipts (watermarked stream-stream interval join, left_outer = undelivered-receipt signal)", "tests/test_stream_join.py"),
     "S10": ("sources/rpc.py fetch_safe_owners → extract_crc_signups(safe_owners)", "tests/test_caches_rpc_health.py"),
-    "K1": ("streaming/runner.py _append (partitioned parquet; JDBC-swappable)", "tests/test_streaming.py"),
+    "K1": ("streaming/runner.py _append (partitioned parquet staged under .pending/, one _commit per write; JDBC-swappable)", "tests/test_streaming.py"),
     "K2": ("streaming/runner.py process_batch per-table appends", "tests/test_streaming.py"),
     "K3": ("sources/blocks.py last_valid_block ledger (requested_blocks)", "tests/test_streaming.py"),
     "K4": ("runner FEED_SCHEMA empty-block marker rows", "tests/test_streaming.py"),
@@ -71,7 +71,7 @@ STATIC: dict[str, tuple[str, str]] = {
     "T2": ("micro-batch model (built-in backpressure); stateful ops via applyInPandasWithState (streaming/windows.py)", "tests/test_streaming_windows.py"),
     "T3": ("operators/promote.py promote (ready_blocks completeness gate)", "tests/test_promote.py"),
     "T4": ("operators/promote.py merge_new anti-join; streaming twin windows.py dedup_feed_stream", "tests/test_promote.py"),
-    "T5": ("operators/promote.py retract_from + IngestPipeline.retract (partitioned-sink delete + cache drop + deadbeef)", "tests/test_live_loop.py"),
+    "T5": ("operators/promote.py retract_from + IngestPipeline.retract (partitioned-sink rewrite + cache drop in one commit + deadbeef)", "tests/test_live_loop.py"),
     "T6": ("sources/blocks.py find_gaps + last_valid_block", "tests/test_streaming.py"),
     "T7": ("operators/promote.py promote (ready_blocks: max_by newest version per number)", "tests/test_promote.py"),
     "T8": ("operators/caches.py wired into IngestPipeline.refresh_caches — per-batch stale-key refresh of both cache tables", "tests/test_cache_maintenance.py"),
