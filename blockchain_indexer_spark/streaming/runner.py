@@ -18,16 +18,18 @@ Sink layout: one parquet directory per final table, partitioned by
 block range (`block_group = block_number div 100_000`) so reorg
 retraction (T5) and block-range queries prune partitions.
 
-Every parquet-sink write (a batch's nine appends and two cache
-refreshes, a retract, a compact) commits once, like the reference's
-one Serializable import transaction (ImportProcedure.cs:17-27): new
-files are staged under a hidden `.pending/` inside each table they
-land in, then renaming one `.commit` marker (the list of the files
-they replace) into the sink root commits them all, and `_settle`
-applies it. A write that fails before the marker leaves only staged
-files, which the next `_settle` drops, so a retried batch runs against
-the tables as they were. Readers never see `.pending/`: Spark skips
-dot-prefixed directories.
+Every write (a batch's nine appends and two cache refreshes, a
+retract, a compact) commits once, like the reference's one
+Serializable import transaction (ImportProcedure.cs:17-27). New rows
+are staged first: under a hidden `.pending/` inside each parquet table
+dir, or in a `<table>__pending` table on JDBC. `_commit` then moves
+them in at once. On parquet, renaming one `.commit` marker (the list of
+the files they replace) into the sink root is the commit point, and
+`_settle` applies it; readers never see `.pending/`, which Spark skips.
+On JDBC one transaction copies each staged table into its final table
+and drops it. A write that fails before its commit leaves only staged
+rows, which the next `_settle` drops, so a retried batch runs against
+the tables as they were.
 """
 
 from __future__ import annotations
@@ -96,6 +98,9 @@ CACHE_TRUST = "cache_crc_current_trust"
 # the final tables the two caches' views read
 CACHE_INPUTS = ("crc_signup", "crc_organisation_signup", "erc20_transfer", "crc_trust")
 
+# every table of the sink, caches included
+SINK_TABLES = ("block", *EVENT_TABLES, CACHE_BALANCES, CACHE_TRUST)
+
 BLOCK_GROUP_SIZE = 100_000
 
 
@@ -132,13 +137,13 @@ def _with_block_group(df: DataFrame, block_col: str) -> DataFrame:
     return df.withColumn("block_group", (F.col(block_col) / BLOCK_GROUP_SIZE).cast("long"))
 
 
-def _as_sink_rows(name: str, df: DataFrame) -> DataFrame:
-    """A batch's rows of event table `name` as the parquet sink reads
-    them back once appended (SINK_READ_SCHEMAS)."""
-    df = _with_block_group(df, "block_number")
-    return df.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in SINK_READ_SCHEMAS[name].fields]
-    )
+def _as_sink_rows(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """A batch's rows of an event table cast to `schema`, the read
+    schema of the final table they are unioned with: SINK_READ_SCHEMAS
+    on parquet, the target's column types on JDBC."""
+    if "block_group" in schema.fieldNames():
+        df = _with_block_group(df, "block_number")
+    return df.select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields])
 
 
 def _has_data_files(path: str) -> bool:
@@ -159,9 +164,11 @@ def _has_data_files(path: str) -> bool:
 
 
 # A write's staged files, inside each table dir it touches, and the
-# commit marker in the sink root (see the module docstring).
+# commit marker in the sink root; on JDBC, the suffix of the table a
+# write stages its rows in (see the module docstring).
 _PENDING = ".pending"
 _MARKER = ".commit"
+_STAGED = "__pending"
 
 
 # K5: the reference broadcasts this magic hash to websocket consumers
@@ -187,27 +194,27 @@ def is_postgres_url(url: str | None) -> bool:
     return bool(url) and url.startswith("jdbc:postgresql:")
 
 
-def pg_create_table_sql(name: str, schema) -> str:
-    """Postgres-dialect CREATE TABLE for a final table — the mapping
-    the reference's DDL uses (0.0.64.sql:358-377): array columns are
-    REAL text[] (not the JSON-text fallback generic targets get) and
-    every decimal is UNBOUNDED numeric, so uint256 wei values that
-    overflow Derby's precision-31 DECIMAL (and even Spark's own
-    38-digit DecimalType ceiling) are preserved exactly via their
-    value_string text twin while the numeric column holds what Spark
-    can represent. Identifiers are double-quoted (``transaction`` is
-    reserved). Pinned by tests/test_jdbc.py's pg-dialect contract
-    test (VERDICT r4 item #6) AND executed against a real throwaway
-    PostgreSQL server with text[]/unbounded-numeric round-trips in
-    tests/test_pg_live.py (the r5 #8 carry-over, closed in round 6).
-    """
-    from pyspark.sql import types as T
+def _quote(name: str) -> str:
+    """A double-quoted SQL identifier: `transaction` is reserved on most
+    targets (Derby rejects it outright), and quoting pins the exact
+    lowercase names the parquet sink uses."""
+    return '"' + name.replace('"', '""') + '"'
 
-    array_cols = set(JDBC_ARRAY_COLS.get(name, {}))
+
+def pg_create_table_sql(name: str, schema) -> str:
+    """Postgres-dialect CREATE TABLE for a table of the sink — the
+    mapping the reference's DDL uses (0.0.64.sql:358-377): array<string>
+    columns are REAL text[] (Postgres frames keep their ArrayType; the
+    JSON-text fallback is for generic targets only) and every decimal
+    is UNBOUNDED numeric, so uint256 wei values that overflow Derby's
+    precision-31 DECIMAL (and even Spark's own 38-digit DecimalType
+    ceiling) are preserved exactly via their value_string text twin
+    while the numeric column holds what Spark can represent. Pinned by
+    tests/test_jdbc.py's pg-dialect contract test and executed against
+    a throwaway PostgreSQL server in tests/test_pg_live.py.
+    """
 
     def pg_type(field) -> str:
-        if field.name in array_cols:
-            return "text[]"
         dt = field.dataType
         if isinstance(dt, T.DecimalType):
             return "numeric"  # unbounded: Postgres numeric has no cap
@@ -227,21 +234,47 @@ def pg_create_table_sql(name: str, schema) -> str:
         }[type(dt)]
 
     cols = ", ".join(
-        f'"{f.name}" {pg_type(f)}' + ("" if f.nullable else " NOT NULL")
+        f"{_quote(f.name)} {pg_type(f)}" + ("" if f.nullable else " NOT NULL")
         for f in schema.fields
     )
-    quoted = '"' + name.replace('"', '""') + '"'
-    return f"CREATE TABLE {quoted} ({cols})"
+    return f"CREATE TABLE {_quote(name)} ({cols})"
+
+
+def jdbc_commit_sql(
+    name: str, columns: list[str], exists: bool, replace: bool, postgres: bool = False
+) -> list[str]:
+    """The statements of a JDBC commit's transaction that move staged
+    table `<name>__pending`, with `columns`, into table `name`: create
+    `name` if it is missing (on Postgres with LIKE, which keeps the NOT
+    NULLs that CREATE TABLE AS drops), empty it if the write replaces it
+    (the caches), copy the rows by column name (a refreshed cache's
+    using-joins put the join key first), drop the staged table."""
+    final, staged = _quote(name), _quote(name + _STAGED)
+    if exists:
+        first = [f"DELETE FROM {final}"] if replace else []
+    elif postgres:
+        first = [f"CREATE TABLE {final} (LIKE {staged})"]
+    else:
+        first = [f"CREATE TABLE {final} AS SELECT * FROM {staged} WITH NO DATA"]
+    cols = ", ".join(map(_quote, columns))
+    copy = f"INSERT INTO {final} ({cols}) SELECT {cols} FROM {staged}"
+    return [*first, copy, f"DROP TABLE {staged}"]
 
 
 class IngestPipeline:
     """Batch-or-streaming ingest into partitioned parquet final tables.
 
-    `on_imported` (K5) is called after each committed batch with the
-    list of newly imported tx hashes — the reference's websocket
-    broadcast seam (RoundContext.OnBatchSuccessNotify); on reorg it
-    receives [REORG_MAGIC_HASH]. The list is batch-sized (the
-    reference collects exactly the same set to push it), not a scan.
+    `on_imported` (K5) is called with each committed batch's newly
+    imported tx hashes — the reference's websocket broadcast seam
+    (RoundContext.OnBatchSuccessNotify); a retract announces
+    [REORG_MAGIC_HASH]. The list is batch-sized, not a scan. Delivery
+    is at least once on parquet: the commit marker carries the list,
+    and whichever `_settle` applies the marker announces it before
+    removing it. A callback that raises fails that call and keeps the
+    marker, so the next process_batch, retract or compact announces
+    again before it writes anything; while the callback keeps raising,
+    the sink takes no writes. On JDBC the announcement follows the
+    commit's transaction, and a crash between the two loses it.
     """
 
     def __init__(
@@ -254,22 +287,22 @@ class IngestPipeline:
         on_batch=None,
         jdbc_url: str | None = None,
         jdbc_properties: dict[str, str] | None = None,
-        maintain_caches: bool = True,
     ) -> None:
         """`jdbc_url` switches the final-table sink/source from
-        partitioned parquet to JDBC appends — the reference's Postgres
-        import (Settings.cs CONNECTION_STRING, README.md:80-84). The
-        promote semantics are sink-agnostic: exactly-once still comes
-        from the anti-join against the read-back table, so the target
-        needs no unique indexes (the reference dropped them too,
+        partitioned parquet to JDBC tables — the reference's Postgres
+        import (Settings.cs CONNECTION_STRING, README.md:80-84), staged
+        and committed like it (see the module docstring). The promote
+        semantics are sink-agnostic: exactly-once still comes from the
+        anti-join against the read-back table, so the target needs no
+        unique indexes (the reference dropped them too,
         README.md:85-87). Parquet remains the default; the JDBC branch
-        is end-to-end tested against embedded Derby (tests/test_jdbc.py
-        — append, exactly-once replay, retract+replay, cache refresh).
-        Target caveats vs the reference's Postgres: array columns are
-        JSON text (JDBC_ARRAY_COLS) instead of text[], and Derby's
-        dialect caps DECIMAL at precision 31 (uint256 wei values above
-        1e31-1 overflow the TEST target only; value_string always
-        preserves the exact value, and Postgres numeric is unbounded).
+        is end-to-end tested against embedded Derby (tests/test_jdbc.py,
+        tests/test_import_lock.py). Target caveats vs the reference's
+        Postgres: array columns are JSON text (JDBC_ARRAY_COLS) instead
+        of text[], and Derby's dialect caps DECIMAL at precision 31
+        (uint256 wei values above 1e31-1 overflow the TEST target only;
+        value_string always preserves the exact value, and Postgres
+        numeric is unbounded).
         """
         self.spark = spark
         self.out_dir = out_dir
@@ -283,17 +316,10 @@ class IngestPipeline:
         self.on_batch = on_batch
         self.jdbc_url = jdbc_url
         self.jdbc_properties = jdbc_properties or {}
-        # T8: refresh the balance/trust materializations per batch —
-        # the same Spark-side set algebra on either sink; JDBC targets
-        # get the refreshed frames as table overwrites (the reference
-        # instead runs the algebra server-side in its SQL procedure,
-        # 0.0.64.sql:2272-2376 — same result, different engine)
-        self.maintain_caches = maintain_caches
 
-    def signal_reorg(self) -> None:
-        """Announce a reorg to push consumers (K5's deadbeef path)."""
-        if self.on_imported is not None:
-            self.on_imported([REORG_MAGIC_HASH])
+    def _announce(self, hashes: list[str] | None) -> None:
+        if hashes and self.on_imported is not None:
+            self.on_imported(hashes)
 
     def retract(self, reorg_block: int) -> None:
         """T5: drop every final row at or above the diverging block and
@@ -314,16 +340,22 @@ class IngestPipeline:
         database.
         """
         if self.jdbc_url is not None:
-            # under the import lock like the parquet path: the DELETE
-            # itself is atomic server-side, but a concurrent promote
-            # could append rows >= reorg_block between our DELETE and
-            # its commit — the lock serializes whole batches against
-            # the retraction (one shared filesystem still backs the
-            # lock; a fully multi-host JDBC deployment runs promote
-            # and retract under SERIALIZABLE instead, see SCALE.md)
-            with self._import_lock():
-                self._retract_jdbc(reorg_block)
-            self.signal_reorg()
+            # under the import lock like the parquet path: a concurrent
+            # batch's commit could land rows >= reorg_block after the
+            # DELETE (see _import_lock)
+            with self._import_lock(), self._jdbc_transaction() as (conn, st):
+                for name in ("block", *EVENT_TABLES):
+                    if not self._jdbc_table_exists(conn, name):
+                        continue  # pre-first-batch target
+                    block_col = "number" if name == "block" else "block_number"
+                    st.executeUpdate(
+                        f"DELETE FROM {_quote(name)} "
+                        f"WHERE {_quote(block_col)} >= {int(reorg_block)}"
+                    )
+                for cache in (CACHE_BALANCES, CACHE_TRUST):
+                    if self._jdbc_table_exists(conn, cache):
+                        st.executeUpdate(f"DROP TABLE {_quote(cache)}")
+            self._announce([REORG_MAGIC_HASH])
             return
         from blockchain_indexer_spark.operators.promote import retract_from  # noqa: PLC0415
 
@@ -344,10 +376,7 @@ class IngestPipeline:
             # them where they are
             for name, df in kept.items():
                 self._append(name, df, "number" if name == "block" else "block_number")
-            self._commit(
-                *(self._table_path(name) for name in (*kept, CACHE_BALANCES, CACHE_TRUST))
-            )
-        self.signal_reorg()
+            self._commit(*kept, CACHE_BALANCES, CACHE_TRUST, announce=[REORG_MAGIC_HASH])
 
     def _staged(self):
         """(staged file, its final path) for each file under a table's
@@ -360,41 +389,68 @@ class IngestPipeline:
                     src = os.path.join(root, f)
                     yield src, os.path.join(self.out_dir, entry, os.path.relpath(src, pending))
 
-    def _commit(self, *replaced: str) -> None:
-        """Commit every staged file, replacing all current files under
-        the `replaced` table or partition dirs: their list is written to
-        .commit.tmp and renamed to .commit (the commit point), then
-        _settle applies it. A staged file that lands on a current file's
-        path (_SUCCESS) replaces it, so that path is not listed."""
+    def _commit(self, *replaced: str, announce: list[str] | None = None) -> None:
+        """Commit every staged write, replacing all current rows of the
+        `replaced` tables (names relative to the sink: a table, or one
+        partition dir of it for compact), then announce `announce`.
+
+        Parquet: the current files under the `replaced` dirs and
+        `announce` are written to .commit.tmp, renamed to .commit (the
+        commit point), and _settle applies them. A staged file that
+        lands on a current file's path (_SUCCESS) replaces it, so that
+        path is not listed.
+
+        JDBC: one transaction runs jdbc_commit_sql for each staged
+        table, and the announcement follows it."""
+        if self.jdbc_url is not None:
+            postgres = is_postgres_url(self.jdbc_url)
+            with self._jdbc_transaction() as (conn, st):
+                for name, cols in self._jdbc_staged(conn).items():
+                    exists = self._jdbc_table_exists(conn, name)
+                    for sql in jdbc_commit_sql(name, cols, exists, name in replaced, postgres):
+                        st.executeUpdate(sql)
+            self._announce(announce)
+            return
         staged = {dst for _src, dst in self._staged()}
         old = []
-        for top in replaced:
-            for root, dirs, files in os.walk(top):
+        for rel in replaced:
+            for root, dirs, files in os.walk(os.path.join(self.out_dir, rel)):
                 dirs[:] = [d for d in dirs if d != _PENDING]
                 old += [os.path.join(root, f) for f in files]
+        gone = [os.path.relpath(p, self.out_dir) for p in old if p not in staged]
         tmp = os.path.join(self.out_dir, _MARKER + ".tmp")
         with open(tmp, "w") as f:
-            json.dump([os.path.relpath(p, self.out_dir) for p in old if p not in staged], f)
+            json.dump({"replaced": gone, "announce": announce}, f)
         os.replace(tmp, os.path.join(self.out_dir, _MARKER))
         self._settle()
 
     def _settle(self) -> None:
         """Apply the commit the last write left, or drop what a write
         staged without committing. Runs first under the import lock in
-        process_batch, retract and compact. Every step can run again
-        after a crash: staged files move to their final paths, the
-        replaced files go (with a partition or cache dir they leave
-        empty), then the marker."""
+        process_batch, retract and compact. On JDBC a commit is one
+        transaction, so only staged tables can be left: they are
+        dropped. On parquet every step can run again after a crash:
+        staged files move to their final paths, the replaced files go
+        (with a partition or cache dir they leave empty), the commit's
+        hashes are announced, then the marker goes."""
+        if self.jdbc_url is not None:
+            with self._jdbc_transaction() as (conn, st):
+                for name in self._jdbc_staged(conn):
+                    st.executeUpdate(f"DROP TABLE {_quote(name + _STAGED)}")
+            return
         if not os.path.isdir(self.out_dir):
             return
         marker = os.path.join(self.out_dir, _MARKER)
+        commit = None
         if os.path.exists(marker):
             with open(marker) as f:
-                replaced = json.load(f)
+                commit = json.load(f)
+            if isinstance(commit, list):  # an older marker: replaced files only
+                commit = {"replaced": commit, "announce": None}
             for src, dst in self._staged():
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
                 os.replace(src, dst)
-            for rel in replaced:
+            for rel in commit["replaced"]:
                 path = os.path.join(self.out_dir, rel)
                 with contextlib.suppress(FileNotFoundError):
                     os.remove(path)
@@ -402,33 +458,43 @@ class IngestPipeline:
                     os.rmdir(os.path.dirname(path))
         for entry in os.listdir(self.out_dir):
             shutil.rmtree(os.path.join(self.out_dir, entry, _PENDING), ignore_errors=True)
-        with contextlib.suppress(FileNotFoundError):
+        if commit is not None:
+            self._announce(commit["announce"])
             os.remove(marker)
 
     def _table_path(self, name: str) -> str:
         return os.path.join(self.out_dir, name)
 
     # ---- JDBC sink plumbing -------------------------------------------
-    # The table identifier is always double-quoted: `transaction` is an
-    # SQL reserved word on most targets (Derby rejects it outright),
-    # and quoting pins the exact lowercase names the parquet sink uses.
-    # Spark itself quotes COLUMN identifiers through the dialect, so
-    # raw statements below must quote columns too ("number").
-
-    @staticmethod
-    def _jdbc_quote(name: str) -> str:
-        return '"' + name.replace('"', '""') + '"'
+    # Table identifiers are always double-quoted (_quote). Spark itself
+    # quotes COLUMN identifiers through the dialect, so raw statements
+    # below must quote columns too ("number").
 
     def _jdbc_connection(self):
-        """Raw java.sql connection to the sink via py4j — for the DML
-        Spark's DataFrame JDBC writer cannot express (DELETE, DROP,
-        metadata probes). Driver resolution rides the JVM's service
+        """Raw java.sql connection to the sink via py4j — for the SQL
+        Spark's DataFrame JDBC writer cannot express (the commit, DELETE,
+        DROP, metadata probes). Driver resolution rides the JVM's service
         loader, same classpath as the DataFrame reader."""
         jvm = self.spark._sc._jvm
         props = jvm.java.util.Properties()
         for k, v in self.jdbc_properties.items():
             props.setProperty(k, v)
         return jvm.java.sql.DriverManager.getConnection(self.jdbc_url, props)
+
+    @contextlib.contextmanager
+    def _jdbc_transaction(self):
+        """One transaction on the sink: yields (connection, statement),
+        commits when the body returns and rolls back when it raises.
+        Closing the connection closes the statement."""
+        with contextlib.closing(self._jdbc_connection()) as conn:
+            conn.setAutoCommit(False)
+            st = conn.createStatement()
+            try:
+                yield conn, st
+                conn.commit()
+            except BaseException:
+                conn.rollback()
+                raise
 
     @staticmethod
     def _jdbc_table_exists(conn, name: str) -> bool:
@@ -437,6 +503,20 @@ class IngestPipeline:
             return bool(rs.next())
         finally:
             rs.close()
+
+    @staticmethod
+    def _jdbc_staged(conn) -> dict[str, list[str]]:
+        """The tables with a staged `<name>__pending` table, each mapped
+        to the staged table's columns, from one metadata query ('_' is
+        a wildcard in its pattern, hence the exact match below)."""
+        rs = conn.getMetaData().getColumns(None, None, "%" + _STAGED, None)
+        cols: dict[str, list[str]] = {}
+        try:
+            while rs.next():
+                cols.setdefault(rs.getString("TABLE_NAME"), []).append(rs.getString("COLUMN_NAME"))
+        finally:
+            rs.close()
+        return {n: cols[n + _STAGED] for n in SINK_TABLES if n + _STAGED in cols}
 
     def _jdbc_encode(self, name: str, df: DataFrame) -> DataFrame:
         """Array columns → JSON text for targets without array types
@@ -459,38 +539,6 @@ class IngestPipeline:
                 df = df.withColumn(col, F.from_json(F.col(col), typ))
         return df
 
-    def _retract_jdbc(self, reorg_block: int) -> None:
-        """T5 on a JDBC sink: the reference's server-side retraction
-        (Indexer.cs:273-325) — every final row at or above the
-        diverging block deleted and both cache tables dropped (they
-        rebuild in full on the next batch, same as the parquet path),
-        all inside ONE transaction so readers never observe a
-        half-retracted database and a mid-flight crash rolls back."""
-        conn = self._jdbc_connection()
-        try:
-            conn.setAutoCommit(False)
-            st = conn.createStatement()
-            try:
-                for name in ("block", *EVENT_TABLES):
-                    if not self._jdbc_table_exists(conn, name):
-                        continue  # pre-first-batch target
-                    block_col = "number" if name == "block" else "block_number"
-                    st.executeUpdate(
-                        f"DELETE FROM {self._jdbc_quote(name)} "
-                        f"WHERE {self._jdbc_quote(block_col)} >= {int(reorg_block)}"
-                    )
-                for cache in (CACHE_BALANCES, CACHE_TRUST):
-                    if self._jdbc_table_exists(conn, cache):
-                        st.execute(f"DROP TABLE {self._jdbc_quote(cache)}")
-                conn.commit()
-            except Exception:
-                conn.rollback()
-                raise
-            finally:
-                st.close()
-        finally:
-            conn.close()
-
     def read_final(self, name: str) -> DataFrame | None:
         """None means 'table not created yet' (first batch). Only a
         POSITIVE missing-table signal is treated that way — the parquet
@@ -504,18 +552,13 @@ class IngestPipeline:
 
         try:
             if self.jdbc_url is not None:
-                conn = self._jdbc_connection()
-                try:
+                with contextlib.closing(self._jdbc_connection()) as conn:
                     if not self._jdbc_table_exists(conn, name):
                         return None
-                finally:
-                    conn.close()
                 return self._jdbc_decode(
                     name,
                     self.spark.read.jdbc(
-                        self.jdbc_url,
-                        self._jdbc_quote(name),
-                        properties=self.jdbc_properties,
+                        self.jdbc_url, _quote(name), properties=self.jdbc_properties
                     ),
                 )
             return self._read_parquet(name)
@@ -535,31 +578,26 @@ class IngestPipeline:
         return self.spark.read.schema(SINK_READ_SCHEMAS[name]).parquet(path)
 
     def _append(self, name: str, df: DataFrame, block_col: str) -> None:
-        if self.jdbc_url is not None:
-            if is_postgres_url(self.jdbc_url):
-                # pg-dialect DDL first (text[] / unbounded numeric,
-                # pg_create_table_sql) — Spark's generic CREATE would
-                # fall back to the JSON-text mapping
-                conn = self._jdbc_connection()
-                try:
-                    if not self._jdbc_table_exists(conn, name):
-                        st = conn.createStatement()
-                        try:
-                            st.execute(pg_create_table_sql(name, df.schema))
-                        finally:
-                            st.close()
-                finally:
-                    conn.close()
-            self._jdbc_encode(name, df).write.mode("append").jdbc(
-                self.jdbc_url, self._jdbc_quote(name), properties=self.jdbc_properties
-            )
+        if self.jdbc_url is None:
+            writer = _with_block_group(df, block_col).write.partitionBy("block_group")
+            self._stage(name, writer.mode("append"))
             return
-        (
-            _with_block_group(df, block_col)
-            .write.mode("append")
-            .partitionBy("block_group")
-            .parquet(os.path.join(self._table_path(name), _PENDING))
-        )
+        if is_postgres_url(self.jdbc_url):
+            # pg-dialect DDL first (text[] / unbounded numeric,
+            # pg_create_table_sql): Spark's generic CREATE would fall
+            # back to the JSON-text mapping, and the commit's CREATE
+            # TABLE .. (LIKE ..) copies the staged table's columns
+            with self._jdbc_transaction() as (_conn, st):
+                st.executeUpdate(pg_create_table_sql(name + _STAGED, df.schema))
+        self._stage(name, self._jdbc_encode(name, df).write.mode("append"))
+
+    def _stage(self, name: str, writer) -> None:
+        """Run `writer` into the staging location _commit moves into
+        table `name`: `<name>/.pending/`, or table `<name>__pending`."""
+        if self.jdbc_url is not None:
+            writer.jdbc(self.jdbc_url, _quote(name + _STAGED), properties=self.jdbc_properties)
+        else:
+            writer.parquet(os.path.join(self._table_path(name), _PENDING))
 
     def compact(
         self, name: str, target_file_bytes: int = 128 << 20, min_files: int = 8
@@ -614,7 +652,7 @@ class IngestPipeline:
                 n_after = len([f for f in os.listdir(staged) if f.endswith(".parquet")])
                 results[part] = (len(files), n_after)
             if results:
-                self._commit(*(os.path.join(table_dir, part) for part in results))
+                self._commit(*(os.path.join(name, part) for part in results))
         return results
 
     def _import_lock(self):
@@ -634,9 +672,10 @@ class IngestPipeline:
         stealer that also saw the stale mtime; (b) a daemon heartbeat
         refreshes the lock's mtime at timeout/4 while held, so a
         legitimately long import is never mistaken for a crashed one.
-        JDBC multi-instance deployments must instead run the promote
-        under a SERIALIZABLE transaction server-side, exactly like the
-        reference (SCALE.md)."""
+        On JDBC a batch's anti-join reads the final tables before its
+        commit's transaction, so instances sharing a database must share
+        this lock too, or run the round SERIALIZABLE server-side like
+        the reference (SCALE.md)."""
         @contextlib.contextmanager
         def lock():
             path = os.path.join(self.out_dir, ".import.lock")
@@ -744,14 +783,9 @@ class IngestPipeline:
         ).select("tx_hash", "l.log_index", "l.address", "l.topics", "l.data")
 
         # Eager localCheckpoints inside promote materialize the merge
-        # results BEFORE any append. A parquet frame's file list is
-        # fixed when the frame is read, so there the anti-join could
-        # not see this batch's own output anyway; a JDBC read is a
-        # lazy query that would re-run after the appends and see its
-        # own rows (read-modify-append hazard). The checkpoints also
-        # keep classify, the appends and the broadcast from
-        # recomputing the promote, and doing it inside promote
-        # (dependency order) keeps each checkpoint job shallow.
+        # results once: they keep classify, the appends and the
+        # broadcast from recomputing the promote, and doing it inside
+        # promote (dependency order) keeps each checkpoint job shallow.
         promoted = promote(
             block_staging,
             tx_staging,
@@ -797,42 +831,24 @@ class IngestPipeline:
             if hashes is not None
             else new_txs.limit(1).count() > 0
         )
-        refresh = self.maintain_caches and has_new
-        # parquet: the refresh reads its inputs now and runs next to
-        # the appends (see _cache_inputs)
-        finals = self._cache_inputs(tables) if refresh and self.jdbc_url is None else None
-        caches = None
-        # The appends target disjoint directories — run them as
-        # concurrent Spark jobs so scheduling/commit latency
-        # overlaps instead of summing.
+        # the refresh reads its inputs now and runs next to the appends
+        # (see _cache_inputs)
+        finals = self._cache_inputs(tables) if has_new else None
+        # The appends and the cache writes target disjoint staging
+        # locations — run them as concurrent Spark jobs so scheduling
+        # latency overlaps instead of summing.
         with ThreadPoolExecutor(max_workers=2 + len(EVENT_TABLES)) as pool:
             appends = [pool.submit(self._append, "block", block_final, "number")]
             appends += [
                 pool.submit(self._append, name, tables[name], "block_number")
                 for name in EVENT_TABLES
             ]
-            refreshed = (
-                pool.submit(self.refresh_caches, tables, finals)
-                if finals is not None
-                else None
-            )
+            refreshed = pool.submit(self.refresh_caches, tables, finals) if finals else None
             for fut in appends:
                 fut.result()
-            if refreshed is not None:
-                caches = refreshed.result()
-        if refresh and self.jdbc_url is not None:
-            # a JDBC read is a lazy query, not a snapshot: read the
-            # refresh's inputs only once the appends are committed
-            finals = self._cache_inputs()
-            if finals is not None:
-                caches = self.refresh_caches(tables, finals)
-        if caches:
-            self._publish_caches(caches)
-        if self.jdbc_url is None:
-            # the batch's one commit: nine appends and both caches
-            self._commit(*(self._table_path(name) for name in caches or ()))
-        if hashes:
-            self.on_imported(hashes)
+            caches = refreshed.result() if refreshed else []
+        # the batch's one commit: nine appends and both caches
+        self._commit(*caches, announce=hashes)
         if self.on_batch is not None:
             self.on_batch()
 
@@ -841,33 +857,31 @@ class IngestPipeline:
     read_cache = read_final
 
     def _cache_inputs(
-        self, batch_tables: dict[str, DataFrame] | None = None
+        self, batch_tables: dict[str, DataFrame]
     ) -> dict[str, DataFrame | None] | None:
         """The final tables the cache refresh reads (CACHE_INPUTS), as
-        they stand once this batch is appended. None while crc_signup or
+        they will stand once this batch commits: each table as it is
+        now, unioned with the batch's rows. None while crc_signup or
         erc20_transfer holds no data (no views to materialize yet);
         crc_trust maps to None until it holds data.
 
-        With `batch_tables` (parquet sink) each table is read BEFORE the
-        appends and unioned with the batch's rows: a parquet frame lists
-        its files when it is read, so the union is exactly the
-        post-append table and the refresh can run next to the appends.
-        A table not created yet is the batch's rows alone, and only then
-        is a batch table tested for emptiness, so a steady-state round
-        pays no job for the gate. Without them (JDBC, whose reads are
-        lazy queries) the tables are read as they are: call it after
-        the appends."""
+        No row of the batch reaches a final table before its commit, so
+        the refresh can run next to the appends on either sink. A table
+        not created yet is the batch's rows alone, and only then is a
+        batch table tested for emptiness, so a steady-state round pays
+        no job for the gate."""
         out = {}
         for name in CACHE_INPUTS:
             df = self.read_final(name)
-            if batch_tables is not None:
-                rows = _as_sink_rows(name, batch_tables[name])
-                if df is not None:
-                    df = df.unionByName(rows)
-                elif name == "crc_organisation_signup" or not rows.isEmpty():
-                    # an empty organisation table needs no gate: the
-                    # signup views read it as it is
-                    df = rows
+            rows = _as_sink_rows(
+                batch_tables[name], SINK_READ_SCHEMAS[name] if df is None else df.schema
+            )
+            if df is not None:
+                df = df.unionByName(rows)
+            elif name == "crc_organisation_signup" or not rows.isEmpty():
+                # an empty organisation table needs no gate: the
+                # signup views read it as it is
+                df = rows
             out[name] = df
         if out["crc_signup"] is None or out["erc20_transfer"] is None:
             return None
@@ -875,18 +889,17 @@ class IngestPipeline:
 
     def refresh_caches(
         self, batch_tables: dict[str, DataFrame], finals: dict[str, DataFrame | None]
-    ) -> dict[str, DataFrame]:
+    ) -> list[str]:
         """Stale-key incremental refresh of the two reference cache
         tables for one batch (import_from_staging_2,
-        0.0.64.sql:2272-2376; T8). `finals` are the post-append tables
-        from _cache_inputs. Returns each refreshed cache as an eager
-        local checkpoint for _publish_caches: the refresh runs inside
-        the append pool, and a JDBC overwrite would otherwise read the
-        table it replaces. The trust cache waits until crc_trust holds
-        data.
+        0.0.64.sql:2272-2376; T8). `finals` are the post-commit tables
+        from _cache_inputs. Each refreshed cache is staged (_stage) and
+        replaces the old one, which the refresh reads, at the batch's
+        commit. Returns the names of the caches written; the trust
+        cache waits until crc_trust holds data.
 
         The stale sets come from THIS batch's extracted rows (small,
-        broadcast); the fresh views run over the full post-append
+        broadcast); the fresh views run over the full post-commit
         tables but Catalyst pushes the stale semi-join into their
         scans, so refresh cost is O(batch), not O(history).
         """
@@ -916,48 +929,27 @@ class IngestPipeline:
             batch_tables["erc20_transfer"], batch_tables["crc_hub_transfer"]
         )
 
-        def _refresh_balances() -> DataFrame:
+        def _refresh_balances() -> None:
             fresh_b = crc_balances_by_safe_and_token(crc_ledger(erc20_full, signup_full))
-            return refresh_balance_cache(
-                self.read_cache(CACHE_BALANCES), fresh_b, stale_b
-            ).localCheckpoint(eager=True)
+            cache = refresh_balance_cache(self.read_cache(CACHE_BALANCES), fresh_b, stale_b)
+            self._stage(CACHE_BALANCES, cache.write.mode("overwrite"))
 
         refreshes = {CACHE_BALANCES: _refresh_balances}
         if trust_full is not None:
             stale_t = stale_trust_addresses(batch_tables["crc_trust"])
 
-            def _refresh_trust() -> DataFrame:
+            def _refresh_trust() -> None:
                 fresh_t = crc_current_trust(trust_full, crc_all_signups(signup_full, org_full))
-                return refresh_trust_cache(
-                    self.read_cache(CACHE_TRUST), fresh_t, stale_t
-                ).localCheckpoint(eager=True)
+                cache = refresh_trust_cache(self.read_cache(CACHE_TRUST), fresh_t, stale_t)
+                self._stage(CACHE_TRUST, cache.write.mode("overwrite"))
 
             refreshes[CACHE_TRUST] = _refresh_trust
 
         # independent materializations — overlap their Spark jobs
         with ThreadPoolExecutor(max_workers=len(refreshes)) as pool:
-            futures = {name: pool.submit(fn) for name, fn in refreshes.items()}
-            return {name: fut.result() for name, fut in futures.items()}
-
-    def _publish_caches(self, caches: dict[str, DataFrame]) -> None:
-        """Write each refreshed cache: a JDBC table overwrite, or, on
-        the parquet sink, files staged under the cache's .pending/ that
-        replace the old cache at the batch's commit."""
-
-        def publish(name: str) -> None:
-            if self.jdbc_url is not None:
-                caches[name].write.mode("overwrite").jdbc(
-                    self.jdbc_url,
-                    self._jdbc_quote(name),
-                    properties=self.jdbc_properties,
-                )
-                return
-            caches[name].write.mode("overwrite").parquet(
-                os.path.join(self._table_path(name), _PENDING)
-            )
-
-        with ThreadPoolExecutor(max_workers=len(caches)) as pool:
-            list(pool.map(publish, caches))
+            for fut in [pool.submit(fn) for fn in refreshes.values()]:
+                fut.result()
+        return list(refreshes)
 
     def start_stream(
         self,

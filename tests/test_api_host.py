@@ -79,9 +79,7 @@ def test_api_host_serves_real_ingest(spark, tmp_path, host):
 
     h, log = host
     feed = _feed_rows(spark)
-    pipe = IngestPipeline(
-        spark, str(tmp_path / "final"), on_imported=log.publish, maintain_caches=False
-    )
+    pipe = IngestPipeline(spark, str(tmp_path / "final"), on_imported=log.publish)
     pipe.process_batch(feed)
     code, body = _get(h, "/events?cursor=0&timeout=1")
     announced = {x for e in body["events"] for x in e["hashes"]}

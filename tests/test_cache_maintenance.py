@@ -107,16 +107,6 @@ def test_first_caches_wait_for_signups_and_transfers(spark, tmp_path):
     assert _sorted(pipe.read_cache(CACHE_TRUST), _TRUST_COLS) == _sorted(trust_fresh, _TRUST_COLS)
 
 
-def test_caches_optional_and_on_for_jdbc(spark, tmp_path):
-    """maintain_caches is sink-agnostic: the JDBC sink refreshes the
-    same materializations via table overwrites (it used to silently
-    turn itself off — a feature loss the sink switch must not imply)."""
-    pipe = IngestPipeline(spark, str(tmp_path / "f"), maintain_caches=False)
-    assert pipe.maintain_caches is False
-    pipe_jdbc = IngestPipeline(spark, str(tmp_path / "g"), jdbc_url="jdbc:stub://x")
-    assert pipe_jdbc.maintain_caches is True
-
-
 def test_stale_rule_covers_non_signed_up_endpoints(spark):
     """A CRC-token transfer to an address that never signed up still
     books ledger rows for it (views.crc_ledger has no endpoint signup

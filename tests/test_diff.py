@@ -45,7 +45,7 @@ def test_retract_replay_diff_is_empty(spark, tmp_path_factory):
 
     root = str(tmp_path_factory.mktemp("diffreplay"))
     feed = _feed_rows(spark).cache()
-    pipe = IngestPipeline(spark, os.path.join(root, "final"), maintain_caches=False)
+    pipe = IngestPipeline(spark, os.path.join(root, "final"))
     pipe.process_batch(feed)
     snap_dir = os.path.join(root, "snap")
     tables = {}

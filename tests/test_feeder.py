@@ -74,7 +74,7 @@ def test_interval_polling_to_final_tables(spark, tmp_path):
     feeder = IntervalFeeder(
         spark, transport, feed_dir, start_block=numbers[0], block_pool=4, receipt_pool=8
     )
-    pipe = IngestPipeline(spark, str(tmp_path / "final"), maintain_caches=False)
+    pipe = IngestPipeline(spark, str(tmp_path / "final"))
 
     # head at the first block: one poll emits exactly one block
     assert feeder.poll_once() == 1

@@ -1,15 +1,21 @@
-"""Import-lock steal semantics and the parquet sink's one commit per
-write: a failed batch, a crash inside a commit and a crash before it.
+"""Import-lock steal semantics and each sink's one commit per write: a
+failed batch, a crash inside a commit (raised in-process, or a real
+SIGKILL of the indexer's processes) and a crash before it.
 
-The lock and the commit are the parquet-sink stand-in for the
-reference's Serializable promote transaction
-(Persistence/ImportProcedure.cs:17-27): the exactly-once anti-join is
-only exact if promotes serialize and each commits whole."""
+The lock and the commit stand in for the reference's Serializable
+promote transaction (Persistence/ImportProcedure.cs:17-27): the
+exactly-once anti-join is only exact if promotes serialize and each
+commits whole."""
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
 import shutil
+import signal
+import subprocess
+import sys
 import threading
 import time
 
@@ -23,6 +29,8 @@ from blockchain_indexer_spark.streaming.runner import (
     CACHE_TRUST,
     EVENT_TABLES,
     FEED_SCHEMA,
+    REORG_MAGIC_HASH,
+    SINK_TABLES,
     IngestPipeline,
 )
 from tests.test_streaming import feed_df  # noqa: F401 — module fixture
@@ -141,9 +149,6 @@ def test_robbed_holder_leaves_thief_lock_alone(spark, tmp_path_factory):
     shutil.rmtree(lock_path)
 
 
-SINK_TABLES = ("block", *EVENT_TABLES, CACHE_BALANCES, CACHE_TRUST)
-
-
 def _rows(pipe):
     """Every table of the sink, caches included, as sorted row reprs."""
     out = {}
@@ -225,34 +230,88 @@ def sinks(spark, tmp_path_factory, feed_df):  # noqa: F811
     return out
 
 
-@pytest.mark.parametrize("fails", ["block", *EVENT_TABLES, "caches"])
-def test_failed_write_then_retry_equals_clean_run(spark, tmp_path, sinks, fails):
+def _derby_url(db: str) -> str:
+    return f"jdbc:derby:{db};create=true"
+
+
+def _shutdown_derby(spark, db: str) -> None:
+    """Shut the embedded database down so its files can be copied
+    (Derby reports a clean shutdown as an SQLException)."""
+    from py4j.protocol import Py4JJavaError
+
+    with contextlib.suppress(Py4JJavaError):
+        spark._sc._jvm.java.sql.DriverManager.getConnection(f"jdbc:derby:{db};shutdown=true")
+
+
+def _derby_copy(spark, db: str, root) -> IngestPipeline:
+    """A Derby-sink pipeline over a copy of the shut-down database `db`."""
+    copy = os.path.join(root, "db")
+    shutil.copytree(db, copy)
+    return IngestPipeline(spark, os.path.join(root, "lock"), jdbc_url=_derby_url(copy))
+
+
+@pytest.fixture(scope="module")
+def derby_sinks(spark, tmp_path_factory, feed_df):  # noqa: F811
+    """The Derby twin of `sinks` for the fixture chain: "even" is a
+    shut-down database holding the even blocks, whose tables are
+    "even_rows", and "clean" the tables once the odd ones follow."""
+    root = tmp_path_factory.mktemp("derby-sinks")
+    even, odd = _halves(feed_df)
+    db = str(root / "even")
+    pipe = IngestPipeline(spark, str(root / "lock"), jdbc_url=_derby_url(db))
+    pipe.process_batch(even)
+    out = {"even": db, "odd": odd, "even_rows": _rows(pipe)}
+    _shutdown_derby(spark, db)
+    pipe = _derby_copy(spark, db, root / "full")
+    pipe.process_batch(odd)
+    out["clean"] = _rows(pipe)
+    return out
+
+
+RETRY_CASES = [
+    pytest.param(sink, fails, id=fails if sink == "parquet" else f"derby-{fails}")
+    for sink in ("parquet", "derby")
+    for fails in ("block", *EVENT_TABLES, "caches")
+]
+
+
+@pytest.mark.parametrize(("sink", "fails"), RETRY_CASES)
+def test_failed_write_then_retry_equals_clean_run(spark, tmp_path, request, sink, fails):
     """One write of a batch fails once (one of the nine appends, or the
     cache write) and the batch is retried, as foreachBatch does. The
-    failure leaves every table's files as they were, file for file, and
-    after the retry all eleven tables, caches included, equal a clean
-    run row for row."""
-    out_dir = str(tmp_path / "final")
-    shutil.copytree(sinks["even"], out_dir)
-    before = _visible(out_dir)
-    assert {path.split(os.sep)[0] for path in before} >= {CACHE_BALANCES, CACHE_TRUST}
-    pipe = IngestPipeline(spark, out_dir)
-    seam = "_publish_caches" if fails == "caches" else "_append"
+    failure changes no table, caches included (on parquet, file for
+    file), and after the retry all eleven tables equal a clean run row
+    for row. Runs on the parquet sink and on embedded Derby."""
+    if sink == "parquet":
+        src = request.getfixturevalue("sinks")
+        out_dir = str(tmp_path / "final")
+        shutil.copytree(src["even"], out_dir)
+        files = _visible(out_dir)
+        pipe = IngestPipeline(spark, out_dir)
+    else:
+        src = request.getfixturevalue("derby_sinks")
+        pipe = _derby_copy(spark, src["even"], tmp_path)
+    before = _rows(pipe)
+    assert before[CACHE_BALANCES] and before[CACHE_TRUST]
+    seam = "_stage" if fails == "caches" else "_append"
     write = getattr(pipe, seam)
+    failing = (CACHE_BALANCES, CACHE_TRUST) if fails == "caches" else (fails,)
     failed = []
 
-    def fail_once(*args):
-        if not failed and fails in ("caches", args[0]):
-            failed.append(fails)
+    def fail_once(name, *args):
+        if not failed and name in failing:
+            failed.append(name)
             raise OSError("injected write failure")
-        return write(*args)
+        return write(name, *args)
 
     setattr(pipe, seam, fail_once)
     with pytest.raises(OSError, match="injected write failure"):
-        pipe.process_batch(sinks["odd"])
-    assert _visible(out_dir) == before
-    pipe.process_batch(sinks["odd"])
-    assert _rows(pipe) == sinks["clean"]
+        pipe.process_batch(src["odd"])
+    assert _rows(pipe) == before
+    if sink == "parquet":
+        assert _visible(out_dir) == files
+    pipe.process_batch(src["odd"])
+    assert _rows(pipe) == src["clean"]
 
 
 def _crash_moves_after(monkeypatch, k):
@@ -276,40 +335,108 @@ def test_crash_inside_commit_heals_on_next_call(spark, tmp_path, sinks, monkeypa
     """A crash after the commit marker, k staged files into the moves.
     The next batch must finish the commit before it reads: the retried
     batch for process_batch, the re-mined branch for retract, a
-    redelivery for compact. The tables must then equal a clean run."""
-    # (sink it starts from, the op, the next batch, the clean run)
-    start, run, nxt, want = {
+    redelivery for compact. The tables must then equal a clean run, and
+    the commit's announcement must have gone out once, from the call
+    that finished it: the odd blocks' hashes, the reorg's deadbeef hash,
+    nothing for compact."""
+    odd_hashes = sorted(
+        r[0] for r in sinks["spread_odd"].filter(F.col("hash").isNotNull()).select("hash").collect()
+    )
+    # (sink it starts from, the op, the next batch, the clean run, the
+    # announcement)
+    start, run, nxt, want, announce = {
         "process_batch": (
             "spread_even",
             lambda p: p.process_batch(sinks["spread_odd"]),
             "spread_odd",
             "spread_clean",
+            [odd_hashes],
         ),
         "retract": (
             "spread_full",
             lambda p: p.retract(sinks["reorg_block"]),
             "branch",
             "spread_reorg",
+            [[REORG_MAGIC_HASH]],
         ),
         "compact": (
             "spread_full",
             lambda p: p.compact("transaction", min_files=0),
             "spread_odd",
             "spread_clean",
+            [],
         ),
     }[op]
     out_dir = str(tmp_path / "final")
     shutil.copytree(sinks[start], out_dir)
-    pipe = IngestPipeline(spark, out_dir)
+    announced = []
+    pipe = IngestPipeline(spark, out_dir, on_imported=lambda h: announced.append(sorted(h)))
     _crash_moves_after(monkeypatch, k)
     with pytest.raises(OSError, match="injected crash"):
         run(pipe)
     monkeypatch.undo()
     marker = os.path.join(out_dir, ".commit")
     assert os.path.exists(marker)
+    assert announced == []
     pipe.process_batch(sinks[nxt])
     assert not os.path.exists(marker)
     assert _rows(pipe) == sinks[want]
+    assert announced == announce
+
+
+def test_raising_announcement_keeps_the_commit_until_it_succeeds(spark, tmp_path, sinks):
+    """on_imported raises once, after the batch's files moved in: the
+    call fails and the marker stays. The next call, a redelivery of the
+    same batch, announces the batch's hashes before it reads and then
+    removes the marker. The tables equal a clean run throughout."""
+    odd_hashes = sorted(
+        r[0] for r in sinks["odd"].filter(F.col("hash").isNotNull()).select("hash").collect()
+    )
+    out_dir = str(tmp_path / "final")
+    shutil.copytree(sinks["even"], out_dir)
+    announced = []
+
+    def on_imported(hashes):
+        if not announced:
+            announced.append(None)
+            raise RuntimeError("injected callback failure")
+        announced.append(sorted(hashes))
+
+    pipe = IngestPipeline(spark, out_dir, on_imported=on_imported)
+    with pytest.raises(RuntimeError, match="injected callback failure"):
+        pipe.process_batch(sinks["odd"])
+    marker = os.path.join(out_dir, ".commit")
+    assert os.path.exists(marker)
+    assert _rows(pipe) == sinks["clean"]
+    pipe.process_batch(sinks["odd"])
+    assert not os.path.exists(marker)
+    assert announced == [None, odd_hashes]
+    assert _rows(pipe) == sinks["clean"]
+
+
+def test_older_list_marker_heals_on_next_call(spark, tmp_path, sinks, monkeypatch):
+    """A commit marker in its older form, a bare list of the replaced
+    files, is applied like the current one, with nothing to announce: a
+    retract crashes 3 files into its moves, its marker is rewritten in
+    that form, and the re-mined branch then equals a clean retract."""
+    out_dir = str(tmp_path / "final")
+    shutil.copytree(sinks["spread_full"], out_dir)
+    announced = []
+    pipe = IngestPipeline(spark, out_dir, on_imported=announced.append)
+    _crash_moves_after(monkeypatch, 3)
+    with pytest.raises(OSError, match="injected crash"):
+        pipe.retract(sinks["reorg_block"])
+    monkeypatch.undo()
+    marker = os.path.join(out_dir, ".commit")
+    with open(marker) as f:
+        replaced = json.load(f)["replaced"]
+    assert replaced
+    with open(marker, "w") as f:
+        json.dump(replaced, f)
+    pipe.process_batch(sinks["branch"])
+    assert not os.path.exists(marker)
+    assert _rows(pipe) == sinks["spread_reorg"]
+    assert announced == []
 
 
 def test_retract_crash_recovery_restores_table(spark, tmp_path, sinks, monkeypatch):
@@ -338,3 +465,117 @@ def test_retract_crash_recovery_restores_table(spark, tmp_path, sinks, monkeypat
     pipe.retract(sinks["reorg_block"])
     pipe.process_batch(sinks["branch"])
     assert _rows(pipe) == sinks["spread_reorg"]
+
+
+# Run in a child process by test_kill_9_inside_commit_then_retry_equals_clean_run:
+# ingest the fixture chain's odd blocks into a sink holding the even ones,
+# and SIGKILL the whole process group (python and its JVM) inside the
+# commit.
+_KILLED_CHILD = r"""
+import contextlib, os, signal, sys
+from pyspark.sql import functions as F
+from blockchain_indexer_spark.session import get_spark
+from blockchain_indexer_spark.streaming import runner
+from tests.test_streaming import _feed_rows
+
+sink, out_dir, db = sys.argv[1:]
+spark = get_spark("killed-commit", master="local[2]")
+odd = _feed_rows(spark).filter(F.col("block_number") % 2 == 1)
+url = f"jdbc:derby:{db}" if sink == "derby" else None
+pipe = runner.IngestPipeline(spark, out_dir, jdbc_url=url)
+
+
+def die():
+    os.killpg(0, signal.SIGKILL)
+
+
+if sink == "parquet":  # after 3 staged-file moves in _settle
+    replace, moves = os.replace, []
+
+    def dying_replace(src, dst):
+        if ".pending" in str(src).split(os.sep):
+            if len(moves) == 3:
+                die()
+            moves.append(src)
+        replace(src, dst)
+
+    runner.os.replace = dying_replace
+else:  # after the commit transaction's first INSERT ... SELECT
+    transaction = runner.IngestPipeline._jdbc_transaction
+
+    class DyingStatement:
+        def __init__(self, st):
+            self.st = st
+
+        def executeUpdate(self, sql):
+            n = self.st.executeUpdate(sql)
+            if sql.startswith("INSERT"):
+                die()
+            return n
+
+    @contextlib.contextmanager
+    def dying_transaction(self):
+        with transaction(self) as (conn, st):
+            yield conn, DyingStatement(st)
+
+    runner.IngestPipeline._jdbc_transaction = dying_transaction
+pipe.process_batch(odd)
+sys.exit("the commit was not killed")
+"""
+
+
+def _wait_for_group_exit(pgid: int, timeout: float = 30) -> None:
+    deadline = time.time() + timeout
+    while time.time() < deadline:
+        try:
+            os.killpg(pgid, 0)
+        except ProcessLookupError:
+            return
+        time.sleep(0.2)
+
+
+@pytest.mark.parametrize("sink", ["parquet", "derby"])
+def test_kill_9_inside_commit_then_retry_equals_clean_run(
+    spark, tmp_path, request, monkeypatch, sink
+):
+    """A child indexer ingests the odd blocks into a copy of a sink
+    holding the even ones and is SIGKILLed, JVM included, inside the
+    commit: on parquet after 3 staged files moved, on Derby after the
+    commit transaction's first INSERT ... SELECT. This session then
+    retries the odd blocks over what the child left, a stale import
+    lock included, and the tables must equal a clean run. Derby must
+    also have rolled the killed transaction back."""
+    out_dir, db = str(tmp_path / "final"), str(tmp_path / "db")
+    if sink == "parquet":
+        src = request.getfixturevalue("sinks")
+        shutil.copytree(src["even"], out_dir)
+    else:
+        src = request.getfixturevalue("derby_sinks")
+        shutil.copytree(src["even"], db)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.Popen(
+        [sys.executable, "-c", _KILLED_CHILD, sink, out_dir, db],
+        cwd=repo,
+        env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+        start_new_session=True,
+        stdout=subprocess.DEVNULL,
+        stderr=subprocess.PIPE,
+        text=True,
+    )
+    try:
+        _, err = child.communicate(timeout=600)
+    finally:  # the JVM too, also when the child outlived the timeout
+        with contextlib.suppress(ProcessLookupError):
+            os.killpg(child.pid, signal.SIGKILL)
+        _wait_for_group_exit(child.pid)
+    assert child.returncode == -signal.SIGKILL, err[-3000:]
+    assert os.path.isdir(os.path.join(out_dir, ".import.lock"))
+    monkeypatch.setenv("SPARK_GRAFT_IMPORT_LOCK_TIMEOUT", "1")
+    if sink == "parquet":
+        assert os.path.exists(os.path.join(out_dir, ".commit"))
+        pipe = IngestPipeline(spark, out_dir)
+    else:
+        pipe = IngestPipeline(spark, out_dir, jdbc_url=_derby_url(db))
+        assert _rows(pipe) == src["even_rows"]
+    pipe.process_batch(src["odd"])
+    assert _rows(pipe) == src["clean"]

@@ -108,6 +108,27 @@ def test_jdbc_cache_maintenance_equals_recompute(spark, derby):
         )
 
 
+def test_jdbc_caches_equal_recompute_after_each_batch(
+    spark, tmp_path_factory, feed_df  # noqa: F811
+):
+    """T8 under JDBC across batches: the even blocks, then the odd ones.
+    The second batch's refreshed caches order their columns otherwise
+    than the tables the first batch created (a using-join puts its key
+    first), and the commit must copy them by name: after each batch
+    both caches equal a from-scratch recompute."""
+    pipe = _derby_pipe(spark, tmp_path_factory.mktemp("derby-caches"))
+    for parity in (0, 1):
+        pipe.process_batch(feed_df.filter(F.col("block_number") % 2 == parity))
+        bal_fresh, trust_fresh = _scratch_views(pipe)
+        assert trust_fresh is not None
+        assert _sorted(pipe.read_cache(CACHE_BALANCES), _BAL_COLS) == _sorted(
+            bal_fresh, _BAL_COLS
+        ), parity
+        assert _sorted(pipe.read_cache(CACHE_TRUST), _TRUST_COLS) == _sorted(
+            trust_fresh, _TRUST_COLS
+        ), parity
+
+
 @pytest.mark.slowe2e
 def test_jdbc_retract_replay_identical(spark, tmp_path_factory, feed_df):  # noqa: F811
     """T5 under JDBC: retract(reorg_block) deletes every row at or

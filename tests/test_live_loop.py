@@ -218,7 +218,7 @@ def test_live_round_loop_gap_reorg_ordering(spark, tmp_path_factory, block_feed)
     canon_dir = os.path.join(root, "canonical")
     os.makedirs(canon_dir)
     _emit(canon_dir, canonical, "all")
-    ref = IngestPipeline(spark, os.path.join(root, "ref"), maintain_caches=False)
+    ref = IngestPipeline(spark, os.path.join(root, "ref"))
     ref.process_batch(spark.read.schema(FEED_SCHEMA).parquet(canon_dir))
 
     def tx_state(p):

@@ -1,13 +1,16 @@
-"""LIVE-Postgres smoke for the pg-dialect DDL (VERDICT r4 item #6 /
-r5 item #8 carry-over): the pinned-SQL contract test in test_jdbc.py
-checks the generated TEXT; this module executes that DDL against a
-real throwaway PostgreSQL server (the sandbox ships postgres 15) and
-round-trips the two exactness-critical shapes through psql:
+"""LIVE-Postgres smoke for the pg-dialect DDL and the JDBC commit: the
+pinned-SQL contract tests in test_jdbc.py and test_streaming.py check
+the generated TEXT; this module executes it against a real throwaway
+PostgreSQL server and round-trips the exactness-critical shapes through
+psql:
 
 - array columns as REAL text[] (the reference's 0.0.64.sql:358-377
   mapping, not the generic-JDBC JSON-text fallback);
 - UNBOUNDED numeric + the value_string text twin, so a 45-digit
-  uint256 wei value survives exactly past every DECIMAL cap.
+  uint256 wei value survives exactly past every DECIMAL cap;
+- the commit's statements (jdbc_commit_sql) moving a pg-DDL staging
+  table into its final table inside one transaction, and leaving no
+  final table when that transaction rolls back.
 
 The server runs initdb/pg_ctl as an unprivileged user on a unix
 socket in a temp dir (Postgres refuses root); everything is skipped
@@ -161,3 +164,60 @@ def test_text_array_and_unbounded_numeric_round_trip(pg):
     ).split("|")
     assert got_num == big  # unbounded numeric holds all 45 digits
     assert got_str == big
+
+def test_commit_statements_move_a_staged_table(pg):
+    """The JDBC commit's statements, run inside BEGIN/COMMIT, create the
+    final table from a pg-DDL staging table with its text[] and
+    unbounded numeric types and its NOT NULL columns, copy the rows by
+    column name and drop the staging table;
+    a second commit that replaces the table leaves only its own rows.
+    Inside BEGIN/ROLLBACK they leave no final table and the staging
+    table as it was."""
+    from blockchain_indexer_spark.schemas import TRANSACTION_SCHEMA
+    from blockchain_indexer_spark.streaming.runner import jdbc_commit_sql, pg_create_table_sql
+
+    big = "9" * 45
+
+    def stage(name: str, tx_hash: str) -> None:
+        pg(pg_create_table_sql(name + "__pending", TRANSACTION_SCHEMA))
+        pg(
+            f'INSERT INTO "{name}__pending" '
+            '("block_number", "timestamp", "hash", "index", "from", '
+            '"value", "value_string", "classification") '
+            f"VALUES (1, '2024-01-01 00:00:00', '{tx_hash}', 0, '0xfrom', "
+            f"{big}::numeric, '{big}', ARRAY['Erc20Transfer','CrcHubTransfer'])"
+        )
+
+    def exists(table: str) -> bool:
+        return pg(f"SELECT to_regclass('\"{table}\"') IS NOT NULL") == "t"
+
+    def transaction(statements: list[str], end: str) -> None:
+        pg("BEGIN; " + "; ".join(statements) + f"; {end};")
+
+    def commit_sql(name: str, exists: bool, replace: bool) -> list[str]:
+        return jdbc_commit_sql(name, cols, exists, replace, postgres=True)
+
+    # the staged table's columns in another order than its DDL's: the
+    # copy must match them by name
+    cols = [f.name for f in reversed(TRANSACTION_SCHEMA.fields)]
+    stage("transaction_commit", "0xa")
+    transaction(commit_sql("transaction_commit", False, False), "COMMIT")
+    assert not exists("transaction_commit__pending")
+    assert pg('SELECT pg_typeof("classification")::text FROM "transaction_commit"') == "text[]"
+    not_null = pg(
+        "SELECT string_agg(attname, ',' ORDER BY attnum) FROM pg_attribute "
+        "WHERE attrelid = '\"transaction_commit\"'::regclass AND attnum > 0 AND attnotnull"
+    )
+    assert not_null == ",".join(f.name for f in TRANSACTION_SCHEMA.fields if not f.nullable)
+    assert pg(
+        'SELECT "hash" || \'|\' || "value"::text || \'|\' || "value_string" || \'|\' || '
+        'array_to_string("classification", \',\') FROM "transaction_commit"'
+    ) == f"0xa|{big}|{big}|Erc20Transfer,CrcHubTransfer"
+    stage("transaction_commit", "0xb")
+    transaction(commit_sql("transaction_commit", True, True), "COMMIT")
+    assert pg('SELECT string_agg("hash", \',\') FROM "transaction_commit"') == "0xb"
+
+    stage("transaction_rollback", "0xc")
+    transaction(commit_sql("transaction_rollback", False, False), "ROLLBACK")
+    assert not exists("transaction_rollback")
+    assert pg('SELECT "hash" FROM "transaction_rollback__pending"') == "0xc"

@@ -21,7 +21,9 @@ from blockchain_indexer_spark.streaming.runner import (
     CACHE_TRUST,
     EVENT_TABLES,
     FEED_SCHEMA,
+    SINK_TABLES,
     IngestPipeline,
+    jdbc_commit_sql,
 )
 from tests.chain_fixtures import EXPECTED, build_raw_tables
 
@@ -142,14 +144,17 @@ def test_micro_batch_promote_latency(spark, tmp_path_factory, feed_df, sf_dir):
 
 @pytest.fixture
 def fake_jdbc(spark, tmp_path_factory, monkeypatch):
-    """A recording JDBC stub that spools to parquet: yields the sink
-    root, the spool dir and the (url, table) lists written and read
-    plus the DDL statements run."""
+    """A recording JDBC stub that spools each table to a parquet dir:
+    yields the sink root, the spool dir, the (url, table) lists written
+    and read, and the statements of each committed transaction, which it
+    also applies to the spool."""
+    import shutil
+
     import pyspark.sql.readwriter as rw
 
     root = str(tmp_path_factory.mktemp("jdbc"))
     spool = os.path.join(root, "spool")
-    written, read = [], []
+    written, read, commits = [], [], []
 
     def unq(table):
         assert table.startswith('"') and table.endswith('"'), table
@@ -165,20 +170,44 @@ def fake_jdbc(spark, tmp_path_factory, monkeypatch):
 
     monkeypatch.setattr(rw.DataFrameWriter, "jdbc", fake_write_jdbc)
     monkeypatch.setattr(rw.DataFrameReader, "jdbc", fake_read_jdbc)
-    # the missing-table probe (and the pg DDL step) would dial the
-    # (nonexistent) server — answer from the spool / record the DDL
-    ddl: list[str] = []
+
+    # the missing-table probe and raw SQL would dial the (nonexistent)
+    # server — answer from the spool and apply each statement to it
 
     class FakeStatement:
-        def execute(self, sql):
-            ddl.append(sql)
+        def __init__(self, conn):
+            self.conn = conn
 
-        def close(self):
-            pass
+        def executeUpdate(self, sql):
+            self.conn.run.append(sql)
+            words = sql.split()
+            table = os.path.join(spool, unq(words[2]))
+            if sql.startswith("INSERT INTO"):  # INSERT INTO t (..) SELECT .. FROM s
+                src = os.path.join(spool, unq(words[-1]))
+                for f in os.listdir(src):
+                    if f.endswith(".parquet"):
+                        os.replace(os.path.join(src, f), os.path.join(table, f))
+            elif sql.startswith(("DROP TABLE", "DELETE FROM")):
+                shutil.rmtree(table)
+            if sql.startswith(("CREATE TABLE", "DELETE FROM")):
+                os.makedirs(table)
+            return 0
 
     class FakeConn:
+        def __init__(self):
+            self.run = []
+
+        def setAutoCommit(self, on):
+            assert on is False
+
         def createStatement(self):
-            return FakeStatement()
+            return FakeStatement(self)
+
+        def commit(self):
+            commits.append(self.run)
+
+        def rollback(self):
+            pass
 
         def close(self):
             pass
@@ -189,64 +218,67 @@ def fake_jdbc(spark, tmp_path_factory, monkeypatch):
         "_jdbc_table_exists",
         staticmethod(lambda conn, name: os.path.isdir(os.path.join(spool, name))),
     )
-    return root, spool, written, read, ddl
+    monkeypatch.setattr(
+        IngestPipeline,
+        "_jdbc_staged",
+        staticmethod(
+            lambda conn: {
+                name: spark.read.parquet(os.path.join(spool, f"{name}__pending")).columns
+                for name in SINK_TABLES
+                if os.path.isdir(os.path.join(spool, f"{name}__pending"))
+            }
+        ),
+    )
+    return root, spool, written, read, commits
 
 
 def test_jdbc_sink_dispatch(spark, feed_df, fake_jdbc):
-    """The JDBC branch routes every append through DataFrameWriter.jdbc
-    (quoted identifiers — `transaction` is an SQL reserved word) and
-    reads finals back via DataFrameReader.jdbc — verified with a
-    recording stub that spools to parquet (the real-database twin is
-    tests/test_jdbc.py against embedded Derby)."""
-    root, spool, written, read, ddl = fake_jdbc
+    """The JDBC branch stages every write through DataFrameWriter.jdbc
+    into a `<table>__pending` table (quoted identifiers — `transaction`
+    is an SQL reserved word), moves them into the final tables in one
+    transaction, and reads finals back via DataFrameReader.jdbc —
+    verified with a recording stub that spools to parquet (the
+    real-database twin is tests/test_jdbc.py against embedded Derby)."""
+    root, spool, written, read, commits = fake_jdbc
     url = "jdbc:postgresql://db/indexer"
-    pipe = IngestPipeline(
-        spark, root, jdbc_url=url, jdbc_properties={"user": "u"}, maintain_caches=False
-    )
+    pipe = IngestPipeline(spark, root, jdbc_url=url, jdbc_properties={"user": "u"})
     pipe.process_batch(feed_df)
-    tables = {t for _, t in written}
-    assert tables == {"block", "transaction", *(set(EVENT_TABLES) - {"transaction"})}
-    # the pg target got real-dialect DDL before the first append:
-    # text[] for the array columns, never the JSON-text fallback
-    created = {s.split('"')[1]: s for s in ddl if s.startswith("CREATE TABLE")}
-    assert set(created) == tables
-    assert '"owners" text[]' in created["crc_signup"]
-    assert '"classification" text[]' in created["transaction"]
+    assert {t for _, t in written} == {f"{name}__pending" for name in SINK_TABLES}
     assert all(u == url for u, _ in written)
+    # the pg target got real-dialect DDL on each staged event table
+    # before its append: text[] for the array columns, never the
+    # JSON-text fallback
+    created = {
+        s.split('"')[1]: s
+        for run in commits
+        for s in run
+        if s.startswith("CREATE TABLE") and " (LIKE " not in s
+    }
+    assert set(created) == {f"{name}__pending" for name in ("block", *EVENT_TABLES)}
+    assert '"owners" text[]' in created["crc_signup__pending"]
+    assert '"classification" text[]' in created["transaction__pending"]
+    def columns(name):
+        return spark.read.parquet(os.path.join(spool, name)).columns
+
+    # one transaction creates each final table and moves its rows in
+    assert commits[-1] == [
+        sql
+        for name in SINK_TABLES
+        for sql in jdbc_commit_sql(name, columns(name), False, False, postgres=True)
+    ]
     assert {t for _, t in read} <= {"block", "transaction"}
-    # second batch: anti-join reads the spooled tables back via jdbc
+    # second batch: anti-join reads the spooled tables back via jdbc;
+    # nothing new, so the caches are not rewritten
     n = spark.read.parquet(os.path.join(spool, "transaction")).count()
     pipe.process_batch(feed_df)  # duplicate delivery
     assert spark.read.parquet(os.path.join(spool, "transaction")).count() == n
     assert ("jdbc:postgresql://db/indexer", "transaction") in read
-
-
-def test_jdbc_cache_refresh_reads_after_the_appends(spark, feed_df, fake_jdbc):
-    """A JDBC read is a lazy query, not a snapshot: the refresh reads
-    its input tables only once all nine appends have returned."""
-    from blockchain_indexer_spark.streaming.runner import CACHE_INPUTS
-
-    root, spool, _, _, _ = fake_jdbc
-    pipe = IngestPipeline(spark, root, jdbc_url="jdbc:derby:stub")
-    events = []
-    append, read_final = pipe._append, pipe.read_final
-
-    def recording_append(name, df, block_col):
-        append(name, df, block_col)
-        events.append(("append", name))
-
-    def recording_read(name):
-        events.append(("read", name))
-        return read_final(name)
-
-    pipe._append, pipe.read_final = recording_append, recording_read
-    pipe.process_batch(feed_df)
-    appends = [i for i, (kind, _) in enumerate(events) if kind == "append"]
-    input_reads = [i for i, e in enumerate(events) if e[0] == "read" and e[1] in CACHE_INPUTS]
-    assert len(appends) == 1 + len(EVENT_TABLES)
-    assert input_reads and min(input_reads) > max(appends)
-    assert os.path.isdir(os.path.join(spool, CACHE_BALANCES))
-    assert os.path.isdir(os.path.join(spool, CACHE_TRUST))
+    assert commits[-1] == [
+        sql
+        for name in ("block", *EVENT_TABLES)
+        for sql in jdbc_commit_sql(name, columns(name), True, False, postgres=True)
+    ]
+    assert not [f for f in os.listdir(spool) if f.endswith("__pending")]
 
 
 def test_concurrent_importers_serialize(spark, tmp_path_factory, feed_df):
@@ -258,7 +290,7 @@ def test_concurrent_importers_serialize(spark, tmp_path_factory, feed_df):
 
     out = str(tmp_path_factory.mktemp("multiwriter"))
     n_txs = feed_df.filter(F.col("hash").isNotNull()).count()
-    pipes = [IngestPipeline(spark, out, maintain_caches=False) for _ in range(2)]
+    pipes = [IngestPipeline(spark, out) for _ in range(2)]
     with TPE(max_workers=2) as pool:
         futs = [pool.submit(p.process_batch, feed_df) for p in pipes]
         for f in futs:

@@ -197,7 +197,7 @@ def test_live_feeder_push_end_to_end(spark, tmp_path, gateway_ws):
     assert emitted == len(numbers)
     done["rounds"] += 1
 
-    pipe = IngestPipeline(spark, str(tmp_path / "final"), maintain_caches=False)
+    pipe = IngestPipeline(spark, str(tmp_path / "final"))
     q = pipe.start_stream(feed_dir, str(tmp_path / "ckpt"), available_now=False)
     q.processAllAvailable()
     q.stop()

@@ -27,7 +27,7 @@ STATIC: dict[str, tuple[str, str]] = {
     "S8": ("sources/rpc.py download_blocks_with_txs (24-way pool)", "tests/test_caches_rpc_health.py"),
     "S9": ("sources/rpc.py download_receipts (96-way pool); streaming reunion via streaming/joins.py join_tx_receipts (watermarked stream-stream interval join, left_outer = undelivered-receipt signal)", "tests/test_stream_join.py"),
     "S10": ("sources/rpc.py fetch_safe_owners → extract_crc_signups(safe_owners)", "tests/test_caches_rpc_health.py"),
-    "K1": ("streaming/runner.py _append (partitioned parquet staged under .pending/, one _commit per write; JDBC-swappable)", "tests/test_streaming.py"),
+    "K1": ("streaming/runner.py _append (staged under .pending/ on parquet, in <table>__pending on JDBC; one _commit per write: a .commit marker, or one JDBC transaction)", "tests/test_import_lock.py"),
     "K2": ("streaming/runner.py process_batch per-table appends", "tests/test_streaming.py"),
     "K3": ("sources/blocks.py last_valid_block ledger (requested_blocks)", "tests/test_streaming.py"),
     "K4": ("runner FEED_SCHEMA empty-block marker rows", "tests/test_streaming.py"),
@@ -74,7 +74,7 @@ STATIC: dict[str, tuple[str, str]] = {
     "T5": ("operators/promote.py retract_from + IngestPipeline.retract (partitioned-sink rewrite + cache drop in one commit + deadbeef)", "tests/test_live_loop.py"),
     "T6": ("sources/blocks.py find_gaps + last_valid_block", "tests/test_streaming.py"),
     "T7": ("operators/promote.py promote (ready_blocks: max_by newest version per number)", "tests/test_promote.py"),
-    "T8": ("operators/caches.py wired into IngestPipeline.refresh_caches — per-batch stale-key refresh of both cache tables", "tests/test_cache_maintenance.py"),
+    "T8": ("operators/caches.py wired into IngestPipeline.refresh_caches — per-batch stale-key refresh of both cache tables, staged inside the append pool and committed with the batch on either sink", "tests/test_cache_maintenance.py"),
     "T9": ("views crc_capacity_graph(since_block=...)", "tests/test_views.py"),
     "T10": ("per-day tumbling (A4) + streaming/windows.py watermarked windows, session_window sessions", "tests/test_streaming_windows.py"),
     "T11": ("runner available_now (bulk) vs processing-time (live)", "tests/test_streaming.py"),
