@@ -1,4 +1,4 @@
-"""Incremental view maintenance (T8) — the reference's stale-key cache
+"""Incremental view maintenance (T8) — the reference's stale key cache
 refresh (`import_from_staging_2`, 0.0.64.sql:2272-2376) as DataFrame
 set algebra.
 

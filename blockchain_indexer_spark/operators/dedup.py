@@ -713,7 +713,7 @@ def minhash_index_update(
     hash_fn: str = "xxhash64",
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental LSH maintenance for a streaming/batched corpus: the
-    reference's stale-key cache-refresh philosophy (T8,
+    reference's stale key cache-refresh philosophy (T8,
     0.0.64.sql:2272-2376) applied to the dedup index.
 
     ``index`` is the persisted band-row frame from prior batches
@@ -727,7 +727,7 @@ def minhash_index_update(
       against the index). old×old pairs were emitted by earlier
       batches, so per-batch work is O(|batch| × bucket occupancy) —
       independent of corpus age, exactly like the reference's
-      stale-key refresh never re-reading untouched accounts.
+      stale key refresh never re-reading untouched accounts.
 
     Union-equivalence (incremental pairs across batches == one full
     batch run) is pinned in tests and by the ``minhash_incremental_md5``

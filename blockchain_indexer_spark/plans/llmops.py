@@ -1463,7 +1463,7 @@ def minhash_lsh_candidates_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     "FULL-corpus candidate set, which is exactly what the oracle "
     "computes: the gate proves per-batch incremental maintenance is "
     "lossless. Per-batch cost is O(|batch| x bucket occupancy), "
-    "independent of corpus age — the reference's stale-key cache "
+    "independent of corpus age — the reference's stale key cache "
     "refresh (T8) applied to the dedup index.",
     survey_refs=("LLM-dedup", "T8"),
 )

@@ -313,7 +313,7 @@ def anti_join_inactive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Semi join: existence probe without multiplying rows "
     "(CleanImported survivor selection Persistence/StagingTables.cs:37-55; "
-    "stale-key scoping 0.0.64.sql:2275-2296).",
+    "stale key scoping 0.0.64.sql:2275-2296).",
     survey_refs=("J13", "J15"),
 )
 def semi_join_parts(spark: SparkSession, sf_dir: str) -> DataFrame:

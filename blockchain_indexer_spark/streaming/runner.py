@@ -26,20 +26,20 @@ dir, or in a `<table>__pending` table on JDBC. `_commit` then moves
 them in at once. On parquet, renaming one `.commit` marker (the list of
 the files they replace) into the sink root is the commit point, and
 `_settle` applies it; readers never see `.pending/`, which Spark skips.
-On JDBC one transaction copies each staged table into its final table
-and drops it. A write that fails before its commit leaves only staged
-rows, which the next `_settle` drops, so a retried batch runs against
-the tables as they were.
+On JDBC one transaction copies each staged table into its final table,
+drops it, and queues the write's announcement in an `_announce` table
+that `_settle` drains. A write that fails before its commit leaves only
+staged rows, which the next `_settle` drops, so a retried batch runs
+against the tables as they were.
 """
 
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import json
 import os
 import shutil
-import threading
-import time
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -165,10 +165,14 @@ def _has_data_files(path: str) -> bool:
 
 # A write's staged files, inside each table dir it touches, and the
 # commit marker in the sink root; on JDBC, the suffix of the table a
-# write stages its rows in (see the module docstring).
+# write stages its rows in, and the table a commit queues its
+# announcement in (see the module docstring). Last, the import lock's
+# file in the sink root (see _import_lock).
 _PENDING = ".pending"
 _MARKER = ".commit"
 _STAGED = "__pending"
+_ANNOUNCE = "_announce"
+_LOCK = ".import.lck"
 
 
 # K5: the reference broadcasts this magic hash to websocket consumers
@@ -268,13 +272,13 @@ class IngestPipeline:
     imported tx hashes — the reference's websocket broadcast seam
     (RoundContext.OnBatchSuccessNotify); a retract announces
     [REORG_MAGIC_HASH]. The list is batch-sized, not a scan. Delivery
-    is at least once on parquet: the commit marker carries the list,
-    and whichever `_settle` applies the marker announces it before
+    is at least once on both sinks: the commit carries the list (in the
+    parquet marker, or in the `_announce` table the JDBC transaction
+    writes), and whichever `_settle` finds it announces it before
     removing it. A callback that raises fails that call and keeps the
-    marker, so the next process_batch, retract or compact announces
-    again before it writes anything; while the callback keeps raising,
-    the sink takes no writes. On JDBC the announcement follows the
-    commit's transaction, and a crash between the two loses it.
+    list, so the next process_batch, retract or compact announces again
+    before it writes anything; while the callback keeps raising, the
+    sink takes no writes.
     """
 
     def __init__(
@@ -332,40 +336,38 @@ class IngestPipeline:
         on the next batch. A crash before the commit leaves the old
         branch whole. JDBC targets run the reference's SQL delete
         server-side: one transaction issuing DELETE .. WHERE
-        block_number >= ? over block + the 8 event tables and dropping
-        the two cache tables (Indexer.cs:273-325 runs the same ordered
-        deletes inside a single Serializable transaction via
-        ImportProcedure.cs:17-27) — atomic on the server, so a crash
-        mid-retract rolls back instead of leaving a half-retracted
-        database.
+        block_number >= ? over block + the 8 event tables, dropping
+        the two cache tables and queueing the announcement
+        (Indexer.cs:273-325 runs the same ordered deletes inside a
+        single Serializable transaction via ImportProcedure.cs:17-27) —
+        atomic on the server, so a crash mid-retract rolls back instead
+        of leaving a half-retracted database.
         """
-        if self.jdbc_url is not None:
-            # under the import lock like the parquet path: a concurrent
-            # batch's commit could land rows >= reorg_block after the
-            # DELETE (see _import_lock)
-            with self._import_lock(), self._jdbc_transaction() as (conn, st):
-                for name in ("block", *EVENT_TABLES):
-                    if not self._jdbc_table_exists(conn, name):
-                        continue  # pre-first-batch target
-                    block_col = "number" if name == "block" else "block_number"
-                    st.executeUpdate(
-                        f"DELETE FROM {_quote(name)} "
-                        f"WHERE {_quote(block_col)} >= {int(reorg_block)}"
-                    )
-                for cache in (CACHE_BALANCES, CACHE_TRUST):
-                    if self._jdbc_table_exists(conn, cache):
-                        st.executeUpdate(f"DROP TABLE {_quote(cache)}")
-            self._announce([REORG_MAGIC_HASH])
-            return
         from blockchain_indexer_spark.operators.promote import retract_from  # noqa: PLC0415
 
         # under the import lock: the rewrite deletes part files a
         # concurrent promote's anti-join may be scanning, and a batch
-        # appended between the filter and the commit would dodge
-        # the retraction entirely (same serialization the reference
-        # gets from its Serializable transaction)
+        # committed between the filter (or the DELETE) and the commit
+        # would dodge the retraction entirely (same serialization the
+        # reference gets from its Serializable transaction)
         with self._import_lock():
             self._settle()
+            if self.jdbc_url is not None:
+                with self._jdbc_transaction() as (conn, st):
+                    for name in ("block", *EVENT_TABLES):
+                        if not self._jdbc_table_exists(conn, name):
+                            continue  # pre-first-batch target
+                        block_col = "number" if name == "block" else "block_number"
+                        st.executeUpdate(
+                            f"DELETE FROM {_quote(name)} "
+                            f"WHERE {_quote(block_col)} >= {int(reorg_block)}"
+                        )
+                    for cache in (CACHE_BALANCES, CACHE_TRUST):
+                        if self._jdbc_table_exists(conn, cache):
+                            st.executeUpdate(f"DROP TABLE {_quote(cache)}")
+                    self._jdbc_queue_announce(conn, st, [REORG_MAGIC_HASH])
+                self._settle()
+                return
             tables = {}
             for name in ("block", *EVENT_TABLES):
                 df = self.read_final(name)
@@ -401,7 +403,8 @@ class IngestPipeline:
         path is not listed.
 
         JDBC: one transaction runs jdbc_commit_sql for each staged
-        table, and the announcement follows it."""
+        table and queues `announce` in the `_announce` table, and
+        _settle announces it."""
         if self.jdbc_url is not None:
             postgres = is_postgres_url(self.jdbc_url)
             with self._jdbc_transaction() as (conn, st):
@@ -409,34 +412,43 @@ class IngestPipeline:
                     exists = self._jdbc_table_exists(conn, name)
                     for sql in jdbc_commit_sql(name, cols, exists, name in replaced, postgres):
                         st.executeUpdate(sql)
-            self._announce(announce)
-            return
-        staged = {dst for _src, dst in self._staged()}
-        old = []
-        for rel in replaced:
-            for root, dirs, files in os.walk(os.path.join(self.out_dir, rel)):
-                dirs[:] = [d for d in dirs if d != _PENDING]
-                old += [os.path.join(root, f) for f in files]
-        gone = [os.path.relpath(p, self.out_dir) for p in old if p not in staged]
-        tmp = os.path.join(self.out_dir, _MARKER + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump({"replaced": gone, "announce": announce}, f)
-        os.replace(tmp, os.path.join(self.out_dir, _MARKER))
+                self._jdbc_queue_announce(conn, st, announce)
+        else:
+            staged = {dst for _src, dst in self._staged()}
+            old = []
+            for rel in replaced:
+                for root, dirs, files in os.walk(os.path.join(self.out_dir, rel)):
+                    dirs[:] = [d for d in dirs if d != _PENDING]
+                    old += [os.path.join(root, f) for f in files]
+            gone = [os.path.relpath(p, self.out_dir) for p in old if p not in staged]
+            tmp = os.path.join(self.out_dir, _MARKER + ".tmp")
+            with open(tmp, "w") as f:
+                json.dump({"replaced": gone, "announce": announce}, f)
+            os.replace(tmp, os.path.join(self.out_dir, _MARKER))
         self._settle()
 
     def _settle(self) -> None:
         """Apply the commit the last write left, or drop what a write
         staged without committing. Runs first under the import lock in
-        process_batch, retract and compact. On JDBC a commit is one
-        transaction, so only staged tables can be left: they are
-        dropped. On parquet every step can run again after a crash:
-        staged files move to their final paths, the replaced files go
-        (with a partition or cache dir they leave empty), the commit's
-        hashes are announced, then the marker goes."""
+        process_batch, retract and compact, and last in _commit. On JDBC
+        a commit is one transaction, so only staged tables and queued
+        hashes can be left: one transaction drops the tables, announces
+        the hashes and deletes them. On parquet every step can run again
+        after a crash: staged files move to their final paths, the
+        replaced files go (with a partition or cache dir they leave
+        empty), the commit's hashes are announced, then the marker goes.
+        A callback that raises leaves the hashes (and the marker)."""
         if self.jdbc_url is not None:
             with self._jdbc_transaction() as (conn, st):
                 for name in self._jdbc_staged(conn):
                     st.executeUpdate(f"DROP TABLE {_quote(name + _STAGED)}")
+                if self._jdbc_table_exists(conn, _ANNOUNCE):
+                    rs = st.executeQuery(f"SELECT * FROM {_quote(_ANNOUNCE)}")
+                    hashes = []
+                    while rs.next():
+                        hashes.append(rs.getString(1))
+                    self._announce(hashes)
+                    st.executeUpdate(f"DELETE FROM {_quote(_ANNOUNCE)}")
             return
         if not os.path.isdir(self.out_dir):
             return
@@ -503,6 +515,19 @@ class IngestPipeline:
             return bool(rs.next())
         finally:
             rs.close()
+
+    def _jdbc_queue_announce(self, conn, st, hashes: list[str] | None) -> None:
+        """Queue `hashes` for _settle to announce, inside the transaction
+        of `conn` (a tx hash is 66 characters)."""
+        if not hashes:
+            return
+        if not self._jdbc_table_exists(conn, _ANNOUNCE):
+            st.executeUpdate(f'CREATE TABLE {_quote(_ANNOUNCE)} ("hash" VARCHAR(256))')
+        insert = conn.prepareStatement(f"INSERT INTO {_quote(_ANNOUNCE)} VALUES (?)")
+        for h in hashes:
+            insert.setString(1, h)
+            insert.addBatch()
+        insert.executeBatch()
 
     @staticmethod
     def _jdbc_staged(conn) -> dict[str, list[str]]:
@@ -655,101 +680,31 @@ class IngestPipeline:
                 self._commit(*(os.path.join(name, part) for part in results))
         return results
 
+    @contextlib.contextmanager
     def _import_lock(self):
-        """Coarse cross-process import mutex over the sink directory —
-        the reference's Serializable promote transaction
-        (Persistence/ImportProcedure.cs:17-27) re-expressed for a
-        shared filesystem: the exactly-once anti-join reads the final
-        tables, so two UNSERIALIZED writers racing the same rows would
-        both see them as new and double-import. mkdir is atomic on
-        POSIX and object stores with atomic namespaces; a crashed
-        holder's lock is stolen after SPARK_GRAFT_IMPORT_LOCK_TIMEOUT
-        seconds (default 600). Two guards make the steal safe: (a)
-        stealing goes through an atomic rename to a unique grave name
-        — exactly one of N racing waiters wins the rename, the losers
-        get FileNotFoundError and fall back to the mkdir race, so a
-        freshly re-acquired lock can never be deleted by a second
-        stealer that also saw the stale mtime; (b) a daemon heartbeat
-        refreshes the lock's mtime at timeout/4 while held, so a
-        legitimately long import is never mistaken for a crashed one.
-        On JDBC a batch's anti-join reads the final tables before its
-        commit's transaction, so instances sharing a database must share
-        this lock too, or run the round SERIALIZABLE server-side like
-        the reference (SCALE.md)."""
-        @contextlib.contextmanager
-        def lock():
-            path = os.path.join(self.out_dir, ".import.lock")
-            token_path = os.path.join(path, "owner")
-            timeout = float(os.environ.get("SPARK_GRAFT_IMPORT_LOCK_TIMEOUT", "600"))
-            os.makedirs(self.out_dir, exist_ok=True)
-            token = f"{os.getpid()}-{time.monotonic_ns()}"
-            while True:
-                try:
-                    os.mkdir(path)
-                    break
-                except FileExistsError:
-                    try:
-                        if time.time() - os.path.getmtime(path) > timeout:
-                            # atomic steal: one winner per stale lock
-                            grave = f"{path}.stale-{os.getpid()}-{time.monotonic_ns()}"
-                            os.rename(path, grave)
-                            shutil.rmtree(grave, ignore_errors=True)
-                            continue
-                    except OSError:
-                        pass  # lost the steal race — back to mkdir
-                    time.sleep(0.05)
-            # ownership token: if this holder is ever (wrongly) robbed,
-            # its release must not delete the THIEF's lock and cascade a
-            # third concurrent holder — release checks the token first.
-            # token_written records whether the token actually landed:
-            # when the write itself failed, an absent token at release is
-            # EXPECTED and must not leak the lock (a leak stalls every
-            # later batch for the full steal timeout) — the in-memory
-            # acquired flag is then the ownership proof. Only a token
-            # that exists and reads as someone ELSE's blocks release.
-            token_written = False
-            try:
-                with open(token_path, "w") as f:
-                    f.write(token)
-                token_written = True
-            except OSError:
-                pass
-            stop = threading.Event()
+        """Cross-process import mutex: an exclusive flock on one file in
+        the sink root, for the reference's Serializable promote
+        transaction (Persistence/ImportProcedure.cs:17-27). The
+        exactly-once anti-join reads the final tables, so unserialized
+        writers racing the same rows would both import them. Closing the
+        file releases the lock, also when the body raises, and the kernel
+        releases it when its holder dies, so a restart after a crash gets
+        in at once. A flock belongs to its open file description, so two
+        opens conflict even inside one process; Python opens files
+        non-inheritable, so no child process (the JVM, Spark's workers)
+        keeps it.
 
-            def _heartbeat():
-                # refresh at timeout/4 but never slower than 4x per
-                # steal window even for sub-second timeouts — an
-                # interval >= the threshold would make a LIVE lock
-                # stealable between beats
-                while not stop.wait(max(0.05, timeout / 4)):
-                    try:
-                        os.utime(path)
-                    except OSError:
-                        return  # lock dir gone — holder is done or robbed
-
-            beat = threading.Thread(
-                target=_heartbeat, name="import-lock-heartbeat", daemon=True
-            )
-            beat.start()
-            try:
-                yield
-            finally:
-                stop.set()
-                try:
-                    with open(token_path) as f:
-                        owned = f.read() == token
-                except OSError:
-                    # token unreadable: if OUR write never landed, the
-                    # absence proves nothing about a thief — the mkdir
-                    # succeeded, so we own the lock and must free it;
-                    # if our write DID land, a now-missing/unreadable
-                    # token means the dir was robbed and re-created —
-                    # leave the thief's lock alone
-                    owned = not token_written
-                if owned:
-                    shutil.rmtree(path, ignore_errors=True)
-
-        return lock()
+        Every writer must see the same flock: a sink shared across hosts
+        needs a cluster-wide flock, and on NFS, where Linux emulates
+        flock with per-process byte-range locks, run one pipeline per
+        process. On JDBC a batch's anti-join reads the final tables
+        before its commit's transaction, so instances sharing a database
+        must share this lock too, or run the round SERIALIZABLE
+        server-side like the reference (SCALE.md)."""
+        os.makedirs(self.out_dir, exist_ok=True)
+        with open(os.path.join(self.out_dir, _LOCK), "a") as f:
+            fcntl.flock(f, fcntl.LOCK_EX)
+            yield
 
     def process_batch(self, feed: DataFrame, epoch_id: int = 0) -> None:
         """foreachBatch body: staging split → promote → classify →

@@ -1,6 +1,7 @@
-"""Import-lock steal semantics and each sink's one commit per write: a
-failed batch, a crash inside a commit (raised in-process, or a real
-SIGKILL of the indexer's processes) and a crash before it.
+"""The import lock (one holder at a time, freed when its holder dies)
+and each sink's one commit per write: a failed batch, a crash inside a
+commit (raised in-process, or a real SIGKILL of the indexer's
+processes), a crash before it, and an announcement callback that raises.
 
 The lock and the commit stand in for the reference's Serializable
 promote transaction (Persistence/ImportProcedure.cs:17-27): the
@@ -10,6 +11,7 @@ commits whole."""
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import json
 import os
 import shutil
@@ -36,19 +38,10 @@ from blockchain_indexer_spark.streaming.runner import (
 from tests.test_streaming import feed_df  # noqa: F401 — module fixture
 
 
-def test_stale_lock_steal_has_single_winner(spark, tmp_path_factory, monkeypatch):
-    """N waiters racing a crashed holder's stale lock: the rename-based
-    steal admits exactly one at a time (the old rmdir-based steal let a
-    second stealer delete the first's freshly created lock)."""
-    root = str(tmp_path_factory.mktemp("lock"))
-    monkeypatch.setenv("SPARK_GRAFT_IMPORT_LOCK_TIMEOUT", "1")
-    pipe = IngestPipeline(spark, os.path.join(root, "final"))
-    os.makedirs(pipe.out_dir, exist_ok=True)
-    stale = os.path.join(pipe.out_dir, ".import.lock")
-    os.mkdir(stale)
-    old = time.time() - 3600
-    os.utime(stale, (old, old))  # a crashed holder
-
+def test_racing_waiters_admit_one_holder_at_a_time(tmp_path):
+    """Six threads, each with its own open of the lock file, race for
+    the import lock: it admits one holder at a time."""
+    pipe = IngestPipeline(None, str(tmp_path / "final"))
     active = 0
     peak = 0
     guard = threading.Lock()
@@ -72,81 +65,59 @@ def test_stale_lock_steal_has_single_winner(spark, tmp_path_factory, monkeypatch
         t.start()
     for t in threads:
         t.join(30)
+    assert not any(t.is_alive() for t in threads)
     assert not errors
     assert peak == 1, f"lock admitted {peak} holders concurrently"
-    assert not os.path.exists(stale)
 
 
-def test_heartbeat_protects_long_legitimate_import(spark, tmp_path_factory, monkeypatch):
-    """A holder whose work exceeds the steal timeout keeps the lock:
-    the heartbeat refreshes mtime, so a waiter must wait for release
-    instead of stealing mid-import."""
-    root = str(tmp_path_factory.mktemp("beat"))
-    # timeout 4 → heartbeat every 1 s with a 4 s staleness margin, so
-    # even a loaded CI host can't slip the refresh past the steal gate
-    monkeypatch.setenv("SPARK_GRAFT_IMPORT_LOCK_TIMEOUT", "4")
-    pipe = IngestPipeline(spark, os.path.join(root, "final"))
-    entered_second = threading.Event()
-    released_first = threading.Event()
+# Run in a child process by test_killed_holder_frees_the_lock_at_once:
+# hold the import lock until stdin closes (no Spark session).
+_HOLDER = r"""
+import sys
+from blockchain_indexer_spark.streaming.runner import IngestPipeline
 
-    def holder():
-        with pipe._import_lock():
-            time.sleep(6)  # > timeout; heartbeat at timeout/4 keeps it live
-            released_first.set()
+with IngestPipeline(None, sys.argv[1])._import_lock():
+    print("held", flush=True)
+    sys.stdin.read()
+"""
+
+
+def test_killed_holder_frees_the_lock_at_once(tmp_path):
+    """A holder in another process blocks a waiter for as long as it
+    holds the lock, with no timeout to steal it after; its SIGKILL
+    frees the lock at once. A body that raises releases the lock."""
+    out_dir = str(tmp_path / "final")
+    lock_file = os.path.join(out_dir, ".import.lck")
+    pipe = IngestPipeline(None, out_dir)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    entered = threading.Event()
 
     def waiter():
-        time.sleep(0.2)
         with pipe._import_lock():
-            entered_second.set()
-            assert released_first.is_set(), "waiter stole a live lock"
+            entered.set()
 
-    t1 = threading.Thread(target=holder)
-    t2 = threading.Thread(target=waiter)
-    t1.start(); t2.start()
-    t1.join(30); t2.join(30)
-    assert entered_second.is_set()
-
-
-def test_token_write_failure_does_not_leak_lock(spark, tmp_path_factory, monkeypatch):
-    """If the ownership-token write fails at acquire, release must still
-    free the lock (the mkdir proved ownership): a leaked lock would stall
-    every later batch for the full steal timeout."""
-    import builtins
-
-    root = str(tmp_path_factory.mktemp("tokfail"))
-    pipe = IngestPipeline(spark, os.path.join(root, "final"))
-    real_open = builtins.open
-
-    def flaky_open(path, mode="r", *a, **kw):
-        if "w" in mode and str(path).endswith(os.path.join(".import.lock", "owner")):
-            raise OSError("disk full")
-        return real_open(path, mode, *a, **kw)
-
-    monkeypatch.setattr(builtins, "open", flaky_open)
-    lock_path = os.path.join(pipe.out_dir, ".import.lock")
-    with pipe._import_lock():
-        assert os.path.isdir(lock_path)
-        assert not os.path.exists(os.path.join(lock_path, "owner"))
-    assert not os.path.exists(lock_path), "token-IO failure leaked the lock"
-
-
-def test_robbed_holder_leaves_thief_lock_alone(spark, tmp_path_factory):
-    """A holder whose lock was (wrongly) stolen and re-acquired must not
-    delete the thief's lock at release — its own token no longer reads
-    back, which is the robbery signal."""
-    root = str(tmp_path_factory.mktemp("robbed"))
-    pipe = IngestPipeline(spark, os.path.join(root, "final"))
-    lock_path = os.path.join(pipe.out_dir, ".import.lock")
-    with pipe._import_lock():
-        # simulate a steal: our dir vanishes, a thief re-creates it
-        shutil.rmtree(lock_path)
-        os.mkdir(lock_path)
-        with open(os.path.join(lock_path, "owner"), "w") as f:
-            f.write("thief")
-    assert os.path.isdir(lock_path), "release deleted the thief's lock"
-    with open(os.path.join(lock_path, "owner")) as f:
-        assert f.read() == "thief"
-    shutil.rmtree(lock_path)
+    with subprocess.Popen(
+        [sys.executable, "-c", _HOLDER, out_dir],
+        cwd=repo, stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+    ) as holder:
+        try:
+            assert holder.stdout.readline() == "held\n"
+            t = threading.Thread(target=waiter, daemon=True)
+            t.start()
+            assert not entered.wait(3), "the waiter got in while the holder held the lock"
+            holder.kill()
+            holder.wait()
+            killed = time.monotonic()
+            assert entered.wait(30)
+            assert time.monotonic() - killed < 2
+            t.join(30)
+            assert not t.is_alive()
+        finally:
+            holder.kill()
+    with pytest.raises(RuntimeError, match="body failed"), pipe._import_lock():
+        raise RuntimeError("body failed")
+    with open(lock_file) as f:
+        fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
 
 
 def _rows(pipe):
@@ -384,16 +355,40 @@ def test_crash_inside_commit_heals_on_next_call(spark, tmp_path, sinks, monkeypa
     assert announced == announce
 
 
-def test_raising_announcement_keeps_the_commit_until_it_succeeds(spark, tmp_path, sinks):
-    """on_imported raises once, after the batch's files moved in: the
-    call fails and the marker stays. The next call, a redelivery of the
-    same batch, announces the batch's hashes before it reads and then
-    removes the marker. The tables equal a clean run throughout."""
+def _queued(pipe) -> list[str]:
+    """The hashes a commit left for _settle to announce, sorted: the
+    parquet marker's, or the rows of the JDBC `_announce` table."""
+    if pipe.jdbc_url is None:
+        marker = os.path.join(pipe.out_dir, ".commit")
+        if not os.path.exists(marker):
+            return []
+        with open(marker) as f:
+            return sorted(json.load(f)["announce"] or [])
+    df = pipe.spark.read.jdbc(pipe.jdbc_url, '"_announce"')
+    return sorted(r[0] for r in df.collect())
+
+
+@pytest.mark.parametrize("sink", ["parquet", "derby"])
+def test_raising_announcement_keeps_the_commit_until_it_succeeds(
+    spark, tmp_path, request, sink
+):
+    """on_imported raises once, after the batch committed: the call
+    fails and the batch's hashes stay queued (in the parquet marker, or
+    in the JDBC `_announce` table). The next call, a redelivery of the
+    same batch, announces them before it reads and then drops them. The
+    tables equal a clean run throughout. Runs on the parquet sink and on
+    embedded Derby."""
+    if sink == "parquet":
+        src = request.getfixturevalue("sinks")
+        out_dir = str(tmp_path / "final")
+        shutil.copytree(src["even"], out_dir)
+        pipe = IngestPipeline(spark, out_dir)
+    else:
+        src = request.getfixturevalue("derby_sinks")
+        pipe = _derby_copy(spark, src["even"], tmp_path)
     odd_hashes = sorted(
-        r[0] for r in sinks["odd"].filter(F.col("hash").isNotNull()).select("hash").collect()
+        r[0] for r in src["odd"].filter(F.col("hash").isNotNull()).select("hash").collect()
     )
-    out_dir = str(tmp_path / "final")
-    shutil.copytree(sinks["even"], out_dir)
     announced = []
 
     def on_imported(hashes):
@@ -402,16 +397,15 @@ def test_raising_announcement_keeps_the_commit_until_it_succeeds(spark, tmp_path
             raise RuntimeError("injected callback failure")
         announced.append(sorted(hashes))
 
-    pipe = IngestPipeline(spark, out_dir, on_imported=on_imported)
+    pipe.on_imported = on_imported
     with pytest.raises(RuntimeError, match="injected callback failure"):
-        pipe.process_batch(sinks["odd"])
-    marker = os.path.join(out_dir, ".commit")
-    assert os.path.exists(marker)
-    assert _rows(pipe) == sinks["clean"]
-    pipe.process_batch(sinks["odd"])
-    assert not os.path.exists(marker)
+        pipe.process_batch(src["odd"])
+    assert _queued(pipe) == odd_hashes
+    assert _rows(pipe) == src["clean"]
+    pipe.process_batch(src["odd"])
+    assert _queued(pipe) == []
     assert announced == [None, odd_hashes]
-    assert _rows(pipe) == sinks["clean"]
+    assert _rows(pipe) == src["clean"]
 
 
 def test_older_list_marker_heals_on_next_call(spark, tmp_path, sinks, monkeypatch):
@@ -535,16 +529,15 @@ def _wait_for_group_exit(pgid: int, timeout: float = 30) -> None:
 
 
 @pytest.mark.parametrize("sink", ["parquet", "derby"])
-def test_kill_9_inside_commit_then_retry_equals_clean_run(
-    spark, tmp_path, request, monkeypatch, sink
-):
+def test_kill_9_inside_commit_then_retry_equals_clean_run(spark, tmp_path, request, sink):
     """A child indexer ingests the odd blocks into a copy of a sink
     holding the even ones and is SIGKILLed, JVM included, inside the
     commit: on parquet after 3 staged files moved, on Derby after the
-    commit transaction's first INSERT ... SELECT. This session then
-    retries the odd blocks over what the child left, a stale import
-    lock included, and the tables must equal a clean run. Derby must
-    also have rolled the killed transaction back."""
+    commit transaction's first INSERT ... SELECT. Its import lock is
+    free as soon as its processes are gone. This session then retries
+    the odd blocks over what the child left, and the tables must equal
+    a clean run. Derby must also have rolled the killed transaction
+    back."""
     out_dir, db = str(tmp_path / "final"), str(tmp_path / "db")
     if sink == "parquet":
         src = request.getfixturevalue("sinks")
@@ -569,8 +562,8 @@ def test_kill_9_inside_commit_then_retry_equals_clean_run(
             os.killpg(child.pid, signal.SIGKILL)
         _wait_for_group_exit(child.pid)
     assert child.returncode == -signal.SIGKILL, err[-3000:]
-    assert os.path.isdir(os.path.join(out_dir, ".import.lock"))
-    monkeypatch.setenv("SPARK_GRAFT_IMPORT_LOCK_TIMEOUT", "1")
+    with open(os.path.join(out_dir, ".import.lck")) as f:
+        fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
     if sink == "parquet":
         assert os.path.exists(os.path.join(out_dir, ".commit"))
         pipe = IngestPipeline(spark, out_dir)

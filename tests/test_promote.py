@@ -58,7 +58,7 @@ def test_promote_gates_and_dedups(spark, staged):
     # incomplete 101 held back; 103 resolved to the newer version
     assert promoted == {100: "0xb100", 102: "0xb102", 103: "0xb103b"}
     tx_hashes = {r["hash"] for r in out["transaction_raw"].collect()}
-    assert tx_hashes == {"0xt1", "0xt2", "0xt3b"}  # dup removed, stale-version tx gone
+    assert tx_hashes == {"0xt1", "0xt2", "0xt3b"}  # dup removed, stale version of the tx gone
     assert out["log_raw"].count() == 1  # duplicate log removed
     leftovers = {r["number"] for r in out["leftover_blocks"].collect()}
     # 101 awaits its txs; 103's stale version counts as already

@@ -146,8 +146,8 @@ def test_micro_batch_promote_latency(spark, tmp_path_factory, feed_df, sf_dir):
 def fake_jdbc(spark, tmp_path_factory, monkeypatch):
     """A recording JDBC stub that spools each table to a parquet dir:
     yields the sink root, the spool dir, the (url, table) lists written
-    and read, and the statements of each committed transaction, which it
-    also applies to the spool."""
+    and read, and the statements of each committed transaction that ran
+    any, which it also applies to the spool."""
     import shutil
 
     import pyspark.sql.readwriter as rw
@@ -204,7 +204,8 @@ def fake_jdbc(spark, tmp_path_factory, monkeypatch):
             return FakeStatement(self)
 
         def commit(self):
-            commits.append(self.run)
+            if self.run:
+                commits.append(self.run)
 
         def rollback(self):
             pass
