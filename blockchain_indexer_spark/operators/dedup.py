@@ -116,25 +116,6 @@ def distinct_shingles(
     return _distinct_shingles(df, id_col, text_col, k, hash_shingles=hash_shingles)
 
 
-def shingle_index(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    max_doc_freq: int | None = 100,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """Inverted index (shingle, id), distinct per doc, stop-shingles
-    removed by the document-frequency cap. Eager (materializes the
-    shingle frame once, see _distinct_shingles); pass ``shingles`` to
-    reuse an already-materialized distinct_shingles frame."""
-    sh = shingles if shingles is not None else _distinct_shingles(df, id_col, text_col, k)
-    if max_doc_freq is not None:
-        freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-        return sh.join(freq.filter(F.col("df") <= max_doc_freq).select("shingle"), "shingle")
-    return sh
-
-
 #: Escape-hatch floor: below this many posting-combo rows the
 #: deterministic capped path is fast regardless of amplification
 #: ratio, so the LSH detour (extra signature pass) would only add

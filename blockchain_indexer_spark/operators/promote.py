@@ -98,9 +98,13 @@ def promote(
         "left_semi",
     )
     new_txs = ckpt(merge_new(ready_txs, existing_txs, ["hash"]))
+    # keyed on the block hash too: a tx staged in two versions of its
+    # block keeps only the promoted version's logs
     new_logs = ckpt(
         log_staging.join(
-            new_txs.select(F.col("hash").alias("tx_hash")), "tx_hash", "left_semi"
+            new_txs.select(F.col("hash").alias("tx_hash"), "block_hash"),
+            ["tx_hash", "block_hash"],
+            "left_semi",
         ).dropDuplicates(["tx_hash", "log_index"])
     )
 

@@ -92,8 +92,14 @@ LOG_STRUCT = T.StructType(
     ]
 )
 
+# a staged log carries its block's hash: a tx re-mined into a newer
+# version of its block must not keep the stale version's logs
 RAW_LOG_SCHEMA = T.StructType(
-    [T.StructField("tx_hash", T.StringType(), False)] + list(LOG_STRUCT.fields)
+    [
+        T.StructField("tx_hash", T.StringType(), False),
+        T.StructField("block_hash", T.StringType(), False),
+    ]
+    + list(LOG_STRUCT.fields)
 )
 
 # tx enriched with its receipt logs — the classify/extract input

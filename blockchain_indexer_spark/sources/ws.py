@@ -1,16 +1,18 @@
-"""Client-side RFC 6455 websocket + ``eth_subscribe("newHeads")`` —
-the push half of the reference's live mode
+"""RFC 6455 websocket: the one frame codec, plus the client-side
+``eth_subscribe("newHeads")`` push half of the reference's live mode
 (`Sources/LiveSource.cs:21-130`: StreamingWebSocketClient +
 EthNewBlockHeadersSubscription, 20 s stall timeout at lines 75-83).
 
-Stdlib-only (socket/ssl-free ws:// URLs; RFC 6455 needs only
-sha1/base64/struct + os.urandom for the §5.3 masking nonce). The
-server-side frame codec lives in ``streaming.api``; this module adds
-the client half: handshake with Sec-WebSocket-Accept verification and
-MASKED client→server frames (§5.1 — a server must drop unmasked
-client frames, as ours does).
+Stdlib-only (plain ws:// URLs; RFC 6455 needs only sha1/base64/struct
++ os.urandom for the §5.3 masking key). The codec below is shared by
+both ends: ``ws_accept_key`` (§1.3), ``encode_frame`` (§5.2, masked
+when given a key), ``read_frame`` and ``SocketReader``. The server
+(``streaming.api``'s `/ws`) reads masked client frames and writes
+unmasked ones; the client here does the reverse (§5.1 — each side
+fails a frame masked the wrong way). Ping, pong and close policy stays
+with each side.
 
-The transport contract mirrors the reference exactly:
+The client's transport contract mirrors the reference exactly:
 
 - subscribe once, then each pushed header is surfaced through
   ``next_head(timeout)``;
@@ -23,6 +25,7 @@ The transport contract mirrors the reference exactly:
 from __future__ import annotations
 
 import base64
+import hashlib
 import json
 import os
 import select
@@ -31,21 +34,87 @@ import struct
 import time
 from urllib.parse import urlparse
 
-from blockchain_indexer_spark.streaming.api import ws_accept_key
+_WS_GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"  # RFC 6455 §1.3
 
 
-def mask_frame(payload: bytes, opcode: int = 0x1) -> bytes:
-    """One masked client→server frame, FIN set (§5.2-5.3)."""
-    mask = os.urandom(4)
-    n = len(payload)
-    head = bytes([0x80 | opcode])
+def ws_accept_key(client_key: str) -> str:
+    """Sec-WebSocket-Accept for a client's Sec-WebSocket-Key."""
+    digest = hashlib.sha1((client_key + _WS_GUID).encode()).digest()
+    return base64.b64encode(digest).decode()
+
+
+def _xor(payload: bytes, mask: bytes) -> bytes:
+    return bytes(b ^ mask[i % 4] for i, b in enumerate(payload))
+
+
+def encode_frame(payload: bytes, opcode: int = 0x1, mask: bytes | None = None) -> bytes:
+    """One frame, FIN set (§5.2); `mask`, a 4-byte key, masks it as
+    every client→server frame must be (§5.3)."""
+    n, bit = len(payload), 0x80 if mask is not None else 0
     if n < 126:
-        head += bytes([0x80 | n])
+        head = struct.pack(">BB", 0x80 | opcode, bit | n)
     elif n < 1 << 16:
-        head += bytes([0x80 | 126]) + struct.pack(">H", n)
+        head = struct.pack(">BBH", 0x80 | opcode, bit | 126, n)
     else:
-        head += bytes([0x80 | 127]) + struct.pack(">Q", n)
-    return head + mask + bytes(b ^ mask[i % 4] for i, b in enumerate(payload))
+        head = struct.pack(">BBQ", 0x80 | opcode, bit | 127, n)
+    if mask is None:
+        return head + payload
+    return head + mask + _xor(payload, mask)
+
+
+def read_frame(read, masked: bool) -> tuple[int, bytes]:
+    """One frame as (opcode, unmasked payload), read through
+    `read(n)`, which returns exactly n bytes or raises. `masked` says
+    whether the peer must mask (a server reads client frames, True; a
+    client reads server frames, False); a frame masked the other way
+    raises ConnectionError (§5.1)."""
+    head = read(2)
+    if bool(head[1] & 0x80) != masked:
+        rule = "client frames must be masked" if masked else "server frames must be unmasked"
+        raise ConnectionError(f"{rule} (§5.1)")
+    opcode, n = head[0] & 0x0F, head[1] & 0x7F
+    if n == 126:
+        n = struct.unpack(">H", read(2))[0]
+    elif n == 127:
+        n = struct.unpack(">Q", read(8))[0]
+    if not masked:
+        return opcode, read(n)
+    mask = read(4)
+    return opcode, _xor(read(n), mask)
+
+
+class SocketReader:
+    """Unbuffered exact reads over a socket, seeded with bytes already
+    read past the HTTP upgrade. select() on the raw socket cannot see
+    bytes sitting in a user-space buffer, so a close or ping pipelined
+    behind the handshake (or a second frame behind a first) would
+    strand until unrelated new bytes arrived; reading through recv
+    keeps kernel-buffered bytes select()-visible, and `buffered`
+    reports the one remaining user-space stash."""
+
+    def __init__(self, sock: socket.socket, pending: bytes = b"") -> None:
+        self._sock = sock
+        self._pending = pending
+
+    @property
+    def buffered(self) -> bool:
+        return bool(self._pending)
+
+    def read(self, n: int, deadline: float | None = None) -> bytes:
+        """Exactly n bytes. ConnectionError on EOF; TimeoutError once
+        the `deadline` (time.monotonic()) passes with bytes missing."""
+        out = self._pending[:n]
+        self._pending = self._pending[n:]
+        while len(out) < n:
+            if deadline is not None:
+                left = deadline - time.monotonic()
+                if left <= 0 or not select.select([self._sock], [], [], left)[0]:
+                    raise TimeoutError("websocket read timed out")
+            chunk = self._sock.recv(n - len(out))
+            if not chunk:
+                raise ConnectionError("websocket connection closed")
+            out += chunk
+        return out
 
 
 class WsConnection:
@@ -68,17 +137,16 @@ class WsConnection:
             f"Sec-WebSocket-Key: {key}\r\nSec-WebSocket-Version: 13\r\n\r\n"
         )
         self._sock.sendall(req.encode())
-        # read the 101 response up to the blank line, byte-wise so no
-        # pipelined frame bytes are swallowed into a buffer select()
-        # can't see (the server-side lesson of ADVICE r3, applied here)
+        # frames the server sent right behind its 101 go to the reader
         head = b""
         while b"\r\n\r\n" not in head:
-            b = self._sock.recv(1)
-            if not b:
+            chunk = self._sock.recv(4096)
+            if not chunk:
                 raise ConnectionError("websocket handshake: connection closed")
-            head += b
+            head += chunk
             if len(head) > 1 << 16:
                 raise ConnectionError("websocket handshake: oversized response")
+        head, _, rest = head.partition(b"\r\n\r\n")
         lines = head.decode("latin-1").split("\r\n")
         if " 101 " not in lines[0] + " ":
             raise ConnectionError(f"websocket handshake refused: {lines[0]!r}")
@@ -89,40 +157,23 @@ class WsConnection:
                 hdrs[k.strip().lower()] = v.strip()
         if hdrs.get("sec-websocket-accept") != ws_accept_key(key):
             raise ConnectionError("websocket handshake: bad Sec-WebSocket-Accept")
-        self._pending = b""
+        self._reader = SocketReader(self._sock, rest)
 
     # -- frame I/O ----------------------------------------------------
-    def _read_exact(self, n: int, deadline: float) -> bytes:
-        out = self._pending[:n]
-        self._pending = self._pending[n:]
-        while len(out) < n:
-            left = deadline - time.monotonic()
-            if left <= 0:
-                raise TimeoutError("websocket read timed out")
-            r, _, _ = select.select([self._sock], [], [], left)
-            if not r:
-                raise TimeoutError("websocket read timed out")
-            chunk = self._sock.recv(n - len(out))
-            if not chunk:
-                raise ConnectionError("websocket connection closed")
-            out += chunk
-        return out
+    def next_frame(self, timeout: float) -> tuple[int, bytes]:
+        """The next server→client frame (opcode, payload), whatever its
+        opcode. TimeoutError after `timeout` seconds without one,
+        ConnectionError on EOF or a masked frame."""
+        deadline = time.monotonic() + timeout
+        return read_frame(lambda n: self._reader.read(n, deadline), masked=False)
 
     def recv_frame(self, timeout: float) -> tuple[int, bytes]:
-        """One server→client frame (opcode, payload); pings are
-        answered and skipped. Raises TimeoutError after `timeout`
-        seconds of silence, ConnectionError on EOF/close."""
+        """The next data frame (opcode, payload); pings are answered
+        and pongs skipped. Raises TimeoutError after `timeout` seconds
+        of silence, ConnectionError on EOF/close."""
         deadline = time.monotonic() + timeout
         while True:
-            head = self._read_exact(2, deadline)
-            opcode, n = head[0] & 0x0F, head[1] & 0x7F
-            if head[1] & 0x80:
-                raise ConnectionError("server frames must be unmasked (§5.1)")
-            if n == 126:
-                n = struct.unpack(">H", self._read_exact(2, deadline))[0]
-            elif n == 127:
-                n = struct.unpack(">Q", self._read_exact(8, deadline))[0]
-            payload = self._read_exact(n, deadline)
+            opcode, payload = self.next_frame(deadline - time.monotonic())
             if opcode == 0x9:  # ping → pong, stay in the read loop
                 self.send(payload, opcode=0xA)
                 continue
@@ -137,7 +188,7 @@ class WsConnection:
             return opcode, payload
 
     def send(self, payload: bytes, opcode: int = 0x1) -> None:
-        self._sock.sendall(mask_frame(payload, opcode))
+        self._sock.sendall(encode_frame(payload, opcode, mask=os.urandom(4)))
 
     def send_json(self, obj) -> None:
         self.send(json.dumps(obj).encode())

@@ -21,12 +21,15 @@ this environment — RFC 6455 needs only sha1/base64/struct):
   websocket matching the reference's contract verbatim
   (Api/TransactionHashBroadcastService.cs:41-57): each committed
   batch's hashes pushed as one text frame of JSON, reorgs as the
-  deadbeef magic. Handshake, text/ping/pong/close frames and client
-  masking are implemented below; ``?cursor=N`` optionally replays
-  from the ring like the long-poll (default: only new announcements,
-  the reference's fire-and-forget behavior).
-- ``GET /health`` → 200/503 with the staleness verdict (a batch older
-  than 30 s flags the instance unhealthy, like HealthService).
+  deadbeef magic. The frame codec is ``sources.ws``'s (shared with
+  the newHeads client); the session policy is below: a ping is
+  answered with a pong, a close is echoed, an unmasked client frame
+  ends the session. ``?cursor=N`` optionally replays from the ring
+  like the long-poll (default: only new announcements, the
+  reference's fire-and-forget behavior).
+- ``GET /health`` → 200/503 with the staleness verdict
+  (``streaming.health.batch_is_fresh``: a batch older than 30 s flags
+  the instance unhealthy, like HealthService).
 
 ``BroadcastLog.publish`` IS the pipeline's ``on_imported`` hook —
 wiring is one constructor argument.
@@ -34,94 +37,21 @@ wiring is one constructor argument.
 
 from __future__ import annotations
 
-import base64
 import datetime as dt
-import hashlib
 import json
 import select
-import struct
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-_WS_GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"  # RFC 6455 §1.3
-
-
-def ws_accept_key(client_key: str) -> str:
-    """Sec-WebSocket-Accept for a client's Sec-WebSocket-Key."""
-    digest = hashlib.sha1((client_key + _WS_GUID).encode()).digest()
-    return base64.b64encode(digest).decode()
-
-
-def ws_encode_frame(payload: bytes, opcode: int = 0x1) -> bytes:
-    """One unmasked server→client frame, FIN set (RFC 6455 §5.2)."""
-    header = bytes([0x80 | opcode])
-    n = len(payload)
-    if n < 126:
-        header += bytes([n])
-    elif n < 1 << 16:
-        header += bytes([126]) + struct.pack(">H", n)
-    else:
-        header += bytes([127]) + struct.pack(">Q", n)
-    return header + payload
-
-
-def ws_read_frame(rfile) -> tuple[int, bytes] | None:
-    """Read one client→server frame; returns (opcode, payload) or None
-    on EOF/protocol error. Client frames MUST be masked (§5.1)."""
-    head = rfile.read(2)
-    if len(head) < 2:
-        return None
-    opcode = head[0] & 0x0F
-    masked = bool(head[1] & 0x80)
-    n = head[1] & 0x7F
-    if n == 126:
-        ext = rfile.read(2)
-        if len(ext) < 2:
-            return None
-        n = struct.unpack(">H", ext)[0]
-    elif n == 127:
-        ext = rfile.read(8)
-        if len(ext) < 8:
-            return None
-        n = struct.unpack(">Q", ext)[0]
-    if not masked:
-        return None  # §5.1: server must fail unmasked client frames
-    mask = rfile.read(4)
-    payload = rfile.read(n)
-    if len(mask) < 4 or len(payload) < n:
-        return None
-    return opcode, bytes(b ^ mask[i % 4] for i, b in enumerate(payload))
-
-
-class _FrameReader:
-    """Unbuffered read(n) over a socket, seeded with whatever the HTTP
-    handler's BufferedReader had already drained past the upgrade
-    request. Rationale (ADVICE r3): select() on the raw socket cannot
-    see bytes sitting in a user-space buffer, so a close/ping pipelined
-    behind the handshake (or a second frame behind a first) would
-    strand until unrelated new bytes arrived. Reading via recv keeps
-    kernel-buffered data select()-visible; `buffered` exposes the one
-    remaining user-space stash."""
-
-    def __init__(self, sock, initial: bytes = b"") -> None:
-        self._sock = sock
-        self._pending = initial
-
-    @property
-    def buffered(self) -> bool:
-        return bool(self._pending)
-
-    def read(self, n: int) -> bytes:
-        out = self._pending[:n]
-        self._pending = self._pending[n:]
-        while len(out) < n:
-            chunk = self._sock.recv(n - len(out))
-            if not chunk:
-                break
-            out += chunk
-        return out
+from blockchain_indexer_spark.sources.ws import (
+    SocketReader,
+    encode_frame,
+    read_frame,
+    ws_accept_key,
+)
+from blockchain_indexer_spark.streaming.health import batch_is_fresh
 
 
 def _drain_buffered(rfile, sock) -> bytes:
@@ -234,7 +164,7 @@ class ApiHost:
                 if url.path == "/health":
                     now = dt.datetime.now(dt.timezone.utc)
                     last = api.log.last_batch_at
-                    fresh = last is not None and (now - last).total_seconds() <= max_age_seconds
+                    fresh = last is not None and batch_is_fresh(last, now, max_age_seconds)
                     try:
                         healthy = fresh and (
                             health_fn() if health_fn is not None else True
@@ -295,19 +225,20 @@ class ApiHost:
                 if not key:
                     self._json(400, {"error": "missing Sec-WebSocket-Key"})
                     return
+                # the default cursor is taken before the 101: a batch
+                # published once the client sees the upgrade is pushed
+                q = parse_qs(url.query)
+                try:
+                    cursor = int(q.get("cursor", [str(api.log.end_cursor)])[0])
+                except ValueError:
+                    cursor = api.log.end_cursor
                 self.send_response(101, "Switching Protocols")
                 self.send_header("Upgrade", "websocket")
                 self.send_header("Connection", "Upgrade")
                 self.send_header("Sec-WebSocket-Accept", ws_accept_key(key))
                 self.end_headers()
                 self.close_connection = True
-
-                q = parse_qs(url.query)
-                try:
-                    cursor = int(q.get("cursor", [str(api.log.end_cursor)])[0])
-                except ValueError:
-                    cursor = api.log.end_cursor
-                reader = _FrameReader(
+                reader = SocketReader(
                     self.connection, _drain_buffered(self.rfile, self.connection)
                 )
                 try:
@@ -325,23 +256,22 @@ class ApiHost:
                                 or select.select([self.connection], [], [], 0)[0]
                             ):
                                 break
-                            frame = ws_read_frame(reader)
-                            if frame is None:
-                                return  # EOF or protocol error
-                            opcode, payload = frame
+                            # EOF or an unmasked frame raises
+                            # ConnectionError: the session ends
+                            opcode, payload = read_frame(reader.read, masked=True)
                             if opcode == 0x8:  # close → echo and finish
-                                self.wfile.write(ws_encode_frame(payload, 0x8))
+                                self.wfile.write(encode_frame(payload, 0x8))
                                 return
                             if opcode == 0x9:  # ping → pong, same payload
-                                self.wfile.write(ws_encode_frame(payload, 0xA))
+                                self.wfile.write(encode_frame(payload, 0xA))
                             # pong (0xA) and client data frames: ignored —
                             # the reference's socket is broadcast-only
                         for seq, hashes in api.log.read(cursor, timeout=0.25):
                             body = json.dumps({"seq": seq, "hashes": hashes}).encode()
-                            self.wfile.write(ws_encode_frame(body, 0x1))
+                            self.wfile.write(encode_frame(body, 0x1))
                             cursor = seq + 1
-                except (BrokenPipeError, ConnectionResetError, OSError):
-                    return  # client went away mid-push
+                except OSError:
+                    return  # client went away, or sent a bad frame
 
         self._server = ThreadingHTTPServer((host, port), Handler)
         self._thread: threading.Thread | None = None

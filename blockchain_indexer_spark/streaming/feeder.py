@@ -34,22 +34,7 @@ from blockchain_indexer_spark.sources.rpc import (
     download_blocks_with_txs,
     download_receipts,
 )
-
-_FEED_COLS = (
-    "block_number",
-    "block_hash",
-    "block_timestamp",
-    "total_transaction_count",
-    "hash",
-    "index",
-    "from",
-    "to",
-    "value",
-    "input",
-    "nonce",
-    "type",
-    "logs",
-)
+from blockchain_indexer_spark.streaming.runner import FEED_SCHEMA
 
 
 def assemble_feed_rows(blocks: DataFrame, receipts: DataFrame) -> DataFrame:
@@ -77,40 +62,7 @@ def assemble_feed_rows(blocks: DataFrame, receipts: DataFrame) -> DataFrame:
         F.col("tx.type").alias("type"),
     )
     joined = flat.join(receipts.withColumnRenamed("tx_hash", "hash"), "hash", "left")
-    return joined.select(*_FEED_COLS)
-
-
-def feed_pa_schema():
-    """FEED_SCHEMA as a pyarrow schema (driver-side feed-file writes)."""
-    import pyarrow as pa  # noqa: PLC0415
-
-    logs_t = pa.list_(
-        pa.struct(
-            [
-                ("log_index", pa.int32()),
-                ("address", pa.string()),
-                ("topics", pa.list_(pa.string())),
-                ("data", pa.string()),
-            ]
-        )
-    )
-    return pa.schema(
-        [
-            ("block_number", pa.int64()),
-            ("block_hash", pa.string()),
-            ("block_timestamp", pa.int64()),
-            ("total_transaction_count", pa.int32()),
-            ("hash", pa.string()),
-            ("index", pa.int32()),
-            ("from", pa.string()),
-            ("to", pa.string()),
-            ("value", pa.string()),
-            ("input", pa.string()),
-            ("nonce", pa.string()),
-            ("type", pa.string()),
-            ("logs", logs_t),
-        ]
-    )
+    return joined.select(*FEED_SCHEMA.fieldNames())
 
 
 def write_feed_file(rows, feed_dir: str, tag: str) -> str:
@@ -119,6 +71,7 @@ def write_feed_file(rows, feed_dir: str, tag: str) -> str:
     half-written file). `logs` entries may be Spark Rows or dicts."""
     import pyarrow as pa  # noqa: PLC0415
     import pyarrow.parquet as pq  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
 
     def _plain(v):
         if v is None:
@@ -143,7 +96,10 @@ def write_feed_file(rows, feed_dir: str, tag: str) -> str:
     # so a half-written file can never enter a micro-batch
     tmp = os.path.join(feed_dir, f".{tag}.parquet.tmp")
     pq.write_table(
-        pa.Table.from_pandas(rows, schema=feed_pa_schema(), preserve_index=False), tmp
+        pa.Table.from_pandas(
+            rows, schema=to_arrow_schema(FEED_SCHEMA), preserve_index=False
+        ),
+        tmp,
     )
     os.rename(tmp, path)
     return path

@@ -734,8 +734,8 @@ class IngestPipeline:
         tx_rows = feed.filter(F.col("hash").isNotNull())
         tx_staging = tx_rows.select(*[f.name for f in RAW_TRANSACTION_SCHEMA.fields])
         log_staging = tx_rows.select(
-            F.col("hash").alias("tx_hash"), F.explode("logs").alias("l")
-        ).select("tx_hash", "l.log_index", "l.address", "l.topics", "l.data")
+            F.col("hash").alias("tx_hash"), "block_hash", F.explode("logs").alias("l")
+        ).select("tx_hash", "block_hash", "l.log_index", "l.address", "l.topics", "l.data")
 
         # Eager localCheckpoints inside promote materialize the merge
         # results once: they keep classify, the appends and the
@@ -913,12 +913,23 @@ class IngestPipeline:
         available_now: bool = True,
         max_files_per_trigger: int | None = None,
     ):
-        """File-fed Structured Streaming ingest: new parquet files in
-        feed_dir are one-shot processed (Trigger.AvailableNow) or
-        continuously tailed — the reference's bulk vs live modes
-        (T11) with the same batch body. `max_files_per_trigger` bounds
-        a micro-batch (T2 backpressure: a backlog drains in bounded
-        chunks instead of one giant catch-up batch)."""
+        """File-fed Structured Streaming ingest, the one live ingest
+        path: new parquet files in feed_dir are one-shot processed
+        (Trigger.AvailableNow) or continuously tailed — the reference's
+        bulk vs live modes (T11) with the same batch body. The feed
+        files come from `streaming.feeder` (IntervalFeeder polls,
+        LiveFeeder turns each pushed newHeads header into a file).
+        `max_files_per_trigger` bounds a micro-batch (T2 backpressure:
+        a backlog drains in bounded chunks instead of one giant
+        catch-up batch).
+
+        The file source is replayable, so a restart from
+        `checkpoint_dir` re-reads every file not yet committed, and the
+        promote anti-join makes the replay land once. Supervise a
+        tailing query with ``streaming.health.watch_liveness`` for the
+        reference's 20 s stall timeout (LiveSource.cs:96-118): it stops
+        the query and raises StreamStalled once no micro-batch has
+        ingested a row for that long."""
         reader = self.spark.readStream.schema(FEED_SCHEMA)
         if max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -932,43 +943,3 @@ class IngestPipeline:
         else:
             writer = writer.trigger(processingTime="500 milliseconds")
         return writer.start()
-
-    def start_socket_stream(self, host: str, port: int, checkpoint_dir: str):
-        """LiveSource (S3): push-fed ingest over a TCP line socket.
-
-        The reference's live mode subscribes to
-        ``eth_subscribe("newHeads")`` over a websocket and turns each
-        pushed head into downloaded, widened rows
-        (`Sources/LiveSource.cs:21-130`); here the push channel is
-        Spark's socket source — one JSON object per line, parsed
-        against FEED_SCHEMA, driven through the same foreachBatch
-        promote round as the file feed (identical exactly-once and
-        completeness semantics, T3/T4). Lines that fail to parse
-        yield a NULL block_number and are dropped — a skipped or
-        malformed head is repaired by the gap source on the next
-        round rather than crashing the stream (the reference instead
-        throws and reconnects; the repair outcome is the same).
-
-        The socket source is at-most-once on reconnect (no replay) —
-        matching the reference's websocket, whose missed heads are
-        likewise recovered by its gap scan, not the push channel.
-        Use ``streaming.health.watch_liveness`` for the reference's
-        20 s stall-timeout behavior.
-        """
-        raw = (
-            self.spark.readStream.format("socket")
-            .option("host", host)
-            .option("port", int(port))
-            .load()
-        )
-        feed = (
-            raw.select(F.from_json("value", FEED_SCHEMA).alias("r"))
-            .select("r.*")
-            .filter(F.col("block_number").isNotNull())
-        )
-        return (
-            feed.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(processingTime="500 milliseconds")
-            .start()
-        )

@@ -191,7 +191,7 @@ def build_raw_tables(spark: SparkSession) -> tuple[DataFrame, DataFrame, DataFra
             h = tx_hash(cid)
             txs.append((number, bhash, h, i, addr(0x900 + b * per_block + i), to, value, inp, "1", "0"))
             for li, (laddr, topics, data) in enumerate(lgs):
-                logs.append((h, li, laddr, topics, data))
+                logs.append((h, bhash, li, laddr, topics, data))
     blocks.append((12_529_458 + n_blocks, "0x" + f"b{n_blocks:063x}", base_ts + 5 * n_blocks, 0))
     return (
         spark.createDataFrame(blocks, RAW_BLOCK_SCHEMA),

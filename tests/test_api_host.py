@@ -6,12 +6,21 @@ broadcast (Api/TransactionHashBroadcastService.cs:41-57).
 
 from __future__ import annotations
 
+import base64
 import json
+import os
+import socket
 import time
 import urllib.request
 
 import pytest
 
+from blockchain_indexer_spark.sources.ws import (
+    SocketReader,
+    WsConnection,
+    encode_frame,
+    read_frame,
+)
 from blockchain_indexer_spark.streaming.api import ApiHost, BroadcastLog
 from blockchain_indexer_spark.streaming.runner import REORG_MAGIC_HASH
 
@@ -132,73 +141,13 @@ def test_events_rejects_nan_timeout():
         host.stop()
 
 
-class _WsClient:
-    """Minimal RFC 6455 client (stdlib): handshake, masked sends,
-    frame reads — enough to consume the K5 broadcast like the
-    reference's websocket subscribers."""
+def _ws(h, path="/ws"):
+    return WsConnection(f"ws://{h.address[0]}:{h.address[1]}{path}")
 
-    def __init__(self, addr, path="/ws", pipelined: bytes = b""):
-        import base64
-        import os as _os
-        import socket
 
-        self.sock = socket.create_connection(addr, timeout=10)
-        key = base64.b64encode(_os.urandom(16)).decode()
-        req = (
-            f"GET {path} HTTP/1.1\r\n"
-            f"Host: {addr[0]}:{addr[1]}\r\n"
-            "Upgrade: websocket\r\nConnection: Upgrade\r\n"
-            f"Sec-WebSocket-Key: {key}\r\nSec-WebSocket-Version: 13\r\n\r\n"
-        )
-        # `pipelined`: raw websocket frames sent in the SAME segment as
-        # the upgrade request — they land in the server's HTTP
-        # BufferedReader before the frame loop starts (ADVICE r3).
-        self.sock.sendall(req.encode() + pipelined)
-        self.rfile = self.sock.makefile("rb")
-        status = self.rfile.readline().decode()
-        assert " 101 " in status, status
-        self.headers = {}
-        while True:
-            line = self.rfile.readline().decode().strip()
-            if not line:
-                break
-            k, _, v = line.partition(":")
-            self.headers[k.strip().lower()] = v.strip()
-        from blockchain_indexer_spark.streaming.api import ws_accept_key
-
-        assert self.headers["sec-websocket-accept"] == ws_accept_key(key)
-
-    def send(self, payload: bytes, opcode: int = 0x1) -> None:
-        import os as _os
-        import struct
-
-        mask = _os.urandom(4)
-        n = len(payload)
-        head = bytes([0x80 | opcode])
-        if n < 126:
-            head += bytes([0x80 | n])
-        else:
-            head += bytes([0x80 | 126]) + struct.pack(">H", n)
-        body = bytes(b ^ mask[i % 4] for i, b in enumerate(payload))
-        self.sock.sendall(head + mask + body)
-
-    def recv(self):
-        import struct
-
-        head = self.rfile.read(2)
-        if len(head) < 2:
-            return None
-        opcode = head[0] & 0x0F
-        n = head[1] & 0x7F
-        if n == 126:
-            n = struct.unpack(">H", self.rfile.read(2))[0]
-        elif n == 127:
-            n = struct.unpack(">Q", self.rfile.read(8))[0]
-        assert not (head[1] & 0x80), "server frames must be unmasked"
-        return opcode, self.rfile.read(n)
-
-    def close(self):
-        self.sock.close()
+def _ping(payload: bytes) -> bytes:
+    """One masked client ping, as a client puts it on the wire."""
+    return encode_frame(payload, 0x9, mask=os.urandom(4))
 
 
 @pytest.mark.slowe2e
@@ -209,46 +158,32 @@ def test_websocket_push_hashes_and_reorg_magic(host):
     TransactionHashBroadcastService contract."""
     h, log = host
     log.publish(["0xold"])  # before connect: not replayed by default
-    ws = _WsClient(h.address)
-    try:
+    with _ws(h) as ws:
         log.publish(["0xaa", "0xbb"])
-        opcode, payload = ws.recv()
+        opcode, payload = ws.recv_frame(10)
         assert opcode == 0x1
         msg = json.loads(payload)
         assert msg["hashes"] == ["0xaa", "0xbb"]
         log.publish([REORG_MAGIC_HASH])
-        _, payload2 = ws.recv()
+        _, payload2 = ws.recv_frame(10)
         assert json.loads(payload2)["hashes"] == [REORG_MAGIC_HASH]
-    finally:
-        ws.close()
 
 
 def test_websocket_cursor_replay_ping_and_close(host):
     h, log = host
     log.publish(["0x1"])
     log.publish(["0x2"])
-    ws = _WsClient(h.address, path="/ws?cursor=0")
-    try:
+    with _ws(h, "/ws?cursor=0") as ws:
         # cursor=0 replays the ring (beyond the reference's
         # fire-and-forget — same resume semantics as /events)
-        assert json.loads(ws.recv()[1])["hashes"] == ["0x1"]
-        assert json.loads(ws.recv()[1])["hashes"] == ["0x2"]
+        assert json.loads(ws.recv_frame(10)[1])["hashes"] == ["0x1"]
+        assert json.loads(ws.recv_frame(10)[1])["hashes"] == ["0x2"]
         ws.send(b"are-you-there", opcode=0x9)  # ping
-        opcode, payload = ws.recv()
-        assert (opcode, payload) == (0xA, b"are-you-there")
+        assert ws.next_frame(10) == (0xA, b"are-you-there")
         ws.send(b"", opcode=0x8)  # close → echoed, then EOF
-        assert ws.recv()[0] == 0x8
-        assert ws.rfile.read(1) == b""
-    finally:
-        ws.close()
-
-
-def _masked_frame(payload: bytes, opcode: int) -> bytes:
-    import os as _os
-
-    mask = _os.urandom(4)
-    head = bytes([0x80 | opcode, 0x80 | len(payload)])
-    return head + mask + bytes(b ^ mask[i % 4] for i, b in enumerate(payload))
+        assert ws.next_frame(10)[0] == 0x8
+        with pytest.raises(ConnectionError, match="closed"):
+            ws.next_frame(10)
 
 
 def test_websocket_ping_pipelined_behind_upgrade(host):
@@ -256,13 +191,27 @@ def test_websocket_ping_pipelined_behind_upgrade(host):
     in the server's user-space HTTP buffer, invisible to select() —
     the frame loop must still answer it promptly (ADVICE r3)."""
     h, _log = host
-    ws = _WsClient(h.address, pipelined=_masked_frame(b"early", 0x9))
+    sock = socket.create_connection(h.address, timeout=5)
     try:
-        ws.sock.settimeout(5)
-        opcode, payload = ws.recv()
-        assert (opcode, payload) == (0xA, b"early")
+        key = base64.b64encode(os.urandom(16)).decode()
+        sock.sendall(
+            (
+                "GET /ws HTTP/1.1\r\nHost: x\r\n"
+                "Upgrade: websocket\r\nConnection: Upgrade\r\n"
+                f"Sec-WebSocket-Key: {key}\r\nSec-WebSocket-Version: 13\r\n\r\n"
+            ).encode()
+            + _ping(b"early")
+        )
+        reader = SocketReader(sock)
+        head = b""
+        while not head.endswith(b"\r\n\r\n"):
+            head += reader.read(1, time.monotonic() + 5)
+        assert b" 101 " in head
+        deadline = time.monotonic() + 5
+        frame = read_frame(lambda n: reader.read(n, deadline), masked=False)
+        assert frame == (0xA, b"early")
     finally:
-        ws.close()
+        sock.close()
 
 
 def test_websocket_two_frames_one_segment(host):
@@ -270,21 +219,16 @@ def test_websocket_two_frames_one_segment(host):
     buffer when the first is read — both must be handled without the
     client sending more bytes."""
     h, _log = host
-    ws = _WsClient(h.address)
-    try:
-        ws.sock.settimeout(5)
-        ws.sock.sendall(
-            _masked_frame(b"p1", 0x9) + _masked_frame(b"p2", 0x9)
-        )
-        assert ws.recv() == (0xA, b"p1")
-        assert ws.recv() == (0xA, b"p2")
+    with _ws(h) as ws:
+        ws._sock.sendall(_ping(b"p1") + _ping(b"p2"))
+        assert ws.next_frame(5) == (0xA, b"p1")
+        assert ws.next_frame(5) == (0xA, b"p2")
         # a close pipelined behind a ping ends the session cleanly
-        ws.sock.sendall(_masked_frame(b"p3", 0x9) + _masked_frame(b"", 0x8))
-        assert ws.recv() == (0xA, b"p3")
-        assert ws.recv()[0] == 0x8
-        assert ws.rfile.read(1) == b""
-    finally:
-        ws.close()
+        ws._sock.sendall(_ping(b"p3") + encode_frame(b"", 0x8, mask=os.urandom(4)))
+        assert ws.next_frame(5) == (0xA, b"p3")
+        assert ws.next_frame(5)[0] == 0x8
+        with pytest.raises(ConnectionError, match="closed"):
+            ws.next_frame(5)
 
 
 def test_websocket_requires_upgrade_header(host):

@@ -135,7 +135,7 @@ def test_promote_leftovers_drain_redelivered_blocks(spark):
     txs = spark.createDataFrame(
         [], "hash string, block_number long, block_hash string, `index` int"
     )
-    logs = spark.createDataFrame([], "tx_hash string, log_index int")
+    logs = spark.createDataFrame([], "tx_hash string, block_hash string, log_index int")
     first = promote(blocks, txs, logs)
     assert first["block"].count() == 1
     # redelivery: the block is now in existing_blocks

@@ -3,7 +3,8 @@ stubbed JSON-RPC gateway → head poll → 24-way block download with full
 txs (S8) → 96-way receipts (S9) → feed file per poll → the live
 500 ms trigger promotes into final tables — the whole reference round
 loop driven from the RPC seam instead of pre-built feed files
-(IntervalSource.cs:23-79, Indexer.cs:87-175).
+(IntervalSource.cs:23-79, Indexer.cs:87-175) — and the liveness
+watcher stops the drained query as stalled (LiveSource.cs:96-118).
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ import os
 import pytest
 
 from blockchain_indexer_spark.streaming.feeder import IntervalFeeder
+from blockchain_indexer_spark.streaming.health import StreamStalled, watch_liveness
 from blockchain_indexer_spark.streaming.runner import IngestPipeline
 from tests.chain_fixtures import EXPECTED, build_raw_tables
 
@@ -90,8 +92,16 @@ def test_interval_polling_to_final_tables(spark, tmp_path):
 
     # live trigger drains the polled files
     q = pipe.start_stream(feed_dir, str(tmp_path / "ckpt"), available_now=False)
-    q.processAllAvailable()
-    q.stop()
+    try:
+        q.processAllAvailable()
+        # no further file arrives: the liveness watcher must take the
+        # quiet feed for a stalled source, stop the query and raise
+        # (the reference's LiveSource stall timeout, scaled down)
+        with pytest.raises(StreamStalled):
+            watch_liveness(q, stall_timeout_s=3.0, max_wait_s=60)
+        assert not q.isActive
+    finally:
+        q.stop()
 
     got_blocks = {r["number"] for r in pipe.read_final("block").select("number").collect()}
     assert got_blocks == set(numbers)

@@ -41,8 +41,8 @@ def staged(spark):
         _tx(103, "0xb103b", "0xt3b", 0),
     ]
     logs = [
-        ("0xt1", 0, "0xc0", ["0xtopic"], "0x00"),
-        ("0xt1", 0, "0xc0", ["0xtopic"], "0x00"),  # duplicate log
+        ("0xt1", "0xb100", 0, "0xc0", ["0xtopic"], "0x00"),
+        ("0xt1", "0xb100", 0, "0xc0", ["0xtopic"], "0x00"),  # duplicate log
     ]
     return (
         spark.createDataFrame(blocks, RAW_BLOCK_SCHEMA),
@@ -170,6 +170,33 @@ def test_incomplete_newest_version_holds_back_a_complete_older_one(spark):
     assert out["block"].count() == 0
     assert out["transaction_raw"].count() == 0
     assert {r["number"] for r in out["leftover_blocks"].collect()} == {200}
+
+
+def test_remined_tx_keeps_only_the_promoted_versions_logs(spark):
+    """A tx staged in two versions of its block (re-mined at another
+    log index in the newer one) keeps only the promoted version's logs:
+    two would give it two Transfer rows downstream."""
+    blocks = spark.createDataFrame(
+        [(103, "0xb103a", 1015, 1), (103, "0xb103b", 1016, 2)], RAW_BLOCK_SCHEMA
+    )
+    txs = spark.createDataFrame(
+        [
+            _tx(103, "0xb103a", "0xX", 0),
+            _tx(103, "0xb103b", "0xY", 0),
+            _tx(103, "0xb103b", "0xX", 1),
+        ],
+        RAW_TRANSACTION_SCHEMA,
+    )
+    logs = spark.createDataFrame(
+        [
+            ("0xX", "0xb103a", 0, "0xc0", ["0xtopic"], "0x00"),
+            ("0xX", "0xb103b", 1, "0xc0", ["0xtopic"], "0x00"),
+        ],
+        RAW_LOG_SCHEMA,
+    )
+    out = promote(blocks, txs, logs)
+    assert [(r["number"], r["hash"]) for r in out["block"].collect()] == [(103, "0xb103b")]
+    assert [(r["tx_hash"], r["log_index"]) for r in out["log_raw"].collect()] == [("0xX", 1)]
 
 
 def test_equal_timestamps_pick_the_higher_hash(spark):

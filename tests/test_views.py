@@ -302,13 +302,13 @@ def test_uint256_overflow_value_through_ledger(spark):
     ]
     logs = [
         # signup: mints 50e18 of TOKEN1 to USER1
-        ("0x" + "01".ljust(64, "0"), 0, HUB_ADDRESS, [CRC_SIGNUP_TOPIC, topic_addr(USER1)], topic_addr(TOKEN1)),
-        ("0x" + "01".ljust(64, "0"), 1, HUB_ADDRESS, [CRC_TRUST_TOPIC, topic_addr(USER1), topic_addr(USER1)], hex256(100)),
-        ("0x" + "01".ljust(64, "0"), 2, TOKEN1, [TRANSFER_TOPIC, topic_addr(ZERO), topic_addr(USER1)], hex256(MINT)),
+        ("0x" + "01".ljust(64, "0"), bhash, 0, HUB_ADDRESS, [CRC_SIGNUP_TOPIC, topic_addr(USER1)], topic_addr(TOKEN1)),
+        ("0x" + "01".ljust(64, "0"), bhash, 1, HUB_ADDRESS, [CRC_TRUST_TOPIC, topic_addr(USER1), topic_addr(USER1)], hex256(100)),
+        ("0x" + "01".ljust(64, "0"), bhash, 2, TOKEN1, [TRANSFER_TOPIC, topic_addr(ZERO), topic_addr(USER1)], hex256(MINT)),
         # over-range transfer USER1 -> USER2
-        ("0x" + "02".ljust(64, "0"), 0, TOKEN1, [TRANSFER_TOPIC, topic_addr(USER1), topic_addr(USER2)], hex256(over)),
+        ("0x" + "02".ljust(64, "0"), bhash, 0, TOKEN1, [TRANSFER_TOPIC, topic_addr(USER1), topic_addr(USER2)], hex256(over)),
         # in-range transfer USER1 -> USER2 of 100
-        ("0x" + "03".ljust(64, "0"), 0, TOKEN1, [TRANSFER_TOPIC, topic_addr(USER1), topic_addr(USER2)], hex256(100)),
+        ("0x" + "03".ljust(64, "0"), bhash, 0, TOKEN1, [TRANSFER_TOPIC, topic_addr(USER1), topic_addr(USER2)], hex256(100)),
     ]
     classified = classify(
         assemble_transactions(

@@ -16,11 +16,13 @@ import threading
 
 import pytest
 
-from blockchain_indexer_spark.sources.ws import NewHeadsSubscription, WsConnection
-from blockchain_indexer_spark.streaming.api import (
+from blockchain_indexer_spark.sources.ws import (
+    NewHeadsSubscription,
+    SocketReader,
+    WsConnection,
+    encode_frame,
+    read_frame,
     ws_accept_key,
-    ws_encode_frame,
-    ws_read_frame,
 )
 from blockchain_indexer_spark.streaming.feeder import LiveFeeder
 from blockchain_indexer_spark.streaming.runner import IngestPipeline
@@ -69,13 +71,10 @@ class FakeWsGateway:
                 conn.close()
 
     def _session(self, conn: socket.socket) -> None:
-        rfile = conn.makefile("rb")
+        reader = SocketReader(conn)
         head = b""
         while b"\r\n\r\n" not in head:
-            chunk = rfile.readline()
-            if not chunk:
-                return
-            head += chunk
+            head += reader.read(1)
         key = next(
             ln.split(":", 1)[1].strip()
             for ln in head.decode().split("\r\n")
@@ -90,21 +89,18 @@ class FakeWsGateway:
         )
         subscribed = False
         while not self._stop.is_set():
-            if select.select([conn], [], [], 0.02)[0]:
-                frame = ws_read_frame(rfile)
-                if frame is None:
-                    return
-                opcode, payload = frame
+            if reader.buffered or select.select([conn], [], [], 0.02)[0]:
+                opcode, payload = read_frame(reader.read, masked=True)
                 if opcode == 0x8:
-                    conn.sendall(ws_encode_frame(payload, 0x8))
+                    conn.sendall(encode_frame(payload, 0x8))
                     return
                 if opcode == 0x1:
                     msg = json.loads(payload)
                     if msg.get("method") == "eth_subscribe":
                         if self.ping_first:
-                            conn.sendall(ws_encode_frame(b"hb", 0x9))
+                            conn.sendall(encode_frame(b"hb", 0x9))
                         conn.sendall(
-                            ws_encode_frame(
+                            encode_frame(
                                 json.dumps(
                                     {"jsonrpc": "2.0", "id": msg["id"], "result": "0xsub1"}
                                 ).encode()
@@ -121,7 +117,7 @@ class FakeWsGateway:
                     "method": "eth_subscription",
                     "params": {"subscription": "0xsub1", "result": {"number": hex(n)}},
                 }
-                conn.sendall(ws_encode_frame(json.dumps(body).encode()))
+                conn.sendall(encode_frame(json.dumps(body).encode()))
 
 
 @pytest.fixture()

@@ -19,7 +19,7 @@ from blockchain_indexer_spark.plans import REGISTRY
 STATIC: dict[str, tuple[str, str]] = {
     "S1": ("sources/blocks.py bulk_range", "tests/test_streaming.py"),
     "S2": ("streaming/feeder.py IntervalFeeder (eth_blockNumber poll → S8/S9 → feed file) + runner ProcessingTime trigger", "tests/test_feeder.py"),
-    "S3": ("feeder seam: a newHeads push replaces poll_once's head probe (feeder.py docstring); download/assemble path shared with S2", "tests/test_feeder.py"),
+    "S3": ("streaming/feeder.py LiveFeeder: catch-up via the S2 poll, then a sources/ws.py eth_subscribe(newHeads) websocket; one feed file per pushed head into runner start_stream (the one live ingest path)", "tests/test_ws_live.py"),
     "S4": ("sources/blocks.py find_gaps/missing_block_numbers; live re-emission exercised", "tests/test_live_loop.py"),
     "S5": ("sources/blocks.py detect_reorg; live retract+replay exercised", "tests/test_live_loop.py"),
     "S6": ("streaming/runner.py available_now flag (bulk vs live)", "tests/test_streaming.py"),
@@ -31,7 +31,7 @@ STATIC: dict[str, tuple[str, str]] = {
     "K2": ("streaming/runner.py process_batch per-table appends", "tests/test_streaming.py"),
     "K3": ("sources/blocks.py last_valid_block ledger (requested_blocks)", "tests/test_streaming.py"),
     "K4": ("runner FEED_SCHEMA empty-block marker rows", "tests/test_streaming.py"),
-    "K5": ("runner on_imported → streaming/api.py BroadcastLog + ApiHost /events long-poll (websocket stand-in, reorg magic included)", "tests/test_api_host.py"),
+    "K5": ("runner on_imported → streaming/api.py BroadcastLog + ApiHost: RFC 6455 /ws push (frame codec shared with the client in sources/ws.py) and the /events cursor long-poll, reorg magic included", "tests/test_api_host.py"),
     "K6": ("streaming/api.py /events cursor long-poll — the stdlib pub/sub channel standing in for publish_event→pg_notify", "tests/test_api_host.py"),
     "C1": ("operators/classify.py", "tests/test_classify.py"),
     "C2": ("operators/classify.py", "tests/test_classify.py"),
