@@ -94,6 +94,19 @@ def detect_reorg(stored: DataFrame, chain: DataFrame, depth: int = REORG_DEPTH) 
     )
 
 
+def lowest_missing_block(requested: DataFrame, blocks: DataFrame) -> int | None:
+    """The lowest requested block number not yet imported, or None.
+    Anti-joins against the FULL imported set: the restart point and the
+    health query's oldest hole both read it."""
+    return (
+        requested.join(
+            blocks.select("number"), requested["number"] == blocks["number"], "left_anti"
+        )
+        .agg(F.min(requested["number"]))
+        .collect()[0][0]
+    )
+
+
 def last_valid_block(requested: DataFrame, blocks: DataFrame) -> int:
     """GetLastValidBlock (Persistence/BlockTracker.cs:13-36): the round
     restart point — min(requested-but-missing) - 1, else max(stored).
@@ -101,11 +114,8 @@ def last_valid_block(requested: DataFrame, blocks: DataFrame) -> int:
     Driver-side scalar by design: it runs once per round on two
     aggregates, not per row.
     """
-    missing = requested.join(
-        blocks.select("number"), requested["number"] == blocks["number"], "left_anti"
-    ).agg(F.min(requested["number"]).alias("m"))
-    row = missing.collect()[0]
-    if row["m"] is not None:
-        return int(row["m"]) - 1
+    missing = lowest_missing_block(requested, blocks)
+    if missing is not None:
+        return int(missing) - 1
     row = blocks.agg(F.max("number").alias("m")).collect()[0]
     return int(row["m"]) if row["m"] is not None else 0

@@ -25,8 +25,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # The driver testdata arrives as ONE parquet file with ONE rowgroup per
 # table, so every scan is a single task: one core decodes 600k lineitem
 # rows while 31 idle, and that serial decode is re-paid by every query.

@@ -129,15 +129,26 @@ class WsConnection:
         if u.query:
             path += "?" + u.query
         self._sock = socket.create_connection((host, port), timeout=connect_timeout)
+        try:
+            rest = self._upgrade(f"{host}:{port}", path)
+        except BaseException:
+            # a refused or broken handshake must not leak the socket: no
+            # caller holds a WsConnection to close
+            self._sock.close()
+            raise
+        self._reader = SocketReader(self._sock, rest)
+
+    def _upgrade(self, host: str, path: str) -> bytes:
+        """Send the upgrade request and check the 101; returns the bytes
+        the server sent right behind it (frames for the reader)."""
         key = base64.b64encode(os.urandom(16)).decode()
         req = (
             f"GET {path} HTTP/1.1\r\n"
-            f"Host: {host}:{port}\r\n"
+            f"Host: {host}\r\n"
             "Upgrade: websocket\r\nConnection: Upgrade\r\n"
             f"Sec-WebSocket-Key: {key}\r\nSec-WebSocket-Version: 13\r\n\r\n"
         )
         self._sock.sendall(req.encode())
-        # frames the server sent right behind its 101 go to the reader
         head = b""
         while b"\r\n\r\n" not in head:
             chunk = self._sock.recv(4096)
@@ -157,7 +168,7 @@ class WsConnection:
                 hdrs[k.strip().lower()] = v.strip()
         if hdrs.get("sec-websocket-accept") != ws_accept_key(key):
             raise ConnectionError("websocket handshake: bad Sec-WebSocket-Accept")
-        self._reader = SocketReader(self._sock, rest)
+        return rest
 
     # -- frame I/O ----------------------------------------------------
     def next_frame(self, timeout: float) -> tuple[int, bytes]:

@@ -1,23 +1,25 @@
 """IntervalSource → feed bridge: the reference's polling source
-(`Sources/IntervalSource.cs:23-79`) plus the download/widening stages
-(S8/S9) producing the file feed the live trigger tails.
+(`Sources/IntervalSource.cs:23-79`) plus the block and receipt fetches
+(S8/S9), producing the file feed the live trigger tails.
 
-Each poll: `eth_blockNumber` for the head, 24-way block download WITH
-full transactions (`eth_getBlockByNumber(n, true)`), 96-way receipt
-download, then one parquet feed file per poll — the arrival unit the
-500 ms `processingTime` trigger picks up (`runner.start_stream`).
+Each poll: `eth_blockNumber` for the head, `eth_getBlockByNumber(n,
+true)` for each new block on `block_pool` threads (full transactions,
+so no second tx fetch), `eth_getTransactionReceipt` for each of their
+txs on `receipt_pool` threads, then one parquet feed file per poll —
+the arrival unit the 500 ms `processingTime` trigger picks up
+(`runner.start_stream`).
 
-The downloads run distributed (`mapInPandas` over the number/hash
-frames — at production scale a backfill range fans across the
-cluster); the per-poll file write is driver-side pyarrow because a
-live poll is a handful of blocks (the reference processes them one
-round at a time too). Empty blocks become NULL-hash marker rows, the
+Everything runs on the driver, as the reference runs it in one
+process (`Indexer.cs:210-268`): the requests in flight equal the pool
+sizes (24 and 96 by default), and there is no distributed download — a
+live poll is a handful of blocks, and no Spark job runs until the
+trigger reads the file. Empty blocks become NULL-hash marker rows, the
 same contract as FEED_SCHEMA.
 
 `LiveFeeder` is the websocket `newHeads` push source (reference
 LiveSource.cs:21-130): catch-up via the polling path, then a REAL
 RFC 6455 client subscription (sources/ws.py) replaces the head probe —
-the download/assemble/emit path is shared (`emit_through`).
+the fetch/emit path is shared (`emit_through`).
 """
 
 from __future__ import annotations
@@ -25,82 +27,27 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from blockchain_indexer_spark.sources.rpc import (
     Transport,
     _hex_int,
-    download_blocks_with_txs,
-    download_receipts,
+    _pool_map,
+    fetch_block,
+    fetch_receipt_logs,
 )
-from blockchain_indexer_spark.streaming.runner import FEED_SCHEMA
+from blockchain_indexer_spark.streaming.runner import feed_arrow_schema
 
 
-def assemble_feed_rows(blocks: DataFrame, receipts: DataFrame) -> DataFrame:
-    """(blocks with embedded txs) × (tx_hash → logs) → FEED_SCHEMA rows
-    (one per tx, NULL-hash marker for empty blocks)."""
-    base = blocks.select(
-        F.col("number").alias("block_number"),
-        F.col("hash").alias("block_hash"),
-        F.col("timestamp").alias("block_timestamp"),
-        "total_transaction_count",
-        F.explode_outer("transactions").alias("tx"),
-    )
-    flat = base.select(
-        "block_number",
-        "block_hash",
-        "block_timestamp",
-        "total_transaction_count",
-        F.col("tx.hash").alias("hash"),
-        F.col("tx.index").alias("index"),
-        F.col("tx.from").alias("from"),
-        F.col("tx.to").alias("to"),
-        F.col("tx.value").alias("value"),
-        F.col("tx.input").alias("input"),
-        F.col("tx.nonce").alias("nonce"),
-        F.col("tx.type").alias("type"),
-    )
-    joined = flat.join(receipts.withColumnRenamed("tx_hash", "hash"), "hash", "left")
-    return joined.select(*FEED_SCHEMA.fieldNames())
-
-
-def write_feed_file(rows, feed_dir: str, tag: str) -> str:
-    """Write one pandas frame of FEED_SCHEMA rows as an atomically
-    renamed parquet file (the tailing file source must never list a
-    half-written file). `logs` entries may be Spark Rows or dicts."""
-    import pyarrow as pa  # noqa: PLC0415
-    import pyarrow.parquet as pq  # noqa: PLC0415
-    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
-
-    def _plain(v):
-        if v is None:
-            return None
-        out = []
-        for lg in v:
-            d = lg.asDict(recursive=True) if hasattr(lg, "asDict") else dict(lg)
-            out.append(
-                {
-                    "log_index": int(d["log_index"]),
-                    "address": d["address"],
-                    "topics": [str(t) for t in d["topics"]],
-                    "data": d["data"],
-                }
-            )
-        return out
-
-    rows = rows.copy()
-    rows["logs"] = rows["logs"].apply(_plain)
+def write_feed_file(rows: list[dict], feed_dir: str, tag: str) -> str:
+    """Write FEED_SCHEMA row dicts as an atomically renamed parquet file
+    (the tailing file source must never list a half-written file)."""
     path = os.path.join(feed_dir, f"{tag}.parquet")
     # dot-prefixed tmp name: Spark's file source ignores hidden files,
     # so a half-written file can never enter a micro-batch
     tmp = os.path.join(feed_dir, f".{tag}.parquet.tmp")
-    pq.write_table(
-        pa.Table.from_pandas(
-            rows, schema=to_arrow_schema(FEED_SCHEMA), preserve_index=False
-        ),
-        tmp,
-    )
+    pq.write_table(pa.Table.from_pylist(rows, schema=feed_arrow_schema()), tmp)
     os.rename(tmp, path)
     return path
 
@@ -110,19 +57,17 @@ class IntervalFeeder:
 
     `transport("eth_blockNumber", [])` must return a dict with a
     `number` member (hex string or int) — the same injectable-callable
-    contract as the other RPC stages (sources/rpc.py).
+    contract as the other RPC calls (sources/rpc.py).
     """
 
     def __init__(
         self,
-        spark: SparkSession,
         transport: Transport,
         feed_dir: str,
         start_block: int,
         block_pool: int = 24,
         receipt_pool: int = 96,
     ) -> None:
-        self.spark = spark
         self.transport = transport
         self.feed_dir = feed_dir
         self.next_block = start_block
@@ -138,26 +83,36 @@ class IntervalFeeder:
         return self.emit_through(head)
 
     def emit_through(self, head: int) -> int:
-        """Download/assemble/emit blocks next_block..head as one feed
-        file — shared by the polling path and LiveFeeder's push path."""
+        """Fetch blocks next_block..head and their receipts and emit
+        them as one feed file — shared by the polling path and
+        LiveFeeder's push path. Each block is fetched once per poll, so
+        a mid-poll reorg cannot mix two chain states in the file's tx
+        rows."""
         if head < self.next_block:
             return 0
-        numbers = self.spark.range(self.next_block, head + 1).select(
-            F.col("id").alias("number")
+        blocks = _pool_map(
+            lambda n: fetch_block(self.transport, n),
+            range(self.next_block, head + 1),
+            self.block_pool,
         )
-        # materialize the download ONCE: the blocks frame feeds both
-        # the receipt fan-out and the final assembly — lazily it would
-        # appear twice in the plan, doubling every eth_getBlockByNumber
-        # call AND letting a mid-poll reorg produce a feed file whose
-        # tx rows and receipts come from two different chain states
-        blocks = download_blocks_with_txs(
-            numbers, self.transport, self.block_pool
-        ).localCheckpoint(eager=True)
-        tx_hashes = blocks.select(
-            F.explode("transactions").alias("tx")
-        ).select(F.col("tx.hash").alias("tx_hash"))
-        receipts = download_receipts(tx_hashes, self.transport, self.receipt_pool)
-        rows = assemble_feed_rows(blocks, receipts).toPandas()
+        logs = iter(
+            _pool_map(
+                lambda h: fetch_receipt_logs(self.transport, h),
+                [t["hash"] for b in blocks for t in b["transactions"]],
+                self.receipt_pool,
+            )
+        )
+        rows = []
+        for b in blocks:
+            meta = {
+                "block_number": b["number"],
+                "block_hash": b["hash"],
+                "block_timestamp": b["timestamp"],
+                "total_transaction_count": b["total_transaction_count"],
+            }
+            # one row per tx; an empty block is one NULL-hash marker row
+            txs = [{**meta, **t, "logs": next(logs)} for t in b["transactions"]]
+            rows += txs or [meta]
         self._poll_no += 1
         write_feed_file(rows, self.feed_dir, f"poll-{self._poll_no:06d}")
         n = head + 1 - self.next_block
@@ -180,8 +135,8 @@ class LiveFeeder(IntervalFeeder):
     1. **catch-up**: while the database trails the chain head, emit
        the next block via the polling path (`LiveSource.cs:32-66`'s
        catchingUp loop; here each catch-up round emits the whole
-       remaining range in one distributed download rather than one
-       block per unfold — same rows, fewer RPC round trips);
+       remaining range in one poll rather than one block per unfold —
+       same rows, fewer RPC round trips);
     2. **subscribe**: open the websocket, ``eth_subscribe`` newHeads,
        and emit one feed round per pushed header; 20 s of silence
        raises TimeoutError (`LiveSource.cs:75-83`) and a head that

@@ -14,6 +14,8 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from blockchain_indexer_spark.sources.blocks import lowest_missing_block
+
 
 def backlog_distances(
     blocks: DataFrame, block_staging: DataFrame, requested: DataFrame
@@ -24,24 +26,16 @@ def backlog_distances(
     - imported_distance: max imported number - (min requested-but-
       never-imported number - 1)  — how far back the oldest hole is
 
-    ``requested`` uses the K3 ledger's `number` column, the same
-    contract as sources.blocks.last_valid_block. The anti-join runs
-    against the FULL imported set: filtering imported blocks to
-    `< max imported` would mark the head block itself as a hole and
-    report a phantom imported_distance of 1 on a fully caught-up
-    chain.
+    ``requested`` uses the K3 ledger's `number` column, and the oldest
+    hole is sources.blocks.lowest_missing_block, the query behind
+    last_valid_block. It anti-joins against the FULL imported set:
+    filtering imported blocks to `< max imported` would mark the head
+    block itself as a hole and report a phantom imported_distance of 1
+    on a fully caught-up chain.
     """
     max_imported = blocks.agg(F.max("number")).collect()[0][0]
     max_staging = block_staging.agg(F.max("number")).collect()[0][0]
-    missing = (
-        requested.join(
-            blocks.select("number"),
-            requested["number"] == blocks["number"],
-            "left_anti",
-        )
-        .agg(F.min(requested["number"]))
-        .collect()[0][0]
-    )
+    missing = lowest_missing_block(requested, blocks)
     staging_distance = (
         max_staging - max_imported
         if max_staging is not None and max_imported is not None

@@ -79,6 +79,14 @@ FEED_SCHEMA = T.StructType(
     ]
 )
 
+
+def feed_arrow_schema():
+    """FEED_SCHEMA as the pyarrow schema feed files are written with."""
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
+    return to_arrow_schema(FEED_SCHEMA)
+
+
 EVENT_TABLES = (
     "transaction",
     "crc_signup",
@@ -328,20 +336,21 @@ class IngestPipeline:
     def retract(self, reorg_block: int) -> None:
         """T5: drop every final row at or above the diverging block and
         announce the reorg (Indexer.cs:273-325); the caller re-ingests
-        from `reorg_block`. On the partitioned parquet sink this is a
-        filter-and-rewrite (a partition-range delete in production —
-        block_group pruning keeps the rewrite to the affected ranges):
-        each kept table is staged, and one commit replaces every file of
-        those tables and drops both cache tables, which rebuild in full
-        on the next batch. A crash before the commit leaves the old
-        branch whole. JDBC targets run the reference's SQL delete
-        server-side: one transaction issuing DELETE .. WHERE
-        block_number >= ? over block + the 8 event tables, dropping
-        the two cache tables and queueing the announcement
-        (Indexer.cs:273-325 runs the same ordered deletes inside a
-        single Serializable transaction via ImportProcedure.cs:17-27) —
-        atomic on the server, so a crash mid-retract rolls back instead
-        of leaving a half-retracted database.
+        from `reorg_block`. On the partitioned parquet sink only the
+        block_group partitions at or above `reorg_block`'s group
+        change: each table's kept rows of that group are staged, and
+        one commit replaces only those partition dirs and drops both
+        cache tables, which rebuild in full on the next batch. Older
+        partitions keep their files. A crash before
+        the commit leaves the old branch whole. JDBC targets run the
+        reference's SQL delete server-side: one transaction issuing
+        DELETE .. WHERE block_number >= ? over block + the 8 event
+        tables, dropping the two cache tables and queueing the
+        announcement (Indexer.cs:273-325 runs the same ordered deletes
+        inside a single Serializable transaction via
+        ImportProcedure.cs:17-27) — atomic on the server, so a crash
+        mid-retract rolls back instead of leaving a half-retracted
+        database.
         """
         from blockchain_indexer_spark.operators.promote import retract_from  # noqa: PLC0415
 
@@ -368,17 +377,26 @@ class IngestPipeline:
                     self._jdbc_queue_announce(conn, st, [REORG_MAGIC_HASH])
                 self._settle()
                 return
-            tables = {}
+            group = int(reorg_block) // BLOCK_GROUP_SIZE
+            replaced = []
             for name in ("block", *EVENT_TABLES):
-                df = self.read_final(name)
+                table_dir = self._table_path(name)
+                parts = [
+                    p
+                    for p in (os.listdir(table_dir) if os.path.isdir(table_dir) else ())
+                    if p.startswith("block_group=") and int(p.split("=", 1)[1]) >= group
+                ]
+                df = self.read_final(name) if f"block_group={group}" in parts else None
                 if df is not None:
-                    tables[name] = df
-            kept = retract_from(tables, reorg_block)
-            # the old files stay until the commit, so the rewrite reads
-            # them where they are
-            for name, df in kept.items():
-                self._append(name, df, "number" if name == "block" else "block_number")
-            self._commit(*kept, CACHE_BALANCES, CACHE_TRUST, announce=[REORG_MAGIC_HASH])
+                    # every higher group lies wholly at or above reorg_block,
+                    # so only reorg_block's own group keeps rows; the old
+                    # files stay until the commit, so the rewrite reads them
+                    # where they are
+                    own = df.filter(F.col("block_group") == group)
+                    kept = retract_from({name: own}, reorg_block)[name]
+                    self._append(name, kept, "number" if name == "block" else "block_number")
+                replaced += [os.path.join(name, p) for p in parts]
+            self._commit(*replaced, CACHE_BALANCES, CACHE_TRUST, announce=[REORG_MAGIC_HASH])
 
     def _staged(self):
         """(staged file, its final path) for each file under a table's

@@ -1,5 +1,5 @@
-"""T8 incremental cache maintenance, S8-S10 RPC enrichment stages,
-and J14 health predicates."""
+"""T8 incremental cache maintenance, S8-S10 RPC calls and J14 health
+predicates."""
 
 from __future__ import annotations
 
@@ -22,8 +22,8 @@ from blockchain_indexer_spark.operators.views import (
     crc_ledger,
 )
 from blockchain_indexer_spark.sources.rpc import (
-    download_blocks_with_txs,
-    download_receipts,
+    fetch_block,
+    fetch_receipt_logs,
     fetch_safe_owners,
 )
 from blockchain_indexer_spark.streaming.health import (
@@ -118,7 +118,8 @@ def test_all_addresses_covers_every_column(tables):
 
 def make_transport():
     """Self-contained fake transport: built inside a closure so
-    cloudpickle ships it (and its data) by value to the workers."""
+    cloudpickle ships it (and its data) by value to the workers of
+    fetch_safe_owners."""
     chain = {
         1: {"hash": "0xb1", "timestamp": 1000, "txs": ["0xt1", "0xt2"]},
         2: {"hash": "0xb2", "timestamp": 1005, "txs": []},
@@ -152,22 +153,21 @@ def make_transport():
     return transport
 
 
-@pytest.mark.slowe2e
-def test_download_blocks(spark):
-    nums = spark.createDataFrame([(1,), (2,), (3,)], "number long")
-    got = {r["number"]: r for r in download_blocks_with_txs(nums, make_transport(), 4).collect()}
+def test_fetch_block():
+    transport = make_transport()
+    got = {n: fetch_block(transport, n) for n in (1, 2, 3)}
     assert got[1]["total_transaction_count"] == 2
     assert [t["hash"] for t in got[1]["transactions"]] == ["0xt1", "0xt2"]
     assert got[2]["total_transaction_count"] == 0
     assert got[3]["hash"] == "0xb3" and got[3]["timestamp"] == 1010
 
 
-def test_download_receipts(spark):
-    txs = spark.createDataFrame([("0xt1",), ("0xt2",), ("0xt3",)], "tx_hash string")
-    got = {r["tx_hash"]: r for r in download_receipts(txs, make_transport(), 8).collect()}
-    assert [lg["address"] for lg in got["0xt3"]["logs"]] == ["0xbbb", "0xccc"]
-    assert got["0xt3"]["logs"][1]["log_index"] == 1
-    assert got["0xt2"]["logs"] == []
+def test_fetch_receipt_logs():
+    transport = make_transport()
+    got = {h: fetch_receipt_logs(transport, h) for h in ("0xt1", "0xt2", "0xt3")}
+    assert [lg["address"] for lg in got["0xt3"]] == ["0xbbb", "0xccc"]
+    assert got["0xt3"][1]["log_index"] == 1
+    assert got["0xt2"] == []
 
 
 def test_fetch_safe_owners_lowercases(spark):
@@ -178,9 +178,7 @@ def test_fetch_safe_owners_lowercases(spark):
 
 def test_rpc_pool_actually_concurrent():
     """The bounded pool must overlap requests (the reference's 24/96
-    way concurrency). Tested on the pool primitive directly — Spark's
-    Arrow batch slicing is environment-dependent and would only add
-    noise around the property under test."""
+    way concurrency), tested on the pool primitive directly."""
     import time as _time
 
     from blockchain_indexer_spark.sources.rpc import _pool_map
@@ -220,7 +218,7 @@ def test_health_predicates(spark):
     assert d2["staging_distance"] == 0
 
 
-def test_download_blocks_with_txs_full_and_hash_only(spark):
+def test_fetch_block_full_and_hash_only():
     """S8 full-tx variant: dict transactions map to the widening tuple;
     a hash-only gateway reply (strings) degrades to NULL tx fields
     rather than crashing (the reference refetches those separately)."""
@@ -239,8 +237,7 @@ def test_download_blocks_with_txs_full_and_hash_only(spark):
         return {"number": hex(n), "hash": f"0xb{n}", "timestamp": "0x65",
                 "transactions": ["0xt2"]}  # hash-only reply
 
-    nums = spark.createDataFrame([(1,), (2,)], "number long")
-    got = {r["number"]: r for r in download_blocks_with_txs(nums, transport, 2).collect()}
+    got = {n: fetch_block(transport, n) for n in (1, 2)}
     t1 = got[1]["transactions"][0]
     assert (t1["hash"], t1["index"], t1["from"], t1["value"], t1["type"]) == (
         "0xt1", 0, "0xa", "42", "2"

@@ -176,8 +176,10 @@ def sinks(spark, tmp_path_factory, feed_df):  # noqa: F811
     """Sinks the cases copy instead of ingesting again, and the tables
     of the clean runs they must equal. For the fixture chain and the
     spread one: "even" ingests the even blocks and "full" then the odd
-    ones, whose tables are "clean". "spread_reorg" is spread_full
-    retracted at its sixth block with the re-mined branch ingested."""
+    ones, whose tables are "clean". "reorg" is full retracted at its
+    sixth block with the re-mined branch ingested: the fixture chain
+    sits in one block_group, so the retract rewrites that group's kept
+    rows, where on the spread chain a retract at a block stages none."""
     root = str(tmp_path_factory.mktemp("sinks"))
     spread = _spread(feed_df).cache()
     out = {}
@@ -190,14 +192,14 @@ def sinks(spark, tmp_path_factory, feed_df):  # noqa: F811
         pipe = IngestPipeline(spark, out[tag + "full"])
         pipe.process_batch(out[tag + "odd"])
         out[tag + "clean"] = _rows(pipe)
-    blocks = sorted(r[0] for r in spread.select("block_number").distinct().collect())
+    blocks = sorted(r[0] for r in feed_df.select("block_number").distinct().collect())
     out["reorg_block"] = blocks[5]
-    out["branch"] = _remined(spread, out["reorg_block"])
-    shutil.copytree(out["spread_full"], os.path.join(root, "reorg"))
+    out["branch"] = _remined(feed_df, out["reorg_block"])
+    shutil.copytree(out["full"], os.path.join(root, "reorg"))
     pipe = IngestPipeline(spark, os.path.join(root, "reorg"))
     pipe.retract(out["reorg_block"])
     pipe.process_batch(out["branch"])
-    out["spread_reorg"] = _rows(pipe)
+    out["reorg"] = _rows(pipe)
     return out
 
 
@@ -324,10 +326,10 @@ def test_crash_inside_commit_heals_on_next_call(spark, tmp_path, sinks, monkeypa
             [odd_hashes],
         ),
         "retract": (
-            "spread_full",
+            "full",
             lambda p: p.retract(sinks["reorg_block"]),
             "branch",
-            "spread_reorg",
+            "reorg",
             [[REORG_MAGIC_HASH]],
         ),
         "compact": (
@@ -414,7 +416,7 @@ def test_older_list_marker_heals_on_next_call(spark, tmp_path, sinks, monkeypatc
     retract crashes 3 files into its moves, its marker is rewritten in
     that form, and the re-mined branch then equals a clean retract."""
     out_dir = str(tmp_path / "final")
-    shutil.copytree(sinks["spread_full"], out_dir)
+    shutil.copytree(sinks["full"], out_dir)
     announced = []
     pipe = IngestPipeline(spark, out_dir, on_imported=announced.append)
     _crash_moves_after(monkeypatch, 3)
@@ -429,7 +431,7 @@ def test_older_list_marker_heals_on_next_call(spark, tmp_path, sinks, monkeypatc
         json.dump(replaced, f)
     pipe.process_batch(sinks["branch"])
     assert not os.path.exists(marker)
-    assert _rows(pipe) == sinks["spread_reorg"]
+    assert _rows(pipe) == sinks["reorg"]
     assert announced == []
 
 
@@ -440,7 +442,7 @@ def test_retract_crash_recovery_restores_table(spark, tmp_path, sinks, monkeypat
     the chain against `block`, so a half-retracted sink would never be
     retracted again.)"""
     out_dir = str(tmp_path / "final")
-    shutil.copytree(sinks["spread_full"], out_dir)
+    shutil.copytree(sinks["full"], out_dir)
     before = _visible(out_dir)
     pipe = IngestPipeline(spark, out_dir)
     replace = os.replace
@@ -455,10 +457,10 @@ def test_retract_crash_recovery_restores_table(spark, tmp_path, sinks, monkeypat
         pipe.retract(sinks["reorg_block"])
     monkeypatch.undo()
     assert _visible(out_dir) == before
-    assert _rows(pipe) == sinks["spread_clean"]
+    assert _rows(pipe) == sinks["clean"]
     pipe.retract(sinks["reorg_block"])
     pipe.process_batch(sinks["branch"])
-    assert _rows(pipe) == sinks["spread_reorg"]
+    assert _rows(pipe) == sinks["reorg"]
 
 
 # Run in a child process by test_kill_9_inside_commit_then_retry_equals_clean_run:

@@ -5,6 +5,7 @@ exactly-once semantics under overlapping redelivery."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,6 +18,7 @@ from blockchain_indexer_spark.plans.chain import (
     ingest_spine,
 )
 from blockchain_indexer_spark.streaming.runner import (
+    BLOCK_GROUP_SIZE,
     CACHE_BALANCES,
     CACHE_TRUST,
     EVENT_TABLES,
@@ -478,3 +480,40 @@ def test_ingest_spine_counts_all_txs(spark, sf_dir):
     before = {name: pipe.read_final(name).count() for name in tables}
     pipe.process_batch(chain_feed(spark, sf_dir))
     assert {name: pipe.read_final(name).count() for name in tables} == before
+
+
+def test_retract_rewrites_only_the_affected_block_groups(spark, sf_dir, tmp_path):
+    """The derived chain spans block_groups 110, 125 and 126. A retract
+    inside group 126 rewrites only that group: every part file of the
+    older groups keeps its path and inode, both caches are dropped, and
+    the tables equal a clean run of the blocks below the reorg block."""
+    out_dir = str(tmp_path / "final")
+    shutil.copytree(_sink(spark, sf_dir).out_dir, out_dir)
+    reorg_block = 12_600_050
+    group = reorg_block // BLOCK_GROUP_SIZE
+
+    def older_files():
+        out = {}
+        for table in ("block", *EVENT_TABLES):
+            table_dir = os.path.join(out_dir, table)
+            for part in os.listdir(table_dir) if os.path.isdir(table_dir) else ():
+                if part.startswith("block_group=") and int(part.split("=")[1]) < group:
+                    for f in os.listdir(os.path.join(table_dir, part)):
+                        path = os.path.join(table_dir, part, f)
+                        out[os.path.relpath(path, out_dir)] = os.stat(path).st_ino
+        return out
+
+    def rows(pipe, name):
+        df = pipe.read_final(name)
+        return None if df is None else sorted(map(repr, df.collect()))
+
+    before = older_files()
+    assert {p.split(os.sep)[1] for p in before} == {"block_group=110", "block_group=125"}
+    pipe = IngestPipeline(spark, out_dir)
+    pipe.retract(reorg_block)
+    assert older_files() == before
+    assert pipe.read_final(CACHE_BALANCES) is None and pipe.read_final(CACHE_TRUST) is None
+    clean = IngestPipeline(spark, str(tmp_path / "clean"))
+    clean.process_batch(chain_feed(spark, sf_dir).filter(F.col("block_number") < reorg_block))
+    for name in ("block", *EVENT_TABLES):
+        assert rows(pipe, name) == rows(clean, name), name

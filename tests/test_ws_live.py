@@ -141,25 +141,54 @@ def test_subscription_heads_ping_and_stall_timeout(gateway_ws):
             sub.next_head(timeout=0.4)
 
 
-def test_ws_connection_rejects_bad_accept():
+def _answer_once(response: bytes) -> int:
+    """A server that answers one upgrade request with `response` and
+    hangs up; returns its port."""
     srv = socket.create_server(("127.0.0.1", 0))
-    port = srv.getsockname()[1]
 
-    def bad():
+    def serve():
         conn, _ = srv.accept()
         conn.recv(4096)
-        conn.sendall(
-            b"HTTP/1.1 101 Switching Protocols\r\n"
-            b"Upgrade: websocket\r\nConnection: Upgrade\r\n"
-            b"Sec-WebSocket-Accept: bogus\r\n\r\n"
-        )
+        conn.sendall(response)
         conn.close()
+        srv.close()
 
-    t = threading.Thread(target=bad, daemon=True)
-    t.start()
+    threading.Thread(target=serve, daemon=True).start()
+    return srv.getsockname()[1]
+
+
+@pytest.fixture()
+def opened_sockets(monkeypatch):
+    """Every socket WsConnection opens, captured so a test can check it
+    was closed."""
+    opened = []
+    create = socket.create_connection
+
+    def capture(*args, **kwargs):
+        opened.append(create(*args, **kwargs))
+        return opened[-1]
+
+    monkeypatch.setattr(socket, "create_connection", capture)
+    return opened
+
+
+def test_ws_connection_rejects_bad_accept(opened_sockets):
+    port = _answer_once(
+        b"HTTP/1.1 101 Switching Protocols\r\n"
+        b"Upgrade: websocket\r\nConnection: Upgrade\r\n"
+        b"Sec-WebSocket-Accept: bogus\r\n\r\n"
+    )
     with pytest.raises(ConnectionError, match="Accept"):
         WsConnection(f"ws://127.0.0.1:{port}/")
-    srv.close()
+    # the failed handshake closed its socket
+    assert len(opened_sockets) == 1 and opened_sockets[0].fileno() == -1
+
+
+def test_ws_connection_refused_closes_its_socket(opened_sockets):
+    port = _answer_once(b"HTTP/1.1 403 Forbidden\r\nContent-Length: 0\r\n\r\n")
+    with pytest.raises(ConnectionError, match="refused"):
+        WsConnection(f"ws://127.0.0.1:{port}/")
+    assert len(opened_sockets) == 1 and opened_sockets[0].fileno() == -1
 
 
 @pytest.mark.slowe2e
@@ -172,7 +201,6 @@ def test_live_feeder_push_end_to_end(spark, tmp_path, gateway_ws):
     head["number"] = mid
     feed_dir = str(tmp_path / "feed")
     feeder = LiveFeeder(
-        spark,
         transport,
         feed_dir,
         start_block=numbers[0],
@@ -210,7 +238,6 @@ def test_live_feeder_missed_block_raises(spark, tmp_path, gateway_ws):
     transport, head, numbers = make_gateway(spark)
     head["number"] = numbers[0]
     feeder = LiveFeeder(
-        spark,
         transport,
         str(tmp_path / "feed"),
         start_block=numbers[0],

@@ -24,8 +24,8 @@ STATIC: dict[str, tuple[str, str]] = {
     "S5": ("sources/blocks.py detect_reorg; live retract+replay exercised", "tests/test_live_loop.py"),
     "S6": ("streaming/runner.py available_now flag (bulk vs live)", "tests/test_streaming.py"),
     "S7": ("unionByName of sources (runner feed)", "tests/test_streaming.py"),
-    "S8": ("sources/rpc.py download_blocks_with_txs (24-way pool)", "tests/test_caches_rpc_health.py"),
-    "S9": ("sources/rpc.py download_receipts (96-way pool); streaming reunion via streaming/joins.py join_tx_receipts (watermarked stream-stream interval join, left_outer = undelivered-receipt signal)", "tests/test_stream_join.py"),
+    "S8": ("sources/rpc.py fetch_block, run by streaming/feeder.py on a 24-thread driver pool", "tests/test_caches_rpc_health.py"),
+    "S9": ("sources/rpc.py fetch_receipt_logs, run by streaming/feeder.py on a 96-thread driver pool; streaming reunion via streaming/joins.py join_tx_receipts (watermarked stream-stream interval join, left_outer = undelivered-receipt signal)", "tests/test_stream_join.py"),
     "S10": ("sources/rpc.py fetch_safe_owners → extract_crc_signups(safe_owners)", "tests/test_caches_rpc_health.py"),
     "K1": ("streaming/runner.py _append (staged under .pending/ on parquet, in <table>__pending on JDBC; one _commit per write: a .commit marker, or one JDBC transaction)", "tests/test_import_lock.py"),
     "K2": ("streaming/runner.py process_batch per-table appends", "tests/test_streaming.py"),
