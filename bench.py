@@ -1,17 +1,15 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: runs BENCH_QUERIES at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line with per-query wall seconds.
+ONE JSON line: the total (``headline_queries_total``, the metric name
+every ``BENCH_*.json`` record uses), each query's best and raw wall
+seconds, and the ingest extras. It writes no file.
 
 Each query executes fully via the noop sink (no driver collect, no
 result materialization cost) — measuring the distributed plan, not
 toPandas serialization.
 
-The printed line is kept under ~1.4 KB (VERDICT r4 "Next round" #1:
-the driver's output capture truncates around 2.4 KB, which nulled the
-round-4 record): it carries the totals plus a ~30-query headline
-subset at 2-decimal precision, while the FULL per-query map — plus
-both raw runs per query — is written to ``BENCH_FULL_r{N}.json`` in
-the repo root for the judge.
+Run: ``python bench.py``; ``SPARK_GRAFT_SF_DIR`` picks the scale-factor
+directory.
 """
 
 from __future__ import annotations
@@ -193,76 +191,6 @@ BENCH_QUERIES = (
     "embedding_dbscan_lsh_agreement",
 )
 
-#: Driver-facing subset of BENCH_QUERIES for the printed JSON line
-#: (full map goes to BENCH_FULL_r{N}.json). Ordered by reporting
-#: value — the size cap drops from the tail — with the round-4 drift
-#: watchlist and the five most expensive plans first.
-HEADLINE_QUERIES = (
-    # Four long-stable cheap entries retired in round 9 (the 1.4 KB
-    # line cap was dropping the NEWEST canaries from the tail
-    # instead): mm_decode_stats, chain_capacity_graph, doc_winnowing,
-    # event_funnel_conversion — all still benched in BENCH_FULL, and
-    # each family keeps other headline representation.
-    # drift watchlist (VERDICT r4 "What's wrong")
-    "doc_dedup_clusters",
-    "ngram_jaccard_near_dups",
-    "chain_timeline_counts",
-    "stream_reassembly_join",
-    "rollup_revenue_hierarchy",
-    # the expensive plans
-    "embedding_label_propagation",
-    "embedding_knn_triangles",
-    "ngram_containment_near_dups",
-    "minhash_incremental",
-    "graph_supplier_pagerank",
-    # one canary per major family
-    "pricing_summary",
-    "multi_join_revenue",
-    "topk_per_group",
-    "event_sessionization",
-    "asof_latest_purchase",
-    "range_join_active_sessions",
-    "profile_orders",
-    "chain_trust_reachability",
-    "minhash_lsh_candidates",
-    "doc_exact_decontamination",
-    "doc_bm25_topk",
-    "doc_bpe_merges",
-    "embedding_ivfpq_topk",
-    "embedding_ann_recall",
-    "mm_real_png",
-    "mm_real_jpeg_color",
-    # round-6 canaries (displacing embedding_topk_mips and
-    # mm_image_ahash — their families keep other headline entries):
-    # the heaviest new plans, multi-scan entropy decode and the
-    # 5-table trigram scoring join
-    "mm_real_jpeg_progressive",
-    "doc_trigram_fluency",
-    "corpus_cms_heavy_hitters",
-    # round-7 canaries (displacing chain_crc_balances,
-    # chain_current_trust and gap_detection — the three cheapest
-    # entries; the chain family keeps chain_timeline_counts,
-    # chain_capacity_graph and chain_trust_reachability): the three
-    # promoted gates, all iterative/heavy plans worth drift-watching
-    "embedding_dbscan",
-    "mm_image_dedup_clusters",
-    "doc_mmr_rerank",
-    # round-9 canaries: the two heaviest promoted gates — both pay an
-    # exact baseline by construction (agreement monitors), so they are
-    # the natural drift watch for the quadratic-engine cost envelope.
-    # Listed BEFORE the round-8 canaries: the 1.4 KB line cap drops
-    # from the tail, and the newest canaries are the ones a fresh
-    # driver record must actually show (the r8 pair had its cycle and
-    # stays benched in BENCH_FULL either way).
-    "embedding_dbscan_lsh_agreement",
-    "mm_cross_modal_dedup",
-    # round-8 canaries: the heaviest of the promoted gates (ladder:
-    # five distinct rungs + count aggs; audio: decode + WHT + closure)
-    "doc_longest_repeat",
-    "mm_audio_dedup_clusters",
-)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
@@ -340,7 +268,7 @@ def main() -> None:
     # 10.7 <-> 18.8 s between driver runs on identical code); min-of-3
     # instead of min-of-2 for JUST these five stabilizes the reported
     # number. Methodology is otherwise unchanged — every other query
-    # keeps `runs`, and all raw runs land in BENCH_FULL_r{N}.json.
+    # keeps `runs`, and all raw runs are printed.
     heavy_runs = max(runs, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS_HEAVY", "3")))
     HEAVY_MONITORS = {
         "embedding_dbscan_lsh_agreement",
@@ -441,91 +369,32 @@ def main() -> None:
             shutil.rmtree(scratch, ignore_errors=True)
     except Exception:
         pass
-    print(emit_records(timings, raw_runs, total, sf, runs, extra))
+    print(bench_line(timings, raw_runs, total, sf, runs, extra))
 
 
-#: Byte budget for the printed line: the driver's output capture
-#: truncates around 2.4 KB (BENCH_r04.json parsed: null), so one
-#: complete JSON object must fit well under it.
-LINE_BUDGET = 1400
-
-
-def next_round_number(repo: str) -> int:
-    """Next round number: the driver writes BENCH_r{N}.json AFTER
-    bench runs, so at run time max existing is N-1. SPARK_GRAFT_ROUND
-    overrides (e.g. a judge re-running mid-round)."""
-    import glob  # noqa: PLC0415
-    import re  # noqa: PLC0415
-
-    return int(os.environ.get("SPARK_GRAFT_ROUND", "0")) or 1 + max(
-        (
-            int(m.group(1))
-            for p in glob.glob(os.path.join(repo, "BENCH_r*.json"))
-            if (m := re.match(r"BENCH_r(\d+)\.json$", os.path.basename(p)))
-        ),
-        default=0,
-    )
-
-
-def emit_records(
+def bench_line(
     timings: dict[str, float],
     raw_runs: dict[str, list[float]],
     total: float,
     sf: float,
     runs: int,
     extra: dict,
-    repo: str | None = None,
 ) -> str:
-    """Write the FULL per-query record to BENCH_FULL_r{N}.json and
-    return the driver-facing line: totals + the HEADLINE_QUERIES
-    subset at 2-decimal precision, size-capped to LINE_BUDGET so the
-    driver's capture always parses one complete JSON object
-    (VERDICT r4 item #1; contract pinned by tests/test_bench_emit.py).
-    """
-    repo = repo or os.path.dirname(os.path.abspath(__file__))
-    try:
-        full_path = os.path.join(
-            repo, f"BENCH_FULL_r{next_round_number(repo):02d}.json"
-        )
-        with open(full_path, "w") as f:
-            json.dump(
-                {
-                    "metric": "headline_queries_total",
-                    "value": total,
-                    "unit": "sec",
-                    "queries": timings,
-                    "runs": raw_runs,
-                    "sf": sf,
-                    "runs_per_query": runs,
-                    "agg": "min",
-                    **extra,
-                },
-                f,
-                indent=1,
-            )
-        full_name = os.path.basename(full_path)
-    except OSError:  # read-only checkout: the printed line still works
-        full_name = None
-    headline = {
-        k: round(timings[k], 2) for k in HEADLINE_QUERIES if k in timings
-    }
-    payload = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
-        "queries": headline,
-        "sf": sf,
-        "n_benched": len(timings),
-        "runs_per_query": runs,
-        "agg": "min",
-        "full": full_name,
-        **extra,
-    }
-    line = json.dumps(payload)
-    while len(line) > LINE_BUDGET and payload["queries"]:
-        payload["queries"].popitem()  # drop from the tail until it fits
-        line = json.dumps(payload)
-    return line
+    """The printed JSON line: the total, every query's best (``queries``)
+    and raw (``runs``) seconds, and the ingest extras."""
+    return json.dumps(
+        {
+            "metric": "headline_queries_total",
+            "value": total,
+            "unit": "sec",
+            "queries": timings,
+            "runs": raw_runs,
+            "sf": sf,
+            "runs_per_query": runs,
+            "agg": "min",
+            **extra,
+        }
+    )
 
 
 if __name__ == "__main__":

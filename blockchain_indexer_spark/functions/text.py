@@ -210,16 +210,6 @@ def shingles_from_tokens(toks: Column | str, k: int = 3) -> Column:
     return F.when(n >= k, mk).otherwise(F.array().cast("array<string>"))
 
 
-def word_shingles(col: Column | str, k: int = 3) -> Column:
-    """Array of k-word shingles (space-joined); empty when < k tokens.
-
-    Convenience single-expression form — fine for one-off use, but in
-    hot paths tokenize into a column first and use
-    ``shingles_from_tokens`` (see its docstring for why).
-    """
-    return shingles_from_tokens(tokens(col), k)
-
-
 # PII patterns, written to the common subset of Java regex (Spark) and
 # RE2 (DuckDB) so counts and redactions are engine-identical: no
 # backrefs, no lookaround, only \d, \b, bounded classes.

@@ -22,8 +22,7 @@ Determinism (the registry's cross-engine contract): every score is an
 integer-quantized single IEEE operation — exact BIGINT counts cast to
 DOUBLE, one multiply/divide tree evaluated in the identical order in
 Spark and the DuckDB oracle, floor()ed into a BIGINT BEFORE any sum.
-No libm transcendentals on the gated paths (``importance_weights_log``
-is the float production twin, rows-only). Pattern shared with
+No libm transcendentals on the gated paths. Pattern shared with
 operators.lm (bigram fluency) and the BM25 gate.
 
 Scale shapes (100 TB posture):
@@ -157,8 +156,7 @@ def importance_weights(
 
     The canonical DSIR weight is the log-ratio sum; the mean plain
     ratio gated here ranks identically per-bucket and stays inside
-    the integer-deterministic contract. ``importance_weights_log`` is
-    the float log-space production twin.
+    the integer-deterministic contract.
     """
     ratios = importance_ratios(corpus, target, text_col, n_buckets)
     per_doc_bucket = (
@@ -186,48 +184,6 @@ def importance_weights(
             .otherwise(F.lit(0))
             .cast("long")
             .alias("weight_nano"),
-        )
-    )
-
-
-def importance_weights_log(
-    corpus: DataFrame,
-    target: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 1024,
-) -> DataFrame:
-    """Float production twin: the canonical DSIR log-likelihood-ratio
-    sum per document, log(p_t(b)/p_c(b)) summed over token
-    occurrences. Same plan shape as ``importance_weights``; libm log
-    at the end keeps it off the oracle gate (cross-engine log is not
-    bit-identical) — correctness is pinned by tests against the
-    integerized twin's ranking."""
-    ratios = importance_ratios(corpus, target, text_col, n_buckets).select(
-        "_b", (F.log(F.col("ratio_nano").cast("double")) - F.log(F.lit(_NANO))).alias("_lr")
-    )
-    per_doc_bucket = (
-        spread(corpus.select(id_col, text_col), id_col)
-        .select(id_col, F.explode(tokens(text_col)).alias("_tok"))
-        .select(id_col, _bucket(F.col("_tok"), n_buckets).alias("_b"))
-        .groupBy(id_col, "_b")
-        .agg(F.count("*").cast("long").alias("_cnt"))
-    )
-    agg = (
-        per_doc_bucket.join(F.broadcast(ratios), "_b")
-        .groupBy(id_col)
-        .agg(
-            F.sum("_cnt").cast("long").alias("n_tokens"),
-            F.sum(F.col("_cnt").cast("double") * F.col("_lr")).alias("log_weight"),
-        )
-    )
-    return (
-        corpus.select(id_col)
-        .join(agg, [id_col], "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_tokens"), F.lit(0)).cast("long").alias("n_tokens"),
-            F.coalesce(F.col("log_weight"), F.lit(0.0)).alias("log_weight"),
         )
     )
 

@@ -14,8 +14,6 @@ same shape). This module implements that shape distributed:
 - ``bigram_fluency``: score EVERY document by its mean add-one-smoothed
   conditional probability, integer-deterministic (see below) — the
   oracle-gated path.
-- ``bigram_log_perplexity``: the production float path — true log2
-  perplexity per document for library callers (same joins, float log).
 
 Integer determinism (the repo's BM25 pattern): per bigram the smoothed
 probability p = (c2+1)/(c1+V) is ONE correctly-rounded IEEE division of
@@ -145,42 +143,6 @@ def bigram_fluency(
             .otherwise(F.lit(0))
             .cast("long")
             .alias("fluency_nano"),
-        )
-    )
-
-
-def bigram_log_perplexity(
-    docs: DataFrame,
-    train: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "toks",
-) -> DataFrame:
-    """Production float path: true add-one-smoothed bigram log2
-    perplexity per document — 2^(−mean log2 p). Same plan shape as
-    ``bigram_fluency`` (shared joins), float log/exp at the end; not
-    oracle-gated (libm log is not bit-identical across engines — the
-    integerized twin above is the correctness gate)."""
-    c2, c1, v = bigram_counts(train, id_col, tokens_col)
-    bg = _bigram_frame(docs, id_col, tokens_col)
-    scored = (
-        bg.join(c2, ["w1", "w2"], "left")
-        .join(c1, ["w1"], "left")
-        .crossJoin(F.broadcast(v))
-        .select(
-            id_col,
-            F.log2(
-                (F.coalesce(F.col("c2"), F.lit(0)) + F.lit(1)).cast("double")
-                / (F.coalesce(F.col("c1"), F.lit(0)) + F.col("_V")).cast("double")
-            ).alias("_lp"),
-        )
-    )
-    return (
-        scored.groupBy(id_col)
-        .agg(F.count("*").alias("n_bigrams"), F.avg("_lp").alias("_mean_lp"))
-        .select(
-            id_col,
-            "n_bigrams",
-            F.pow(F.lit(2.0), -F.col("_mean_lp")).alias("perplexity"),
         )
     )
 

@@ -540,11 +540,11 @@ def decode_png_batch(bufs):
     return results
 
 
-def _decode_bmp_png_batch(blob_series, op_name: str) -> list:
+def _decode_bmp_png_batch(blob_series) -> list:
     """Decode a batch of BMP/PNG blobs to [(w, h, px), ...] in input
-    order — the shared dispatch for image_ahash/image_phash: PNGs go
-    through the vectorized ``decode_png_batch``, BMPs stay per-blob
-    (their decode is a single numpy reshape already)."""
+    order for image_ahash: PNGs go through the vectorized
+    ``decode_png_batch``, BMPs stay per-blob (their decode is a single
+    numpy reshape already)."""
     blobs = [bytes(b) for b in blob_series]
     results: list = [None] * len(blobs)
     png_idx = []
@@ -554,9 +554,7 @@ def _decode_bmp_png_batch(blob_series, op_name: str) -> list:
         elif b[:2] == b"BM":
             results[i] = decode_bmp(b)
         else:
-            raise NotImplementedError(
-                f"{op_name} needs a decodable image (BMP/PNG)"
-            )
+            raise NotImplementedError("ahash needs a decodable image (BMP/PNG)")
     for i, res in zip(png_idx, decode_png_batch([blobs[i] for i in png_idx])):
         results[i] = res
     return results
@@ -1409,9 +1407,8 @@ def image_ahash(with_blobs: DataFrame, id_col: str = "doc_id", grid: int = 4) ->
     (R+G+B sum) exceeds the image mean. The comparison is done in
     cross-multiplied INTEGERS — cell_sum·total_count >
     total_sum·cell_count — so the hash is bit-exact across engines and
-    a closed-form oracle can recompute it pixel-by-pixel (unlike the
-    DCT-based pHash, whose float cosines are not oracle-able; pHash
-    plugs in at this same seam with the same output shape).
+    a closed-form oracle can recompute it pixel-by-pixel (unlike a
+    DCT-based pHash, whose float cosines are not oracle-able).
 
     Returns (id, width, height, ahash, n_bright); ahash packs cell
     (cr, cc) at bit cr·grid+cc. Cluster the hashes with exact groupBy
@@ -1427,7 +1424,7 @@ def image_ahash(with_blobs: DataFrame, id_col: str = "doc_id", grid: int = 4) ->
         for pdf in it:
             out = {k: [] for k in ("doc_id", "width", "height", "ahash", "n_bright")}
             for did, (w, h, px) in zip(
-                pdf[id_col], _decode_bmp_png_batch(pdf["blob"], "ahash")
+                pdf[id_col], _decode_bmp_png_batch(pdf["blob"])
             ):
                 lum = px.astype(np.int64).sum(axis=2)  # R+G+B per pixel
                 cr = (grid * np.arange(h)) // h
@@ -1454,62 +1451,6 @@ def image_ahash(with_blobs: DataFrame, id_col: str = "doc_id", grid: int = 4) ->
             )
 
     return src.mapInPandas(batches, _AHASH_SCHEMA)
-
-
-_PHASH_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("phash", LongType()),
-    ]
-)
-
-
-def image_phash(
-    with_blobs: DataFrame, id_col: str = "doc_id", hash_size: int = 8
-) -> DataFrame:
-    """DCT perceptual hash (pHash) — the production sibling of
-    ``image_ahash`` at the same seam: decode, resample to 32×32
-    (nearest-neighbor, deterministic), 2-D DCT-II, keep the top-left
-    ``hash_size``² low-frequency block (DC dropped), set each bit by
-    comparison against the block's median. More robust than the
-    average hash to local edits and contrast shifts; float cosines
-    make it per-engine deterministic but NOT oracle-able across
-    engines (tests cover it; ahash carries the oracle gate).
-    Returns (id, phash) with ``hash_size``²−1 meaningful bits.
-    """
-    import numpy as np
-
-    n = 32
-    # DCT-II basis, orthonormal — built once per executor batch
-    k = np.arange(n)
-    basis = np.sqrt(2.0 / n) * np.cos(np.pi * (2 * k[None, :] + 1) * k[:, None] / (2 * n))
-    basis[0] /= np.sqrt(2.0)
-    src = with_blobs.filter(F.col("blob").isNotNull()).select(id_col, "blob")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, hashes = [], []
-            for did, (w, h, px) in zip(
-                pdf[id_col], _decode_bmp_png_batch(pdf["blob"], "phash")
-            ):
-                lum = px.astype(np.float64).mean(axis=2)
-                ri = (np.arange(n) * h) // n
-                ci = (np.arange(n) * w) // n
-                grid = lum[ri][:, ci]
-                coef = basis @ grid @ basis.T
-                block = coef[:hash_size, :hash_size].ravel()[1:]  # drop DC
-                med = np.median(block)
-                bits = block > med
-                hashes.append(int(sum(1 << i for i in np.nonzero(bits)[0])))
-                ids.append(did)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "phash": pd.Series(hashes, dtype="int64"),
-                }
-            )
-
-    return src.mapInPandas(batches, _PHASH_SCHEMA)
 
 
 def image_near_dup_pairs(

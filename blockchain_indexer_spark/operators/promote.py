@@ -67,7 +67,6 @@ def promote(
     log_staging: DataFrame,
     existing_blocks: DataFrame | None = None,
     existing_txs: DataFrame | None = None,
-    checkpoint=None,
 ) -> dict[str, DataFrame]:
     """One promotion round over raw staging tables.
 
@@ -77,18 +76,17 @@ def promote(
     not yet imported — the reference leaves them in staging and marks
     imported ones, :2265-2270).
 
-    `checkpoint` (optional, df -> df): applied to each promoted frame
-    in dependency order. The streaming path passes an eager
-    localCheckpoint so transaction_raw builds on the already-
-    materialized block result instead of re-running the
-    block decision's lineage per output — checkpointing the
-    three returned frames after the fact recomputes the pyramid.
+    Each promoted frame is an eager localCheckpoint, taken in
+    dependency order: transaction_raw builds on the already-
+    materialized block result instead of re-running the block
+    decision's lineage per output (checkpointing the three returned
+    frames after the fact recomputes the pyramid), and classify, the
+    appends and the broadcast downstream read the materialized rows.
     """
-    ckpt = checkpoint if checkpoint is not None else (lambda df: df)
     ready = ready_blocks(block_staging, tx_staging)
     if existing_blocks is not None:
         ready = ready.join(existing_blocks.select("number"), "number", "left_anti")
-    new_blocks = ckpt(ready)
+    new_blocks = ready.localCheckpoint(eager=True)
 
     ready_keys = new_blocks.select("number", F.col("hash").alias("block_hash"))
     ready_txs = tx_staging.join(
@@ -97,15 +95,17 @@ def promote(
         & (tx_staging["block_hash"] == ready_keys["block_hash"]),
         "left_semi",
     )
-    new_txs = ckpt(merge_new(ready_txs, existing_txs, ["hash"]))
+    new_txs = merge_new(ready_txs, existing_txs, ["hash"]).localCheckpoint(eager=True)
     # keyed on the block hash too: a tx staged in two versions of its
     # block keeps only the promoted version's logs
-    new_logs = ckpt(
+    new_logs = (
         log_staging.join(
             new_txs.select(F.col("hash").alias("tx_hash"), "block_hash"),
             ["tx_hash", "block_hash"],
             "left_semi",
-        ).dropDuplicates(["tx_hash", "log_index"])
+        )
+        .dropDuplicates(["tx_hash", "log_index"])
+        .localCheckpoint(eager=True)
     )
 
     # leftovers = rows still awaiting promotion NEXT round: not

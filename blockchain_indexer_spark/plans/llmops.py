@@ -2688,10 +2688,8 @@ def doc_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mean smoothed conditional probability plus its unseen-bigram "
     "count. Integer-deterministic by the BM25 pattern: each bigram's "
     "p=(c2+1)/(c1+V) is one IEEE division scaled floor(1e12*p) into "
-    "a BIGINT before any SUM, so scores hash-match DuckDB exactly; "
-    "the float log-perplexity twin (operators.lm."
-    "bigram_log_perplexity) is the production path. Token-keyed "
-    "joins; both count tables are post-aggregation so AQE broadcasts "
+    "a BIGINT before any SUM, so scores hash-match DuckDB exactly. "
+    "Token-keyed joins; both count tables are post-aggregation so AQE broadcasts "
     "them at moderate scale and skew-splits beyond.",
     survey_refs=("LLM-text",),
 )
@@ -3470,8 +3468,7 @@ def ngram_containment_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(identical association in both engines), floor(1e9*r) before "
     "any SUM. Two bucket-histogram passes (map-side combined to "
     "<= 1024 rows each) + a broadcast ratio join — no corpus-wide "
-    "shuffle beyond (id, bucket, count). importance_weights_log is "
-    "the float log-space production twin.",
+    "shuffle beyond (id, bucket, count).",
     survey_refs=("LLM-sample", "LLM-text"),
 )
 def doc_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:

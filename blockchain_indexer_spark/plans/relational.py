@@ -395,8 +395,7 @@ def version_disambiguation(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events WHERE ts IS NOT NULL
     GROUP BY 1, 2
     """,
-    doc="Tumbling event-time window aggregate via F.window (the batch "
-    "twin of streaming/windows.py's watermarked per-window counts; "
+    doc="Tumbling event-time window aggregate via F.window (the "
     "per-day cadence at 0.0.64.sql:1563-1569 generalized to sub-day "
     "buckets). Window starts as epoch microseconds: both engines "
     "align sub-day buckets to the epoch, and integer microseconds "
@@ -404,8 +403,7 @@ def version_disambiguation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events are dropped EXPLICITLY on both sides: an event without "
     "event time cannot be windowed (F.window filters them silently; "
     "time_bucket would keep a NULL group — the round-6 NULL sweep "
-    "caught the divergence), matching the watermarked streaming "
-    "path, which also drops them.",
+    "caught the divergence).",
     survey_refs=("T10", "A4"),
 )
 def tumbling_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,18 +1,20 @@
-"""Watermarked stream-stream joins for the download/reassembly path.
+"""Watermarked stream-stream join of tx headers and their receipts.
 
 The reference splits a block's payload across two concurrent download
 pools — block bodies 24-wide (S8, ``BlockDownloader``) and receipts
-96-wide (S9) — and reunites them in memory before staging. In
-Structured Streaming the reunion is a stream-stream join: each side
-carries an event-time watermark and the join predicate bounds how far
-the two arrival times may drift, so the state store provably buffers
-only rows inside the watermark horizon (O(arrival-rate × horizon),
-independent of stream length — the property that lets this run for
-months on a 1000-executor cluster).
+96-wide (S9) — and reunites them in memory before staging. The live
+feeder does the same: ``streaming/feeder.py`` fetches both on the
+driver and writes each poll's rows already joined, so no ingest path
+runs a join here.
 
-``join_tx_receipts`` works identically on batch frames (watermarks are
-no-ops there), which is what the tests use to cross-check streaming
-output against plain SQL.
+``join_tx_receipts`` is the Structured Streaming form of that reunion
+and serves the registered ``stream_reassembly_join`` query: each side
+carries an event-time watermark and the join predicate bounds how far
+the two arrival times may drift, so the state store buffers only rows
+inside the watermark horizon (O(arrival-rate × horizon), independent
+of stream length). It works identically on batch frames (watermarks
+are no-ops there), which is what the tests use to cross-check
+streaming output against plain SQL.
 
 Reference: Sources/BlockDownloader.cs + receipt pool wiring
 (Indexer.cs:87-175); SURVEY §2 S8/S9.

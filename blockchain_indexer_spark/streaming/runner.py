@@ -755,17 +755,15 @@ class IngestPipeline:
             F.col("hash").alias("tx_hash"), "block_hash", F.explode("logs").alias("l")
         ).select("tx_hash", "block_hash", "l.log_index", "l.address", "l.topics", "l.data")
 
-        # Eager localCheckpoints inside promote materialize the merge
-        # results once: they keep classify, the appends and the
-        # broadcast from recomputing the promote, and doing it inside
-        # promote (dependency order) keeps each checkpoint job shallow.
+        # promote returns eager local checkpoints: classify, the
+        # appends and the broadcast read the merge results without
+        # recomputing the promote
         promoted = promote(
             block_staging,
             tx_staging,
             log_staging,
             existing_blocks=self.read_final("block"),
             existing_txs=self.read_final("transaction"),
-            checkpoint=lambda df: df.localCheckpoint(eager=True),
         )
         new_blocks = promoted["block"]
         new_txs = promoted["transaction_raw"]

@@ -1,6 +1,6 @@
-"""Pins bench.py's driver-facing output contract (VERDICT r4 item #1:
-a ~2.8 KB line overflowed the driver's capture and nulled the round-4
-bench record). No Spark needed — the emit path is pure Python."""
+"""Pins bench.py's output: one JSON line carrying every benched query
+and the ingest extras, and no file written. No Spark needed — the
+line is built in pure Python."""
 
 from __future__ import annotations
 
@@ -10,14 +10,11 @@ import os
 import bench
 
 
-def _fake_timings():
-    # worst realistic case: every benched query present, long-ish values
-    return {name: 123.456 for name in bench.BENCH_QUERIES}
-
-
-def test_line_fits_driver_capture_and_parses(tmp_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "7")
-    timings = _fake_timings()
+def test_line_holds_every_query_and_writes_no_file(tmp_path, monkeypatch):
+    repo = os.path.dirname(os.path.abspath(bench.__file__))
+    before = set(os.listdir(repo))
+    monkeypatch.chdir(tmp_path)
+    timings = {name: 123.456 for name in bench.BENCH_QUERIES}
     raw = {k: [123.456, 124.567] for k in timings}
     extra = {
         "ingest_tx": 101800,
@@ -26,38 +23,20 @@ def test_line_fits_driver_capture_and_parses(tmp_path, monkeypatch):
         "microbatch_tx": 508,
         "microbatch_round_sec": 4.912,
     }
-    line = bench.emit_records(
-        timings, raw, 1234.567, 0.1, 2, extra, repo=str(tmp_path)
-    )
-    assert len(line) <= bench.LINE_BUDGET
-    payload = json.loads(line)  # one COMPLETE object
+    line = bench.bench_line(timings, raw, 1234.567, 0.1, 2, extra)
+    assert "\n" not in line
+    payload = json.loads(line)
     assert payload["metric"] == "headline_queries_total"
     assert payload["value"] == 1234.567
-    assert payload["unit"] == "sec"
     assert payload["sf"] == 0.1
-    assert payload["n_benched"] == len(bench.BENCH_QUERIES)
-    assert payload["queries"]  # headline subset survived the size cap
-    assert set(payload["queries"]) <= set(bench.HEADLINE_QUERIES)
-    # the drift watchlist leads HEADLINE_QUERIES, so the size cap
-    # (which drops from the tail) can never evict it
-    for must_keep in bench.HEADLINE_QUERIES[:12]:
-        assert must_keep in payload["queries"], must_keep
-    # full record on disk, named for the overridden round, all queries
-    full = json.load(open(tmp_path / "BENCH_FULL_r07.json"))
-    assert set(full["queries"]) == set(bench.BENCH_QUERIES)
-    assert full["runs"]["pricing_summary"] == [123.456, 124.567]
-
-
-def test_round_number_inferred_from_existing_records(tmp_path, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
-    assert bench.next_round_number(str(tmp_path)) == 1
-    (tmp_path / "BENCH_r03.json").write_text("{}")
-    (tmp_path / "BENCH_r05.json").write_text("{}")
-    assert bench.next_round_number(str(tmp_path)) == 6
+    assert set(payload["queries"]) == set(bench.BENCH_QUERIES)
+    assert payload["runs"]["pricing_summary"] == [123.456, 124.567]
+    assert {k: payload[k] for k in extra} == extra
+    assert os.listdir(tmp_path) == []
+    assert set(os.listdir(repo)) == before
 
 
 def test_headline_and_bench_sets_are_consistent():
-    assert set(bench.HEADLINE_QUERIES) <= set(bench.BENCH_QUERIES)
     assert len(set(bench.BENCH_QUERIES)) == len(bench.BENCH_QUERIES)
     from blockchain_indexer_spark.plans import REGISTRY
 

@@ -1,43 +1,10 @@
-"""Bucketed co-located joins (no Exchange in the plan) and salted
-skew joins (same results as the plain join)."""
+"""Salted skew joins: same results as the plain join."""
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import functions as F
 
 from blockchain_indexer_spark.operators.skew import salted_join
-from blockchain_indexer_spark.sources.bucketed import (
-    cobucketed_join,
-    write_bucketed,
-)
-from blockchain_indexer_spark.sources.parquet import load_table
-
-
-def test_cobucketed_join_has_no_exchange(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    lineitem = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity").withColumnRenamed("l_orderkey", "o_orderkey")
-    try:
-        write_bucketed(orders, "b_orders", "o_orderkey", buckets=8)
-        write_bucketed(lineitem, "b_lineitem", "o_orderkey", buckets=8)
-        # force the sort-merge path: a broadcast join would hide the
-        # co-location property this test pins
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = cobucketed_join(spark, "b_orders", "b_lineitem", "o_orderkey")
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert not re.search(r"\bExchange\b", plan), "co-bucketed join still shuffles"
-            assert "SortMergeJoin" in plan
-            # and it computes the right thing
-            expect = orders.join(lineitem, "o_orderkey").count()
-            assert joined.count() == expect > 0
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
 def test_salted_join_matches_plain_join(spark):

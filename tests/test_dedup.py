@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from blockchain_indexer_spark.operators.dedup import (
     exact_dup_clusters,
@@ -350,6 +351,81 @@ def test_minhash_incremental_equals_full(spark, sf_dir):
         got |= {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
         index = rows if index is None else index.unionByName(rows)
     assert got == full and len(full) > 0
+
+
+@pytest.mark.slowe2e
+def test_streaming_minhash_index_update_equals_full_corpus(
+    spark, tmp_path_factory
+):
+    """The LSH index-maintenance deployment shape end to end: a
+    parquet file stream drained one file per trigger through
+    foreachBatch, each micro-batch appending its band rows to the
+    persisted index dir and its candidate pairs to an output dir
+    (new x new plus new x index — never old x old). The accumulated
+    distinct pair union must equal the one-shot full-corpus LSH
+    candidate set, under whatever batching the file source produced —
+    the same union-equivalence the batch-loop test pins, now driven
+    through a real streaming query like the reference's live loop."""
+    import os
+
+    from blockchain_indexer_spark.operators.dedup import (
+        minhash_index_update,
+        minhash_lsh_candidates,
+    )
+
+    root = str(tmp_path_factory.mktemp("sminhash"))
+    feed = os.path.join(root, "feed")
+    ckpt = os.path.join(root, "ckpt")
+    idx_dir = os.path.join(root, "band_index")
+    pairs_dir = os.path.join(root, "pairs")
+    os.makedirs(feed)
+    rows = [
+        (1, "alpha beta gamma delta epsilon"),
+        (2, "alpha beta gamma delta zeta"),      # near-dup of 1
+        (3, "one two three four five six"),
+        (4, "alpha beta gamma delta epsilon"),   # exact dup of 1, later file
+        (5, "one two three four five seven"),    # near-dup of 3, later file
+        (6, "totally unrelated content words here"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    for b in range(3):
+        docs.filter(F.col("doc_id") % 3 == b).repartition(1).write.mode(
+            "append"
+        ).parquet(feed)
+
+    def sink(batch_df, epoch_id):
+        index = (
+            spark.read.parquet(idx_dir) if os.path.isdir(idx_dir) else None
+        )
+        new_rows, new_pairs = minhash_index_update(
+            index, batch_df, "doc_id", "text"
+        )
+        new_pairs = new_pairs.localCheckpoint(eager=True)
+        new_rows.write.mode("append").parquet(idx_dir)
+        new_pairs.write.mode("append").parquet(pairs_dir)
+
+    q = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(feed)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+
+    got = {
+        (r["doc_a"], r["doc_b"])
+        for r in spark.read.parquet(pairs_dir).distinct().collect()
+    }
+    want = {
+        (r["doc_a"], r["doc_b"])
+        for r in minhash_lsh_candidates(docs, "doc_id", "text")
+        .select("doc_a", "doc_b")
+        .collect()
+    }
+    assert got == want and (1, 4) in got  # cross-batch dup discovered
 
 
 def test_decontaminate_exact_flags_verbatim_needles(spark):

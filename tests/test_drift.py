@@ -3,14 +3,12 @@ group-pair content Jaccard (operators/drift.py)."""
 
 from __future__ import annotations
 
-import math
 
 from pyspark.sql import functions as F
 
 from blockchain_indexer_spark.operators.drift import (
     group_pair_jaccard,
     importance_weights,
-    importance_weights_log,
     ks_drift,
 )
 
@@ -38,20 +36,6 @@ def test_importance_weights_prefer_target_like_docs(spark):
     assert got[0][1] > NANO > got[100][1]
     # identical text -> identical weight (pure function of the tokens)
     assert got[0] == got[9] and got[100] == got[109]
-
-
-def test_importance_weights_log_twin_agrees_on_ranking(spark):
-    rows = [(i, "alpha beta", "en") for i in range(8)] + [
-        (100 + i, "gamma delta", "xx") for i in range(8)
-    ]
-    d = _docs(spark, rows)
-    tgt = d.filter(F.col("lang") == "en")
-    w = {r["doc_id"]: r["weight_nano"] for r in importance_weights(d, tgt).collect()}
-    lw = {r["doc_id"]: r["log_weight"] for r in importance_weights_log(d, tgt).collect()}
-    assert (w[0] > w[100]) == (lw[0] > lw[100])
-    assert math.isfinite(lw[0]) and math.isfinite(lw[100])
-    # log weight of a target-like doc is positive, off-target negative
-    assert lw[0] > 0 > lw[100]
 
 
 def test_ks_drift_disjoint_and_identical_distributions(spark):

@@ -95,8 +95,11 @@ def test_interval_polling_to_final_tables(spark, tmp_path):
     head["number"] = numbers[-1]
     feeder.poll_once()
 
-    # live trigger drains the polled files
-    q = pipe.start_stream(feed_dir, str(tmp_path / "ckpt"), available_now=False)
+    # live trigger drains the polled files, one file per micro-batch
+    # (T2 backpressure)
+    q = pipe.start_stream(
+        feed_dir, str(tmp_path / "ckpt"), available_now=False, max_files_per_trigger=1
+    )
     try:
         q.processAllAvailable()
         # no further file arrives: the liveness watcher must take the
@@ -107,6 +110,8 @@ def test_interval_polling_to_final_tables(spark, tmp_path):
         assert not q.isActive
     finally:
         q.stop()
+    fed = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(fed) == len(os.listdir(feed_dir)) == 3
 
     got_blocks = {r["number"] for r in pipe.read_final("block").select("number").collect()}
     assert got_blocks == set(numbers)

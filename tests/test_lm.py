@@ -1,6 +1,6 @@
 """Bigram-LM fluency scoring (operators/lm.py): hand-computed counts
-on a tiny corpus, coverage/NULL contracts, and the float-perplexity
-twin against a numpy reference."""
+on a tiny corpus, coverage/NULL contracts, and the trigram backoff
+levels."""
 
 import math
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from blockchain_indexer_spark.operators.lm import (
     bigram_counts,
     bigram_fluency,
-    bigram_log_perplexity,
 )
 
 
@@ -74,16 +73,6 @@ def test_fluent_docs_outscore_shuffled_ones(spark):
     docs = _toks(spark, [(100, ["the", "cat", "sat"]), (101, ["sat", "the", "cat"])])
     out = {r["doc_id"]: r["fluency_nano"] for r in bigram_fluency(docs, train).collect()}
     assert out[100] > out[101]
-
-
-def test_log_perplexity_matches_numpy(spark, tiny):
-    docs = _toks(spark, [(0, ["a", "b", "a", "b"])])
-    row = bigram_log_perplexity(docs, tiny).collect()[0]
-    # mean log2 p over [4/7, 2/6, 4/7]
-    lps = [math.log2(4 / 7), math.log2(2 / 6), math.log2(4 / 7)]
-    want = 2.0 ** (-sum(lps) / 3)
-    assert row["n_bigrams"] == 3
-    assert abs(row["perplexity"] - want) < 1e-9
 
 
 def test_null_tokens_row_scores_zero(spark, tiny):

@@ -6,8 +6,9 @@ from pyspark.sql import functions as F
 from blockchain_indexer_spark.functions.text import (
     fingerprint_md5,
     punct_count,
+    shingles_from_tokens,
     token_count,
-    word_shingles,
+    tokens,
 )
 
 
@@ -20,9 +21,9 @@ def test_token_count_and_punct(spark):
     assert row["np"] == 3  # comma, bang, question mark
 
 
-def test_word_shingles_short_text_empty(spark):
+def test_shingles_from_tokens_short_text_empty(spark):
     df = spark.createDataFrame([("one two",), ("a b c d",)], "text string")
-    out = df.select(word_shingles("text", 3).alias("sh")).collect()
+    out = df.select(shingles_from_tokens(tokens("text"), 3).alias("sh")).collect()
     assert out[0]["sh"] == []
     assert out[1]["sh"] == ["a b c", "b c d"]
 

@@ -68,15 +68,15 @@ STATIC: dict[str, tuple[str, str]] = {
     "W1": ("ranking windows (views/current_trust, accepted_crc)", "tests/test_views.py"),
     "W2": ("sources/blocks.py find_gaps lead window", "tests/test_streaming.py"),
     "T1": ("runner trigger config (ProcessingTime / AvailableNow)", "tests/test_streaming.py"),
-    "T2": ("micro-batch model (built-in backpressure); stateful ops via applyInPandasWithState (streaming/windows.py)", "tests/test_streaming_windows.py"),
+    "T2": ("micro-batch model; backpressure via runner start_stream(max_files_per_trigger=...)", "tests/test_feeder.py"),
     "T3": ("operators/promote.py promote (ready_blocks completeness gate)", "tests/test_promote.py"),
-    "T4": ("operators/promote.py merge_new anti-join; streaming twin windows.py dedup_feed_stream", "tests/test_promote.py"),
+    "T4": ("operators/promote.py merge_new anti-join over the replayable file feed (runner start_stream)", "tests/test_promote.py"),
     "T5": ("operators/promote.py retract_from + IngestPipeline.retract (partitioned-sink rewrite + cache drop in one commit + deadbeef)", "tests/test_live_loop.py"),
     "T6": ("sources/blocks.py find_gaps + last_valid_block", "tests/test_streaming.py"),
     "T7": ("operators/promote.py promote (ready_blocks: max_by newest version per number)", "tests/test_promote.py"),
     "T8": ("operators/caches.py wired into IngestPipeline.refresh_caches — per-batch stale-key refresh of both cache tables, staged inside the append pool and committed with the batch on either sink", "tests/test_cache_maintenance.py"),
     "T9": ("views crc_capacity_graph(since_block=...)", "tests/test_views.py"),
-    "T10": ("per-day tumbling (A4) + streaming/windows.py watermarked windows, session_window sessions", "tests/test_streaming_windows.py"),
+    "T10": ("per-day tumbling (A4) via F.window + gaps-and-islands sessionization (batch queries; no watermarks, like the reference)", "tests/test_oracle_parity.py"),
     "T11": ("runner available_now (bulk) vs processing-time (live)", "tests/test_streaming.py"),
     "UDTF": ("operators/views.py get_capacity", "gate query"),
     "LLM-dedup": ("operators/dedup.py (exact/jaccard/minhash/simhash)", "tests/test_dedup.py"),
@@ -87,53 +87,7 @@ STATIC: dict[str, tuple[str, str]] = {
 }
 
 
-def _check_driver_records_tracked() -> None:
-    """Refuse to regenerate coverage while driver record files sit
-    untracked (VERDICT r8 "What's wrong": the per-round
-    CORRECTNESS/BENCH deposits were one `git clean` from loss three
-    rounds running, and the rotation CI reads the CORRECTNESS history
-    from disk). This runs in the BUILDER's doc-regeneration loop —
-    deliberately not in pytest, which the judge runs right after the
-    driver deposits that round's still-uncommitted records."""
-    import glob
-    import subprocess
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    records = [
-        os.path.basename(p)
-        for pat in ("CORRECTNESS_r*.json", "BENCH_r*.json", "BENCH_FULL_r*.json")
-        for p in glob.glob(os.path.join(repo, pat))
-    ]
-    try:
-        tracked = set(
-            subprocess.run(
-                ["git", "ls-files"], cwd=repo, capture_output=True, text=True
-            ).stdout.split()
-        )
-    except OSError:
-        return  # no git available: nothing to enforce
-    latest = max(
-        (int(n.split("_r")[1][:2]) for n in records if n.startswith("CORRECTNESS")),
-        default=0,
-    )
-    # records newer than the last driver deposit (the in-flight
-    # round's own bench preview) are legitimately untracked; every
-    # record up to and including the last deposited round must be
-    # committed
-    untracked = [
-        n
-        for n in sorted(records)
-        if n not in tracked and int(n.split("_r")[1][:2]) <= latest
-    ]
-    if untracked:
-        sys.exit(
-            "gen_coverage: driver record files are untracked — commit them "
-            f"before regenerating docs: {', '.join(untracked)}"
-        )
-
-
 def main() -> None:
-    _check_driver_records_tracked()
     by_ref: dict[str, list[str]] = defaultdict(list)
     for q in REGISTRY.values():
         tag = "oracle" if q.oracle else "rows-only"
